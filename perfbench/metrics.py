@@ -11,7 +11,7 @@ SALES_QUERIES = [
     "q09_products_without_sales", "q10_customers_without_orders", "q11_latest_order_detail",
     "q12_order_totals_reconciliation", "q13_sales_by_category", "q14_date_range_sales",
     "v_order_totals", "v_sales_by_day"]
-COMPOSITES = ["emb_knn_lsh_compacted", "doc_curate"]
+COMPOSITES = ["txt_bm25_compacted", "emb_knn_lsh_compacted", "doc_curate"]
 
 END_TO_END = {
     "ops_per_s": "1/s", "cpu_s_per_op": "s", "live_mem_mb": "MB", "setup_s": "s"}

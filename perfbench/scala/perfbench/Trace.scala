@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One recorded span: a public call the benchmark made into the engine. */
-final case class Span(id: Int, parent: Int, name: String, startNs: Long, var endNs: Long)
+final case class Span(name: String, startNs: Long, endNs: Long)
 
 /** Totals of the Spark work done while a window was open. `busyS` is the
   * union of the jobs' intervals; `byModule` is task seconds per module. */
@@ -57,7 +57,6 @@ final class Trace(spark: SparkSession) {
   private val executions = new ConcurrentLinkedQueue[Long]()
   private val callbackNs = new AtomicLong()
   private val spans = mutable.ArrayBuffer.empty[Span]
-  private var open = List.empty[Span]
 
   private def timed(f: => Unit): Unit = {
     val t0 = System.nanoTime()
@@ -111,18 +110,14 @@ final class Trace(spark: SparkSession) {
     spark.listenerManager.unregister(queryListener)
   }
 
-  /** Run `f` inside a span named `name`, nested under the open span. */
+  /** Run `f` inside a span named `name`. Spans do not nest: every call
+    * the benchmark makes into the engine is a top-level one. */
   def span[A](name: String)(f: => A): A = {
     val t0 = System.nanoTime()
-    val s = Span(spans.size, open.headOption.map(_.id).getOrElse(-1), name, t0, 0L)
-    spans += s
-    open ::= s
-    callbackNs.addAndGet(System.nanoTime() - t0)
     try f
     finally {
       val t1 = System.nanoTime()
-      s.endNs = t1
-      open = open.tail
+      spans += Span(name, t0, t1)
       callbackNs.addAndGet(System.nanoTime() - t1)
     }
   }
@@ -152,7 +147,6 @@ final class Trace(spark: SparkSession) {
   }
 
   def spansJson: Seq[Map[String, Any]] = spans.toSeq.map { s =>
-    Map("id" -> s.id, "parent" -> s.parent, "name" -> s.name,
-      "start_ns" -> s.startNs, "end_ns" -> s.endNs)
+    Map("name" -> s.name, "start_ns" -> s.startNs, "end_ns" -> s.endNs)
   }
 }

@@ -31,9 +31,10 @@ abstract class Workload(val work: String) {
 }
 
 object Workloads {
-  /** The lifecycle composites measured after the sales queries: one index
-    * family's follow/compact lifecycle and the curation pipeline. */
-  val Composites = Seq("emb_knn_lsh_compacted", "doc_curate")
+  /** The lifecycle composites measured after the sales queries: the text
+    * index's and one vector index family's follow/compact lifecycle, and
+    * the curation pipeline. */
+  val Composites = Seq("txt_bm25_compacted", "emb_knn_lsh_compacted", "doc_curate")
 
   def apply(name: String, work: String): Workload = name match {
     case "etl" => new EtlWorkload(work)

@@ -991,7 +991,7 @@ object Ann {
 
   /** Element-wise SQ8 code array: floor((v − vmin)·255 / span) CLAMPED
     * to [0, 255], 0 on a degenerate (constant) dimension. The clamp is
-    * load-bearing for the FROZEN-param paths ([[AnnIndex.appendSq8Index]]
+    * load-bearing for the FROZEN-param paths ([[IndexLifecycle.append]]
     * and the follow mode): a later batch's component may fall outside
     * the build-time [vmin, vmax], and an unclamped code would silently
     * WRAP in the signed-byte storage (c − 128 overflows for c ∉

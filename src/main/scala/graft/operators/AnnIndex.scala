@@ -20,7 +20,11 @@ import org.apache.spark.sql.functions._
   *
   * Keeping the metadata columns in the index rows is what makes
   * FILTERED search (`candPred` over e.g. a label/license/date column)
-  * serveable from the index alone. */
+  * serveable from the index alone.
+  *
+  * Each family is an [[IndexFamily]] value ([[lsh]], [[ivf]], [[pq]],
+  * [[sq8]], [[bq]]); build, append, follow serving and folds are the
+  * shared [[IndexLifecycle]]. */
 object AnnIndex {
 
   /** Reserved index column names (guarded in [[lshIndexRows]]). */
@@ -28,16 +32,77 @@ object AnnIndex {
   val NCol = "n"
   val BucketCol = "bucket"
 
-  /** Cluster index rows by their write-partition column before a
-    * `partitionBy` write (guide §6: rebalance before a partitioned
-    * write; the [[TextIndex]] postings fix, applied to the vector
-    * side). Without it every write task opens one file per bucket /
-    * centroid it holds — tasks × dirs tiny files, re-paid by every
-    * serve scan, follow resolve and compaction fold over the index.
-    * `repartition(col)` with no explicit N stays AQE-coalescible and
-    * carries only the narrow code rows. */
-  private def partitionCoherent(rows: DataFrame, partCol: String): DataFrame =
-    rows.repartition(col(partCol))
+  /** A top-k vector request: probes are the rows matching `pred`. PQ,
+    * SQ8 and BQ draw their probes (and the exact-refine rows) from
+    * `coll`, the full-precision collection; LSH and IVF probe with the
+    * stored rows and ignore it. */
+  final case class Probe(pred: Column, k: Int, coll: Option[DataFrame] = None) {
+    def collection: DataFrame = coll.getOrElse(throw new IllegalArgumentException(
+      "this index family serves probes from the collection: pass Probe(..., coll = Some(frame))"))
+  }
+
+  /** LSH: rows partitioned by `bucket`, frozen hyperplanes in the value
+    * itself (no side table); single-bucket [[knnLshServe]] selection —
+    * the candidate-front anchor the oracle gates pin. */
+  def lsh(idCol: String, vecCol: String, planes: Array[Array[Long]]): IndexFamily[Probe] =
+    IndexFamily(idCol, Seq(IndexTable("", Some(BucketCol))),
+      encode = (df, _) => Seq(lshIndexRows(df, idCol, vecCol, planes)),
+      serve = (ix, q) => knnLshServe(ix.tables.head, idCol, q.pred, q.k))
+
+  /** [[lsh]] served at the recall-tuned [[knnLshServeMultiProbe]]
+    * selection — the production serving default. */
+  def lshMultiProbe(idCol: String, vecCol: String,
+      planes: Array[Array[Long]]): IndexFamily[Probe] =
+    lsh(idCol, vecCol, planes).copy(serve = (ix, q) =>
+      knnLshServeMultiProbe(ix.tables.head, idCol, planes.length, q.pred, q.k))
+
+  /** IVF: inverted lists partitioned by `cent`; the trained codebook
+    * (one `labelCol` centroid per label, pivoted to (cb_label, cv, cc))
+    * is the frozen `_codebook` side table. */
+  def ivf(idCol: String, vecCol: String, labelCol: String,
+      nProbe: Int): IndexFamily[Probe] =
+    IndexFamily(idCol, Seq(IndexTable("", Some(CentCol))),
+      encode = (df, cb) => Seq(ivfRowsFromPivoted(df, idCol, vecCol,
+        cb.get.select(col("cb_label"), col("cv").as("__cv"), col("cc").as("__cc")))),
+      serve = (ix, q) => knnIvfServe(ix.tables.head, ix.side.get, idCol, q.pred, q.k, nProbe),
+      side = Some(SideTable("_codebook", df =>
+        Ann.pivotCodebook(Ann.ivfCodebook(df, labelCol, vecCol))
+          .select(col("cb_label"), col("__cv").as("cv"), col("__cc").as("cc")))))
+
+  /** PQ: flat (id, subspace, code) rows — ADC consumes every subspace,
+    * there is nothing to prune by; the per-subspace k-means codebooks
+    * (`clusters` centroids, `iters` rounds) are the frozen `_codebook`
+    * side table. */
+  def pq(idCol: String, vecCol: String, dim: Int, m: Int, clusters: Int,
+      iters: Int): IndexFamily[Probe] =
+    IndexFamily(idCol, Seq(IndexTable("")),
+      encode = (df, cb) => Seq(pqIndexRows(df, idCol, vecCol,
+        cb.get.select(col(SubspaceCol), col("cluster"),
+          col("cv").as("__cv"), col("cc").as("__cc")), dim, m)),
+      serve = (ix, q) => knnPqServe(ix.tables.head, ix.side.get,
+        q.collection.filter(q.pred), idCol, vecCol, dim, m, q.k),
+      side = Some(SideTable("_codebook", df =>
+        Ann.pqCodebooks(df, idCol, vecCol, dim, m, clusters, iters)
+          .select(col(SubspaceCol), col("cluster"), col("__cv").as("cv"),
+            col("__cc").as("cc")))))
+
+  /** SQ8: flat byte-code rows (the compressed scan consumes every row);
+    * the per-dim [vmin, vmax] are the frozen `_params` side table. */
+  def sq8(idCol: String, vecCol: String, refine: Int): IndexFamily[Probe] =
+    IndexFamily(idCol, Seq(IndexTable("")),
+      encode = (df, p) => Seq(sq8IndexRows(df, idCol, vecCol, p.get)),
+      serve = (ix, q) => knnSq8Serve(ix.tables.head, ix.side.get, q.collection,
+        idCol, vecCol, q.pred, q.k, refine),
+      side = Some(SideTable("_params", Ann.sq8Train(_, vecCol))))
+
+  /** BQ: flat packed sign-word rows; the per-dim thresholds are the
+    * frozen `_params` side table. */
+  def bq(idCol: String, vecCol: String, refine: Int): IndexFamily[Probe] =
+    IndexFamily(idCol, Seq(IndexTable("")),
+      encode = (df, p) => Seq(bqIndexRows(df, idCol, vecCol, p.get)),
+      serve = (ix, q) => knnBqServe(ix.tables.head, ix.side.get, q.collection,
+        idCol, vecCol, q.pred, q.k, refine),
+      side = Some(SideTable("_params", Ann.bqTrain(_, vecCol))))
 
   /** The serving rows of an LSH index: all columns but the raw vector,
     * plus (q, n, bucket). One scan, pure map — quantization, self-dot
@@ -52,29 +117,6 @@ object AnnIndex {
       .withColumn(NCol, Ann.dotQ(col(QCol), col(QCol)))
       .withColumn(BucketCol, Ann.lshBucket(col(QCol), planes))
   }
-
-  /** Build and persist the LSH index at `path`, partitioned by bucket
-    * (2^planes directories). Overwrite = rebuild; incremental growth is
-    * an append of [[lshIndexRows]] over the new batch only — the same
-    * O(batch) maintenance as [[DedupState]]. */
-  def writeLshIndex(df: DataFrame, idCol: String, vecCol: String,
-      planes: Array[Array[Long]], path: String): Unit =
-    partitionCoherent(lshIndexRows(df, idCol, vecCol, planes), BucketCol)
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-
-  /** INCREMENTAL index maintenance: append a NEW batch's serving rows to
-    * an existing index at `path`. O(batch) — the job derives (q, n,
-    * bucket) over the batch alone and appends the resulting part files
-    * into the bucket directories; the stored index is never read and its
-    * existing files are never rewritten (asserted in WarehouseSpec).
-    * Same hyperplanes as the original build or the bucket spaces
-    * diverge — the serving contract is that serve-after-append is
-    * hash-identical to a full rebuild over the union (the
-    * emb_knn_lsh_incremental gate). */
-  def appendLshIndex(batch: DataFrame, idCol: String, vecCol: String,
-      planes: Array[Array[Long]], path: String): Unit =
-    partitionCoherent(lshIndexRows(batch, idCol, vecCol, planes), BucketCol)
-      .write.mode("append").partitionBy(BucketCol).parquet(path)
 
   /** Top-k LSH search served from a PERSISTED index frame: no
     * quantization, no hyperplane dots, no bucket assignment — probes and
@@ -92,10 +134,9 @@ object AnnIndex {
     * incremental / follow / compacted) is candidate-front EQUIVALENCE
     * with the cross-engine oracle, which measured 0.08 recall@5 on the
     * gate corpus. Production serving answers through
-    * [[knnLshServeMultiProbe]] / [[knnLshServeFollowMultiProbe]]
-    * (>=0.5 recall at ~34% of brute cost — the emb_knn_lsh_tuned
-    * sweep), as hybrid_persisted and the streaming
-    * [[graft.streaming.StreamOps.AnnFollowFamily.lsh]] lifecycle do. */
+    * [[knnLshServeMultiProbe]] ([[lshMultiProbe]]; >=0.5 recall at ~34%
+    * of brute cost — the emb_knn_lsh_tuned sweep), as hybrid_persisted
+    * and the streaming follow lifecycle do. */
   def knnLshServe(index: DataFrame, idCol: String, probePred: Column,
       k: Int, candPred: Column = lit(true)): DataFrame = {
     val probes = index.filter(probePred)
@@ -137,205 +178,6 @@ object AnnIndex {
     Ann.topKAgg(cands.join(broadcast(probes), BucketCol), k)
   }
 
-  /** Top-k LSH search from a FROZEN base index + a FOLLOWING delta — a
-    * serving index that tracks a MUTATING corpus without rebuilds: the
-    * base is the persisted index ([[writeLshIndex]]) built from a
-    * snapshot version of the corpus; `deltaRoot`/`deltaTable` is a
-    * snapshot table kept current by [[graft.sources.Replica]] sync over
-    * the corpus feed from that version on (`initialCursor` = the build
-    * version). Serve-time composition, all O(touched) beyond the base:
-    * base rows whose id the delta TOUCHED (upserted, deleted —
-    * [[graft.sources.Snapshot.shadowedKeys]] ∪ the delta's current
-    * keys) are anti-joined out, the delta's live rows are encoded
-    * through the SAME [[lshIndexRows]] derivation (bit-identical
-    * bucketing) and unioned in, and the standard [[knnLshServe]]
-    * selection runs over the combined frame — hash-identical to a full
-    * rebuild over the corpus's current state (the emb_knn_lsh_follow
-    * gate). Fold the delta into a fresh base (rebuild + reset delta
-    * root) off the serving path, like every base+delta store; don't
-    * compact the delta table between folds (compaction clears the
-    * touched-key shadow). */
-  def knnLshServeFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, planes: Array[Array[Long]],
-      probePred: Column, k: Int, candPred: Column = lit(true)): DataFrame = {
-    val (served, _) = lshFollowResolved(spark, basePath, deltaRoot,
-      deltaTable, idCol, vecCol, planes)
-    knnLshServe(served, idCol, probePred, k, candPred)
-  }
-
-  /** [[knnLshServeFollow]] at the RECALL-TUNED multi-probe selection
-    * ([[knnLshServeMultiProbe]] — own bucket + every Hamming-1
-    * neighbor): the same base-minus-touched-plus-live resolution, the
-    * same delta materialization keeping runtime filters on the base
-    * scan, but answering at the >=0.5-recall configuration the
-    * emb_knn_lsh_tuned sweep proved instead of single-bucket's 0.08.
-    * The production follow SERVE default — single-bucket follow stays
-    * as the candidate-front anchor. */
-  def knnLshServeFollowMultiProbe(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, planes: Array[Array[Long]],
-      probePred: Column, k: Int, candPred: Column = lit(true)): DataFrame = {
-    val (served, _) = lshFollowResolved(spark, basePath, deltaRoot,
-      deltaTable, idCol, vecCol, planes)
-    knnLshServeMultiProbe(served, idCol, planes.length, probePred, k, candPred)
-  }
-
-  /** The resolved serving rows of a following LSH index — base rows
-    * minus delta-touched ids, union the delta's live rows re-encoded
-    * through [[lshIndexRows]]. Shared verbatim by the serve path
-    * ([[knnLshServeFollow]]) and the fold ([[compactLshFollow]]), so a
-    * fold persists EXACTLY what the follow mode was serving. Returns
-    * (served, delta-checkpoint handle) — the delta rows are
-    * materialized: it keeps the dynamic partition pruning machinery on
-    * the BASE scan only (pushing the DPP filter through the union onto
-    * the computed-bucket branch plants an unprepared InSubqueryExec —
-    * a plain Filter can't host one), and a multi-probe serve re-reads
-    * the checkpoint, not the derivation. */
-  private def lshFollowResolved(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String,
-      planes: Array[Array[Long]]): (DataFrame, DataFrame) = {
-    import graft.sources.Snapshot
-    val base = spark.read.parquet(basePath)
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    val deltaRows = lshIndexRows(live, idCol, vecCol, planes)
-      .select(base.columns.map(col).toSeq: _*)
-      .localCheckpoint(true)
-    (base.join(touched, Seq(idCol), "left_anti").unionByName(deltaRows),
-      deltaRows)
-  }
-
-  /** FOLD a following LSH index's delta into a fresh frozen base at
-    * `newBasePath` — the off-serving-path maintenance every base+delta
-    * store schedules once the delta's serve-time overhead (the
-    * touched-key anti-join + re-encode, O(touched) per search) has
-    * accumulated enough to matter. The fold writes the EXACT resolved
-    * frame the follow mode serves (shared [[lshFollowResolved]] path:
-    * stored base rows pass through untouched — no re-quantization, no
-    * corpus read — and only the delta's live rows encode), partitioned
-    * by bucket like any [[writeLshIndex]] base, so serving from the new
-    * base keeps the dynamically-pruned scan. O(base + delta), never
-    * O(corpus).
-    *
-    * Returns the HANDOFF CURSOR — the source version the delta was
-    * synced to ([[graft.sources.Replica.cursor]]); the new base
-    * represents the corpus at exactly that version. The follower then
-    * continues against a FRESH delta root seeded there
-    * (`Replica.sync(..., initialCursor = cursor)`): changes ≤ cursor
-    * are inside the new base, changes past it replay into the fresh
-    * delta — nothing is dropped or double-applied across the fold (the
-    * emb_knn_lsh_compacted gate runs this full lifecycle against the
-    * corpus's final state). A never-synced delta root throws: there is
-    * no cursor to hand off, and a fold that guessed one would break the
-    * exactly-once chain. Don't reuse the OLD delta root after a fold —
-    * its rows are now inside the base (the fresh-root requirement is
-    * what makes the fold atomic-by-construction: until the follower
-    * flips to (newBase, freshDelta), the old pair keeps serving).
-    *
-    * CONCURRENCY: the cursor is re-read after the new base lands and
-    * must be unchanged — a [[graft.sources.Replica.sync]] landing
-    * between the initial cursor read and the fold's delta reads would
-    * make the new base absorb changes PAST the returned cursor, which
-    * the fresh delta would then replay (idempotent for serving, but it
-    * silently weakens "the new base represents the corpus at exactly
-    * the handoff version"). A concurrent sync therefore fails the fold
-    * loudly; re-run it — the old (base, delta) pair was never stopped. */
-  def compactLshFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, planes: Array[Array[Long]],
-      newBasePath: String): Long = {
-    val cur = foldCursor(spark, deltaRoot, "compactLshFollow")
-    val (served, deltaRows) = lshFollowResolved(spark, basePath, deltaRoot,
-      deltaTable, idCol, vecCol, planes)
-    try partitionCoherent(served, BucketCol)
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(newBasePath)
-    finally NearDup.freeCheckpoint(deltaRows)
-    requireCursorStable(spark, deltaRoot, cur, "compactLshFollow")
-    cur
-  }
-
-  /** The delta's handoff cursor, or a loud throw for a never-synced
-    * delta root (no cursor to hand off — a guessed one would break the
-    * exactly-once chain). Shared by every fold. */
-  private[operators] def foldCursor(spark: org.apache.spark.sql.SparkSession,
-      deltaRoot: String, who: String): Long =
-    graft.sources.Replica.cursor(spark, deltaRoot).getOrElse(
-      throw new IllegalStateException(
-        s"$who: no sync cursor at $deltaRoot — the delta was " +
-          "never synced; nothing to fold or hand off"))
-
-  /** Post-write cursor stability check: a Replica.sync that landed
-    * while the fold ran advanced the cursor, so the new base may hold
-    * changes past the handoff version — fail loudly (the old pair is
-    * still serving; re-run the fold). */
-  private[operators] def requireCursorStable(spark: org.apache.spark.sql.SparkSession,
-      deltaRoot: String, expected: Long, who: String): Unit = {
-    val now = graft.sources.Replica.cursor(spark, deltaRoot)
-    if (!now.contains(expected))
-      throw new IllegalStateException(
-        s"$who: a concurrent sync advanced the delta cursor " +
-          s"($expected -> ${now.getOrElse("absent")}) while the fold ran; " +
-          "the written base may absorb changes past the handoff version — " +
-          "discard it and re-run the fold (the old base+delta pair kept serving)")
-  }
-
-  /** DELTA-OVERHEAD PROBE result for a base+delta follow pair —
-    * the scheduling half of the follow → fold lifecycle. Serving a
-    * follow costs the frozen-base scan plus an anti-join of `touched`
-    * keys plus a union of `live` re-encoded rows, so the marginal
-    * serve-time overhead over a freshly-folded base grows with
-    * (live + touched) / base — [[overhead]]. An operator polls
-    * [[AnnIndex.followDeltaStats]] after each sync and triggers the
-    * family's `compact*Follow` once overhead crosses its budget
-    * (e.g. 0.2): a fold is a full O(base) rebuild write, so folding on
-    * a timer wastes rebuilds while never folding lets serve cost creep
-    * without bound. */
-  case class FollowDeltaStats(baseRows: Long, deltaLiveRows: Long,
-      deltaTouchedKeys: Long, syncCursor: Option[Long]) {
-    /** Serve-time rows added/suppressed per base row; +∞ for an empty
-      * base (any delta dominates — fold immediately). */
-    def overhead: Double =
-      if (baseRows == 0L) Double.PositiveInfinity
-      else (deltaLiveRows + deltaTouchedKeys).toDouble / baseRows
-    /** The poll-side fold trigger. */
-    def shouldFold(budget: Double): Boolean = overhead > budget
-  }
-
-  /** Measure a follow pair's delta overhead WITHOUT serving a query:
-    * `live` = the delta table's resolved row count (O(batch)),
-    * `touched` = the exact anti-join frame the serve path builds
-    * (tombstone shadow keys ∪ live keys, O(touched)), `base` = the
-    * frozen base's parquet row count (footer metadata — no column
-    * scan). Family-agnostic: every follow family (LSH/IVF/PQ/SQ8/BQ
-    * here, the BM25 postings follow in
-    * [[graft.operators.TextIndex]]) resolves serve rows the same
-    * base-minus-touched-plus-live way, so the same three counts answer
-    * "is it time to fold?" for each. `syncCursor` is None for a
-    * never-synced delta root (nothing to fold yet — the fold itself
-    * would throw). */
-  def followDeltaStats(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String): FollowDeltaStats = {
-    import graft.sources.Snapshot
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    FollowDeltaStats(
-      baseRows = spark.read.parquet(basePath).count(),
-      deltaLiveRows = live.count(),
-      deltaTouchedKeys = touched.count(),
-      syncCursor = graft.sources.Replica.cursor(spark, deltaRoot))
-  }
-
   /** Centroid-assignment column of the persisted IVF layout. */
   val CentCol = "cent"
 
@@ -373,116 +215,6 @@ object AnnIndex {
       .drop("__best")
   }
 
-  /** Build and persist the IVF index: inverted lists partitioned by
-    * centroid at `path`, the pivoted codebook (cb_label, cv, cc) at
-    * `path + "_codebook"` — both stored, so serving needs neither the
-    * collection nor the codebook derivation. */
-  def writeIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, path: String): Unit = {
-    // independent writes — run as concurrent jobs (guide §2.6)
-    Par.inParallel(Seq(
-      () => partitionCoherent(ivfIndexRows(df, idCol, vecCol, codebook), CentCol)
-        .write.mode("overwrite").partitionBy(CentCol).parquet(path),
-      () => Ann.pivotCodebook(codebook)
-        .select(col("cb_label"), col("__cv").as("cv"), col("__cc").as("cc"))
-        .write.mode("overwrite").parquet(path + "_codebook")))
-  }
-
-  /** INCREMENTAL IVF maintenance: append a NEW batch's inverted-list
-    * rows to an existing index at `path`, encoding with the STORED
-    * codebook (`path + "_codebook"`) — the frozen serve-time parameter,
-    * exactly as [[appendLshIndex]]'s hyperplanes. O(batch) + O(nlist):
-    * the job scans the batch and the ≤ nlist-row codebook; the stored
-    * index data is never read and its files are never rewritten
-    * (asserted in WarehouseSpec). Serve-after-append is hash-identical
-    * to a full rebuild over the union with the same codebook (the
-    * emb_knn_ivf_incremental gate). */
-  def appendIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val stored = batch.sparkSession.read.parquet(path + "_codebook")
-      .select(col("cb_label"), col("cv").as("__cv"), col("cc").as("__cc"))
-    partitionCoherent(ivfRowsFromPivoted(batch, idCol, vecCol, stored), CentCol)
-      .write.mode("append").partitionBy(CentCol).parquet(path)
-  }
-
-  /** IVF twin of [[knnLshServeFollow]] — base+delta serving over a
-    * MUTATING corpus where the frozen parameter is the TRAINED codebook
-    * (stored at `basePath + "_codebook"`) rather than LSH's
-    * hyperplanes: delta rows encode through the same
-    * stored-codebook assignment as [[appendIvfIndex]] (one code path ⇒
-    * bit-identical centroids), touched base ids anti-join out, and the
-    * standard [[knnIvfServe]] selection runs over the union —
-    * hash-identical to a full rebuild over the corpus's current state
-    * WITH THAT CODEBOOK (the emb_knn_ivf_follow gate). The PQ index
-    * composes identically (stored per-subspace codebooks encode the
-    * delta's codes); delta materialization keeps runtime filters on
-    * the base scan, as in the LSH twin. */
-  def knnIvfServeFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String,
-      probePred: Column, k: Int, nProbe: Int): DataFrame = {
-    val (served, codebook, _) = ivfFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol)
-    knnIvfServe(served, codebook, idCol, probePred, k, nProbe)
-  }
-
-  /** The resolved serving rows of a following IVF index — the
-    * [[lshFollowResolved]] discipline with the stored codebook as the
-    * frozen parameter: base rows minus delta-touched ids, union the
-    * delta's live rows encoded through the SAME stored-codebook
-    * assignment as [[appendIvfIndex]]. Shared verbatim by the serve
-    * path and the fold, so a fold persists EXACTLY the served frame.
-    * Returns (served, codebook, delta-checkpoint handle). */
-  private def ivfFollowResolved(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Snapshot
-    val base = spark.read.parquet(basePath)
-    val codebook = spark.read.parquet(basePath + "_codebook")
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    val stored = codebook
-      .select(col("cb_label"), col("cv").as("__cv"), col("cc").as("__cc"))
-    val deltaRows = ivfRowsFromPivoted(live, idCol, vecCol, stored)
-      .select(base.columns.map(col).toSeq: _*)
-      .localCheckpoint(true)
-    (base.join(touched, Seq(idCol), "left_anti").unionByName(deltaRows),
-      codebook, deltaRows)
-  }
-
-  /** FOLD a following IVF index's delta into a fresh frozen base at
-    * `newBasePath` — the IVF twin of [[compactLshFollow]], with one
-    * extra obligation: the TRAINED codebook is the index's frozen
-    * serve-time parameter, so the fold copies it verbatim to
-    * `newBasePath + "_codebook"` (never retrained — retraining would
-    * shift every stored assignment). The fold writes the EXACT resolved
-    * frame the follow mode serves (shared [[ivfFollowResolved]] path:
-    * stored base rows pass through untouched, only the delta's live
-    * rows encode, the corpus is never read), partitioned by centroid
-    * like any [[writeIvfIndex]] base — the new base keeps the
-    * dynamically-pruned list scan. O(base + delta). Returns the handoff
-    * cursor under the same contract and concurrency check as the LSH
-    * fold: never-synced delta throws, a concurrent sync fails loudly. */
-  def compactIvfFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, newBasePath: String): Long = {
-    val cur = foldCursor(spark, deltaRoot, "compactIvfFollow")
-    val (served, codebook, deltaRows) = ivfFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol)
-    try {
-      Par.inParallel(Seq(
-        () => partitionCoherent(served, CentCol)
-          .write.mode("overwrite").partitionBy(CentCol).parquet(newBasePath),
-        () => codebook.write.mode("overwrite").parquet(newBasePath + "_codebook")))
-    } finally NearDup.freeCheckpoint(deltaRows)
-    requireCursorStable(spark, deltaRoot, cur, "compactIvfFollow")
-    cur
-  }
-
   /** Subspace / code columns of the persisted PQ layout. */
   val SubspaceCol = "subspace"
   val CodeCol = "code"
@@ -514,115 +246,6 @@ object AnnIndex {
       .agg(min(struct(col("__dist"), col("cluster"))).as("__best"))
       .select(col(idCol), col(SubspaceCol),
         col("__best").getField("cluster").as(CodeCol))
-  }
-
-  /** Build and persist the PQ index: the code rows at `path` (flat — an
-    * ADC search consumes every subspace, there is nothing to prune by),
-    * the trained codebooks (subspace, cluster, cv, cc) at
-    * `path + "_codebook"`. Incremental growth = append [[pqIndexRows]]
-    * over the new batch with the SAME stored codebooks — O(batch). */
-  def writePqIndex(df: DataFrame, idCol: String, vecCol: String,
-      codebooks: DataFrame, dim: Int, m: Int, path: String): Unit = {
-    Par.inParallel(Seq(
-      () => pqIndexRows(df, idCol, vecCol, codebooks, dim, m)
-        .write.mode("overwrite").parquet(path),
-      () => codebooks
-        .select(col(SubspaceCol), col("cluster"),
-          col("__cv").as("cv"), col("__cc").as("cc"))
-        .write.mode("overwrite").parquet(path + "_codebook")))
-  }
-
-  /** INCREMENTAL PQ maintenance: append a NEW batch's code rows to an
-    * existing index at `path`, encoding with the STORED codebooks
-    * (`path + "_codebook"` — the frozen m·k-row quantizer). O(batch):
-    * the job scans the batch plus the broadcast codebooks; stored codes
-    * are never read or rewritten (asserted in WarehouseSpec).
-    * Serve-after-append is hash-identical to a full rebuild over the
-    * union with the same codebooks (the emb_knn_pq_incremental gate). */
-  def appendPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-      dim: Int, m: Int, path: String): Unit = {
-    val stored = batch.sparkSession.read.parquet(path + "_codebook")
-      .select(col(SubspaceCol), col("cluster"),
-        col("cv").as("__cv"), col("cc").as("__cc"))
-    pqIndexRows(batch, idCol, vecCol, stored, dim, m)
-      .write.mode("append").parquet(path)
-  }
-
-  /** PQ twin of [[knnLshServeFollow]] — base+delta serving over a
-    * MUTATING corpus for the one index whose stored form is CODES, not
-    * vectors: the frozen parameters are the per-subspace codebooks
-    * (`basePath + "_codebook"`, trained at build time). The delta's
-    * live rows encode into (id, subspace, code) through the SAME
-    * stored-codebook assignment as [[appendPqIndex]] (bit-identical
-    * codes), base code rows whose id the delta touched anti-join out,
-    * and the standard [[knnPqServe]] ADC runs over the union — the
-    * collection side still reads only codes, the probe side still
-    * arrives with its vectors and builds per-request distance tables.
-    * Hash-identical to a full rebuild over the corpus's current state
-    * with the same codebooks (the emb_knn_pq_follow gate). The delta
-    * codes are materialized so a multi-probe serve re-reads the
-    * checkpoint, not the encode. */
-  def knnPqServeFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      probes: DataFrame, idCol: String, vecCol: String,
-      dim: Int, m: Int, k: Int): DataFrame = {
-    val (codes, codebooks, _) = pqFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol, dim, m)
-    knnPqServe(codes, codebooks, probes, idCol, vecCol, dim, m, k)
-  }
-
-  /** The resolved code table of a following PQ index — base codes minus
-    * delta-touched ids, union the delta's live rows encoded through the
-    * stored codebooks. Shared by serve and fold (the
-    * [[lshFollowResolved]] discipline). Returns (codes, codebooks,
-    * delta-checkpoint handle). */
-  private def pqFollowResolved(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String,
-      dim: Int, m: Int): (DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Snapshot
-    val base = spark.read.parquet(basePath)
-    val codebooks = spark.read.parquet(basePath + "_codebook")
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    val stored = codebooks
-      .select(col(SubspaceCol), col("cluster"),
-        col("cv").as("__cv"), col("cc").as("__cc"))
-    val deltaCodes = pqIndexRows(live, idCol, vecCol, stored, dim, m)
-      .select(base.columns.map(col).toSeq: _*)
-      .localCheckpoint(true)
-    (base.join(touched, Seq(idCol), "left_anti").unionByName(deltaCodes),
-      codebooks, deltaCodes)
-  }
-
-  /** FOLD a following PQ index's delta into a fresh frozen base at
-    * `newBasePath` — completes the base+delta lifecycle for the third
-    * serving index: writes the EXACT resolved code table the follow
-    * mode serves (shared [[pqFollowResolved]] path — stored codes pass
-    * through untouched, only the delta's live rows encode) plus the
-    * frozen codebooks copied verbatim to `newBasePath + "_codebook"`
-    * (retraining would shift every stored code). Flat layout like any
-    * [[writePqIndex]] base (ADC consumes every subspace — nothing to
-    * partition-prune by). O(base + delta). Same handoff-cursor contract
-    * and concurrency check as [[compactLshFollow]]. */
-  def compactPqFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, dim: Int, m: Int,
-      newBasePath: String): Long = {
-    val cur = foldCursor(spark, deltaRoot, "compactPqFollow")
-    val (codes, codebooks, deltaCodes) = pqFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol, dim, m)
-    try {
-      Par.inParallel(Seq(
-        () => codes.write.mode("overwrite").parquet(newBasePath),
-        () => codebooks.write.mode("overwrite").parquet(newBasePath + "_codebook")))
-    } finally NearDup.freeCheckpoint(deltaCodes)
-    requireCursorStable(spark, deltaRoot, cur, "compactPqFollow")
-    cur
   }
 
   /** Top-k PQ search served from the PERSISTED codes + codebooks: the
@@ -718,102 +341,6 @@ object AnnIndex {
         c => (c - lit(128L)).cast("byte")).as(CodeCol))
   }
 
-  /** Build and persist the SQ8 index: trained per-dim (dim_idx, vmin,
-    * vmax) params at `path + "_params"` (dim rows — constant size), the
-    * byte-code rows at `path` (flat — a compressed scan consumes every
-    * row, there is nothing to prune by; the index IS the 8× cheaper
-    * scan). Params train on `df` unless a pre-trained frame is given
-    * (e.g. quantizer trained on a reference corpus slice). Incremental
-    * growth = [[appendSq8Index]]. */
-  def writeSq8Index(df: DataFrame, idCol: String, vecCol: String,
-      path: String, params: DataFrame = null): Unit = {
-    val p = Option(params).getOrElse(Ann.sq8Train(df, vecCol))
-    p.write.mode("overwrite").parquet(path + "_params")
-    sq8IndexRows(df, idCol, vecCol,
-      df.sparkSession.read.parquet(path + "_params"))
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** INCREMENTAL SQ8 maintenance: encode a NEW batch through the STORED
-    * frozen params and append its code rows — O(batch); stored codes are
-    * never read or rewritten. Same contract as [[appendPqIndex]]. */
-  def appendSq8Index(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val stored = batch.sparkSession.read.parquet(path + "_params")
-    sq8IndexRows(batch, idCol, vecCol, stored)
-      .write.mode("append").parquet(path)
-  }
-
-  /** SQ8 twin of [[knnLshServeFollow]] — base+delta serving for the
-    * compressed-scan index: the frozen parameters are the trained
-    * per-dim [vmin, vmax] (`basePath + "_params"`). The delta's live
-    * rows encode to byte codes through the SAME stored-param derivation
-    * as [[appendSq8Index]] (bit-identical codes), base code rows whose
-    * id the delta touched anti-join out, and the standard
-    * [[knnSq8Serve]] two-stage search runs over the union — the
-    * compressed side never re-encodes the corpus; `coll` (the corpus's
-    * CURRENT full-precision state, e.g. `Snapshot.read` of the source
-    * table) supplies probes and the exact-cosine refine rows, touched
-    * for O(probes·refine·k) rows only. Hash-identical to a full rebuild
-    * over the corpus's current state with the same params (the
-    * emb_knn_sq8_follow gate). */
-  def knnSq8ServeFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      coll: DataFrame, idCol: String, vecCol: String,
-      probePred: Column, k: Int, refine: Int): DataFrame = {
-    val (codes, params, _) = sq8FollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol)
-    knnSq8Serve(codes, params, coll, idCol, vecCol, probePred, k, refine)
-  }
-
-  /** The resolved code table of a following SQ8 index — base codes
-    * minus delta-touched ids, union the delta's live rows encoded
-    * through the frozen stored params. Shared by serve and fold (the
-    * [[lshFollowResolved]] discipline). Returns (codes, params,
-    * delta-checkpoint handle). */
-  private def sq8FollowResolved(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Snapshot
-    val base = spark.read.parquet(basePath)
-    val params = spark.read.parquet(basePath + "_params")
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    val deltaCodes = sq8IndexRows(live, idCol, vecCol, params)
-      .select(base.columns.map(col).toSeq: _*)
-      .localCheckpoint(true)
-    (base.join(touched, Seq(idCol), "left_anti").unionByName(deltaCodes),
-      params, deltaCodes)
-  }
-
-  /** FOLD a following SQ8 index's delta into a fresh frozen base at
-    * `newBasePath` — completes the base+delta lifecycle for the fourth
-    * vector index: writes the EXACT resolved code table the follow mode
-    * serves (stored byte codes pass through untouched, only the delta's
-    * live rows encode) plus the frozen params copied verbatim to
-    * `newBasePath + "_params"` (retraining would shift every stored
-    * code). Flat layout like any [[writeSq8Index]] base (the compressed
-    * scan consumes every row). O(base + delta). Same handoff-cursor
-    * contract and concurrency check as [[compactLshFollow]]. */
-  def compactSq8Follow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, newBasePath: String): Long = {
-    val cur = foldCursor(spark, deltaRoot, "compactSq8Follow")
-    val (codes, params, deltaCodes) = sq8FollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol)
-    try {
-      Par.inParallel(Seq(
-        () => codes.write.mode("overwrite").parquet(newBasePath),
-        () => params.write.mode("overwrite").parquet(newBasePath + "_params")))
-    } finally NearDup.freeCheckpoint(deltaCodes)
-    requireCursorStable(spark, deltaRoot, cur, "compactSq8Follow")
-    cur
-  }
-
   // ---- BQ 1-bit binary-quantized index ---------------------------------
 
   /** Reserved BQ code column: packed 32-bit sign words. */
@@ -832,30 +359,6 @@ object AnnIndex {
       .withColumnRenamed("__code", BqCodeCol)
   }
 
-  /** Build and persist the BQ index: trained per-dim (dim_idx, t)
-    * thresholds at `path + "_params"` (dim rows — constant size), the
-    * packed code rows at `path` (flat — the compressed scan consumes
-    * every row). Params train on `df` unless a pre-trained frame is
-    * given. Incremental growth = [[appendBqIndex]]. */
-  def writeBqIndex(df: DataFrame, idCol: String, vecCol: String,
-      path: String, params: DataFrame = null): Unit = {
-    val p = Option(params).getOrElse(Ann.bqTrain(df, vecCol))
-    p.write.mode("overwrite").parquet(path + "_params")
-    bqIndexRows(df, idCol, vecCol,
-      df.sparkSession.read.parquet(path + "_params"))
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** INCREMENTAL BQ maintenance: encode a NEW batch through the STORED
-    * frozen thresholds and append its code rows — O(batch); stored
-    * codes are never read or rewritten. */
-  def appendBqIndex(batch: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val stored = batch.sparkSession.read.parquet(path + "_params")
-    bqIndexRows(batch, idCol, vecCol, stored)
-      .write.mode("append").parquet(path)
-  }
-
   /** Top-k BQ search served from the PERSISTED code words: symmetric
     * Hamming scan (probes encode through the stored thresholds at query
     * time — one broadcast row of params, no corpus math), exact-cosine
@@ -870,59 +373,6 @@ object AnnIndex {
     val qdf = coll.select(col(idCol), Ann.quantize(col(vecCol)).as("__q"))
       .withColumn("__n", Ann.dotQ(col("__q"), col("__q")))
     Ann.bqSearch(enc, thr, qdf, idCol, probePred, k, refine)
-  }
-
-  /** BQ twin of [[knnSq8ServeFollow]]: base codes minus delta-touched
-    * ids, union the delta's live rows encoded through the frozen stored
-    * thresholds — hash-identical to a full rebuild over the corpus's
-    * current state with the same params. */
-  def knnBqServeFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      coll: DataFrame, idCol: String, vecCol: String,
-      probePred: Column, k: Int, refine: Int): DataFrame = {
-    val (codes, params, _) = bqFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol)
-    knnBqServe(codes, params, coll, idCol, vecCol, probePred, k, refine)
-  }
-
-  /** The resolved code table of a following BQ index (the
-    * [[sq8FollowResolved]] discipline). */
-  private def bqFollowResolved(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Snapshot
-    val base = spark.read.parquet(basePath)
-    val params = spark.read.parquet(basePath + "_params")
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    val deltaCodes = bqIndexRows(live, idCol, vecCol, params)
-      .select(base.columns.map(col).toSeq: _*)
-      .localCheckpoint(true)
-    (base.join(touched, Seq(idCol), "left_anti").unionByName(deltaCodes),
-      params, deltaCodes)
-  }
-
-  /** FOLD a following BQ index's delta into a fresh frozen base at
-    * `newBasePath` — stored code words pass through untouched, frozen
-    * thresholds copied verbatim. Same handoff-cursor contract and
-    * concurrency check as [[compactSq8Follow]]. */
-  def compactBqFollow(spark: org.apache.spark.sql.SparkSession,
-      basePath: String, deltaRoot: String, deltaTable: String,
-      idCol: String, vecCol: String, newBasePath: String): Long = {
-    val cur = foldCursor(spark, deltaRoot, "compactBqFollow")
-    val (codes, params, deltaCodes) = bqFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, vecCol)
-    try {
-      Par.inParallel(Seq(
-        () => codes.write.mode("overwrite").parquet(newBasePath),
-        () => params.write.mode("overwrite").parquet(newBasePath + "_params")))
-    } finally NearDup.freeCheckpoint(deltaCodes)
-    requireCursorStable(spark, deltaRoot, cur, "compactBqFollow")
-    cur
   }
 
   /** Top-k SQ8 search served from the PERSISTED byte codes: candidates

@@ -1,16 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 
-/** PERSISTED BM25 text-serving index — the inverted-index twin of the
-  * vector families in [[AnnIndex]], closing the retrieval story for the
-  * TEXT side of a hybrid-search stack (cf. the in-query [[Bm25.topK]],
-  * which re-tokenizes the corpus per call; at 100 TB the tokenize +
-  * posting derivation is paid once at ingest and every query reads only
-  * its terms' postings).
+/** PERSISTED BM25 text-serving index — the [[bm25]] [[IndexFamily]]
+  * beside the vector families in [[AnnIndex]], closing the retrieval
+  * story for the TEXT side of a hybrid-search stack (cf. the in-query
+  * [[Bm25.topK]], which re-tokenizes the corpus per call; at 100 TB the
+  * tokenize + posting derivation is paid once at ingest and every query
+  * reads only its terms' postings).
   *
   * Layout:
   *  - `path`: the postings — one (term, id, tf, dl) row per distinct
@@ -34,7 +34,8 @@ import graft.functions.Text
   */
 object TextIndex {
 
-  /** Reserved index column names (guarded in [[postingsRows]]). */
+  /** Reserved index column names (guarded in [[postingsRows]] and
+    * [[bm25]]'s tokenize pass). */
   val TermCol = "term"
   val TfCol = "tf"
   val DlCol = "dl"
@@ -45,18 +46,26 @@ object TextIndex {
     * files at corpus scale while a q-term query still prunes ≥ 98%. */
   val Buckets = 64
 
-  /** Cluster postings by term bucket before a `partitionBy(tb)` write
-    * (guide §6: REBALANCE before a partitioned write). Without it every
-    * write task opens one file per bucket it holds — N tasks × 64
-    * buckets of tiny files (512 × ~1.5 KB measured at sf0.1), paid again
-    * by every later scan of the index (serve, follow resolve, compaction
-    * fold). Hash-partitioning by `tb` makes each task hold whole
-    * buckets, so the file count drops to ~[[Buckets]] and each file is
-    * the bucket's full vocabulary slice. `repartition(col)` (no explicit
-    * N) stays AQE-coalescible, and at corpus scale the exchange carries
-    * only the narrow (term, id, tf, dl, tb) postings rows. */
-  private def bucketCoherent(posts: DataFrame): DataFrame =
-    posts.repartition(col(TbCol))
+  /** A BM25 request: the top `k` documents for `terms`. */
+  final case class Query(terms: Seq[String], k: Int)
+
+  /** BM25: postings partitioned by term bucket `tb` plus the per-doc
+    * `_docs` table, both derived from ONE tokenized, checkpointed pass
+    * (tokenizing twice would double the dominant ingest cost); no side
+    * table — corpus stats derive live from the stored rows. */
+  def bm25(idCol: String, textCol: String): IndexFamily[Query] =
+    IndexFamily(idCol, Seq(IndexTable("", Some(TbCol)), IndexTable("_docs")),
+      encode = (tok, _) => Seq(postingsOf(tok, idCol), tok.select(col(idCol), col(DlCol))),
+      serve = (ix, q) => bm25ServeFrames(ix.tables(0), ix.tables(1), idCol, q.terms, q.k),
+      prepare = Some { df =>
+        requireUnreserved(df)
+        tokenized(df, idCol, textCol).localCheckpoint(true)
+      })
+
+  private def requireUnreserved(df: DataFrame): Unit =
+    Seq(TermCol, TfCol, DlCol, TbCol).foreach { c =>
+      require(!df.columns.contains(c),
+        s"input already has a column named the reserved index column '$c'") }
 
   /** The postings of a batch: one (term, id, tf, dl, tb) row per
     * distinct (doc, term). One scan, one (id, term) map-side-combinable
@@ -64,15 +73,15 @@ object TextIndex {
     * NULL-text docs tokenize to NULL and contribute no postings (they
     * still count toward N through [[docRows]]). */
   def postingsRows(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    Seq(TermCol, TfCol, DlCol, TbCol).foreach { c =>
-      require(!df.columns.contains(c),
-        s"input already has a column named the reserved index column '$c'") }
-    tokenized(df, idCol, textCol)
-      .select(col(idCol), col(DlCol), explode(col("__t")).as(TermCol))
+    requireUnreserved(df)
+    postingsOf(tokenized(df, idCol, textCol), idCol)
+  }
+
+  private def postingsOf(tok: DataFrame, idCol: String): DataFrame =
+    tok.select(col(idCol), col(DlCol), explode(col("__t")).as(TermCol))
       .groupBy(col(idCol), col(DlCol), col(TermCol))
       .agg(count(lit(1)).as(TfCol))
       .withColumn(TbCol, pmod(xxhash64(col(TermCol)), lit(Buckets.toLong)))
-  }
 
   /** Per-doc (id, dl) rows — EVERY doc, NULL dl for NULL-text docs (they
     * count toward N, not Σdl, matching [[Bm25.topK]]'s stats row). */
@@ -87,72 +96,13 @@ object TextIndex {
       .select(col(idCol), Text.tokens(Text.normalize(col(textCol))).as("__t"))
       .withColumn(DlCol, size(col("__t")).cast("long"))
 
-  /** Postings + doc rows off ONE tokenized, checkpointed pass — the
-    * write paths would otherwise tokenize the corpus twice (once per
-    * stored table), doubling the dominant ingest cost at corpus scale.
-    * Runs `use` over the two frames, then frees the checkpoint. */
-  private def withIndexFrames[A](df: DataFrame, idCol: String, textCol: String)
-      (use: (DataFrame, DataFrame) => A): A = {
-    Seq(TermCol, TfCol, DlCol, TbCol).foreach { c =>
-      require(!df.columns.contains(c),
-        s"input already has a column named the reserved index column '$c'") }
-    val tok = tokenized(df, idCol, textCol).localCheckpoint(true)
-    try {
-      val posts = tok
-        .select(col(idCol), col(DlCol), explode(col("__t")).as(TermCol))
-        .groupBy(col(idCol), col(DlCol), col(TermCol))
-        .agg(count(lit(1)).as(TfCol))
-        .withColumn(TbCol, pmod(xxhash64(col(TermCol)), lit(Buckets.toLong)))
-      use(posts, tok.select(col(idCol), col(DlCol)))
-    } finally NearDup.freeCheckpoint(tok)
-  }
-
-  /** Build and persist the index: postings at `path` partitioned by term
-    * bucket, the per-doc length table at `path + "_docs"` — both derived
-    * from ONE tokenized pass over the corpus. Overwrite = rebuild;
-    * incremental growth is [[appendTextIndex]]. */
-  def writeTextIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String): Unit =
-    withIndexFrames(df, idCol, textCol) { (posts, docs) =>
-      // both frames read the same materialized tokenize checkpoint —
-      // independent writes, run as concurrent jobs (guide §2.6)
-      Par.inParallel(Seq(
-        () => bucketCoherent(posts).write.mode("overwrite")
-          .partitionBy(TbCol).parquet(path),
-        () => docs.write.mode("overwrite").parquet(path + "_docs")))
-    }
-
-  /** INCREMENTAL index maintenance: append a NEW batch's postings and
-    * doc rows (one tokenized pass over the batch). O(batch) — the
-    * stored index is never read and its files never rewritten (asserted
-    * in TextIndexSpec). Serving derives corpus stats live, so
-    * serve-after-append is hash-identical to a full rebuild over the
-    * union (the txt_bm25_incremental gate). */
-  def appendTextIndex(batch: DataFrame, idCol: String, textCol: String,
-      path: String): Unit =
-    withIndexFrames(batch, idCol, textCol) { (posts, docs) =>
-      Par.inParallel(Seq(
-        () => bucketCoherent(posts).write.mode("append")
-          .partitionBy(TbCol).parquet(path),
-        () => docs.write.mode("append").parquet(path + "_docs")))
-    }
-
-  /** Top-k BM25 served from the PERSISTED index: zero tokenization — the
-    * query terms' bucket set prunes the postings scan to ≤ |terms|
-    * directories, per-term df and the (N, Σdl) corpus stats collapse
-    * into ONE broadcast row, and [[Bm25.rank]] scores the ≤
-    * |pruned postings| candidate docs. Hash-identical to
-    * [[Bm25.topK]] over the indexed corpus (the txt_bm25_persisted
-    * gate shares doc_bm25's oracle). */
-  def bm25Serve(spark: SparkSession, path: String, idCol: String,
-      terms: Seq[String], k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25ServeFrames(spark.read.parquet(path),
-      spark.read.parquet(path + "_docs"), idCol, terms, k, k1, b)
-
-  /** The serve body over explicit (postings, docs) frames — shared by
-    * the stored-index path ([[bm25Serve]]) and the base+delta follow
-    * path ([[bm25ServeFollow]]), so both score through the identical
-    * plan shape. */
+  /** Top-k BM25 over (postings, docs) frames — the stored index or its
+    * base+delta resolution: zero tokenization — the query terms' bucket
+    * set prunes the postings scan to ≤ |terms| directories, per-term df
+    * and the (N, Σdl) corpus stats collapse into ONE broadcast row, and
+    * [[Bm25.rank]] scores the ≤ |pruned postings| candidate docs.
+    * Hash-identical to [[Bm25.topK]] over the indexed corpus (the
+    * txt_bm25_persisted gate shares doc_bm25's oracle). */
   def bm25ServeFrames(postings: DataFrame, docs: DataFrame, idCol: String,
       terms: Seq[String], k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     Bm25.requireQuery(terms, k)
@@ -185,80 +135,5 @@ object TextIndex {
           coalesce(sum(when(col(TermCol) === t, col(TfCol))), lit(0L)).as(s"__tf$i")
         }: _*)
     Bm25.rank(hits, stats, idCol, terms.size, k, k1, b)
-  }
-
-  /** Top-k BM25 from a FROZEN base index + a FOLLOWING delta — the
-    * [[AnnIndex.knnLshServeFollow]] discipline for text: the base is a
-    * persisted index built from a snapshot version of the corpus;
-    * `deltaRoot`/`deltaTable` is kept current by
-    * [[graft.sources.Replica]] sync from that version on. Base postings
-    * and doc rows whose id the delta TOUCHED anti-join out, the delta's
-    * live docs tokenize through the SAME [[postingsRows]] derivation,
-    * and the standard serve runs over the union — corpus stats derive
-    * from the composed frames, so the result is hash-identical to a
-    * full rebuild over the corpus's current state (the txt_bm25_follow
-    * gate). Everything past the base scans is O(touched). */
-  def bm25ServeFollow(spark: SparkSession, basePath: String,
-      deltaRoot: String, deltaTable: String, idCol: String, textCol: String,
-      terms: Seq[String], k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (posts, docs, _, _) = textFollowResolved(spark, basePath,
-      deltaRoot, deltaTable, idCol, textCol)
-    bm25ServeFrames(posts, docs, idCol, terms, k, k1, b)
-  }
-
-  /** The resolved (postings, docs) of a following text index — base
-    * rows minus delta-touched ids, union the delta's live docs run
-    * through the build-time derivations. Shared verbatim by serve and
-    * fold, so a fold persists EXACTLY the served frames. The delta
-    * frames are materialized (multi-term serves re-read the checkpoint,
-    * not the tokenize). Returns (postings, docs, delta checkpoints). */
-  private def textFollowResolved(spark: SparkSession, basePath: String,
-      deltaRoot: String, deltaTable: String, idCol: String,
-      textCol: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import graft.sources.Snapshot
-    val basePosts = spark.read.parquet(basePath)
-    val baseDocs = spark.read.parquet(basePath + "_docs")
-    val live = Snapshot.read(spark, deltaRoot, deltaTable)
-    val liveKeys = live.select(col(idCol))
-    val touched = Snapshot.shadowedKeys(spark, deltaRoot, deltaTable) match {
-      case Some(shadow) => shadow.select(col(idCol)).unionByName(liveKeys).distinct()
-      case None => liveKeys.distinct()
-    }
-    val (deltaPosts, deltaDocs) = withIndexFrames(live, idCol, textCol) {
-      (posts, docs) =>
-        (posts.select(basePosts.columns.map(col).toSeq: _*).localCheckpoint(true),
-          docs.select(baseDocs.columns.map(col).toSeq: _*).localCheckpoint(true))
-    }
-    (basePosts.join(touched, Seq(idCol), "left_anti").unionByName(deltaPosts),
-      baseDocs.join(touched, Seq(idCol), "left_anti").unionByName(deltaDocs),
-      deltaPosts, deltaDocs)
-  }
-
-  /** FOLD a following text index's delta into a fresh frozen base at
-    * `newBasePath` — writes the EXACT resolved frames the follow mode
-    * serves (stored postings pass through untouched, only the delta's
-    * live docs tokenize; the corpus is never re-read), partitioned by
-    * term bucket like any [[writeTextIndex]] base. O(base + delta).
-    * Returns the handoff cursor under the same contract and concurrency
-    * check as [[AnnIndex.compactLshFollow]]: a never-synced delta
-    * throws, a sync landing mid-fold fails loudly (the old base+delta
-    * pair kept serving — re-run). */
-  def compactTextFollow(spark: SparkSession, basePath: String,
-      deltaRoot: String, deltaTable: String, idCol: String, textCol: String,
-      newBasePath: String): Long = {
-    val cur = AnnIndex.foldCursor(spark, deltaRoot, "compactTextFollow")
-    val (posts, docs, deltaPosts, deltaDocs) = textFollowResolved(spark,
-      basePath, deltaRoot, deltaTable, idCol, textCol)
-    try {
-      Par.inParallel(Seq(
-        () => bucketCoherent(posts).write.mode("overwrite")
-          .partitionBy(TbCol).parquet(newBasePath),
-        () => docs.write.mode("overwrite").parquet(newBasePath + "_docs")))
-    } finally {
-      NearDup.freeCheckpoint(deltaPosts)
-      NearDup.freeCheckpoint(deltaDocs)
-    }
-    AnnIndex.requireCursorStable(spark, deltaRoot, cur, "compactTextFollow")
-    cur
   }
 }

@@ -1413,168 +1413,46 @@ object DocQueries {
     * prunes the postings scan to its terms' bucket directories, corpus
     * stats (N, Σdl, per-term df) collapse into one broadcast row from
     * the stored tables, and scoring runs through the IDENTICAL
-    * Bm25.rank code path — gated against the same oracle as doc_bm25:
-    * build-once-query-many must be hash-identical to the corpus-scan
-    * derivation. */
-  def txtBm25Persisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextIndex
-    val path = Tables.scratchDir(spark, "txtidx", dir)
-    TextIndex.writeTextIndex(Tables.documents(spark, dir), "doc_id", "text", path)
-    TextIndex.bm25Serve(spark, path, "doc_id", Bm25Terms, Bm25K)
+    * Bm25.rank code path — gated against the same oracle as doc_bm25. */
+  def txtBm25Persisted(spark: SparkSession, dir: String): DataFrame =
+    IndexScenario.persisted(spark, dir, "txtidx", Bm25Index, Tables.documents(spark, dir),
+        Bm25Query, incremental = false)
       .orderBy("rank")
-  }
 
   /** txt_bm25_incremental — INCREMENTAL text-index maintenance: the
-    * corpus arrives in two ingests (doc_id % 5 != 3, then the rest);
-    * the second APPENDS its postings and doc rows (O(batch) — the
-    * stored files are never read or rewritten, WarehouseSpec asserts
+    * second ingest APPENDS its postings and doc rows (O(batch) — the
+    * stored files are never read or rewritten, TextIndexSpec asserts
     * it). Corpus stats derive live from the stored tables, so
     * append-then-serve is gated against the SAME full-corpus oracle as
-    * doc_bm25 — hash-identical to a full rebuild. */
-  def txtBm25Incremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextIndex
-    val docs = Tables.documents(spark, dir)
-    val path = Tables.scratchDir(spark, "txtidxinc", dir)
-    TextIndex.writeTextIndex(docs.filter(col("doc_id") % 5 =!= 3),
-      "doc_id", "text", path)
-    TextIndex.appendTextIndex(docs.filter(col("doc_id") % 5 === 3),
-      "doc_id", "text", path)
-    TextIndex.bm25Serve(spark, path, "doc_id", Bm25Terms, Bm25K)
+    * doc_bm25. */
+  def txtBm25Incremental(spark: SparkSession, dir: String): DataFrame =
+    IndexScenario.persisted(spark, dir, "txtidxinc", Bm25Index, Tables.documents(spark, dir),
+        Bm25Query, incremental = true)
       .orderBy("rank")
-  }
 
-  /** txt_bm25_follow — FOLLOWING text index over a MUTATING corpus
-    * (graft.operators.TextIndex.bm25ServeFollow + sources.Replica), the
-    * emb_knn_lsh_follow scenario for text: a snapshot corpus is
-    * committed, the base inverted index is built from that version,
-    * then the corpus lives on — a key-set is erased (%7==0 tombstones)
-    * and a batch row-level MERGEs in with CHANGED text (%5==3 inserts ∪
-    * %9==1 re-upserts, both carrying two extra 'vector' tokens —
-    * re-served stale base postings or missed re-tokenization shifts
-    * their tf AND every doc's length normalization). One exactly-once
-    * sync lands the delta; serve composes base-minus-touched ∪
-    * re-tokenized delta with corpus stats derived from the COMPOSED
-    * frames — gated against an oracle running BM25 over the corpus's
-    * final state directly. */
-  def txtBm25Follow(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "txtfsrc", dir)
-    val delta = Tables.scratchDir(spark, "txtfdelta", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val buildV = Snapshot.commit(spark, corpus, Map("docs" ->
-      docs.filter(col("doc_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "txtfbase", dir)
-    // the base-index BUILD reads the pinned buildV segment list (the
-    // frame is constructed BEFORE the mutations; snapshot data dirs are
-    // write-once) while the corpus lives on — the two phases are
-    // independent, so they run as concurrent driver jobs (guide §2.6):
-    // the build's tokenize tail backfills cores the small mutation
-    // commits leave idle, and the serialized driver gaps between the
-    // two phases collapse. Results are position-identical to the
-    // sequential composition (oracle-gated).
-    val baseAtBuildV = Snapshot.read(spark, corpus, "docs")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => TextIndex.writeTextIndex(baseAtBuildV, "doc_id", "text", basePath),
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "docs",
-          col("doc_id") % 7 === 0, Seq("doc_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "docs",
-          docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 9 === 1)
-            .withColumn("text",
-              concat(coalesce(col("text"), lit("")), lit(" vector vector"))),
-          Seq("doc_id"))
-        require(Replica.sync(spark, corpus, "docs", delta, "docs_delta",
-          Seq("doc_id"), initialCursor = buildV).isDefined,
-          "txt follow sync did not publish")
-      }))
-    TextIndex.bm25ServeFollow(spark, basePath, delta, "docs_delta",
-        "doc_id", "text", Bm25Terms, Bm25K)
-      .orderBy("rank")
-  }
+  /** txt_bm25_follow / txt_bm25_compacted — the [[IndexScenario]] gates
+    * for text. The MERGE waves re-upsert CHANGED text (two extra
+    * 'vector' tokens in wave 1, two 'join' in wave 2): re-served stale
+    * base postings or a missed re-tokenization would shift their tf AND
+    * every doc's length normalization. Corpus stats derive from the
+    * resolved frames; gated against an oracle running BM25 over the
+    * corpus's final state. */
+  def txtBm25Follow(spark: SparkSession, dir: String): DataFrame =
+    bm25Gate(spark, dir, compacted = false)
 
-  /** txt_bm25_compacted — the FOLD closing the text following-index
-    * lifecycle (graft.operators.TextIndex.compactTextFollow): runs the
-    * txt_bm25_follow scenario, FOLDS base+delta into a fresh frozen
-    * base (stored postings pass through untokenized, the corpus is
-    * never re-read), then the corpus keeps mutating — a second erasure
-    * (%11==0) and a second MERGE (%13==2, two extra 'join' tokens) land,
-    * a FRESH delta syncs seeded at the fold's handoff cursor, and the
-    * serve composes newBase+freshDelta — gated against an oracle running
-    * BM25 over the corpus's FINAL state. Green means the fold lost
-    * nothing, duplicated nothing, and handed the cursor off
-    * exactly-once. */
-  def txtBm25Compacted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.TextIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "txtcsrc", dir)
-    val delta1 = Tables.scratchDir(spark, "txtcd1", dir)
-    val delta2 = Tables.scratchDir(spark, "txtcd2", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta1, delta2).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val buildV = Snapshot.commit(spark, corpus, Map("docs" ->
-      docs.filter(col("doc_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "txtcbase", dir)
-    // base BUILD ∥ wave-1 mutations+sync: the build reads the pinned
-    // buildV segment list (frame constructed before the mutations;
-    // data dirs are write-once), wave 1 only touches the corpus root —
-    // independent phases run as concurrent driver jobs (guide §2.6;
-    // see txtBm25Follow's note). Oracle-gated identical results.
-    val baseAtBuildV = Snapshot.read(spark, corpus, "docs")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => TextIndex.writeTextIndex(baseAtBuildV, "doc_id", "text", basePath),
-      () => {
-        // wave 1 — identical to the follow gate
-        Snapshot.deleteWhere(spark, corpus, "docs",
-          col("doc_id") % 7 === 0, Seq("doc_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "docs",
-          docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 9 === 1)
-            .withColumn("text",
-              concat(coalesce(col("text"), lit("")), lit(" vector vector"))),
-          Seq("doc_id"))
-        require(Replica.sync(spark, corpus, "docs", delta1, "docs_delta",
-          Seq("doc_id"), initialCursor = buildV).isDefined,
-          "txt compacted gate: wave-1 sync did not publish")
-      }))
-    // the FOLD (base+delta1 → a fresh frozen base) ∥ wave-2 MUTATIONS:
-    // the fold reads basePath+delta1 only (never the corpus), the
-    // mutations write the corpus root only. The wave-2 SYNC stays
-    // strictly after the fold — it seeds at the handoff cursor, and the
-    // fold's concurrency check (a sync landing mid-fold fails loudly)
-    // keeps exactly-once intact.
-    val base2 = Tables.scratchDir(spark, "txtcbase2", dir)
-    var cur = 0L
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => { cur = TextIndex.compactTextFollow(spark, basePath, delta1,
-        "docs_delta", "doc_id", "text", base2) },
-      () => {
-        // wave 2 — the corpus keeps mutating past the fold
-        Snapshot.deleteWhere(spark, corpus, "docs",
-          col("doc_id") % 11 === 0, Seq("doc_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "docs",
-          docs.filter(col("doc_id") % 13 === 2)
-            .withColumn("text",
-              concat(coalesce(col("text"), lit("")), lit(" join join"))),
-          Seq("doc_id"))
-      }))
-    require(Replica.sync(spark, corpus, "docs", delta2, "docs_delta",
-      Seq("doc_id"), initialCursor = cur).isDefined,
-      "txt compacted gate: wave-2 sync did not publish")
-    TextIndex.bm25ServeFollow(spark, base2, delta2, "docs_delta",
-        "doc_id", "text", Bm25Terms, Bm25K)
+  def txtBm25Compacted(spark: SparkSession, dir: String): DataFrame =
+    bm25Gate(spark, dir, compacted = true)
+
+  private lazy val Bm25Index = graft.operators.TextIndex.bm25("doc_id", "text")
+  private lazy val Bm25Query = graft.operators.TextIndex.Query(Bm25Terms, Bm25K)
+
+  private def bm25Gate(spark: SparkSession, dir: String, compacted: Boolean): DataFrame =
+    IndexScenario.follow(spark, dir, "txt", Bm25Index,
+        Tables.documents(spark, dir).select("doc_id", "text"), "docs", compacted,
+        _ => Bm25Query,
+        (batch, n) => batch.withColumn("text", concat(coalesce(col("text"), lit("")),
+          lit(if (n == 1) " vector vector" else " join join"))))
       .orderBy("rank")
-  }
 
   private val PrIters = 6
   private val PrLinks = 3

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
-import graft.operators.Ann
+import graft.operators.{Ann, AnnIndex, IndexFamily, IndexLifecycle, Par}
+import graft.operators.AnnIndex.Probe
 
 /** Similarity-search queries over the `embeddings` table (ARRAY<FLOAT>,
   * 64-dim): brute-force cosine top-k as the exactness baseline, the
@@ -23,6 +24,37 @@ object VectorQueries {
 
   private val ProbeMax = 10
   private val K = 5
+
+  private lazy val LshIndex = AnnIndex.lsh("vec_id", "embedding", Planes)
+  private lazy val IvfIndex = AnnIndex.ivf("vec_id", "embedding", "label", nProbe = 2)
+  private lazy val PqIndex = AnnIndex.pq("vec_id", "embedding", PqDim, PqM, PqK, PqIters)
+  private lazy val Sq8Index = AnnIndex.sq8("vec_id", "embedding", Sq8Refine)
+  private lazy val BqIndex = AnnIndex.bq("vec_id", "embedding", BqRefine)
+
+  /** The gates' probe set; the PQ, SQ8 and BQ serves draw it (and their
+    * exact-refine rows) from a collection. */
+  private lazy val Probes = Probe(col("vec_id") < ProbeMax, K)
+  private def withColl(coll: DataFrame) = Probes.copy(coll = Some(coll))
+  private def pqProbes(emb: DataFrame) = Probe(col("vec_id") < PqProbeMax, K, Some(emb))
+
+  /** A persisted (or, with `incremental`, build-then-append) gate over
+    * the embeddings — [[IndexScenario.persisted]]. */
+  private def persistedGate(spark: SparkSession, dir: String, kind: String,
+      f: IndexFamily[Probe], request: DataFrame => Probe,
+      incremental: Boolean = false): DataFrame = {
+    val emb = Tables.embeddings(spark, dir)
+    IndexScenario.persisted(spark, dir, kind, f, emb, request(emb), incremental)
+      .orderBy("probe_id", "rank")
+  }
+
+  /** A follow or compacted gate over the embeddings; the vector families
+    * re-upsert rows unchanged — [[IndexScenario.follow]]. */
+  private def followGate(spark: SparkSession, dir: String, scratch: String,
+      f: IndexFamily[Probe], compacted: Boolean,
+      request: (=> DataFrame) => Probe): DataFrame =
+    IndexScenario.follow(spark, dir, scratch, f, Tables.embeddings(spark, dir), "emb",
+        compacted, request)
+      .orderBy("probe_id", "rank")
 
   def embKnnBrute(spark: SparkSession, dir: String): DataFrame =
     Ann.knnBrute(Tables.embeddings(spark, dir), "vec_id", "embedding",
@@ -59,25 +91,12 @@ object VectorQueries {
   private val Sq8Refine = 2
 
   /** emb_knn_sq8_incremental — INCREMENTAL SQ8 maintenance gate: the
-    * quantizer params are trained once over the corpus, the collection
-    * arrives in two ingests (vec_id % 5 != 3, then the rest), the
-    * second APPENDS its byte codes through the frozen stored params —
-    * O(batch), stored files untouched (WarehouseSpec asserts) — and
-    * serving the appended index is hash-identical to the one-shot
-    * build (same oracle as emb_knn_sq8). */
-  def embKnnSq8Incremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annsq8inc", dir)
-    AnnIndex.writeSq8Index(emb.filter(col("vec_id") % 5 =!= 3),
-      "vec_id", "embedding", path, Ann.sq8Train(emb, "embedding"))
-    AnnIndex.appendSq8Index(emb.filter(col("vec_id") % 5 === 3),
-      "vec_id", "embedding", path)
-    AnnIndex.knnSq8Serve(spark.read.parquet(path),
-        spark.read.parquet(path + "_params"), emb,
-        "vec_id", "embedding", col("vec_id") < ProbeMax, K, Sq8Refine)
-      .orderBy("probe_id", "rank")
-  }
+    * quantizer params train once over the corpus, the collection
+    * arrives in two ingests and the second APPENDS its byte codes
+    * through the frozen stored params; serving the appended index is
+    * hash-identical to the one-shot build (same oracle as emb_knn_sq8). */
+  def embKnnSq8Incremental(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annsq8inc", Sq8Index, withColl, incremental = true)
 
   /** emb_knn_sq8 — 8-bit scalar-quantized compressed scan + exact
     * refine (Ann.knnSq8): per-dim trained min/max, integer asymmetric
@@ -101,137 +120,26 @@ object VectorQueries {
       .orderBy("probe_id", "rank")
 
   /** emb_knn_bq_persisted — the same BQ search served from PERSISTED
-    * code words + thresholds (AnnIndex.writeBqIndex/knnBqServe): no
-    * corpus encode at query time, probes encode through one broadcast
-    * param row. Shares emb_knn_bq's oracle — identical selection. */
-  def embKnnBqPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annbq", dir)
-    AnnIndex.writeBqIndex(emb, "vec_id", "embedding", path)
-    AnnIndex.knnBqServe(spark.read.parquet(path),
-        spark.read.parquet(path + "_params"), emb,
-        "vec_id", "embedding", col("vec_id") < ProbeMax, K, BqRefine)
-      .orderBy("probe_id", "rank")
-  }
+    * code words + thresholds: no corpus encode at query time, probes
+    * encode through one broadcast param row. Shares emb_knn_bq's oracle. */
+  def embKnnBqPersisted(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annbq", BqIndex, withColl)
 
   /** emb_knn_bq_incremental — O(batch) BQ maintenance: build on a
     * slice with full-corpus-trained thresholds, append the rest through
-    * the STORED params (AnnIndex.appendBqIndex), serve — bit-identical
-    * to the one-shot build (same oracle). */
-  def embKnnBqIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annbqinc", dir)
-    AnnIndex.writeBqIndex(emb.filter(col("vec_id") % 5 =!= 3),
-      "vec_id", "embedding", path, Ann.bqTrain(emb, "embedding"))
-    AnnIndex.appendBqIndex(emb.filter(col("vec_id") % 5 === 3),
-      "vec_id", "embedding", path)
-    AnnIndex.knnBqServe(spark.read.parquet(path),
-        spark.read.parquet(path + "_params"), emb,
-        "vec_id", "embedding", col("vec_id") < ProbeMax, K, BqRefine)
-      .orderBy("probe_id", "rank")
-  }
+    * the STORED params, serve — bit-identical to the one-shot build. */
+  def embKnnBqIncremental(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annbqinc", BqIndex, withColl, incremental = true)
 
-  /** emb_knn_bq_follow — the FOLLOWING BQ index
-    * (AnnIndex.knnBqServeFollow): frozen base + change-feed delta over
-    * a mutating corpus (erase + MoR upsert waves), serve composing
-    * base-minus-touched with the re-encoded delta — hash-identical to
-    * a rebuild on the corpus's current state with the frozen params. */
-  def embKnnBqFollow(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "bqfsrc", dir)
-    val delta = Tables.scratchDir(spark, "bqfdelta", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "bqfbase", dir)
-    // base BUILD ∥ wave-1 mutations+sync — independent phases as
-    // concurrent driver jobs (guide §2.6): the build reads the pinned
-    // buildV segment list (frame constructed before the mutations; data
-    // dirs are write-once), the wave only touches the corpus root.
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeBqIndex(atBuild, "vec_id", "embedding", basePath),
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "bq follow sync did not publish")
-      }))
-    AnnIndex.knnBqServeFollow(spark, basePath, delta, "emb_delta",
-        Snapshot.read(spark, corpus, "emb"), "vec_id", "embedding",
-        col("vec_id") < ProbeMax, K, BqRefine)
-      .orderBy("probe_id", "rank")
-  }
+  /** emb_knn_bq_follow / emb_knn_bq_compacted — the [[IndexScenario]]
+    * gates for BQ: delta rows encode through the frozen thresholds, the
+    * fold copies them verbatim; oracle = a rebuild on the corpus's final
+    * state with the build-time thresholds. */
+  def embKnnBqFollow(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "bq", BqIndex, compacted = false, now => withColl(now))
 
-  /** emb_knn_bq_compacted — the FOLD closing the BQ following-index
-    * lifecycle (AnnIndex.compactBqFollow): wave-1 erase/MERGE + sync,
-    * fold base+delta into a fresh frozen base, wave-2 erase/MERGE, a
-    * FRESH delta seeded at the handoff cursor, serve newBase+freshDelta
-    * against the corpus's FINAL state. */
-  def embKnnBqCompacted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "bqcsrc", dir)
-    val delta1 = Tables.scratchDir(spark, "bqcd1", dir)
-    val delta2 = Tables.scratchDir(spark, "bqcd2", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta1, delta2).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "bqcbase", dir)
-    // base BUILD ∥ wave-1, then FOLD ∥ wave-2 mutations — see
-    // txtBm25Compacted's note; the wave-2 sync stays strictly after the
-    // fold (seeded at its handoff cursor).
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeBqIndex(atBuild, "vec_id", "embedding", basePath),
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta1, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "bq compacted gate: wave-1 sync did not publish")
-      }))
-    val base2 = Tables.scratchDir(spark, "bqcbase2", dir)
-    var cur = 0L
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => { cur = AnnIndex.compactBqFollow(spark, basePath, delta1,
-        "emb_delta", "vec_id", "embedding", base2) },
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 11 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 13 === 2), Seq("vec_id"))
-      }))
-    require(Replica.sync(spark, corpus, "emb", delta2, "emb_delta",
-      Seq("vec_id"), initialCursor = cur).isDefined,
-      "bq compacted gate: wave-2 sync did not publish")
-    AnnIndex.knnBqServeFollow(spark, base2, delta2, "emb_delta",
-        Snapshot.read(spark, corpus, "emb"), "vec_id", "embedding",
-        col("vec_id") < ProbeMax, K, BqRefine)
-      .orderBy("probe_id", "rank")
-  }
+  def embKnnBqCompacted(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "bq", BqIndex, compacted = true, now => withColl(now))
 
   /** emb_recall — ANN QUALITY EVALUATION gate: recall@K of each
     * approximate index family (LSH buckets, IVF inverted lists, SQ8
@@ -286,185 +194,40 @@ object VectorQueries {
   }
 
   /** emb_knn_sq8_persisted — the SAME SQ8 search served from PERSISTED
-    * byte codes + frozen params (graft.operators.AnnIndex): training
-    * and encoding happen once at build; serving reconstructs in-row
-    * from the stored bytes and refines against the collection. Gated
-    * against the same oracle as emb_knn_sq8. */
-  def embKnnSq8Persisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annsq8", dir)
-    AnnIndex.writeSq8Index(emb, "vec_id", "embedding", path)
-    AnnIndex.knnSq8Serve(spark.read.parquet(path),
-        spark.read.parquet(path + "_params"), emb,
-        "vec_id", "embedding", col("vec_id") < ProbeMax, K, Sq8Refine)
-      .orderBy("probe_id", "rank")
-  }
+    * byte codes + frozen params: training and encoding happen once at
+    * build; serving reconstructs in-row from the stored bytes and refines
+    * against the collection. Gated against the same oracle as emb_knn_sq8. */
+  def embKnnSq8Persisted(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annsq8", Sq8Index, withColl)
 
   /** emb_knn_lsh_persisted — the SAME search served from a PERSISTED
-    * LSH index (graft.operators.AnnIndex): the collection is indexed
-    * once (quantized vectors + self-dots + bucket ids, written
-    * partitioned by bucket) and the query runs entirely against the
-    * stored rows — no quantization or hyperplane math at serve time,
-    * and the candidate scan's bucket partitions are dynamically pruned
-    * by the broadcast probe side (WarehouseSpec asserts both). Gated
-    * against the same oracle as emb_knn_lsh: the build-once-query-many
-    * path must be hash-identical to the in-query derivation. */
-  def embKnnLshPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val path = Tables.scratchDir(spark, "annlsh", dir)
-    AnnIndex.writeLshIndex(Tables.embeddings(spark, dir), "vec_id", "embedding",
-      Planes, path)
-    AnnIndex.knnLshServe(spark.read.parquet(path), "vec_id",
-        col("vec_id") < ProbeMax, K)
-      .orderBy("probe_id", "rank")
-  }
+    * LSH index: the collection is indexed once (quantized vectors +
+    * self-dots + bucket ids, written partitioned by bucket) and the query
+    * runs entirely against the stored rows — no quantization or
+    * hyperplane math at serve time, and the candidate scan's bucket
+    * partitions are dynamically pruned by the broadcast probe side
+    * (WarehouseSpec asserts both). Gated against the same oracle as
+    * emb_knn_lsh. */
+  def embKnnLshPersisted(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annlsh", LshIndex, _ => Probes)
 
   /** emb_knn_lsh_incremental — INCREMENTAL index maintenance gate: the
     * collection arrives in two ingests (vec_id % 5 != 3, then the rest);
     * the first builds the index, the second APPENDS its serving rows
-    * (graft.operators.AnnIndex.appendLshIndex — O(batch): derives rows
-    * over the new batch alone, never reads or rewrites the stored
-    * files; WarehouseSpec asserts both). Serving the appended index is
-    * gated against the SAME full-collection oracle as emb_knn_lsh —
-    * append-then-serve must be hash-identical to a full rebuild. */
-  def embKnnLshIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annlshinc", dir)
-    AnnIndex.writeLshIndex(emb.filter(col("vec_id") % 5 =!= 3),
-      "vec_id", "embedding", Planes, path)
-    AnnIndex.appendLshIndex(emb.filter(col("vec_id") % 5 === 3),
-      "vec_id", "embedding", Planes, path)
-    AnnIndex.knnLshServe(spark.read.parquet(path), "vec_id",
-        col("vec_id") < ProbeMax, K)
-      .orderBy("probe_id", "rank")
-  }
+    * (O(batch): never reads or rewrites the stored files; WarehouseSpec
+    * asserts both). Gated against the SAME full-collection oracle as
+    * emb_knn_lsh — append-then-serve must equal a full rebuild. */
+  def embKnnLshIncremental(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annlshinc", LshIndex, _ => Probes, incremental = true)
 
-  /** emb_knn_lsh_follow — FOLLOWING-index gate
-    * (graft.operators.AnnIndex.knnLshServeFollow + sources.Replica):
-    * the serving story for a MUTATING corpus. A snapshot corpus is
-    * committed, the base LSH index is built from that version, then the
-    * corpus lives on — a key-set is erased (merge-on-read tombstones)
-    * and a batch row-level MERGEs in (new vectors, plus re-upserts of
-    * already-indexed ids whose base rows MUST be excluded or they'd
-    * double-serve and shift the k-th slot, plus resurrections of erased
-    * ids). One exactly-once Replica.sync (cursor seeded at the build
-    * version) lands the delta next to the frozen base, and the serve
-    * composes base-minus-touched ∪ re-encoded delta — gated against an
-    * oracle running the SAME LSH selection over the corpus's final
-    * state directly. Everything past the base scan is O(touched). */
-  def embKnnLshFollow(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "annfsrc", dir)
-    val delta = Tables.scratchDir(spark, "annfdelta", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "annfbase", dir)
-    // base BUILD ∥ wave-1 mutations+sync (guide §2.6; see
-    // embKnnBqFollow's note — the build reads the pinned buildV frame)
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeLshIndex(atBuild, "vec_id", "embedding", Planes,
-        basePath),
-      () => {
-        // the corpus mutates past the frozen base: erase, then MERGE a
-        // batch that inserts (%5==3), re-upserts indexed ids (%9==1),
-        // and resurrects erased ones (their overlap with %7==0)
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "follow sync did not publish")
-      }))
-    AnnIndex.knnLshServeFollow(spark, basePath, delta, "emb_delta",
-        "vec_id", "embedding", Planes, col("vec_id") < ProbeMax, K)
-      .orderBy("probe_id", "rank")
-  }
+  /** emb_knn_lsh_follow / emb_knn_lsh_compacted — the [[IndexScenario]]
+    * gates for the single-bucket LSH anchor, gated against an oracle
+    * running the SAME LSH selection over the corpus's final state. */
+  def embKnnLshFollow(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "ann", LshIndex, compacted = false, _ => Probes)
 
-  /** emb_knn_lsh_compacted — the FOLD closing the following-index
-    * lifecycle (graft.operators.AnnIndex.compactLshFollow): runs the
-    * emb_knn_lsh_follow scenario (base frozen at the build version,
-    * wave-1 erasure + MERGE, one exactly-once sync), then FOLDS
-    * base+delta into a fresh frozen base — O(base+delta), stored base
-    * rows pass through without re-quantization, the corpus is never
-    * re-read — and the corpus LIVES ON past the fold: a second erasure
-    * wave and a second MERGE land, a FRESH delta root syncs seeded at
-    * the fold's handoff cursor (exactly the changes the fold did not
-    * absorb), and the serve composes newBase+freshDelta. Gated against
-    * an oracle running the SAME LSH selection over the corpus's FINAL
-    * state directly — green means the fold lost nothing, duplicated
-    * nothing, and handed the cursor off exactly-once. */
-  def embKnnLshCompacted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "anncsrc", dir)
-    val delta1 = Tables.scratchDir(spark, "anncd1", dir)
-    val delta2 = Tables.scratchDir(spark, "anncd2", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta1, delta2).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "anncbase", dir)
-    // base BUILD ∥ wave-1, then FOLD ∥ wave-2 mutations — see
-    // txtBm25Compacted's note; the wave-2 sync stays strictly after the
-    // fold (seeded at its handoff cursor).
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeLshIndex(atBuild, "vec_id", "embedding", Planes,
-        basePath),
-      () => {
-        // wave 1 — identical to the follow gate: erase, then MERGE
-        // inserts (%5==3), re-upserts (%9==1) and resurrections
-        // (overlap with %7==0)
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta1, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "compacted gate: wave-1 sync did not publish")
-      }))
-    val base2 = Tables.scratchDir(spark, "anncbase2", dir)
-    var cur = 0L
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => { cur = AnnIndex.compactLshFollow(spark, basePath, delta1,
-        "emb_delta", "vec_id", "embedding", Planes, base2) },
-      () => {
-        // wave 2 — the corpus keeps mutating past the fold: a second
-        // erasure (%11==0, incl. resurrections of ids the fold
-        // absorbed) and a second MERGE (%13==2: re-upserts of folded
-        // ids, inserts of never-seen ones, resurrections of wave-2
-        // erasures)
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 11 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 13 === 2), Seq("vec_id"))
-      }))
-    require(Replica.sync(spark, corpus, "emb", delta2, "emb_delta",
-      Seq("vec_id"), initialCursor = cur).isDefined,
-      "compacted gate: wave-2 sync did not publish")
-    AnnIndex.knnLshServeFollow(spark, base2, delta2, "emb_delta",
-        "vec_id", "embedding", Planes, col("vec_id") < ProbeMax, K)
-      .orderBy("probe_id", "rank")
-  }
+  def embKnnLshCompacted(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "ann", LshIndex, compacted = true, _ => Probes)
 
   def embNearDup(spark: SparkSession, dir: String): DataFrame =
     Ann.nearDupPairs(Tables.embeddings(spark, dir), "vec_id", "embedding",
@@ -581,20 +344,14 @@ object VectorQueries {
     * 0.42, r=8+H1 6% for 0.26 — so the ≥0.5@5 floor selects the
     * anchor's plane count with the budget spent on probes, not more
     * planes. Gated on the PRODUCTION path: index built once
-    * (AnnIndex.writeLshIndex), served via the persisted multi-probe
+    * (AnnIndex.lshMultiProbe), served via the persisted multi-probe
     * scan (AnnIndex.knnLshServeMultiProbe, DPP onto the probed bucket
     * partitions), hash-gated against the multi-probe oracle; its
     * recall rides in emb_recall as `lsh_tuned` beside the unchanged
     * anchor. */
-  def embKnnLshTuned(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annlshtuned", dir)
-    AnnIndex.writeLshIndex(emb, "vec_id", "embedding", Planes, path)
-    AnnIndex.knnLshServeMultiProbe(spark.read.parquet(path), "vec_id",
-        Planes.length, col("vec_id") < ProbeMax, K)
-      .orderBy("probe_id", "rank")
-  }
+  def embKnnLshTuned(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annlshtuned",
+      AnnIndex.lshMultiProbe("vec_id", "embedding", Planes), _ => Probes)
 
   /** IVF-flat with the label partition as codebook, nProbe=2. */
   def embKnnIvf(spark: SparkSession, dir: String): DataFrame = {
@@ -606,163 +363,34 @@ object VectorQueries {
   }
 
   /** emb_knn_ivf_persisted — the SAME IVF search served from PERSISTED
-    * inverted lists + codebook (graft.operators.AnnIndex): assignment
-    * and quantization happen once at build; serving ranks the stored
-    * codebook per probe and joins only the chosen centroid partitions
-    * (dynamically pruned). Gated against the same oracle as emb_knn_ivf. */
-  def embKnnIvfPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annivf", dir)
-    AnnIndex.writeIvfIndex(emb, "vec_id", "embedding",
-      Ann.ivfCodebook(emb, "label", "embedding"), path)
-    AnnIndex.knnIvfServe(spark.read.parquet(path),
-        spark.read.parquet(path + "_codebook"), "vec_id",
-        col("vec_id") < ProbeMax, K, nProbe = 2)
-      .orderBy("probe_id", "rank")
-  }
+    * inverted lists + codebook: assignment and quantization happen once
+    * at build; serving ranks the stored codebook per probe and joins only
+    * the chosen centroid partitions (dynamically pruned). Gated against
+    * the same oracle as emb_knn_ivf. */
+  def embKnnIvfPersisted(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annivf", IvfIndex, _ => Probes)
 
   /** emb_knn_ivf_incremental — INCREMENTAL IVF maintenance gate: the
-    * collection arrives in two ingests (vec_id % 5 != 3, then the
-    * rest); the first builds the inverted lists, the second APPENDS its
-    * rows encoded with the STORED codebook
-    * (graft.operators.AnnIndex.appendIvfIndex — O(batch): the stored
-    * index data is never read or rewritten; WarehouseSpec asserts
-    * both). The codebook is the index's FROZEN serve-time parameter —
-    * the exact analogue of the LSH gate's hyperplanes — so the gate
-    * trains it once over the collection and both build and append
-    * encode against it; serve-after-append is gated against the SAME
-    * full-collection oracle as emb_knn_ivf (append-then-serve ==
-    * full rebuild). WarehouseSpec additionally exercises the
-    * production shape where the codebook is trained on the initial
-    * ingest alone. */
-  def embKnnIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annivfinc", dir)
-    AnnIndex.writeIvfIndex(emb.filter(col("vec_id") % 5 =!= 3),
-      "vec_id", "embedding", Ann.ivfCodebook(emb, "label", "embedding"), path)
-    AnnIndex.appendIvfIndex(emb.filter(col("vec_id") % 5 === 3),
-      "vec_id", "embedding", path)
-    AnnIndex.knnIvfServe(spark.read.parquet(path),
-        spark.read.parquet(path + "_codebook"), "vec_id",
-        col("vec_id") < ProbeMax, K, nProbe = 2)
-      .orderBy("probe_id", "rank")
-  }
+    * first ingest builds the inverted lists, the second APPENDS its rows
+    * encoded with the STORED codebook — the frozen serve-time parameter,
+    * the analogue of LSH's hyperplanes — trained once over the
+    * collection, so append-then-serve is gated against the SAME oracle as
+    * emb_knn_ivf. WarehouseSpec additionally exercises the production
+    * shape where the codebook trains on the initial ingest alone. */
+  def embKnnIvfIncremental(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annivfinc", IvfIndex, _ => Probes, incremental = true)
 
-  /** emb_knn_ivf_follow — the IVF twin of emb_knn_lsh_follow
-    * (graft.operators.AnnIndex.knnIvfServeFollow): same mutating-corpus
-    * scenario, but the frozen serve-time parameter is the TRAINED
-    * codebook — trained on the build-time corpus state, stored next to
-    * the base, and encoding the delta bit-identically to the base
-    * build. Gated against the ivfOracle selection with the codebook
-    * pinned to the build-time training set and membership moved to the
-    * corpus's final state. */
-  def embKnnIvfFollow(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "annifsrc", dir)
-    val delta = Tables.scratchDir(spark, "annifdelta", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "annifbase", dir)
-    // codebook training + base BUILD ∥ wave-1 mutations+sync (guide
-    // §2.6; see embKnnBqFollow's note — atBuild pins the buildV frame)
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeIvfIndex(atBuild, "vec_id", "embedding",
-        Ann.ivfCodebook(atBuild, "label", "embedding"), basePath),
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "follow sync did not publish")
-      }))
-    AnnIndex.knnIvfServeFollow(spark, basePath, delta, "emb_delta",
-        "vec_id", "embedding", col("vec_id") < ProbeMax, K, nProbe = 2)
-      .orderBy("probe_id", "rank")
-  }
+  /** emb_knn_ivf_follow / emb_knn_ivf_compacted — the [[IndexScenario]]
+    * gates for IVF: the codebook trains on the build-time corpus state
+    * and stays frozen (the fold copies it verbatim — retraining would
+    * shift every stored assignment). Gated against the ivfOracle
+    * selection with the codebook pinned to the build-time training set
+    * and membership at the corpus's final state. */
+  def embKnnIvfFollow(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "anni", IvfIndex, compacted = false, _ => Probes)
 
-  /** emb_knn_ivf_compacted — the IVF FOLD closing the following-index
-    * lifecycle for the trained-codebook index
-    * (graft.operators.AnnIndex.compactIvfFollow): the
-    * emb_knn_ivf_follow scenario (base + build-time-trained codebook
-    * frozen at the build version, wave-1 erase + MERGE, one seeded
-    * sync), then the fold — stored base rows pass through untouched,
-    * only the delta encodes, the codebook copies VERBATIM to the new
-    * base (never retrained: retraining would shift every stored
-    * assignment) — then wave-2 mutations, a fresh delta seeded at the
-    * handoff cursor, and a serve over newBase+freshDelta. Gated
-    * against the ivfOracle selection with the codebook pinned to the
-    * build-time training set and membership at the corpus's FINAL
-    * state after both waves — green means the fold lost nothing,
-    * duplicated nothing, kept the codebook frozen, and handed the
-    * cursor off exactly-once. */
-  def embKnnIvfCompacted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "annicsrc", dir)
-    val delta1 = Tables.scratchDir(spark, "annicd1", dir)
-    val delta2 = Tables.scratchDir(spark, "annicd2", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta1, delta2).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "annicbase", dir)
-    // training+BUILD ∥ wave-1, then FOLD ∥ wave-2 mutations — see
-    // txtBm25Compacted's note; wave-2 sync stays strictly after the fold
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeIvfIndex(atBuild, "vec_id", "embedding",
-        Ann.ivfCodebook(atBuild, "label", "embedding"), basePath),
-      () => {
-        // wave 1 — identical to the follow gate
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta1, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "ivf compacted gate: wave-1 sync did not publish")
-      }))
-    // the FOLD: base+delta1 → fresh base, frozen codebook copied through
-    val base2 = Tables.scratchDir(spark, "annicbase2", dir)
-    var cur = 0L
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => { cur = AnnIndex.compactIvfFollow(spark, basePath, delta1,
-        "emb_delta", "vec_id", "embedding", base2) },
-      () => {
-        // wave 2 — the corpus keeps mutating past the fold (same waves
-        // as the LSH compacted gate: %11==0 erasure, %13==2 MERGE)
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 11 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 13 === 2), Seq("vec_id"))
-      }))
-    require(Replica.sync(spark, corpus, "emb", delta2, "emb_delta",
-      Seq("vec_id"), initialCursor = cur).isDefined,
-      "ivf compacted gate: wave-2 sync did not publish")
-    AnnIndex.knnIvfServeFollow(spark, base2, delta2, "emb_delta",
-        "vec_id", "embedding", col("vec_id") < ProbeMax, K, nProbe = 2)
-      .orderBy("probe_id", "rank")
-  }
+  def embKnnIvfCompacted(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "anni", IvfIndex, compacted = true, _ => Probes)
 
   /** Metadata-filtered search: neighbors restricted to even labels. */
   def embKnnFiltered(spark: SparkSession, dir: String): DataFrame =
@@ -807,108 +435,17 @@ object VectorQueries {
       .orderBy(col("rrf_score").desc, col("doc_id"))
   }
 
-  /** emb_knn_sq8_follow — FOLLOWING SQ8 index over a MUTATING corpus
-    * (graft.operators.AnnIndex.knnSq8ServeFollow), completing the
-    * base+delta story for the compressed-scan index: per-dim [vmin,
-    * vmax] freeze at build, the erase + MERGE wave lands, one
-    * exactly-once sync carries the delta, and the serve composes
-    * base-codes-minus-touched ∪ delta rows encoded through the FROZEN
-    * params — the corpus's current state supplies only probes and the
-    * O(probes·refine·k) exact-refine rows. Oracle: the SQ8 replay with
-    * params trained on the build slice and membership at the corpus's
-    * final state. */
-  def embKnnSq8Follow(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "sq8fsrc", dir)
-    val delta = Tables.scratchDir(spark, "sq8fdelta", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "sq8fbase", dir)
-    // base BUILD ∥ wave-1 mutations+sync (guide §2.6; see
-    // embKnnBqFollow's note — atBuild pins the buildV frame)
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeSq8Index(atBuild, "vec_id", "embedding", basePath),
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "sq8 follow sync did not publish")
-      }))
-    AnnIndex.knnSq8ServeFollow(spark, basePath, delta, "emb_delta",
-        Snapshot.read(spark, corpus, "emb"), "vec_id", "embedding",
-        col("vec_id") < ProbeMax, K, Sq8Refine)
-      .orderBy("probe_id", "rank")
-  }
+  /** emb_knn_sq8_follow / emb_knn_sq8_compacted — the [[IndexScenario]]
+    * gates for SQ8: per-dim [vmin, vmax] freeze at build, delta rows
+    * encode through them, and the corpus's current state supplies only
+    * probes and the O(probes·refine·k) exact-refine rows. Oracle: the SQ8
+    * replay with params trained on the build slice and membership at the
+    * corpus's final state. */
+  def embKnnSq8Follow(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "sq8", Sq8Index, compacted = false, now => withColl(now))
 
-  /** emb_knn_sq8_compacted — the FOLD closing the SQ8 following-index
-    * lifecycle (graft.operators.AnnIndex.compactSq8Follow): wave-1
-    * erase/MERGE + sync, fold base+delta into a fresh frozen base
-    * (stored byte codes pass through, frozen params copied verbatim),
-    * wave-2 erase/MERGE, a FRESH delta seeded at the handoff cursor,
-    * serve newBase+freshDelta against the corpus's FINAL state. */
-  def embKnnSq8Compacted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "sq8csrc", dir)
-    val delta1 = Tables.scratchDir(spark, "sq8cd1", dir)
-    val delta2 = Tables.scratchDir(spark, "sq8cd2", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta1, delta2).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "sq8cbase", dir)
-    // base BUILD ∥ wave-1, then FOLD ∥ wave-2 mutations — see
-    // txtBm25Compacted's note; wave-2 sync stays strictly after the fold
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => AnnIndex.writeSq8Index(atBuild, "vec_id", "embedding", basePath),
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta1, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "sq8 compacted gate: wave-1 sync did not publish")
-      }))
-    val base2 = Tables.scratchDir(spark, "sq8cbase2", dir)
-    var cur = 0L
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => { cur = AnnIndex.compactSq8Follow(spark, basePath, delta1,
-        "emb_delta", "vec_id", "embedding", base2) },
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 11 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 13 === 2), Seq("vec_id"))
-      }))
-    require(Replica.sync(spark, corpus, "emb", delta2, "emb_delta",
-      Seq("vec_id"), initialCursor = cur).isDefined,
-      "sq8 compacted gate: wave-2 sync did not publish")
-    AnnIndex.knnSq8ServeFollow(spark, base2, delta2, "emb_delta",
-        Snapshot.read(spark, corpus, "emb"), "vec_id", "embedding",
-        col("vec_id") < ProbeMax, K, Sq8Refine)
-      .orderBy("probe_id", "rank")
-  }
+  def embKnnSq8Compacted(spark: SparkSession, dir: String): DataFrame =
+    followGate(spark, dir, "sq8", Sq8Index, compacted = true, now => withColl(now))
 
   /** hybrid_persisted — the hybrid-search SERVING story: the same RRF
     * fusion with BOTH retrieval legs answered from persisted indexes
@@ -918,7 +455,7 @@ object VectorQueries {
     * scan statically prunes to the query terms' buckets); the vector
     * leg is the RECALL-TUNED multi-probe LSH top-20 around probe
     * vec_id=0 from the stored ANN index
-    * (graft.operators.AnnIndex.knnLshServeMultiProbe — own bucket +
+    * (graft.operators.AnnIndex.lshMultiProbe — own bucket +
     * Hamming-1 neighbors, still a dynamically-pruned bucket scan). The
     * single-bucket serve emb_recall measured at 0.08 recall@5 would
     * hand RRF a fuse input missing ~90% of true neighbors; the
@@ -928,21 +465,20 @@ object VectorQueries {
     * endpoint runs per request at 100 TB: two index probes (one
     * nPlanes+1 buckets wide) and a 40-row fuse. */
   def hybridPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{AnnIndex, TextIndex}
+    import graft.operators.TextIndex
+    val text = TextIndex.bm25("doc_id", "text")
+    val vec = AnnIndex.lshMultiProbe("vec_id", "embedding", Planes)
     val tpath = Tables.scratchDir(spark, "hybtxt", dir)
     val vpath = Tables.scratchDir(spark, "hybann", dir)
     // the two index BUILDS read different tables and write different
     // paths — fully independent, run as concurrent driver jobs
     // (guide §2.6)
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => TextIndex.writeTextIndex(Tables.documents(spark, dir),
-        "doc_id", "text", tpath),
-      () => AnnIndex.writeLshIndex(Tables.embeddings(spark, dir),
-        "vec_id", "embedding", Planes, vpath)))
-    val kwTop = TextIndex.bm25Serve(spark, tpath, "doc_id", HybridTerms, 20)
+    Par.inParallel[Unit](Seq(
+      () => IndexLifecycle.build(text, Tables.documents(spark, dir), tpath),
+      () => IndexLifecycle.build(vec, Tables.embeddings(spark, dir), vpath)))
+    val kwTop = IndexLifecycle.serve(spark, text, tpath, TextIndex.Query(HybridTerms, 20))
       .select("doc_id", "rank")
-    val vecTop = AnnIndex.knnLshServeMultiProbe(spark.read.parquet(vpath),
-        "vec_id", Planes.length, col("vec_id") === 0, k = 20)
+    val vecTop = IndexLifecycle.serve(spark, vec, vpath, Probe(col("vec_id") === 0, k = 20))
       .select(col("neighbor_id").as("doc_id"), col("rank"))
     Ann.rrfFuse(kwTop, vecTop, "doc_id", k = 10)
       .orderBy(col("rrf_score").desc, col("doc_id"))
@@ -1033,107 +569,30 @@ object VectorQueries {
   }
 
   /** emb_knn_pq_persisted — the SAME PQ search served from a PERSISTED
-    * code table + codebooks (AnnIndex.writePqIndex/knnPqServe): the
-    * collection side reads only stored (id, subspace, code) rows, the
-    * probe side builds its ADC tables per-request from the stored
-    * codebooks. Gated against the identical oracle as emb_knn_pq — the
-    * stored path must be hash-identical to the in-query encoding. */
-  def embKnnPqPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annpq", dir)
-    val cbs = Ann.pqCodebooks(emb, "vec_id", "embedding", PqDim, PqM, PqK, PqIters)
-    try {
-      AnnIndex.writePqIndex(emb, "vec_id", "embedding", cbs, PqDim, PqM, path)
-      AnnIndex.knnPqServe(spark.read.parquet(path),
-          spark.read.parquet(path + "_codebook"),
-          emb.filter(col("vec_id") < PqProbeMax), "vec_id", "embedding",
-          PqDim, PqM, K)
-        .orderBy("probe_id", "rank")
-    } finally graft.operators.NearDup.freeCheckpoint(cbs)
-  }
+    * code table + codebooks: the collection side reads only stored (id,
+    * subspace, code) rows, the probe side builds its ADC tables
+    * per-request from the stored codebooks. Gated against the identical
+    * oracle as emb_knn_pq. */
+  def embKnnPqPersisted(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annpq", PqIndex, pqProbes)
 
   /** emb_knn_pq_incremental — INCREMENTAL PQ maintenance gate: codes
-    * arrive in two ingests; the second APPENDS its (id, subspace, code)
-    * rows encoded with the STORED codebooks
-    * (graft.operators.AnnIndex.appendPqIndex — O(batch), stored codes
-    * never read or rewritten; WarehouseSpec asserts both). The m·k-row
-    * codebook is the frozen quantizer (trained once, here over the
-    * collection so the gate shares emb_knn_pq's oracle); ADC serving
-    * over the appended index must be hash-identical to a full rebuild
-    * over the union. */
-  def embKnnPqIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    val emb = Tables.embeddings(spark, dir)
-    val path = Tables.scratchDir(spark, "annpqinc", dir)
-    val cbs = Ann.pqCodebooks(emb, "vec_id", "embedding", PqDim, PqM, PqK, PqIters)
-    try {
-      AnnIndex.writePqIndex(emb.filter(col("vec_id") % 5 =!= 3),
-        "vec_id", "embedding", cbs, PqDim, PqM, path)
-      AnnIndex.appendPqIndex(emb.filter(col("vec_id") % 5 === 3),
-        "vec_id", "embedding", PqDim, PqM, path)
-      AnnIndex.knnPqServe(spark.read.parquet(path),
-          spark.read.parquet(path + "_codebook"),
-          emb.filter(col("vec_id") < PqProbeMax), "vec_id", "embedding",
-          PqDim, PqM, K)
-        .orderBy("probe_id", "rank")
-    } finally graft.operators.NearDup.freeCheckpoint(cbs)
-  }
+    * arrive in two ingests; the second APPENDS its rows encoded with the
+    * STORED codebooks (trained once over the collection, so the gate
+    * shares emb_knn_pq's oracle). */
+  def embKnnPqIncremental(spark: SparkSession, dir: String): DataFrame =
+    persistedGate(spark, dir, "annpqinc", PqIndex, pqProbes, incremental = true)
 
-  /** emb_knn_pq_follow — the PQ twin of emb_knn_lsh_follow
-    * (graft.operators.AnnIndex.knnPqServeFollow): the same
-    * mutating-corpus scenario for the one serving index whose stored
-    * form is CODES, not vectors. The per-subspace codebooks train on
-    * the build-time corpus state and freeze; the corpus then erases
-    * (%7==0) and MERGEs (%5==3 inserts, %9==1 re-upserts — whose base
-    * codes must be excluded or they'd double-serve — plus
-    * resurrections); one seeded sync lands the delta, and serving
-    * composes base-codes-minus-touched ∪ the delta's live rows encoded
-    * through the frozen codebooks. Probes arrive with their vectors
-    * (the request shape), candidates stay codes end to end. Gated
-    * against the pqOracle ADC with codebooks pinned to the build-time
-    * training set and code membership at the corpus's final state. */
+  /** emb_knn_pq_follow — the [[IndexScenario]] follow gate for the one
+    * index whose stored form is CODES: the per-subspace codebooks train
+    * on the build-time state and freeze, delta rows encode through them,
+    * and probes arrive with their vectors from the collection (the
+    * request shape). Gated against the pqOracle ADC with codebooks pinned
+    * to the build-time training set and code membership at the corpus's
+    * final state. */
   def embKnnPqFollow(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val corpus = Tables.scratchDir(spark, "annpqfsrc", dir)
-    val delta = Tables.scratchDir(spark, "annpqfdelta", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(corpus, delta).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
     val emb = Tables.embeddings(spark, dir)
-    val buildV = Snapshot.commit(spark, corpus, Map("emb" ->
-      emb.filter(col("vec_id") % 5 =!= 3)))
-    val basePath = Tables.scratchDir(spark, "annpqfbase", dir)
-    // codebook training + base BUILD ∥ wave-1 mutations+sync (guide
-    // §2.6; see embKnnBqFollow's note — atBuild pins the buildV frame).
-    // The codebook checkpoint lives and dies inside the build thunk.
-    val atBuild = Snapshot.read(spark, corpus, "emb")
-    graft.operators.Par.inParallel[Unit](Seq(
-      () => {
-        val cbs = Ann.pqCodebooks(atBuild, "vec_id", "embedding",
-          PqDim, PqM, PqK, PqIters)
-        try AnnIndex.writePqIndex(atBuild, "vec_id", "embedding", cbs,
-          PqDim, PqM, basePath)
-        finally graft.operators.NearDup.freeCheckpoint(cbs)
-      },
-      () => {
-        Snapshot.deleteWhere(spark, corpus, "emb",
-          col("vec_id") % 7 === 0, Seq("vec_id"))
-        Snapshot.upsertMergeOnRead(spark, corpus, "emb",
-          emb.filter(col("vec_id") % 5 === 3 || col("vec_id") % 9 === 1),
-          Seq("vec_id"))
-        require(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
-          Seq("vec_id"), initialCursor = buildV).isDefined,
-          "pq follow sync did not publish")
-      }))
-    AnnIndex.knnPqServeFollow(spark, basePath, delta, "emb_delta",
-        emb.filter(col("vec_id") < PqProbeMax), "vec_id", "embedding",
-        PqDim, PqM, K)
-      .orderBy("probe_id", "rank")
+    followGate(spark, dir, "annpq", PqIndex, compacted = false, _ => pqProbes(emb))
   }
 
   // ---- oracle SQL ---------------------------------------------------

@@ -49,7 +49,7 @@ object Replica {
   /** The SOURCE version `dstRoot`'s `appId` replication stream is
     * current to — None before the first published sync. This is the
     * HANDOFF value for consumers that freeze a derived artifact at the
-    * replica's state: [[graft.operators.AnnIndex.compactLshFollow]]
+    * replica's state: [[graft.operators.IndexLifecycle.fold]]
     * folds a following index's base+delta at this version and a FRESH
     * delta root then follows from it (`sync(initialCursor = cursor)`),
     * replaying exactly the changes the fold has not absorbed. */

@@ -2045,7 +2045,7 @@ object Snapshot {
     * creation or last fold (compaction/replace clears the shadow), one
     * row per key, O(touched keys). None when no shadow exists. A
     * base+delta consumer (e.g. a serving index following a mutating
-    * corpus, [[graft.operators.AnnIndex]] knnLshServeFollow) anti-joins
+    * corpus, [[graft.operators.IndexLifecycle.serveFollow]]) anti-joins
     * this against its frozen base and unions the live delta rows —
     * union with the table's current keys to also cover rows that
     * arrived in the table's CREATION commit, whose upsert keys are

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
+import graft.operators.{IndexFamily, IndexLifecycle}
+
 /** Streaming-first event operators. Each transform is written against an
   * unbounded DataFrame and runs identically in batch — the batch-gated
   * EventQueries reuse these bodies, and a readStream source can be piped
@@ -176,16 +178,17 @@ object StreamOps {
     * micro-batch of vectors MERGEs into the corpus snapshot store
     * exactly-once ([[upsertBatchMorExactlyOnce]] — O(batch), marker
     * paired atomically) and then [[graft.sources.Replica.sync]] pushes
-    * the O(changes) net delta to the delta-index root, so any
-    * `knn*ServeFollow` (LSH/IVF/PQ/SQ8/BQ) serves base + stream-fed
-    * delta with zero corpus re-reads. `initialCursor` seeds the FIRST
+    * the O(changes) net delta to the delta-index root, so
+    * [[graft.operators.IndexLifecycle.serveFollow]] (any index family)
+    * serves base + stream-fed delta with zero corpus re-reads.
+    * `initialCursor` seeds the FIRST
     * sync at the base index's build version (the follow-mode contract:
     * the delta starts exactly where the frozen base stops); replayed
     * micro-batches short-circuit on the marker and the cursor makes the
     * trailing sync a no-op — exactly-once end to end under
     * at-least-once foreachBatch delivery. Folds
-    * ([[graft.operators.AnnIndex.compactLshFollow]] family) run OFF
-    * this path, exactly as they do for the batch-fed delta. */
+    * ([[graft.operators.IndexLifecycle.fold]]) run OFF this path,
+    * exactly as they do for the batch-fed delta. */
   def streamingAnnFollow(vecs: DataFrame, root: String, table: String,
       keys: Seq[String], ord: Seq[org.apache.spark.sql.Column],
       deltaRoot: String, deltaTable: String, initialCursor: Long,
@@ -220,74 +223,25 @@ object StreamOps {
   final case class AnnFollowPair(basePath: String, deltaRoot: String,
       cursor: Long, generation: Int)
 
-  /** The FAMILY HOOKS of the budget-folded follow lifecycle — the three
-    * operations that differ between index families while the probe
-    * ([[graft.operators.AnnIndex.followDeltaStats]]), the trigger
-    * arithmetic, and the pair/generation bookkeeping stay shared:
-    * `fold` compacts the active pair into a fresh frozen base and
-    * returns the handoff cursor; `serveFollow` answers a query from the
-    * live (base, delta) pair; `serveBase` answers from a base alone (a
-    * just-folded pair's delta root is empty until its first publishing
-    * sync). Each hook captures its family's frozen parameters
-    * (hyperplanes, codebook path convention, nProbe) in its closure. */
-  final case class AnnFollowFamily(
-      fold: (org.apache.spark.sql.SparkSession, AnnFollowPair, String) => Long,
-      serveFollow: (org.apache.spark.sql.SparkSession, AnnFollowPair, Column, Int) => DataFrame,
-      serveBase: (org.apache.spark.sql.SparkSession, String, Column, Int) => DataFrame)
-
-  object AnnFollowFamily {
-    import graft.operators.AnnIndex
-
-    /** LSH hooks: [[graft.operators.AnnIndex.compactLshFollow]] +
-      * RECALL-TUNED multi-probe serving (own bucket + every Hamming-1
-      * neighbor — the >=0.5-recall configuration emb_knn_lsh_tuned
-      * proved; the lifecycle used to demo at single-bucket's 0.08). */
-    def lsh(deltaTable: String, idCol: String, vecCol: String,
-        planes: Array[Array[Long]]): AnnFollowFamily = AnnFollowFamily(
-      fold = (s, p, newBase) => AnnIndex.compactLshFollow(s, p.basePath,
-        p.deltaRoot, deltaTable, idCol, vecCol, planes, newBase),
-      serveFollow = (s, p, pred, k) => AnnIndex.knnLshServeFollowMultiProbe(
-        s, p.basePath, p.deltaRoot, deltaTable, idCol, vecCol, planes, pred, k),
-      serveBase = (s, base, pred, k) => AnnIndex.knnLshServeMultiProbe(
-        s.read.parquet(base), idCol, planes.length, pred, k))
-
-    /** IVF hooks: [[graft.operators.AnnIndex.compactIvfFollow]] (the
-      * fold copies the TRAINED codebook verbatim to the new base — the
-      * frozen-parameter obligation the streaming path re-asserts in
-      * StreamingSpec) + nProbe-list serving. */
-    def ivf(deltaTable: String, idCol: String, vecCol: String,
-        nProbe: Int): AnnFollowFamily = AnnFollowFamily(
-      fold = (s, p, newBase) => AnnIndex.compactIvfFollow(s, p.basePath,
-        p.deltaRoot, deltaTable, idCol, vecCol, newBase),
-      serveFollow = (s, p, pred, k) => AnnIndex.knnIvfServeFollow(
-        s, p.basePath, p.deltaRoot, deltaTable, idCol, vecCol, pred, k, nProbe),
-      serveBase = (s, base, pred, k) => AnnIndex.knnIvfServe(
-        s.read.parquet(base), s.read.parquet(base + "_codebook"),
-        idCol, pred, k, nProbe))
-  }
-
   /** One micro-batch of the BUDGET-FOLDED streaming follow — the loop
-    * closure of [[graft.operators.AnnIndex.followDeltaStats]], which
-    * until now was measurement-only: first the exactly-once MERGE + sync
-    * of [[annFollowBatchExactlyOnce]] against the ACTIVE pair, then the
-    * fold TRIGGER — when the post-sync delta overhead
-    * ((live + touched) / base) crosses `foldBudget`, the family's fold
-    * ([[AnnFollowFamily.fold]] — LSH, IVF, or any other
-    * `compact*Follow`) runs OFF the serving path (the old pair keeps
-    * serving until this returns), and the returned pair names the fresh
-    * frozen base plus a FRESH delta root seeded at the fold's handoff
-    * cursor — the next micro-batch's sync replays exactly the changes
-    * the fold did not absorb. Folding on a timer wastes O(base) rebuild
-    * writes; never folding lets serve cost creep without bound — the
-    * budget is the knob in between. Serving equals a from-scratch
-    * rebuild across any number of folds (StreamingSpec gates it for LSH
-    * and IVF). */
-  def annFollowBatchBudgeted(batch: DataFrame, batchId: Long, root: String,
+    * closure of [[graft.operators.IndexLifecycle.followDeltaStats]]:
+    * first the exactly-once MERGE + sync of [[annFollowBatchExactlyOnce]]
+    * against the ACTIVE pair, then the fold TRIGGER — when the post-sync
+    * delta overhead ((live + touched) / base) crosses `foldBudget`, the
+    * family's [[graft.operators.IndexLifecycle.fold]] runs OFF the
+    * serving path (the old pair keeps serving until this returns), and
+    * the returned pair names the fresh frozen base plus a FRESH delta
+    * root seeded at the fold's handoff cursor — the next micro-batch's
+    * sync replays exactly the changes the fold did not absorb. Folding on
+    * a timer wastes O(base) rebuild writes; never folding lets serve cost
+    * creep without bound — the budget is the knob in between. Serving
+    * equals a from-scratch rebuild across any number of folds
+    * (StreamingSpec gates it for LSH and IVF). */
+  def annFollowBatchBudgeted[Q](batch: DataFrame, batchId: Long, root: String,
       table: String, keys: Seq[String], ord: Seq[org.apache.spark.sql.Column],
-      deltaTable: String, pair: AnnFollowPair, idCol: String,
-      family: AnnFollowFamily, workDir: String, foldBudget: Double,
+      deltaTable: String, pair: AnnFollowPair, family: IndexFamily[Q],
+      workDir: String, foldBudget: Double,
       appId: String = "default"): AnnFollowPair = {
-    import graft.operators.AnnIndex
     annFollowBatchExactlyOnce(batch, batchId, root, table, keys, ord,
       pair.deltaRoot, deltaTable, pair.cursor, appId)
     val spark = batch.sparkSession
@@ -296,13 +250,14 @@ object StreamOps {
     // nothing to measure, nothing to fold
     if (!graft.sources.Snapshot.tables(spark, pair.deltaRoot).contains(deltaTable))
       return pair
-    val stats = AnnIndex.followDeltaStats(spark, pair.basePath,
-      pair.deltaRoot, deltaTable, idCol)
+    val stats = IndexLifecycle.followDeltaStats(spark, family, pair.basePath,
+      pair.deltaRoot, deltaTable)
     if (stats.syncCursor.isEmpty || !stats.shouldFold(foldBudget)) pair
     else {
       val gen = pair.generation + 1
       val newBase = s"$workDir/base-$gen"
-      val cur = family.fold(spark, pair, newBase)
+      val cur = IndexLifecycle.fold(spark, family, pair.basePath, pair.deltaRoot,
+        deltaTable, newBase)
       AnnFollowPair(newBase, s"$workDir/delta-$gen", cur, gen)
     }
   }
@@ -325,9 +280,9 @@ object StreamOps {
     * silently answer without them. A torn or unparsable marker fails
     * LOUDLY (it cannot tell generation 3 from 4; serving a stale pair
     * silently drops acknowledged writes). */
-  final class AnnFollowFolding(root: String, table: String, keys: Seq[String],
+  final class AnnFollowFolding[Q](root: String, table: String, keys: Seq[String],
       ord: Seq[org.apache.spark.sql.Column], deltaTable: String,
-      idCol: String, family: AnnFollowFamily,
+      family: IndexFamily[Q],
       workDir: String, foldBudget: Double, initial: AnnFollowPair,
       appId: String = "default") {
     @volatile private var active: AnnFollowPair = initial
@@ -403,22 +358,21 @@ object StreamOps {
       vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         ensureHydrated(batch.sparkSession)
         val next = annFollowBatchBudgeted(batch, batchId, root, table, keys,
-          ord, deltaTable, active, idCol, family, workDir, foldBudget, appId)
+          ord, deltaTable, active, family, workDir, foldBudget, appId)
         if (next.generation != active.generation)
           writeMarker(batch.sparkSession, next)
         active = next
         ()
       }
-    def serve(spark: org.apache.spark.sql.SparkSession, probePred: Column,
-        k: Int): DataFrame = {
+    def serve(spark: org.apache.spark.sql.SparkSession, q: Q): DataFrame = {
       ensureHydrated(spark)
       val p = active // one volatile read: base and delta from the SAME pair
       // a just-folded pair's fresh delta root is empty until the next
       // publishing sync — the new base alone IS the corpus at the cursor
       if (graft.sources.Snapshot.tables(spark, p.deltaRoot).contains(deltaTable))
-        family.serveFollow(spark, p, probePred, k)
+        IndexLifecycle.serveFollow(spark, family, p.basePath, p.deltaRoot, deltaTable, q)
       else
-        family.serveBase(spark, p.basePath, probePred, k)
+        IndexLifecycle.serve(spark, family, p.basePath, q)
     }
   }
 

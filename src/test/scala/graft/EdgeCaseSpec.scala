@@ -87,10 +87,10 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("typed entity layer round-trips the reference CSVs") {
-    val c = Entities.loadCustomers(spark, "/root/reference/data")
+    val c = Entities.loadCustomers(spark, RefCsvFixture.dir)
     assert(c.count() == 5000)
     assert(c.filter(_.CustomerID.isEmpty).count() == 0)
-    val o = Entities.loadOrders(spark, "/root/reference/data")
+    val o = Entities.loadOrders(spark, RefCsvFixture.dir)
     assert(o.count() == 20000)
     val withDates = o.filter(_.OrderDate.isDefined).count()
     assert(withDates > 0 && withDates <= 20000)

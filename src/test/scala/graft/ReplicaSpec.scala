@@ -64,7 +64,8 @@ class ReplicaSpec extends SparkSpec {
   }
 
   test("knnLshServeFollow: base+delta serve equals a rebuild on the mutated corpus") {
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.{Ann, AnnIndex, IndexLifecycle}
+    import graft.operators.AnnIndex.Probe
     val corpus = freshRoot()
     val delta = freshRoot()
     val baseIdx = Files.createTempDirectory("replica-annbase").toString
@@ -74,8 +75,8 @@ class ReplicaSpec extends SparkSpec {
     // corpus v1: ids < 48 — the frozen base is built from this version
     val buildV = Snapshot.commit(spark, corpus,
       Map("emb" -> all.filter(col("vec_id") < 48L)))
-    AnnIndex.writeLshIndex(Snapshot.read(spark, corpus, "emb"),
-      "vec_id", "embedding", planes, baseIdx)
+    val lsh = AnnIndex.lsh("vec_id", "embedding", planes)
+    IndexLifecycle.build(lsh, Snapshot.read(spark, corpus, "emb"), baseIdx)
     // the corpus mutates: erase some indexed ids, MERGE in new ones plus
     // re-upserts of indexed ids (their base rows must not double-serve)
     Snapshot.deleteWhere(spark, corpus, "emb",
@@ -85,21 +86,20 @@ class ReplicaSpec extends SparkSpec {
       Seq("vec_id"))
     assert(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
       Seq("vec_id"), initialCursor = buildV).isDefined)
-    val follow = AnnIndex.knnLshServeFollow(spark, baseIdx, delta, "emb_delta",
-        "vec_id", "embedding", planes, col("vec_id") < 3L, k = 2)
+    val follow = IndexLifecycle.serveFollow(spark, lsh, baseIdx, delta, "emb_delta",
+        Probe(col("vec_id") < 3L, k = 2))
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     // ground truth: a full rebuild over the corpus's CURRENT state
     val rebuilt = Files.createTempDirectory("replica-annfull").toString
-    AnnIndex.writeLshIndex(Snapshot.read(spark, corpus, "emb"),
-      "vec_id", "embedding", planes, rebuilt)
+    IndexLifecycle.build(lsh, Snapshot.read(spark, corpus, "emb"), rebuilt)
     val full = AnnIndex.knnLshServe(spark.read.parquet(rebuilt), "vec_id",
         col("vec_id") < 3L, k = 2)
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     assert(follow == full)
     // the follow serve composes the FROZEN base — no rebuild happened:
     // a deleted id is absent, a re-upserted id appears exactly once
-    val served = AnnIndex.knnLshServeFollow(spark, baseIdx, delta, "emb_delta",
-      "vec_id", "embedding", planes, org.apache.spark.sql.functions.lit(true), k = 1)
+    val served = IndexLifecycle.serveFollow(spark, lsh, baseIdx, delta, "emb_delta",
+      Probe(org.apache.spark.sql.functions.lit(true), k = 1))
     assert(served.filter(col("probe_id") === 11L).count() == 0L) // erased (11 % 11 == 0)
     // replayed sync no-ops and the serve is stable
     assert(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
@@ -107,7 +107,8 @@ class ReplicaSpec extends SparkSpec {
   }
 
   test("followDeltaStats: the delta-overhead probe tracks live+touched vs base") {
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.{Ann, AnnIndex, IndexLifecycle}
+    import graft.operators.AnnIndex.Probe
     val corpus = freshRoot()
     val delta = freshRoot()
     val baseIdx = Files.createTempDirectory("replica-probebase").toString
@@ -116,8 +117,8 @@ class ReplicaSpec extends SparkSpec {
     val all = (0L until 64L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     val buildV = Snapshot.commit(spark, corpus,
       Map("emb" -> all.filter(col("vec_id") < 48L)))
-    AnnIndex.writeLshIndex(Snapshot.read(spark, corpus, "emb"),
-      "vec_id", "embedding", planes, baseIdx)
+    val lsh = AnnIndex.lsh("vec_id", "embedding", planes)
+    IndexLifecycle.build(lsh, Snapshot.read(spark, corpus, "emb"), baseIdx)
     Snapshot.deleteWhere(spark, corpus, "emb",
       col("vec_id") % 11 === 0, Seq("vec_id"))
     Snapshot.upsertMergeOnRead(spark, corpus, "emb",
@@ -125,7 +126,7 @@ class ReplicaSpec extends SparkSpec {
       Seq("vec_id"))
     assert(Replica.sync(spark, corpus, "emb", delta, "emb_delta",
       Seq("vec_id"), initialCursor = buildV).isDefined)
-    val stats = AnnIndex.followDeltaStats(spark, baseIdx, delta, "emb_delta", "vec_id")
+    val stats = IndexLifecycle.followDeltaStats(spark, lsh, baseIdx, delta, "emb_delta")
     // the probe's counts ARE the serve path's frame sizes
     assert(stats.baseRows == spark.read.parquet(baseIdx).count())
     assert(stats.deltaLiveRows == Snapshot.read(spark, delta, "emb_delta").count())
@@ -136,12 +137,13 @@ class ReplicaSpec extends SparkSpec {
     assert(stats.overhead > 0.0)
     assert(stats.shouldFold(budget = 0.0) && !stats.shouldFold(budget = 1e9))
     // pure arithmetic of the trigger
-    assert(AnnIndex.FollowDeltaStats(100L, 10L, 15L, Some(1L)).overhead == 0.25)
-    assert(AnnIndex.FollowDeltaStats(0L, 1L, 1L, None).overhead.isPosInfinity)
+    assert(IndexLifecycle.FollowDeltaStats(100L, 10L, 15L, Some(1L)).overhead == 0.25)
+    assert(IndexLifecycle.FollowDeltaStats(0L, 1L, 1L, None).overhead.isPosInfinity)
   }
 
   test("knnIvfServeFollow: frozen-codebook base+delta equals a rebuild") {
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.{Ann, AnnIndex, IndexLifecycle}
+    import graft.operators.AnnIndex.Probe
     val corpus = freshRoot()
     val delta = freshRoot()
     val baseIdx = Files.createTempDirectory("replica-ivfbase").toString
@@ -151,8 +153,8 @@ class ReplicaSpec extends SparkSpec {
       Map("emb" -> all.filter(col("vec_id") < 48L)))
     val atBuild = Snapshot.read(spark, corpus, "emb")
     // the codebook trains on the BUILD-TIME state and stays frozen
-    AnnIndex.writeIvfIndex(atBuild, "vec_id", "embedding",
-      Ann.ivfCodebook(atBuild, "label", "embedding"), baseIdx)
+    val ivf = AnnIndex.ivf("vec_id", "embedding", "label", nProbe = 2)
+    IndexLifecycle.build(ivf, atBuild, baseIdx)
     Snapshot.deleteWhere(spark, corpus, "emb",
       col("vec_id") % 11 === 0, Seq("vec_id"))
     Snapshot.upsertMergeOnRead(spark, corpus, "emb",
@@ -163,16 +165,14 @@ class ReplicaSpec extends SparkSpec {
       Seq("vec_id"), initialCursor = buildV).isDefined)
     def served(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
-    val follow = served(AnnIndex.knnIvfServeFollow(spark, baseIdx, delta,
-      "emb_delta", "vec_id", "embedding", col("vec_id") < 3L, k = 2, nProbe = 2))
+    val follow = served(IndexLifecycle.serveFollow(spark, ivf, baseIdx, delta,
+      "emb_delta", Probe(col("vec_id") < 3L, k = 2)))
     // ground truth: rebuild over the current state with the SAME frozen
     // codebook — re-derived from the build-time state via time travel
     // (ivfCodebook is deterministic, so this IS the stored codebook)
     val rebuilt = Files.createTempDirectory("replica-ivffull").toString
-    AnnIndex.writeIvfIndex(Snapshot.read(spark, corpus, "emb"),
-      "vec_id", "embedding",
-      Ann.ivfCodebook(Snapshot.readAt(spark, corpus, "emb", buildV),
-        "label", "embedding"), rebuilt)
+    IndexLifecycle.build(ivf, Snapshot.read(spark, corpus, "emb"), rebuilt,
+      trainOn = Some(Snapshot.readAt(spark, corpus, "emb", buildV)))
     val full = served(AnnIndex.knnIvfServe(spark.read.parquet(rebuilt),
       spark.read.parquet(rebuilt + "_codebook"), "vec_id",
       col("vec_id") < 3L, k = 2, nProbe = 2))

@@ -221,7 +221,9 @@ class SnapshotSpec extends SparkSpec {
 
   test("runTransactional loads the 4-table warehouse in one snapshot commit") {
     val out = freshRoot()
-    val res = Pipeline.runTransactional(spark, "/root/reference/data", out)
+    val res = Pipeline.runTransactional(spark, RefCsvFixture.dir, out)
+    assert(res.counts.size == 4 && res.counts.values.forall(_ > 0L),
+      s"empty warehouse tables: ${res.counts}")
     assert(Snapshot.currentVersion(spark, s"$out/snapshots").contains(1L))
     val tables = Snapshot.tables(spark, s"$out/snapshots").keySet
     assert(tables == Set("customer", "product", "orders", "order_details"))
@@ -229,7 +231,7 @@ class SnapshotSpec extends SparkSpec {
       assert(Snapshot.read(spark, s"$out/snapshots", t).count() == n, s"count mismatch for $t")
     }
     // idempotent: re-running publishes v2 with identical contents
-    val res2 = Pipeline.runTransactional(spark, "/root/reference/data", out)
+    val res2 = Pipeline.runTransactional(spark, RefCsvFixture.dir, out)
     assert(Snapshot.currentVersion(spark, s"$out/snapshots").contains(2L))
     assert(res2.counts == res.counts)
   }

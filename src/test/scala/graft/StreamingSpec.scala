@@ -473,7 +473,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streamingAnnFollow keeps the serving index current over a live stream") {
     implicit val ctx = spark.sqlContext
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.{Ann, AnnIndex, IndexLifecycle}
+    import graft.operators.AnnIndex.Probe
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("graft-sann").toString
@@ -486,16 +487,16 @@ class StreamingSpec extends SparkSpec {
       vec(2L, 0.0f, 1.0f, 0.0f, 0.0f), vec(3L, 0.0f, 0.95f, 0.05f, 0.0f),
       vec(4L, 0.0f, 0.0f, 1.0f, 0.0f)).toDF("vec_id", "embedding")
     val buildV = Snapshot.commit(spark, root, Map("emb" -> corpus0))
-    AnnIndex.writeLshIndex(Snapshot.read(spark, root, "emb"),
-      "vec_id", "embedding", planes, base)
+    val lsh = AnnIndex.lsh("vec_id", "embedding", planes)
+    IndexLifecycle.build(lsh, Snapshot.read(spark, root, "emb"), base)
     val ms = MemoryStream[(Long, Array[Float])]
     val q = StreamOps.streamingAnnFollow(
         ms.toDF().toDF("vec_id", "embedding"), root, "emb",
         keys = Seq("vec_id"), ord = Seq(col("vec_id")),
         deltaRoot = delta, deltaTable = "emb_delta", initialCursor = buildV)
       .outputMode("update").start()
-    def serve() = AnnIndex.knnLshServeFollow(spark, base, delta, "emb_delta",
-        "vec_id", "embedding", planes, col("vec_id") < 2, k = 3)
+    def serve() = IndexLifecycle.serveFollow(spark, lsh, base, delta, "emb_delta",
+        Probe(col("vec_id") < 2, k = 3))
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     def rebuild() = Ann.knnLsh(Snapshot.read(spark, root, "emb"),
         "vec_id", "embedding", planes, col("vec_id") < 2, k = 3)
@@ -524,7 +525,8 @@ class StreamingSpec extends SparkSpec {
 
   test("budget-folded follow: the fold fires off-path, hands off the cursor, keeps serving") {
     implicit val ctx = spark.sqlContext
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.{Ann, AnnIndex, IndexLifecycle}
+    import graft.operators.AnnIndex.Probe
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("graft-fann").toString
@@ -539,15 +541,14 @@ class StreamingSpec extends SparkSpec {
       vec(4L, 0.0f, 0.0f, 1.0f, 0.0f)).toDF("vec_id", "embedding")
     val buildV = Snapshot.commit(spark, root, Map("emb" -> corpus0))
     val base0 = s"$work/base-0"
-    AnnIndex.writeLshIndex(Snapshot.read(spark, root, "emb"),
-      "vec_id", "embedding", planes, base0)
+    val lsh = AnnIndex.lshMultiProbe("vec_id", "embedding", planes)
+    IndexLifecycle.build(lsh, Snapshot.read(spark, root, "emb"), base0)
     val follower = new StreamOps.AnnFollowFolding(root, "emb",
       keys = Seq("vec_id"), ord = Seq(col("vec_id")), deltaTable = "emb_delta",
-      idCol = "vec_id",
-      family = StreamOps.AnnFollowFamily.lsh("emb_delta", "vec_id", "embedding", planes),
+      family = lsh,
       workDir = work, foldBudget = 0.5,
       initial = StreamOps.AnnFollowPair(base0, s"$work/delta-0", buildV, 0))
-    def served() = follower.serve(spark, col("vec_id") < 2, k = 3)
+    def served() = follower.serve(spark, Probe(col("vec_id") < 2, k = 3))
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     // the lifecycle serves at the RECALL-TUNED multi-probe configuration,
     // so the ground truth is a multi-probe serve over an index rebuilt
@@ -599,11 +600,10 @@ class StreamingSpec extends SparkSpec {
       // from the generation-0 pair would silently miss them.
       val restarted = new StreamOps.AnnFollowFolding(root, "emb",
         keys = Seq("vec_id"), ord = Seq(col("vec_id")), deltaTable = "emb_delta",
-        idCol = "vec_id",
-        family = StreamOps.AnnFollowFamily.lsh("emb_delta", "vec_id", "embedding", planes),
+        family = lsh,
         workDir = work, foldBudget = 0.5,
         initial = StreamOps.AnnFollowPair(base0, s"$work/delta-0", buildV, 0))
-      val restartServed = restarted.serve(spark, col("vec_id") < 2, k = 3)
+      val restartServed = restarted.serve(spark, Probe(col("vec_id") < 2, k = 3))
         .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
       assert(restarted.current.generation == follower.current.generation,
         "restart must rehydrate the persisted post-fold pair")
@@ -622,18 +622,18 @@ class StreamingSpec extends SparkSpec {
     try out.write("garbage\n".getBytes("UTF-8")) finally out.close()
     val torn = new StreamOps.AnnFollowFolding(root, "emb",
       keys = Seq("vec_id"), ord = Seq(col("vec_id")), deltaTable = "emb_delta",
-      idCol = "vec_id",
-      family = StreamOps.AnnFollowFamily.lsh("emb_delta", "vec_id", "embedding", planes),
+      family = lsh,
       workDir = work, foldBudget = 0.5,
       initial = StreamOps.AnnFollowPair(s"$work/base-0", s"$work/delta-0", buildV, 0))
     intercept[IllegalStateException] {
-      torn.serve(spark, col("vec_id") < 2, k = 3)
+      torn.serve(spark, Probe(col("vec_id") < 2, k = 3))
     }
   }
 
   test("budget-folded follow generalizes to the IVF family with its frozen codebook") {
     implicit val ctx = spark.sqlContext
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.{Ann, AnnIndex, IndexLifecycle}
+    import graft.operators.AnnIndex.Probe
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("graft-fivf").toString
@@ -646,27 +646,24 @@ class StreamingSpec extends SparkSpec {
     val atBuild = Snapshot.read(spark, root, "emb")
     val base0 = s"$work/base-0"
     // codebook trained on the BUILD-TIME state, frozen for the lifetime
-    AnnIndex.writeIvfIndex(atBuild, "vec_id", "embedding",
-      Ann.ivfCodebook(atBuild, "label", "embedding"), base0)
+    val ivf = AnnIndex.ivf("vec_id", "embedding", "label", nProbe = 2)
+    IndexLifecycle.build(ivf, atBuild, base0)
     val frozenCodebook = spark.read.parquet(base0 + "_codebook")
       .orderBy("cb_label").collect().map(_.toSeq).toSeq
     val follower = new StreamOps.AnnFollowFolding(root, "emb",
       keys = Seq("vec_id"), ord = Seq(col("vec_id")), deltaTable = "emb_delta",
-      idCol = "vec_id",
-      family = StreamOps.AnnFollowFamily.ivf("emb_delta", "vec_id", "embedding", nProbe = 2),
+      family = ivf,
       workDir = work, foldBudget = 0.5,
       initial = StreamOps.AnnFollowPair(base0, s"$work/delta-0", buildV, 0))
-    def served() = follower.serve(spark, col("vec_id") < 2, k = 3)
+    def served() = follower.serve(spark, Probe(col("vec_id") < 2, k = 3))
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     // ground truth: rebuild over the corpus's CURRENT state with the SAME
     // frozen codebook (deterministically re-derived from the build-time
     // state — ivfCodebook is exact integer arithmetic)
     def rebuild() = {
-      val cb = Ann.ivfCodebook(
-        Snapshot.readAt(spark, root, "emb", buildV), "label", "embedding")
       val idx = java.nio.file.Files.createTempDirectory("graft-fivf-rb").toString
-      AnnIndex.writeIvfIndex(Snapshot.read(spark, root, "emb"),
-        "vec_id", "embedding", cb, idx)
+      IndexLifecycle.build(ivf, Snapshot.read(spark, root, "emb"), idx,
+        trainOn = Some(Snapshot.readAt(spark, root, "emb", buildV)))
       AnnIndex.knnIvfServe(spark.read.parquet(idx),
           spark.read.parquet(idx + "_codebook"), "vec_id",
           col("vec_id") < 2, k = 3, nProbe = 2)

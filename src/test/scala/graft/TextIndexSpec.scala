@@ -4,10 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bm25, TextIndex}
+import graft.operators.{Bm25, IndexLifecycle, TextIndex}
 
 class TextIndexSpec extends SparkSpec {
   import sqlImplicits._
+
+  private val bm25 = TextIndex.bm25("doc_id", "text")
 
   private def corpus(n: Long) =
     (0L until n).map { i =>
@@ -38,9 +40,9 @@ class TextIndexSpec extends SparkSpec {
   test("persisted serve is row-identical to Bm25.topK; scan prunes to the query terms' buckets") {
     val docs = corpus(48L)
     val base = Files.createTempDirectory("graft-txtidx").toString
-    TextIndex.writeTextIndex(docs, "doc_id", "text", base + "/idx")
+    IndexLifecycle.build(bm25, docs, base + "/idx")
     val terms = Seq("hash", "vector")
-    val served = TextIndex.bm25Serve(spark, base + "/idx", "doc_id", terms, 5)
+    val served = IndexLifecycle.serve(spark, bm25, base + "/idx", TextIndex.Query(terms, 5))
     val direct = Bm25.topK(docs, "doc_id", "text", terms, 5)
     assert(served.collect().map(_.toSeq).toSeq == direct.collect().map(_.toSeq).toSeq)
     // static bucket pruning: the postings scan plans a PartitionFilter
@@ -67,7 +69,7 @@ class TextIndexSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-txtappend").toString
     val first = docs.filter(col("doc_id") < 32L)
     val batch = docs.filter(col("doc_id") >= 32L)
-    TextIndex.writeTextIndex(first, "doc_id", "text", base + "/idx")
+    IndexLifecycle.build(bm25, first, base + "/idx")
     def partFiles() = {
       def walk(f: java.io.File): Seq[(String, Long, Long)] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
@@ -80,13 +82,13 @@ class TextIndexSpec extends SparkSpec {
     val rows = TextIndex.postingsRows(batch, "doc_id", "text")
     assert(!rows.queryExecution.executedPlan.toString.contains(s"$base/idx"),
       "append derivation must not read the stored index")
-    TextIndex.appendTextIndex(batch, "doc_id", "text", base + "/idx")
+    IndexLifecycle.append(bm25, batch, base + "/idx")
     val after = partFiles()
     assert(after.size > before.size, "append added no files")
     assert(before.toSet.subsetOf(after.toSet), "append rewrote pre-existing files")
-    TextIndex.writeTextIndex(docs, "doc_id", "text", base + "/full")
+    IndexLifecycle.build(bm25, docs, base + "/full")
     def serve(p: String) =
-      TextIndex.bm25Serve(spark, p, "doc_id", Seq("hash", "vector"), 5)
+      IndexLifecycle.serve(spark, bm25, p, TextIndex.Query(Seq("hash", "vector"), 5))
         .collect().map(_.toSeq).toSeq
     assert(serve(base + "/idx") == serve(base + "/full"))
   }
@@ -95,12 +97,11 @@ class TextIndexSpec extends SparkSpec {
     import graft.sources.Snapshot
     val base = Files.createTempDirectory("graft-txtfold").toString
     val docs = corpus(8L)
-    TextIndex.writeTextIndex(docs, "doc_id", "text", base + "/idx")
+    IndexLifecycle.build(bm25, docs, base + "/idx")
     val deltaRoot = Files.createTempDirectory("graft-txtfold-delta").toString
     Snapshot.commit(spark, deltaRoot, Map("d" -> docs.limit(1)))
     val ex = intercept[IllegalStateException](
-      TextIndex.compactTextFollow(spark, base + "/idx", deltaRoot, "d",
-        "doc_id", "text", base + "/idx2"))
+      IndexLifecycle.fold(spark, bm25, base + "/idx", deltaRoot, "d", base + "/idx2"))
     assert(ex.getMessage.contains("never synced"))
   }
 }

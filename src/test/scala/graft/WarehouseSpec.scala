@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.operators.{AnnIndex, IndexFamily, IndexLifecycle, TextIndex}
+import graft.operators.AnnIndex.Probe
 import graft.sources.Warehouse
 
 class WarehouseSpec extends SparkSpec {
@@ -178,7 +181,7 @@ class WarehouseSpec extends SparkSpec {
     val vecs = (0L until 64L).map(i =>
       (i, Array.tabulate(8)(j => ((i * 7 + j * 13) % 23).toFloat / 23f)))
       .toDF("vec_id", "embedding")
-    AnnIndex.writeLshIndex(vecs, "vec_id", "embedding", planes, s"$base/idx")
+    IndexLifecycle.build(AnnIndex.lsh("vec_id", "embedding", planes), vecs, s"$base/idx")
     val index = spark.read.parquet(s"$base/idx")
     val served = AnnIndex.knnLshServe(index, "vec_id", col("vec_id") < 3L, k = 2)
     served.collect()
@@ -206,7 +209,8 @@ class WarehouseSpec extends SparkSpec {
     val all = (0L until 64L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     val first = all.filter(col("vec_id") < 48L)
     val batch = all.filter(col("vec_id") >= 48L)
-    AnnIndex.writeLshIndex(first, "vec_id", "embedding", planes, s"$base/idx")
+    val lsh = AnnIndex.lsh("vec_id", "embedding", planes)
+    IndexLifecycle.build(lsh, first, s"$base/idx")
     def partFiles() = {
       val fs = new java.io.File(s"$base/idx")
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -220,7 +224,7 @@ class WarehouseSpec extends SparkSpec {
     val rows = AnnIndex.lshIndexRows(batch, "vec_id", "embedding", planes)
     assert(!rows.queryExecution.executedPlan.toString.contains(s"$base/idx"),
       "append derivation must not read the stored index")
-    AnnIndex.appendLshIndex(batch, "vec_id", "embedding", planes, s"$base/idx")
+    IndexLifecycle.append(lsh, batch, s"$base/idx")
     val after = partFiles()
     // pre-existing part files are untouched (same path, size, mtime) —
     // append only ADDS files into the bucket directories
@@ -228,7 +232,7 @@ class WarehouseSpec extends SparkSpec {
     assert(before.toSet.subsetOf(after.toSet),
       "append rewrote pre-existing index files")
     // serve-after-append is row-identical to a full rebuild over the union
-    AnnIndex.writeLshIndex(all, "vec_id", "embedding", planes, s"$base/full")
+    IndexLifecycle.build(lsh, all, s"$base/full")
     def serve(p: String) = AnnIndex.knnLshServe(spark.read.parquet(p), "vec_id",
         col("vec_id") < 3L, k = 2)
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
@@ -242,7 +246,8 @@ class WarehouseSpec extends SparkSpec {
       (i, Array.tabulate(8)(j => ((i * 11 + j * 5) % 19).toFloat / 19f)))
       .toDF("vec_id", "embedding")
     val cbs = Ann.pqCodebooks(vecs, "vec_id", "embedding", dim = 8, m = 2, k = 4, iters = 1)
-    AnnIndex.writePqIndex(vecs, "vec_id", "embedding", cbs, dim = 8, m = 2, s"$base/idx")
+    IndexLifecycle.build(AnnIndex.pq("vec_id", "embedding", dim = 8, m = 2, clusters = 4,
+      iters = 1), vecs, s"$base/idx")
     val served = AnnIndex.knnPqServe(
       spark.read.parquet(s"$base/idx"),
       spark.read.parquet(s"$base/idx_codebook"),
@@ -270,7 +275,8 @@ class WarehouseSpec extends SparkSpec {
       (i, i % 4, Array.tabulate(8)(j => ((i * 11 + j * 5) % 19).toFloat / 19f)))
       .toDF("vec_id", "label", "embedding")
     val codebook = Ann.ivfCodebook(vecs, "label", "embedding")
-    AnnIndex.writeIvfIndex(vecs, "vec_id", "embedding", codebook, s"$base/idx")
+    IndexLifecycle.build(AnnIndex.ivf("vec_id", "embedding", "label", nProbe = 2),
+      vecs, s"$base/idx")
     val served = AnnIndex.knnIvfServe(
       spark.read.parquet(s"$base/idx"),
       spark.read.parquet(s"$base/idx_codebook"),
@@ -309,20 +315,21 @@ class WarehouseSpec extends SparkSpec {
     // PRODUCTION shape: codebook trained on the initial ingest alone,
     // then FROZEN — appends encode against the stored copy
     val cbFirst = Ann.ivfCodebook(first, "label", "embedding")
-    AnnIndex.writeIvfIndex(first, "vec_id", "embedding", cbFirst, s"$base/idx")
+    val ivf = AnnIndex.ivf("vec_id", "embedding", "label", nProbe = 2)
+    IndexLifecycle.build(ivf, first, s"$base/idx")
     val before = partFiles(s"$base/idx")
     // O(batch): the derivation scans the batch + the codebook only —
     // the stored index data appears nowhere in its plan
     val rows = AnnIndex.ivfIndexRows(batch, "vec_id", "embedding", cbFirst)
     assert(!rows.queryExecution.executedPlan.toString.contains(s"$base/idx"),
       "append derivation must not read the stored index")
-    AnnIndex.appendIvfIndex(batch, "vec_id", "embedding", s"$base/idx")
+    IndexLifecycle.append(ivf, batch, s"$base/idx")
     val after = partFiles(s"$base/idx")
     assert(after.size > before.size, "append added no files")
     assert(before.toSet.subsetOf(after.toSet),
       "append rewrote pre-existing index files")
     // serve-after-append == full rebuild over the union, same codebook
-    AnnIndex.writeIvfIndex(all, "vec_id", "embedding", cbFirst, s"$base/full")
+    IndexLifecycle.build(ivf, all, s"$base/full", trainOn = Some(first))
     def serve(p: String) = AnnIndex.knnIvfServe(spark.read.parquet(p),
         spark.read.parquet(p + "_codebook"), "vec_id",
         col("vec_id") < 3L, k = 2, nProbe = 2)
@@ -341,18 +348,19 @@ class WarehouseSpec extends SparkSpec {
     // frozen quantizer: codebooks trained on the initial ingest alone
     val cbs = Ann.pqCodebooks(first, "vec_id", "embedding", dim = 8, m = 2, k = 4, iters = 1)
     try {
-      AnnIndex.writePqIndex(first, "vec_id", "embedding", cbs, dim = 8, m = 2, s"$base/idx")
+      val pq = AnnIndex.pq("vec_id", "embedding", dim = 8, m = 2, clusters = 4, iters = 1)
+      IndexLifecycle.build(pq, first, s"$base/idx")
       val before = partFiles(s"$base/idx")
       val rows = AnnIndex.pqIndexRows(batch, "vec_id", "embedding", cbs, dim = 8, m = 2)
       assert(!rows.queryExecution.executedPlan.toString.contains(s"$base/idx"),
         "append derivation must not read the stored index")
-      AnnIndex.appendPqIndex(batch, "vec_id", "embedding", dim = 8, m = 2, s"$base/idx")
+      IndexLifecycle.append(pq, batch, s"$base/idx")
       val after = partFiles(s"$base/idx")
       assert(after.size > before.size, "append added no files")
       assert(before.toSet.subsetOf(after.toSet),
         "append rewrote pre-existing index files")
       // ADC over the appended codes == full rebuild over the union
-      AnnIndex.writePqIndex(all, "vec_id", "embedding", cbs, dim = 8, m = 2, s"$base/full")
+      IndexLifecycle.build(pq, all, s"$base/full", trainOn = Some(first))
       def serve(p: String) = AnnIndex.knnPqServe(spark.read.parquet(p),
           spark.read.parquet(p + "_codebook"),
           all.filter(col("vec_id") < 3L), "vec_id", "embedding",
@@ -368,7 +376,8 @@ class WarehouseSpec extends SparkSpec {
     val all = (0L until 64L).map(i =>
       (i, Array.tabulate(8)(j => ((i * 11 + j * 5) % 19).toFloat / 19f)))
       .toDF("vec_id", "embedding")
-    AnnIndex.writeSq8Index(all, "vec_id", "embedding", s"$base/idx")
+    val sq8 = AnnIndex.sq8("vec_id", "embedding", refine = 2)
+    IndexLifecycle.build(sq8, all, s"$base/idx")
     // the stored code column is genuinely ONE byte per dimension
     val stored = spark.read.parquet(s"$base/idx")
     assert(stored.schema("code").dataType ==
@@ -388,7 +397,7 @@ class WarehouseSpec extends SparkSpec {
     // incremental append: frozen params, O(batch), stored files untouched
     val first = all.filter(col("vec_id") < 48L)
     val batch = all.filter(col("vec_id") >= 48L)
-    AnnIndex.writeSq8Index(first, "vec_id", "embedding", s"$base/inc")
+    IndexLifecycle.build(sq8, first, s"$base/inc")
     val params = spark.read.parquet(s"$base/inc_params")
     val before = partFiles(s"$base/inc")
     val derived = AnnIndex.sq8IndexRows(batch, "vec_id", "embedding", params)
@@ -397,7 +406,7 @@ class WarehouseSpec extends SparkSpec {
       "append derivation reads the stored frozen params")
     assert(!planStr.replace(s"$base/inc_params", "").contains(s"$base/inc"),
       "append derivation must not read the stored index data")
-    AnnIndex.appendSq8Index(batch, "vec_id", "embedding", s"$base/inc")
+    IndexLifecycle.append(sq8, batch, s"$base/inc")
     val after = partFiles(s"$base/inc")
     assert(after.size > before.size, "append added no files")
     assert(before.toSet.subsetOf(after.toSet),
@@ -423,14 +432,14 @@ class WarehouseSpec extends SparkSpec {
     // corpus v1 = ids < 48; the base index freezes there
     val buildV = Snapshot.commit(spark, s"$base/corpus",
       Map("emb" -> all.filter(col("vec_id") < 48L)))
-    AnnIndex.writeLshIndex(Snapshot.read(spark, s"$base/corpus", "emb"),
-      "vec_id", "embedding", planes, s"$base/idx")
+    val lsh = AnnIndex.lsh("vec_id", "embedding", planes)
+    IndexLifecycle.build(lsh, Snapshot.read(spark, s"$base/corpus", "emb"), s"$base/idx")
     // a never-synced delta root cannot fold: no cursor to hand off, and
     // a guessed one would break the exactly-once chain
     Snapshot.commit(spark, s"$base/nosync", Map("emb_delta" -> all.limit(1)))
     intercept[IllegalStateException] {
-      AnnIndex.compactLshFollow(spark, s"$base/idx", s"$base/nosync",
-        "emb_delta", "vec_id", "embedding", planes, s"$base/never")
+      IndexLifecycle.fold(spark, lsh, s"$base/idx", s"$base/nosync",
+        "emb_delta", s"$base/never")
     }
     // wave 1: erasure + MERGE (inserts >= 48, re-upserts %9==1,
     // resurrections of the erased overlap), one exactly-once sync
@@ -443,20 +452,18 @@ class WarehouseSpec extends SparkSpec {
     assert(synced.isDefined)
     def serveRows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
-    val followNow = serveRows(AnnIndex.knnLshServeFollow(spark, s"$base/idx",
-      s"$base/d1", "emb_delta", "vec_id", "embedding", planes,
-      col("vec_id") < 3L, 2))
+    val followNow = serveRows(IndexLifecycle.serveFollow(spark, lsh, s"$base/idx",
+      s"$base/d1", "emb_delta", Probe(col("vec_id") < 3L, 2)))
     // the FOLD: base+delta → fresh frozen base, cursor returned
-    val cur = AnnIndex.compactLshFollow(spark, s"$base/idx", s"$base/d1",
-      "emb_delta", "vec_id", "embedding", planes, s"$base/idx2")
+    val cur = IndexLifecycle.fold(spark, lsh, s"$base/idx", s"$base/d1",
+      "emb_delta", s"$base/idx2")
     assert(cur == synced.get,
       "handoff cursor must be the delta's synced source version")
     // the folded base is row-identical to a full rebuild over the live
     // corpus (stored rows passed through bit-exactly; only delta rows
     // were encoded), and it serves exactly what the follow mode served
     val folded = spark.read.parquet(s"$base/idx2")
-    AnnIndex.writeLshIndex(Snapshot.read(spark, s"$base/corpus", "emb"),
-      "vec_id", "embedding", planes, s"$base/full")
+    IndexLifecycle.build(lsh, Snapshot.read(spark, s"$base/corpus", "emb"), s"$base/full")
     val rebuilt = spark.read.parquet(s"$base/full")
       .select(folded.columns.map(col).toSeq: _*)
     assert(folded.orderBy("vec_id").collect().map(_.toSeq).toSeq
@@ -477,11 +484,9 @@ class WarehouseSpec extends SparkSpec {
       all.filter(col("vec_id") % 3 === 2), Seq("vec_id"))
     assert(Replica.sync(spark, s"$base/corpus", "emb", s"$base/d2",
       "emb_delta", Seq("vec_id"), initialCursor = cur).isDefined)
-    val after = serveRows(AnnIndex.knnLshServeFollow(spark, s"$base/idx2",
-      s"$base/d2", "emb_delta", "vec_id", "embedding", planes,
-      col("vec_id") < 3L, 2))
-    AnnIndex.writeLshIndex(Snapshot.read(spark, s"$base/corpus", "emb"),
-      "vec_id", "embedding", planes, s"$base/full2")
+    val after = serveRows(IndexLifecycle.serveFollow(spark, lsh, s"$base/idx2",
+      s"$base/d2", "emb_delta", Probe(col("vec_id") < 3L, 2)))
+    IndexLifecycle.build(lsh, Snapshot.read(spark, s"$base/corpus", "emb"), s"$base/full2")
     assert(after == serveRows(AnnIndex.knnLshServe(
       spark.read.parquet(s"$base/full2"), "vec_id", col("vec_id") < 3L, 2)))
   }
@@ -498,13 +503,13 @@ class WarehouseSpec extends SparkSpec {
     val atBuild = Snapshot.read(spark, s"$base/corpus", "emb")
     // trained ONCE at build time; exact-integer ⇒ deterministic, so the
     // rebuild below reusing it matches the frozen stored copy
-    val cb = Ann.ivfCodebook(atBuild, "label", "embedding")
-    AnnIndex.writeIvfIndex(atBuild, "vec_id", "embedding", cb, s"$base/idx")
+    val ivf = AnnIndex.ivf("vec_id", "embedding", "label", nProbe = 2)
+    IndexLifecycle.build(ivf, atBuild, s"$base/idx")
     // a never-synced delta root cannot fold
     Snapshot.commit(spark, s"$base/nosync", Map("emb_delta" -> all.limit(1)))
     intercept[IllegalStateException] {
-      AnnIndex.compactIvfFollow(spark, s"$base/idx", s"$base/nosync",
-        "emb_delta", "vec_id", "embedding", s"$base/never")
+      IndexLifecycle.fold(spark, ivf, s"$base/idx", s"$base/nosync",
+        "emb_delta", s"$base/never")
     }
     // mutate past the frozen base, one seeded sync
     Snapshot.deleteWhere(spark, s"$base/corpus", "emb",
@@ -516,11 +521,10 @@ class WarehouseSpec extends SparkSpec {
     assert(synced.isDefined)
     def serveRows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
-    val followNow = serveRows(AnnIndex.knnIvfServeFollow(spark, s"$base/idx",
-      s"$base/d1", "emb_delta", "vec_id", "embedding",
-      col("vec_id") < 3L, 2, nProbe = 2))
-    val cur = AnnIndex.compactIvfFollow(spark, s"$base/idx", s"$base/d1",
-      "emb_delta", "vec_id", "embedding", s"$base/idx2")
+    val followNow = serveRows(IndexLifecycle.serveFollow(spark, ivf, s"$base/idx",
+      s"$base/d1", "emb_delta", Probe(col("vec_id") < 3L, 2)))
+    val cur = IndexLifecycle.fold(spark, ivf, s"$base/idx", s"$base/d1",
+      "emb_delta", s"$base/idx2")
     assert(cur == synced.get,
       "handoff cursor must be the delta's synced source version")
     // the codebook is FROZEN: the new base's copy is row-identical to
@@ -532,8 +536,8 @@ class WarehouseSpec extends SparkSpec {
     // the folded base is row-identical to a full rebuild over the live
     // corpus with THAT codebook, and serves exactly what follow served
     val folded = spark.read.parquet(s"$base/idx2")
-    AnnIndex.writeIvfIndex(Snapshot.read(spark, s"$base/corpus", "emb"),
-      "vec_id", "embedding", cb, s"$base/full")
+    IndexLifecycle.build(ivf, Snapshot.read(spark, s"$base/corpus", "emb"), s"$base/full",
+      trainOn = Some(Snapshot.readAt(spark, s"$base/corpus", "emb", buildV)))
     val rebuilt = spark.read.parquet(s"$base/full")
       .select(folded.columns.map(col).toSeq: _*)
     assert(folded.orderBy("vec_id").collect().map(_.toSeq).toSeq
@@ -544,7 +548,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("PQ follow serves frozen-codebook codes; the fold closes the lifecycle") {
-    import graft.operators.{Ann, AnnIndex}
+    import graft.operators.AnnIndex
     import graft.sources.{Replica, Snapshot}
     val base = Files.createTempDirectory("graft-pqfollow").toString
     val all = (0L until 64L).map(i =>
@@ -553,62 +557,8 @@ class WarehouseSpec extends SparkSpec {
     val buildV = Snapshot.commit(spark, s"$base/corpus",
       Map("emb" -> all.filter(col("vec_id") < 48L)))
     val atBuild = Snapshot.read(spark, s"$base/corpus", "emb")
-    val cbs = Ann.pqCodebooks(atBuild, "vec_id", "embedding",
-      dim = 8, m = 2, k = 4, iters = 1)
-    try {
-      AnnIndex.writePqIndex(atBuild, "vec_id", "embedding", cbs,
-        dim = 8, m = 2, s"$base/idx")
-      Snapshot.deleteWhere(spark, s"$base/corpus", "emb",
-        col("vec_id") % 5 === 0, Seq("vec_id"))
-      Snapshot.upsertMergeOnRead(spark, s"$base/corpus", "emb",
-        all.filter(col("vec_id") >= 48L || col("vec_id") % 9 === 1), Seq("vec_id"))
-      val synced = Replica.sync(spark, s"$base/corpus", "emb", s"$base/d1",
-        "emb_delta", Seq("vec_id"), initialCursor = buildV)
-      assert(synced.isDefined)
-      val probes = all.filter(col("vec_id") < 3L)
-      def serveRows(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
-      val follow = serveRows(AnnIndex.knnPqServeFollow(spark, s"$base/idx",
-        s"$base/d1", "emb_delta", probes, "vec_id", "embedding",
-        dim = 8, m = 2, k = 2))
-      // follow == full rebuild over the live corpus with the SAME
-      // frozen codebooks (vectors unchanged ⇒ identical codes; only
-      // membership moves, which is what base-minus-touched ∪ delta
-      // must get right)
-      AnnIndex.writePqIndex(Snapshot.read(spark, s"$base/corpus", "emb"),
-        "vec_id", "embedding", cbs, dim = 8, m = 2, s"$base/full")
-      assert(follow == serveRows(AnnIndex.knnPqServe(
-        spark.read.parquet(s"$base/full"),
-        spark.read.parquet(s"$base/full_codebook"),
-        probes, "vec_id", "embedding", dim = 8, m = 2, k = 2)))
-      // the FOLD: codes == rebuild codes, codebooks copied verbatim,
-      // cursor == the synced source version
-      val cur = AnnIndex.compactPqFollow(spark, s"$base/idx", s"$base/d1",
-        "emb_delta", "vec_id", "embedding", dim = 8, m = 2, s"$base/idx2")
-      assert(cur == synced.get)
-      def codeRows(p: String) = spark.read.parquet(p)
-        .orderBy("vec_id", "subspace").collect().map(_.toSeq).toSeq
-      assert(codeRows(s"$base/idx2") == codeRows(s"$base/full"))
-      def cbRows(p: String) = spark.read.parquet(p)
-        .orderBy("subspace", "cluster").collect().map(_.toSeq).toSeq
-      assert(cbRows(s"$base/idx2_codebook") == cbRows(s"$base/idx_codebook"))
-      assert(serveRows(AnnIndex.knnPqServe(spark.read.parquet(s"$base/idx2"),
-        spark.read.parquet(s"$base/idx2_codebook"),
-        probes, "vec_id", "embedding", dim = 8, m = 2, k = 2)) == follow)
-    } finally graft.operators.NearDup.freeCheckpoint(cbs)
-  }
-
-  test("SQ8 follow serves frozen-param codes; the fold closes the lifecycle") {
-    import graft.operators.AnnIndex
-    import graft.sources.{Replica, Snapshot}
-    val base = Files.createTempDirectory("graft-sq8follow").toString
-    val all = (0L until 64L).map(i =>
-      (i, Array.tabulate(8)(j => ((i * 11 + j * 5) % 19).toFloat / 19f)))
-      .toDF("vec_id", "embedding")
-    val buildV = Snapshot.commit(spark, s"$base/corpus",
-      Map("emb" -> all.filter(col("vec_id") < 48L)))
-    val atBuild = Snapshot.read(spark, s"$base/corpus", "emb")
-    AnnIndex.writeSq8Index(atBuild, "vec_id", "embedding", s"$base/idx")
+    val pq = AnnIndex.pq("vec_id", "embedding", dim = 8, m = 2, clusters = 4, iters = 1)
+    IndexLifecycle.build(pq, atBuild, s"$base/idx")
     Snapshot.deleteWhere(spark, s"$base/corpus", "emb",
       col("vec_id") % 5 === 0, Seq("vec_id"))
     Snapshot.upsertMergeOnRead(spark, s"$base/corpus", "emb",
@@ -616,39 +566,109 @@ class WarehouseSpec extends SparkSpec {
     val synced = Replica.sync(spark, s"$base/corpus", "emb", s"$base/d1",
       "emb_delta", Seq("vec_id"), initialCursor = buildV)
     assert(synced.isDefined)
-    val live = Snapshot.read(spark, s"$base/corpus", "emb")
+    val probes = all.filter(col("vec_id") < 3L)
     def serveRows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
-    val follow = serveRows(AnnIndex.knnSq8ServeFollow(spark, s"$base/idx",
-      s"$base/d1", "emb_delta", live, "vec_id", "embedding",
-      col("vec_id") < 3L, k = 2, refine = 2))
-    // follow == full rebuild over the live corpus with the SAME frozen
-    // params (writeSq8Index accepts a pre-trained frame)
-    val params = spark.read.parquet(s"$base/idx_params")
-    AnnIndex.writeSq8Index(live, "vec_id", "embedding", s"$base/full", params)
-    assert(follow == serveRows(AnnIndex.knnSq8Serve(
+    val follow = serveRows(IndexLifecycle.serveFollow(spark, pq, s"$base/idx",
+      s"$base/d1", "emb_delta", Probe(col("vec_id") < 3L, 2, Some(all))))
+    // follow == full rebuild over the live corpus with the SAME
+    // frozen codebooks (vectors unchanged ⇒ identical codes; only
+    // membership moves, which is what base-minus-touched ∪ delta
+    // must get right)
+    IndexLifecycle.build(pq, Snapshot.read(spark, s"$base/corpus", "emb"), s"$base/full",
+      trainOn = Some(Snapshot.readAt(spark, s"$base/corpus", "emb", buildV)))
+    assert(follow == serveRows(AnnIndex.knnPqServe(
       spark.read.parquet(s"$base/full"),
-      spark.read.parquet(s"$base/full_params"), live,
-      "vec_id", "embedding", col("vec_id") < 3L, k = 2, refine = 2)))
-    // the FOLD: codes == rebuild codes, params copied verbatim, cursor
-    // == the synced source version; serving the new base == follow
-    val cur = AnnIndex.compactSq8Follow(spark, s"$base/idx", s"$base/d1",
-      "emb_delta", "vec_id", "embedding", s"$base/idx2")
+      spark.read.parquet(s"$base/full_codebook"),
+      probes, "vec_id", "embedding", dim = 8, m = 2, k = 2)))
+    // the FOLD: codes == rebuild codes, codebooks copied verbatim,
+    // cursor == the synced source version
+    val cur = IndexLifecycle.fold(spark, pq, s"$base/idx", s"$base/d1",
+      "emb_delta", s"$base/idx2")
     assert(cur == synced.get)
     def codeRows(p: String) = spark.read.parquet(p)
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq
+      .orderBy("vec_id", "subspace").collect().map(_.toSeq).toSeq
     assert(codeRows(s"$base/idx2") == codeRows(s"$base/full"))
-    def pRows(p: String) = spark.read.parquet(p)
-      .orderBy("dim_idx").collect().map(_.toSeq).toSeq
-    assert(pRows(s"$base/idx2_params") == pRows(s"$base/idx_params"))
-    assert(serveRows(AnnIndex.knnSq8Serve(spark.read.parquet(s"$base/idx2"),
-      spark.read.parquet(s"$base/idx2_params"), live,
-      "vec_id", "embedding", col("vec_id") < 3L, k = 2, refine = 2)) == follow)
+    def cbRows(p: String) = spark.read.parquet(p)
+      .orderBy("subspace", "cluster").collect().map(_.toSeq).toSeq
+    assert(cbRows(s"$base/idx2_codebook") == cbRows(s"$base/idx_codebook"))
+    assert(serveRows(AnnIndex.knnPqServe(spark.read.parquet(s"$base/idx2"),
+      spark.read.parquet(s"$base/idx2_codebook"),
+      probes, "vec_id", "embedding", dim = 8, m = 2, k = 2)) == follow)
+  }
+
+  /** The follow → fold lifecycle of one index family: the follow serve
+    * equals a rebuild over the live corpus (same frozen side table); the
+    * fold writes exactly the rebuild's rows, copies the side table
+    * verbatim and hands off the synced cursor; serving the new base
+    * equals the follow serve; a never-synced delta refuses to fold. */
+  private def foldLifecycle[Q](f: IndexFamily[Q], all: DataFrame,
+      wave: DataFrame => DataFrame, request: DataFrame => Q): Unit = {
+    import graft.sources.{Replica, Snapshot}
+    val base = Files.createTempDirectory("graft-foldlife").toString
+    val id = col(f.idCol)
+    val buildV = Snapshot.commit(spark, s"$base/corpus", Map("t" -> all.filter(id < 48L)))
+    IndexLifecycle.build(f, Snapshot.read(spark, s"$base/corpus", "t"), s"$base/idx")
+    Snapshot.deleteWhere(spark, s"$base/corpus", "t", id % 5 === 0, Seq(f.idCol))
+    Snapshot.upsertMergeOnRead(spark, s"$base/corpus", "t",
+      wave(all.filter(id >= 48L || id % 9 === 1)), Seq(f.idCol))
+    val synced = Replica.sync(spark, s"$base/corpus", "t", s"$base/d1",
+      "t_delta", Seq(f.idCol), initialCursor = buildV)
+    assert(synced.isDefined)
+    val live = Snapshot.read(spark, s"$base/corpus", "t")
+    // rows as an order-free multiset (every served row carries its rank)
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def stored(p: String) = rowsOf(spark.read.parquet(p))
+    val follow = rowsOf(IndexLifecycle.serveFollow(spark, f, s"$base/idx",
+      s"$base/d1", "t_delta", request(live)))
+    // follow == full rebuild over the live corpus with the SAME frozen
+    // side table (trained on the build-version corpus)
+    IndexLifecycle.build(f, live, s"$base/full",
+      trainOn = Some(Snapshot.readAt(spark, s"$base/corpus", "t", buildV)))
+    assert(follow == rowsOf(IndexLifecycle.serve(spark, f, s"$base/full", request(live))))
+    // the FOLD: stored rows == rebuild rows, side table copied verbatim,
+    // cursor == the synced source version; serving the new base == follow
+    val cur = IndexLifecycle.fold(spark, f, s"$base/idx", s"$base/d1",
+      "t_delta", s"$base/idx2")
+    assert(cur == synced.get)
+    f.tables.foreach { t =>
+      assert(stored(s"$base/idx2${t.suffix}") == stored(s"$base/full${t.suffix}"))
+    }
+    f.side.foreach { t =>
+      assert(stored(s"$base/idx2${t.suffix}") == stored(s"$base/idx${t.suffix}"))
+    }
+    assert(rowsOf(IndexLifecycle.serve(spark, f, s"$base/idx2", request(live))) == follow)
     // a never-synced delta has no cursor to hand off — loud throw
-    Snapshot.commit(spark, s"$base/nosync", Map("emb_delta" -> all.limit(1)))
+    Snapshot.commit(spark, s"$base/nosync", Map("t_delta" -> all.limit(1)))
     val ex = intercept[IllegalStateException](
-      AnnIndex.compactSq8Follow(spark, s"$base/idx", s"$base/nosync",
-        "emb_delta", "vec_id", "embedding", s"$base/idx3"))
+      IndexLifecycle.fold(spark, f, s"$base/idx", s"$base/nosync", "t_delta", s"$base/idx3"))
     assert(ex.getMessage.contains("never synced"))
+  }
+
+  private def foldVectors = (0L until 64L).map(i =>
+      (i, Array.tabulate(8)(j => ((i * 11 + j * 5) % 19).toFloat / 19f)))
+    .toDF("vec_id", "embedding")
+
+  test("SQ8 follow serves frozen-param codes; the fold closes the lifecycle") {
+    foldLifecycle(AnnIndex.sq8("vec_id", "embedding", refine = 2), foldVectors, identity,
+      live => Probe(col("vec_id") < 3L, k = 2, Some(live)))
+  }
+
+  test("BQ follow serves frozen-param codes; the fold closes the lifecycle") {
+    foldLifecycle(AnnIndex.bq("vec_id", "embedding", refine = 2), foldVectors, identity,
+      live => Probe(col("vec_id") < 3L, k = 2, Some(live)))
+  }
+
+  test("BM25 follow serves re-tokenized postings; the fold closes the lifecycle") {
+    import org.apache.spark.sql.functions.{concat, lit}
+    val docs = (0L until 64L).map { i =>
+      (i, (Seq.fill((i % 4).toInt + 1)(s"w${i % 7}") ++
+        (if (i % 3 == 0) Seq("hash", "join") else Seq("vector"))).mkString(" "))
+    }.toDF("doc_id", "text")
+    // re-upserted docs carry CHANGED text: stale base postings or a missed
+    // re-tokenization would shift their tf and every doc's normalization
+    foldLifecycle(TextIndex.bm25("doc_id", "text"), docs,
+      _.withColumn("text", concat(col("text"), lit(" vector vector"))),
+      _ => TextIndex.Query(Seq("hash", "vector"), 5))
   }
 }

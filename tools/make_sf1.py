@@ -46,6 +46,12 @@ Usage: python3 tools/make_sf1.py [outdir] [replicas]
 """
 import sys
 
+# an output path that looks like a flag (e.g. --help) is a mistake, not a
+# directory to fill with ~200 MB of parquet
+if len(sys.argv) > 1 and sys.argv[1].startswith("-"):
+    print("usage: python3 tools/make_sf1.py [outdir] [replicas]", file=sys.stderr)
+    sys.exit(2)
+
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq

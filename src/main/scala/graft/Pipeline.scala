@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
-import graft.operators.{Transform, Upsert}
+import graft.operators.{Par, Transform, Upsert}
+import graft.operators.Upsert.MergeStats
 import graft.sources.{CsvExtract, Snapshot}
 
 /** End-to-end ETL pipeline — the Spark-native equivalent of the
@@ -13,50 +14,63 @@ import graft.sources.{CsvExtract, Snapshot}
   * keep-last dedupe, FK split with reject sinks) → load (MERGE-style
   * upsert into a parquet warehouse) → verify counts.
   *
-  * The reference's SQL-Server staging tables disappear: staging is just
-  * the in-flight DataFrame; the MERGE is [[Upsert.upsertParquet]]'s
-  * full-outer-join algorithm. Re-running on the same inputs is a no-op
-  * (idempotent, as the reference claims in README.md:5).
+  * The reference's SQL-Server staging tables disappear: staging is the
+  * cleaned DataFrames, held in the executors' cache the way the
+  * reference holds each cleaned pandas frame in memory
+  * (etl_sales_analytics.py:171-283). Each cleaned entity and each
+  * FK-split output is computed ONCE (`persist`, so a lost block
+  * recomputes with the same file ordinal): the reject CSVs, the reject
+  * counts and the four MERGEs all read that cache instead of re-deriving
+  * the frames from the CSVs per action. The four MERGEs
+  * ([[Upsert.upsertParquet]]'s full-outer-join algorithm, or one
+  * [[Snapshot.mergeCommit]]) then run as concurrent Spark jobs
+  * ([[Par.inParallel]]: a failing table cancels its siblings' jobs), and
+  * nothing is swapped in or published until all four are written. The
+  * cache is released when the load returns, on success and on failure.
+  * Re-running on the same inputs is a no-op (idempotent, as the
+  * reference claims in README.md:5).
   */
 object Pipeline {
 
   case class Result(counts: Map[String, Long], rejectCounts: Map[String, Long])
 
-  /** The cleaned, FK-valid frames ready to load, keyed by table name
-    * with their MERGE keys; rejects already written. */
-  private case class Staged(loads: Seq[(String, DataFrame, Seq[String])],
-      rejectCounts: Map[String, Long])
-
   /** Run the pipeline: `dataDir` holds customers/products/orders/
     * order_details CSVs (reference layout); warehouse + rejects are
-    * written under `outDir`. Tables load independently (per-table
-    * atomic swap) — see [[runTransactional]] for the all-or-nothing
+    * written under `outDir`. Each table swaps on its own (per-table
+    * atomic swap). The four merged tables are written concurrently, and
+    * only once all four are written do they swap in, one at a time,
+    * parents first (customer, product, orders, order_details). So a
+    * failing MERGE leaves every table as it was, and a failing swap (a
+    * filesystem error) leaves the tables before it swapped and the ones
+    * after it untouched: a child table never swaps in without its
+    * parents. See [[runTransactional]] for the all-or-nothing
     * cross-table load. */
-  def run(spark: SparkSession, dataDir: String, outDir: String): Result = {
-    val staged = extractTransform(spark, dataDir, outDir)
-    val merges = staged.loads.map { case (t, df, keys) =>
-      t -> Upsert.upsertParquet(spark, s"$outDir/warehouse/$t", df, keys)
-    }.toMap
-    merges.foreach { case (t, m) =>
-      println(s"[MERGE] $t: inserted=${m.inserted} updated=${m.updated} total=${m.total}")
+  def run(spark: SparkSession, dataDir: String, outDir: String): Result =
+    load(spark, dataDir, outDir) { loads =>
+      val swaps = Par.inParallel(loads.map { case (t, df, keys) => () =>
+        t -> Upsert.writeMerged(spark, s"$outDir/warehouse/$t", df, keys)
+      })
+      val merges = swaps.map { case (t, swap) => t -> swap() }.toMap
+      merges.foreach { case (t, m) =>
+        println(s"[MERGE] $t: inserted=${m.inserted} updated=${m.updated} total=${m.total}")
+      }
+      merges
     }
-    Result(merges.map { case (t, m) => t -> m.total }, staged.rejectCounts)
-  }
 
   /** Same pipeline, but the four MERGEs publish as ONE atomic snapshot
     * commit (graft.sources.Snapshot) — the reference's single-transaction
     * load (etl_sales_analytics.py runs all four MERGEs on one connection
     * and commits once): a crash mid-load leaves the previous snapshot
     * fully intact and mutually consistent across tables. */
-  def runTransactional(spark: SparkSession, dataDir: String, outDir: String): Result = {
-    val staged = extractTransform(spark, dataDir, outDir)
-    val (version, merges) = Snapshot.mergeCommit(spark, s"$outDir/snapshots",
-      staged.loads.map { case (t, df, keys) => t -> (df, keys) }.toMap)
-    merges.foreach { case (t, m) =>
-      println(s"[MERGE v$version] $t: inserted=${m.inserted} updated=${m.updated} total=${m.total}")
+  def runTransactional(spark: SparkSession, dataDir: String, outDir: String): Result =
+    load(spark, dataDir, outDir) { loads =>
+      val (version, merges) = Snapshot.mergeCommit(spark, s"$outDir/snapshots",
+        loads.map { case (t, df, keys) => t -> (df, keys) }.toMap)
+      merges.foreach { case (t, m) =>
+        println(s"[MERGE v$version] $t: inserted=${m.inserted} updated=${m.updated} total=${m.total}")
+      }
+      merges
     }
-    Result(merges.map { case (t, m) => t -> m.total }, staged.rejectCounts)
-  }
 
   /** The documents-side pipeline: curate a raw corpus (language/quality
     * filters, exact + near-dup dedup — graft.operators.Curate) and
@@ -309,68 +323,80 @@ object Pipeline {
     }
   }
 
-  private def extractTransform(spark: SparkSession, dataDir: String,
-      outDir: String): Staged = {
-    // -- extract (S1-S2): schema-pinned, trimmed, coerce-to-NULL
-    val customers = CsvExtract.loadCsvExact(spark, s"$dataDir/customers.csv", Schemas.customer)
-    val products  = CsvExtract.loadCsvExact(spark, s"$dataDir/products.csv", Schemas.product)
-    val orders    = CsvExtract.loadCsvExact(spark, s"$dataDir/orders.csv", Schemas.orders)
-    val details   = CsvExtract.loadCsvExact(spark, s"$dataDir/order_details.csv", Schemas.orderDetail)
+  /** Extract and transform `dataDir` into cached staging frames, write
+    * the reject CSVs under `outDir`, and hand the load set — table,
+    * cleaned FK-valid frame, MERGE keys, parents first — to `merge`.
+    * Every frame cached here is released before this returns or throws. */
+  private def load(spark: SparkSession, dataDir: String, outDir: String)(
+      merge: Seq[(String, DataFrame, Seq[String])] => Map[String, MergeStats]): Result = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def once(df: DataFrame): DataFrame = { cached += df.persist(); df }
+    try {
+      // -- extract (S1-S2): schema-pinned, trimmed, coerce-to-NULL
+      val customers = CsvExtract.loadCsvExact(spark, s"$dataDir/customers.csv", Schemas.customer)
+      val products  = CsvExtract.loadCsvExact(spark, s"$dataDir/products.csv", Schemas.product)
+      val orders    = CsvExtract.loadCsvExact(spark, s"$dataDir/orders.csv", Schemas.orders)
+      val details   = CsvExtract.loadCsvExact(spark, s"$dataDir/order_details.csv", Schemas.orderDetail)
 
-    // -- transform: NOT-NULL PK filter + keep-last dedupe. "Last" means
-    // file order, as in pandas keep="last" (etl_sales_analytics.py:183-186).
-    // The ordinal is reconstructed from scan metadata so it SURVIVES
-    // SPLIT FILES: (file, block offset, row-in-partition). Blocks of one
-    // file sort by their byte offset and rows within a block are emitted
-    // in file order, so the triple is totally ordered by file position —
-    // monotonically_increasing_id alone is only partition-ordered and
-    // breaks silently the moment a file splits into >1 partition.
-    def withFileOrdinal(df: DataFrame): DataFrame =
-      try df
-        .withColumn("__f", col("_metadata.file_path"))
-        .withColumn("__b", col("_metadata.file_block_start"))
-        .withColumn("__r", pmod(monotonically_increasing_id(), lit(1L << 33)))
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        // missing-file degradation path: an in-memory empty frame has no
-        // scan metadata; any ordinal is vacuously correct on zero rows.
-        df.withColumn("__f", lit(""))
-          .withColumn("__b", lit(0L))
-          .withColumn("__r", monotonically_increasing_id())
-      }
+      // -- transform: NOT-NULL PK filter + keep-last dedupe. "Last" means
+      // file order, as in pandas keep="last" (etl_sales_analytics.py:183-186).
+      // The ordinal is reconstructed from scan metadata so it SURVIVES
+      // SPLIT FILES: (file, block offset, row-in-partition). Blocks of one
+      // file sort by their byte offset and rows within a block are emitted
+      // in file order, so the triple is totally ordered by file position —
+      // monotonically_increasing_id alone is only partition-ordered and
+      // breaks silently the moment a file splits into >1 partition.
+      def withFileOrdinal(df: DataFrame): DataFrame =
+        try df
+          .withColumn("__f", col("_metadata.file_path"))
+          .withColumn("__b", col("_metadata.file_block_start"))
+          .withColumn("__r", pmod(monotonically_increasing_id(), lit(1L << 33)))
+        catch { case _: org.apache.spark.sql.AnalysisException =>
+          // missing-file degradation path: an in-memory empty frame has no
+          // scan metadata; any ordinal is vacuously correct on zero rows.
+          df.withColumn("__f", lit(""))
+            .withColumn("__b", lit(0L))
+            .withColumn("__r", monotonically_increasing_id())
+        }
 
-    def clean(df: DataFrame, keys: Seq[String]): DataFrame =
-      Transform.dedupeKeepLast(
-        Transform.dropNullKeys(withFileOrdinal(df), keys),
-        keys, Seq(col("__f"), col("__b"), col("__r")))
-        .drop("__f", "__b", "__r")
+      def clean(df: DataFrame, keys: Seq[String]): DataFrame = once(
+        Transform.dedupeKeepLast(
+          Transform.dropNullKeys(withFileOrdinal(df), keys),
+          keys, Seq(col("__f"), col("__b"), col("__r")))
+          .drop("__f", "__b", "__r"))
 
-    val cust = clean(customers, Seq("CustomerID"))
-    val prod = clean(products, Seq("ProductID"))
-    // reference drops orders with NULL OrderID *or* NULL CustomerID
-    // before dedupe (dropna subset, etl_sales_analytics.py:183-185) —
-    // such rows vanish rather than landing in the reject CSV.
-    val ord0 = clean(orders, Seq("OrderID", "CustomerID"))
-    val det0 = clean(details, Seq("OrderID", "ProductID"))
+      val cust = clean(customers, Seq("CustomerID"))
+      val prod = clean(products, Seq("ProductID"))
+      // reference drops orders with NULL OrderID *or* NULL CustomerID
+      // before dedupe (dropna subset, etl_sales_analytics.py:183-185) —
+      // such rows vanish rather than landing in the reject CSV.
+      val ord0 = clean(orders, Seq("OrderID", "CustomerID"))
+      val det0 = clean(details, Seq("OrderID", "ProductID"))
 
-    // -- FK integrity (J5/J6): violations → reject CSVs, like
-    // data/rejects/*.csv in the reference.
-    val (ordValid, ordRej) = Transform.fkSplit(ord0, cust, Seq("CustomerID"), Seq("CustomerID"))
-    val (detV1, detRej1) = Transform.fkSplit(det0, ordValid, Seq("OrderID"), Seq("OrderID"))
-    val (detValid, detRej2) = Transform.fkSplit(detV1, prod, Seq("ProductID"), Seq("ProductID"))
-    val detRej = detRej1.unionByName(detRej2)
-    CsvExtract.writeRejects(ordRej, s"$outDir/rejects/orders")
-    CsvExtract.writeRejects(detRej, s"$outDir/rejects/order_details")
+      // -- FK integrity (J5/J6): violations → reject CSVs, like
+      // data/rejects/*.csv in the reference. Each split output is cached
+      // too: the valid side feeds a MERGE (and, for orders, the detail
+      // split), the reject side is both written and counted.
+      val (ordValid, ordRej) = Transform.fkSplit(ord0, cust, Seq("CustomerID"), Seq("CustomerID"))
+      once(ordValid); once(ordRej)
+      val (detV1, detRej1) = Transform.fkSplit(det0, ordValid, Seq("OrderID"), Seq("OrderID"))
+      val (detValid, detRej2) = Transform.fkSplit(detV1, prod, Seq("ProductID"), Seq("ProductID"))
+      val detRej = once(detRej1.unionByName(detRej2))
+      once(detValid)
+      val rejectCounts = Par.inParallel(Seq("orders" -> ordRej, "order_details" -> detRej).map {
+        case (t, rej) => () =>
+          CsvExtract.writeRejects(rej, s"$outDir/rejects/$t")
+          t -> rej.count()
+      }).toMap
 
-    // -- load set (M1-M5): table, cleaned frame, MERGE keys — telemetry
-    // per branch as in the reference (etl_sales_analytics.py:241-283).
-    Staged(
-      loads = Seq(
+      // -- load set (M1-M5): table, cleaned frame, MERGE keys — telemetry
+      // per branch as in the reference (etl_sales_analytics.py:241-283).
+      val merges = merge(Seq(
         ("customer", cust, Seq("CustomerID")),
         ("product", prod, Seq("ProductID")),
         ("orders", ordValid, Seq("OrderID")),
-        ("order_details", detValid, Seq("OrderID", "ProductID"))),
-      rejectCounts = Map(
-        "orders" -> ordRej.count(),
-        "order_details" -> detRej.count()))
+        ("order_details", detValid, Seq("OrderID", "ProductID"))))
+      Result(merges.map { case (t, m) => t -> m.total }, rejectCounts)
+    } finally cached.foreach(_.unpersist())
   }
 }

@@ -5,6 +5,7 @@ import java.io.IOException
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Generic MERGE-style upsert — the reference's signature capability
   * (4 T-SQL MERGE statements, etl_sales_analytics.py:226-283; M1–M5 in
@@ -102,8 +103,9 @@ object Upsert {
     val changesB = withCheckedOp(changes, opCol)
       .withColumn(BucketCol, bucketOf(keys, nBuckets)).persist()
     try {
-      val nChanges = changesB.count()  // also runs the fused op validation
-      requireUniqueKeys(changesB, keys, nChanges)
+      // the first pass builds the whole cached row, so it also runs the
+      // fused op validation
+      val nChanges = requireUniqueKeys(changesB, keys)
       val upserted = changesB.filter(col(opCol) === "upsert").count()
       val tmp = new Path(tablePath + ".tmp")
       if (!existed) {
@@ -171,30 +173,51 @@ object Upsert {
     * multiply rows through the full-outer join and silently skew the
     * stats), every stage row either inserts or updates, so inserted =
     * total_after − total_before and updated = |stage| − inserted. The
-    * before/after counts are metadata-only parquet counts; the stage is
-    * persisted so counting it materializes the cache the merge write then
-    * reuses — the staging pipeline (CSV parse, dedupe, FK joins) runs
-    * once, not once per action. */
+    * before/after counts are metadata-only parquet counts. The stage is
+    * read twice (the uniqueness check, then the merge write), so it must
+    * be cached: a stage the caller already persisted is used as is and
+    * stays cached; otherwise it is persisted here and released on
+    * return. Either way the stage's own pipeline (for the ETL: CSV
+    * parse, dedupe, FK joins) runs once per call, not once per action;
+    * it runs once per whole load only because [[graft.Pipeline]] caches
+    * its staging frames. */
   def upsertParquet(spark: SparkSession, tablePath: String, stage: DataFrame,
-      keys: Seq[String]): MergeStats = {
+      keys: Seq[String]): MergeStats =
+    writeMerged(spark, tablePath, stage, keys)()
+
+  /** [[upsertParquet]] in two steps. This call validates `stage`, writes
+    * the merged table next to the live one and counts it; the live table
+    * is not touched. It returns the second step, the swap that installs
+    * the merged table and yields the stats. A caller loading several
+    * tables ([[graft.Pipeline.run]]) writes them all before it swaps any. */
+  private[graft] def writeMerged(spark: SparkSession, tablePath: String,
+      stage: DataFrame, keys: Seq[String]): () => MergeStats = {
     val live = new Path(tablePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existed = fs.exists(live)
     val before = if (existed) spark.read.parquet(tablePath).count() else 0L
-    val stageP = stage.persist()
-    try {
-      val staged = stageP.count()
-      requireUniqueKeys(stageP, keys, staged)
+    cachedWhileIn(stage) {
+      val staged = requireUniqueKeys(stage, keys)
       val merged =
-        if (existed) upsert(spark.read.parquet(tablePath), stageP, keys)
-        else stageP
+        if (existed) upsert(spark.read.parquet(tablePath), stage, keys)
+        else stage
       val tmp = new Path(tablePath + ".tmp")
       merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapInto(fs, tmp, live)
-      val total = spark.read.parquet(tablePath).count()
+      val total = spark.read.parquet(tmp.toString).count()
       val inserted = total - before
-      MergeStats(inserted, staged - inserted, total)
-    } finally stageP.unpersist()
+      val stats = MergeStats(inserted, staged - inserted, total)
+      () => { swapInto(fs, tmp, live); stats }
+    }
+  }
+
+  /** Runs `body` with `stage` cached. A stage the caller already cached
+    * is left as it is — its cache belongs to the caller and outlives the
+    * call; an uncached one is persisted for the body and released after
+    * it, on success and on failure. */
+  private[graft] def cachedWhileIn[A](stage: DataFrame)(body: => A): A = {
+    val owned = stage.storageLevel == StorageLevel.NONE
+    if (owned) stage.persist()
+    try body finally if (owned) stage.unpersist()
   }
 
   /** Partition column carrying the stable key-hash bucket of the bucketed
@@ -233,8 +256,7 @@ object Upsert {
     val before = if (existed) spark.read.parquet(tablePath).count() else 0L
     val stageB = stage.withColumn(BucketCol, bucketOf(keys, nBuckets)).persist()
     try {
-      val staged = stageB.count()
-      requireUniqueKeys(stageB, keys, staged)
+      val staged = requireUniqueKeys(stageB, keys)
       val tmp = new Path(tablePath + ".tmp")
       if (!existed) {
         stageB.write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -267,14 +289,19 @@ object Upsert {
   /** The MERGE stats derivation assumes every stage row matches at most
     * one target row; duplicate stage keys would multiply rows through the
     * full-outer join and misreport inserted/updated as plausible-looking
-    * wrong numbers. Fail loudly instead. The count runs on the persisted
+    * wrong numbers. Fail loudly instead. One aggregate gives both the
+    * row count (returned) and the distinct-key count; NULL keys group
+    * together, as in `dropDuplicates`. Callers run it on the persisted
     * stage, so it costs one pass over cached data. */
-  private[graft] def requireUniqueKeys(stage: DataFrame, keys: Seq[String], staged: Long): Unit = {
-    val distinct = stage.dropDuplicates(keys).count()
+  private[graft] def requireUniqueKeys(stage: DataFrame, keys: Seq[String]): Long = {
+    val r = stage.groupBy(keys.map(col): _*).count()
+      .agg(coalesce(sum(col("count")), lit(0L)), count(lit(1))).head()
+    val (staged, distinct) = (r.getLong(0), r.getLong(1))
     if (distinct != staged)
       throw new IllegalArgumentException(
         s"upsert: stage must be unique on (${keys.mkString(", ")}) — " +
           s"$staged rows but $distinct distinct keys")
+    staged
   }
 
   /** Checked two-phase swap: live → live.old, tmp → live. Any failed

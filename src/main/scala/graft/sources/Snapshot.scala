@@ -920,9 +920,10 @@ object Snapshot {
         }
       }
     }
-    val batchP = upserts.map(_.persist())
-    try {
-      batchP.foreach { bp =>
+    // the batch is read by the checks and by the writes: cached while
+    // this runs, unless the caller already cached it
+    def checkAndWrite(): Long = {
+      upserts.foreach { bp =>
         // one pass over the cached batch checks both MERGE preconditions
         import org.apache.spark.sql.functions.{countDistinct, struct, sum, when}
         val chk = bp.agg(
@@ -959,7 +960,7 @@ object Snapshot {
           // ([[shadowedKeys]]); deletes without any batch anchor an
           // empty key-schema segment so the shadow has a table to
           // shadow (later appends widen the schema).
-          val dataDf = batchP.orElse(deleteKeys.map(_.limit(0)))
+          val dataDf = upserts.orElse(deleteKeys.map(_.limit(0)))
           dataDf.foreach { df =>
             writeJobs += (() => table ->
               writeData(spark, root, table, df, statsCols, bloomCols, bloomBits))
@@ -971,7 +972,7 @@ object Snapshot {
         case Some(rel) =>
           val nSegs = relDirs(rel).length.toLong
           val touched: Option[DataFrame] = {
-            val up = batchP.map(_.select(keyCols.map(col): _*)
+            val up = upserts.map(_.select(keyCols.map(col): _*)
               .withColumn(CovCol, lit(nSegs)))
             val del = deleteKeys.map(_.distinct().withColumn(CovCol, lit(Long.MaxValue)))
             (up, del) match {
@@ -994,7 +995,7 @@ object Snapshot {
                 prior.join(newTomb.select(keyCols.map(col): _*).distinct(),
                   keyCols, "left_anti").unionByName(newTomb)
             }
-            batchP.foreach { bp =>
+            upserts.foreach { bp =>
               writeJobs += (() => table ->
                 s"$rel,${writeData(spark, root, table, bp, statsCols, bloomCols, bloomBits)}")
             }
@@ -1007,7 +1008,8 @@ object Snapshot {
         "snapshot applyChanges: nothing to commit (no upserts, deletes, or replaces)")
       val entries = graft.operators.Par.inParallel(jobs).toMap
       commitManifest(fs, root, entries, Some(pinnedBase))
-    } finally batchP.foreach(_.unpersist())
+    }
+    upserts.fold(checkAndWrite())(Upsert.cachedWhileIn(_)(checkAndWrite()))
   }
 
   /** RIGHT-TO-BE-FORGOTTEN: key-level erasure across SEVERAL tables in
@@ -1205,7 +1207,12 @@ object Snapshot {
     * and MergeStats contract as [[Upsert.upsertParquet]], including the
     * stage-unique-on-keys precondition); all merged tables then publish
     * under one version, so readers see the whole load or none of it.
-    * Fails without publishing if another writer commits concurrently. */
+    * The per-table merges and data writes run as CONCURRENT jobs (the
+    * shape of [[commit]]); if one fails, its siblings' jobs are cancelled,
+    * nothing is published, and the written data dirs stay unreferenced.
+    * A stage the caller persisted stays cached (see
+    * [[Upsert.upsertParquet]]). Fails without publishing if another
+    * writer commits concurrently. */
   def mergeCommit(spark: SparkSession, root: String,
       stages: Map[String, (DataFrame, Seq[String])],
       statsCols: Map[String, Seq[String]] = Map.empty): (Long, Map[String, MergeStats]) = {
@@ -1214,24 +1221,22 @@ object Snapshot {
     val fs = fsOf(spark, root)
     val base = current(fs, root)
     val baseTables = base.map(_._2).getOrElse(Map.empty)
-    val merged = stages.map { case (t, (stage, keys)) =>
-      val stageP = stage.persist()
-      try {
-        val staged = stageP.count()
-        Upsert.requireUniqueKeys(stageP, keys, staged)
+    val merged = graft.operators.Par.inParallel(stages.toSeq.map {
+      case (t, (stage, keys)) => () => Upsert.cachedWhileIn(stage) {
+        val staged = Upsert.requireUniqueKeys(stage, keys)
         // merge against the RESOLVED view: tombstoned rows are gone and
         // stay gone (the rewrite below also clears the tombstones)
         val existing =
           if (baseTables.contains(t)) Some(readResolved(spark, root, baseTables, t))
           else None
         val before = existing.map(_.count()).getOrElse(0L)
-        val out = existing.map(Upsert.upsert(_, stageP, keys)).getOrElse(stageP)
+        val out = existing.map(Upsert.upsert(_, stage, keys)).getOrElse(stage)
         val rel = writeData(spark, root, t, out, statsCols.getOrElse(t, Seq.empty))
         val total = spark.read.parquet(new Path(root, rel).toString).count()
         val inserted = total - before
         (t, rel, MergeStats(inserted, staged - inserted, total))
-      } finally stageP.unpersist()
-    }
+      }
+    })
     val v = commitManifest(fs, root,
       merged.map { case (t, rel, _) => t -> rel }.toMap,
       expectBase = Some(base.map(_._1).getOrElse(0L)),

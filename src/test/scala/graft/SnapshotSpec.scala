@@ -136,6 +136,55 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.currentVersion(spark, root).isEmpty)
   }
 
+  test("mergeCommit: a failing table cancels its concurrent siblings and publishes nothing") {
+    val root = freshRoot()
+    val sc = spark.sparkContext
+    val v1 = Snapshot.commit(spark, root, Map(
+      "a" -> Seq((1L, 1)).toDF("id", "v"),
+      "b" -> Seq((1L, 1)).toDF("id", "v"),
+      "c" -> Seq((1L, 1)).toDF("id", "v")))
+    def contents(t: String) = Snapshot.read(spark, root, t).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val before = Seq("a", "b", "c").map(t => t -> contents(t)).toMap
+    // "b" is slow (about 60 s unless cancelled; a cancelled task stops at
+    // its next record), "c" has a duplicate key and fails within seconds
+    val slow = spark.createDataFrame(sc.parallelize(2 to 60001, 2)
+      .map { i => Thread.sleep(2); (i.toLong, i) }).toDF("id", "v")
+    val t0 = System.nanoTime()
+    intercept[IllegalArgumentException](
+      Snapshot.mergeCommit(spark, root, Map(
+        "a" -> (Seq((2L, 2)).toDF("id", "v"), Seq("id")),
+        "b" -> (slow, Seq("id")),
+        "c" -> (Seq((2L, 2), (2L, 3)).toDF("id", "v"), Seq("id")))))
+    val wallS = (System.nanoTime() - t0) / 1e9
+    assert(wallS < 30.0, s"the slow sibling ran on for $wallS s after the failure")
+    assert(Snapshot.currentVersion(spark, root).contains(v1))
+    Seq("a", "b", "c").foreach(t => assert(contents(t) == before(t), s"new data visible in $t"))
+    // the job-status view trails the scheduler by a listener-bus hop
+    val deadline = System.nanoTime() + 2L * 1000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a sibling job still runs after the throw")
+  }
+
+  test("mergeCommit and upsertMergeOnRead leave a batch the caller persisted cached") {
+    import org.apache.spark.storage.StorageLevel
+    val root = freshRoot()
+    val mine = Seq((1L, 1), (2L, 2)).toDF("id", "v").persist()
+    try {
+      val (_, stats) = Snapshot.mergeCommit(spark, root, Map("t" -> (mine, Seq("id"))))
+      assert(stats("t") == graft.operators.Upsert.MergeStats(2, 0, 2))
+      assert(mine.storageLevel != StorageLevel.NONE, "mergeCommit dropped the caller's cache")
+      Snapshot.upsertMergeOnRead(spark, root, "m", mine, Seq("id"))
+      assert(mine.storageLevel != StorageLevel.NONE,
+        "upsertMergeOnRead dropped the caller's cache")
+    } finally mine.unpersist()
+    val theirs = Seq((3L, 3)).toDF("id", "v")
+    Snapshot.upsertMergeOnRead(spark, root, "m", theirs, Seq("id"))
+    assert(theirs.storageLevel == StorageLevel.NONE, "upsertMergeOnRead kept its own cache")
+    assert(Snapshot.read(spark, root, "m").count() == 3L)
+  }
+
   test("optimistic concurrency: a stale base aborts without publishing") {
     val root = freshRoot()
     val v1 = Snapshot.commit(spark, root, Map("t" -> Seq((1L, 1)).toDF("id", "v")))

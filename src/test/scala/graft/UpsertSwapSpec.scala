@@ -59,6 +59,28 @@ class UpsertSwapSpec extends SparkSpec {
       Upsert.upsertParquet(spark, table, dup, Seq("k"))
     }
     assert(ex.getMessage.contains("unique"))
+    // NULL keys group together (as in dropDuplicates): two NULL-key rows
+    // are a duplicate too
+    val nullDup = Seq((None: Option[Int], "a"), (None: Option[Int], "b"), (Some(2), "c"))
+      .toDF("k", "v")
+    val nullEx = intercept[IllegalArgumentException] {
+      Upsert.upsertParquet(spark, table, nullDup, Seq("k"))
+    }
+    assert(nullEx.getMessage.contains("3 rows but 2 distinct keys"), nullEx.getMessage)
+  }
+
+  test("upsertParquet leaves a stage the caller persisted cached; releases its own") {
+    import org.apache.spark.storage.StorageLevel
+    val table = Files.createTempDirectory("graft-own").toString + "/t"
+    val mine = Seq((1, "a"), (2, "b")).toDF("k", "v").persist()
+    try {
+      assert(Upsert.upsertParquet(spark, table, mine, Seq("k")) == Upsert.MergeStats(2, 0, 2))
+      assert(mine.storageLevel != StorageLevel.NONE, "the caller's cache was dropped")
+      assert(mine.count() == 2L)
+    } finally mine.unpersist()
+    val theirs = Seq((3, "c")).toDF("k", "v")
+    assert(Upsert.upsertParquet(spark, table, theirs, Seq("k")) == Upsert.MergeStats(1, 0, 3))
+    assert(theirs.storageLevel == StorageLevel.NONE, "the call's own cache was kept")
   }
 
   /** Per-file (path, length, checksum) of every data file under each

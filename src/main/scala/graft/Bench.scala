@@ -31,6 +31,36 @@ object Bench {
     spark
   }
 
+  /** Absorb one-time costs (janino/codegen init, parquet footer reader,
+    * shuffle service, localCheckpoint block-manager setup) before timing
+    * or profiling — the first query otherwise carries ~5 s of JVM warmup
+    * that is not its own. Touches every table family: queries run in
+    * sorted order, so whichever name sorts first would absorb the warmup
+    * of its whole input family (measured ~3 s on the first doc_* query).
+    * Each warmup has its OWN try so one missing table (e.g. an sfDir
+    * without documents.parquet) doesn't skip the rest. */
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    def attempt(a: => Unit): Unit = try a catch { case _: Throwable => () }
+    attempt(spark.read.parquet(s"$sfDir/region.parquet").count())
+    attempt(SparkEntry.entry(spark).count())
+    attempt(graft.model.Tables.documents(spark, sfDir).count())
+    attempt(graft.model.Tables.embeddings(spark, sfDir).count())
+    attempt(graft.model.Tables.events(spark, sfDir).count())
+    attempt(spark.range(10).localCheckpoint(true).count())
+  }
+
+  /** After a query: free the checkpoints behind `results`
+    * ([[graft.operators.Curate.release]]), then sweep EVERY block still
+    * persisted in the session. A leaked localCheckpoint from one query
+    * otherwise crowds executor memory and taxes every later query — the
+    * r9 full bench charged 47 s of such cross-query noise to innocent
+    * pure-map queries. Survives a query that stopped the context. */
+  def release(spark: SparkSession, results: DataFrame*): Unit =
+    try {
+      results.foreach(graft.operators.Curate.release)
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    } catch { case _: Throwable => () }
+
   /** Run-major measurement loop, ISOLATED per query: a query that kills
     * the SparkContext (an executor OOM in local mode stops the whole
     * local context) is recorded as its own error, and the NEXT sample
@@ -104,15 +134,8 @@ object Bench {
           val sample = Sample(name, pass, tSec, err)
           if (trace) System.err.println(
             f"[trace] $name pass=$pass wall=${sample.sec}%.3f gc_ms=${gcMillis() - gc0}")
-          // Sweep EVERY persisted block (not just the Curate-released
-          // frame) outside the timer: a leaked localCheckpoint from one
-          // query otherwise crowds executor memory and taxes every later
-          // query's measurement — the r9 driver bench charged 47 s of
-          // such cross-query noise to innocent pure-map queries. The
-          // sweep itself must survive a query that stopped the context.
-          try spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          catch { case _: Throwable => () }
+          // the sweep runs outside the timer
+          release(spark)
           // Collect between samples, OUTSIDE the timer: heap garbage from
           // a heavy neighbor (checkpoint blocks, broadcast values,
           // shuffle buffers) otherwise lands as collection pressure
@@ -181,23 +204,6 @@ object Bench {
       .map(_.toInt).getOrElse(if (runs <= 1) 1 else 5).max(runs)
     def runsFor(name: String): Int =
       if (name.startsWith("doc_") || name.startsWith("emb_")) heavyRuns else runs
-    // Absorb one-time costs (janino/codegen init, parquet footer reader,
-    // shuffle service, localCheckpoint block-manager setup) before timing
-    // — the first measured query otherwise carries ~5 s of JVM warmup
-    // that is not its own. Touch every table family: the query list is
-    // timed in sorted order, so whichever name sorts first would absorb
-    // the warmup of its whole input family (measured ~3 s on the first
-    // doc_* query). Each warmup has its OWN try so one missing table
-    // (e.g. an sfDir without documents.parquet) doesn't skip the rest.
-    def warmAll(spark: SparkSession): Unit = {
-      def warm(a: => Unit): Unit = try a catch { case _: Throwable => () }
-      warm(spark.read.parquet(s"$sfDir/region.parquet").count())
-      warm(SparkEntry.entry(spark).count())
-      warm(graft.model.Tables.documents(spark, sfDir).count())
-      warm(graft.model.Tables.embeddings(spark, sfDir).count())
-      warm(graft.model.Tables.events(spark, sfDir).count())
-      warm(spark.range(10).localCheckpoint(true).count())
-    }
     // Sorted-key order: hash-map order changes as the query map grows,
     // which confounds round-over-round per-query deltas with warmup /
     // cache position. Sorted order is stable across rounds.
@@ -215,7 +221,7 @@ object Bench {
     // don't feed each other's caches back-to-back. Heavy families run in
     // the extra passes alone (pass > runs times only doc_*/emb_*).
     val samples =
-      runSamples(names, sfDir, runsFor, trace, () => buildSession(cpus), warmAll)
+      runSamples(names, sfDir, runsFor, trace, () => buildSession(cpus), warm(_, sfDir))
     // Pass 1 is each query's OWN codegen/broadcast warmup (the heaviest
     // queries measured a first run 2x their steady state even after the
     // table-family warm() block) — with 2+ passes it is excluded from

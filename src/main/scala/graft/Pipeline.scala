@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
-import graft.operators.{Par, Transform, Upsert}
+import graft.operators.{Curate, Par, Transform, Upsert}
 import graft.operators.Upsert.MergeStats
 import graft.sources.{CsvExtract, Snapshot}
 
@@ -81,22 +81,12 @@ object Pipeline {
     * version. Re-running on the same input produces an identical new
     * version (the chain is deterministic end to end). */
   def curateCorpus(spark: SparkSession, docsPath: String, snapshotRoot: String,
-      idCol: String = "doc_id", textCol: String = "text"): Long = {
-    val docs = spark.read.parquet(docsPath)
-    val curated = graft.operators.Curate.curate(docs, idCol, textCol)
-    // drop audit: every input id that didn't survive, joined back cheaply
-    // (curated ids broadcast in the common case — survivors ≈ corpus, but
-    // the audit is what reject CSVs are to the sales pipeline)
-    val dropped = docs.join(curated.select(idCol), Seq(idCol), "left_anti")
-      .select(idCol)
-    // id-range stats per file: selective doc_id reads on the published
-    // corpus skip files via Snapshot.readPruned (the L62 layer)
-    val version = Snapshot.commit(spark, snapshotRoot,
-      Map("corpus_curated" -> curated, "corpus_dropped" -> dropped),
-      statsCols = Map("corpus_curated" -> Seq(idCol), "corpus_dropped" -> Seq(idCol)))
-    println(s"[CURATE v$version] kept=${curated.count()}")
-    version
-  }
+      idCol: String = "doc_id", textCol: String = "text"): Long =
+    withCurated(spark, docsPath, idCol, textCol) { (tables, statsCols) =>
+      val version = Snapshot.commit(spark, snapshotRoot, tables, statsCols = statsCols)
+      println(s"[CURATE v$version] kept=${tables("corpus_curated").count()}")
+      version
+    }
 
   /** WRITE-AUDIT-PUBLISH curation: [[curateCorpus]] with the publish
     * gated on validation — the production discipline for a corpus that
@@ -108,40 +98,19 @@ object Pipeline {
     * a failing audit drops the branch and main is byte-untouched.
     * Returns Right(new main version) or Left(audit failure reason).
     *
-    * The default audit rejects an empty corpus, NULL/empty surviving
-    * text, and duplicate ids — the invariants downstream training jobs
-    * assume; real deployments pass their own. */
+    * The default audit ([[auditCurated]]) rejects an empty corpus,
+    * NULL/empty surviving text, and duplicate ids — the invariants
+    * downstream training jobs assume; real deployments pass their own. */
   def curateCorpusWap(spark: SparkSession, docsPath: String,
       snapshotRoot: String, branch: String = "wap_curate",
-      idCol: String = "doc_id", textCol: String = "text",
-      audit: DataFrame => Option[String] = null): Either[String, Long] = {
-    import org.apache.spark.sql.functions.{col, countDistinct, length, trim}
-    val check: DataFrame => Option[String] =
-      if (audit != null) audit
-      else { staged =>
-        val agg = staged.agg(
-          org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.when(
-              col(textCol).isNull || length(trim(col(textCol))) === 0, 1)),
-          countDistinct(col(idCol))).head()
-        val (n, badText, distinctIds) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-        if (n == 0L) Some("audit: curated corpus is empty")
-        else if (badText > 0L) Some(s"audit: $badText surviving rows have NULL/empty text")
-        else if (distinctIds != n) Some(s"audit: ${n - distinctIds} duplicate ids survived")
-        else None
-      }
-    val docs = spark.read.parquet(docsPath)
-    val curated = graft.operators.Curate.curate(docs, idCol, textCol)
-    try {
-      val dropped = docs.join(curated.select(idCol), Seq(idCol), "left_anti")
-        .select(idCol)
+      idCol: String = "doc_id", textCol: String = "text")(
+      audit: DataFrame => Option[String] = auditCurated(idCol, textCol)
+  ): Either[String, Long] =
+    withCurated(spark, docsPath, idCol, textCol) { (tables, statsCols) =>
       Snapshot.createBranch(spark, snapshotRoot, branch)
-      Snapshot.commitBranch(spark, snapshotRoot, branch,
-        Map("corpus_curated" -> curated, "corpus_dropped" -> dropped),
-        statsCols = Map("corpus_curated" -> Seq(idCol), "corpus_dropped" -> Seq(idCol)))
+      Snapshot.commitBranch(spark, snapshotRoot, branch, tables, statsCols = statsCols)
       val staged = Snapshot.readBranch(spark, snapshotRoot, branch, "corpus_curated")
-      check(staged) match {
+      audit(staged) match {
         case Some(reason) =>
           Snapshot.dropBranch(spark, snapshotRoot, branch)
           Left(reason)
@@ -152,7 +121,41 @@ object Pipeline {
           Snapshot.dropBranch(spark, snapshotRoot, branch)
           Right(v)
       }
-    } finally graft.operators.Curate.release(curated)
+    }
+
+  /** [[curateCorpusWap]]'s default audit: the staged corpus is non-empty,
+    * every surviving `textCol` is non-blank, and `idCol` is unique. */
+  private def auditCurated(idCol: String, textCol: String)(staged: DataFrame): Option[String] = {
+    val agg = staged.agg(count(lit(1)),
+      count(when(col(textCol).isNull || length(trim(col(textCol))) === 0, 1)),
+      countDistinct(col(idCol))).head()
+    val (n, badText, distinctIds) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+    if (n == 0L) Some("audit: curated corpus is empty")
+    else if (badText > 0L) Some(s"audit: $badText surviving rows have NULL/empty text")
+    else if (distinctIds != n) Some(s"audit: ${n - distinctIds} duplicate ids survived")
+    else None
+  }
+
+  /** The curation step [[curateCorpus]] and [[curateCorpusWap]] publish:
+    * reads and curates the corpus (graft.operators.Curate) and hands
+    * `publish` the curated corpus and its drop audit by table name, with
+    * their stats columns. The curated frame's blocks are released when
+    * `publish` returns or throws. */
+  private def withCurated[A](spark: SparkSession, docsPath: String, idCol: String,
+      textCol: String)(publish: (Map[String, DataFrame], Map[String, Seq[String]]) => A): A = {
+    val docs = spark.read.parquet(docsPath)
+    val curated = Curate.curate(docs, idCol, textCol)
+    try {
+      // drop audit: every input id that didn't survive, joined back cheaply
+      // (curated ids broadcast in the common case — survivors ≈ corpus, but
+      // the audit is what reject CSVs are to the sales pipeline)
+      val dropped = docs.join(curated.select(idCol), Seq(idCol), "left_anti")
+        .select(idCol)
+      // id-range stats per file: selective doc_id reads on the published
+      // corpus skip files via Snapshot.readPruned (the L62 layer)
+      publish(Map("corpus_curated" -> curated, "corpus_dropped" -> dropped),
+        Map("corpus_curated" -> Seq(idCol), "corpus_dropped" -> Seq(idCol)))
+    } finally Curate.release(curated)
   }
 
   /** EXACTLY-ONCE incremental curation over a snapshot store's change
@@ -211,7 +214,7 @@ object Pipeline {
       minQuality: Double = 0.5, maxAvgNllMicro: Long = 3410000L,
       minJaccard: Double = 0.5, profileK: Int = 64,
       appId: String = "curate"): Option[Long] = {
-    import graft.operators.{Curate, DedupState, LangModel, LangProfile, NearDup}
+    import graft.operators.{DedupState, LangModel, LangProfile, NearDup}
     import org.apache.spark.sql.expressions.Window
     val MarkerTable = "_curate"
     val profTable = dstTable + "_profiles"

@@ -26,6 +26,7 @@ object Plans {
     val exec = sys.env.get("SPARK_GRAFT_PLANS_EXEC").contains("1")
     Files.createDirectories(outDir)
     val spark = Bench.buildSession(cpus)
+    Bench.warm(spark, sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
@@ -33,9 +34,7 @@ object Plans {
       if (exec) df.count()
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.write(outDir.resolve(s"${name}_$tag.txt"), plan.getBytes(UTF_8))
-      graft.operators.Curate.release(df)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Bench.release(spark, df)
       System.err.println(s"[plans] wrote ${name}_$tag.txt")
     }
     spark.stop()

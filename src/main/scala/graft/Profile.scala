@@ -28,13 +28,7 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Bench.buildSession(cpus)
     // same family warmup as Bench so one-time costs don't pollute jobs
-    def warm(a: => Unit): Unit = try a catch { case _: Throwable => () }
-    warm(spark.read.parquet(s"$sfDir/region.parquet").count())
-    warm(SparkEntry.entry(spark).count())
-    warm(graft.model.Tables.documents(spark, sfDir).count())
-    warm(graft.model.Tables.embeddings(spark, sfDir).count())
-    warm(graft.model.Tables.events(spark, sfDir).count())
-    warm(spark.range(10).localCheckpoint(true).count())
+    Bench.warm(spark, sfDir)
 
     val jobs = new ConcurrentLinkedQueue[JobRec]()
     val byId = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
@@ -69,8 +63,8 @@ object Profile {
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           df.count()
-          graft.operators.Curate.release(df)
           val wallMs = (System.nanoTime() - t0) / 1e6
+          Bench.release(spark, df)
           // listener events are async — give the bus a moment to drain
           Thread.sleep(600)
           import scala.jdk.CollectionConverters._

@@ -10,10 +10,12 @@ object Verify {
     // one session recipe for the correctness and perf surfaces — what
     // the oracle verifies is the configuration the bench measures
     val spark = Bench.buildSession(cpus)
+    Bench.warm(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY=comma,separated,names runs a
-    // subset (and dumps the full oracle_sql.json either way). Unset for the
-    // driver's full run.
+    // subset (and dumps the full oracle_sql.json either way;
+    // tools/oracle_check.py reads the same variable and checks only the
+    // subset). Unset for a full run.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // sorted-name order (the Bench contract): deterministic across runs,
     // and the per-query start/done lines make a wedged query visible
@@ -24,7 +26,7 @@ object Verify {
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        graft.operators.Curate.release(df)
+        Bench.release(spark, df)
         System.err.println(f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
       catch { case e: Throwable =>

@@ -66,8 +66,9 @@ object Dsir {
   /** [[logRatios]] over a pre-tokenized frame carrying `idCol`, a
     * `__toks` array column (the exact [[Text.tokens]] ∘ [[Text.normalize]]
     * ∘ coalesce('') chain) and whatever columns `targetPred` reads —
-    * the shared-scan entry [[Curate.curateV2]] uses so DSIR never
-    * re-tokenizes a corpus another stage already tokenized. */
+    * the shared-scan entry [[Curate.curateV2]] and [[Curate.curateV3]]
+    * use so DSIR never re-tokenizes a corpus another stage already
+    * tokenized. */
   def logRatiosFromTokens(tokArrays: DataFrame, idCol: String,
       targetPred: Column): DataFrame =
     logRatiosCore(tokArrays.select(col(idCol), targetPred.as("__tgt"),
@@ -128,7 +129,8 @@ object Dsir {
       targetPred: Column, k: Int): DataFrame =
     resampleCore(logRatiosFromTokens(tokArrays, idCol, targetPred), idCol, k)
 
-  private def resampleCore(ratios: DataFrame, idCol: String, k: Int): DataFrame = {
+  // `ratios` is by-name: an invalid `k` fails before its checkpoint exists
+  private def resampleCore(ratios: => DataFrame, idCol: String, k: Int): DataFrame = {
     require(k > 0, s"resample: k must be positive, got $k")
     val h48 = conv(substring(
         md5(concat(col(idCol).cast("string"), lit("~g")).cast("binary")), 1, 12),

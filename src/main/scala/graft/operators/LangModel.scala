@@ -50,8 +50,8 @@ object LangModel {
     * `__toks` array column (built with the exact [[Text.tokens]] ∘
     * [[Text.normalize]] ∘ coalesce('' ) chain — same arrays, same
     * scores), and whatever columns `refPred` reads. Lets a multi-stage
-    * pipeline ([[Curate.curateV2]]) tokenize the corpus ONCE for every
-    * token-consuming stage instead of once per stage. */
+    * pipeline ([[Curate]]'s shared token scan) tokenize the corpus ONCE
+    * for every token-consuming stage instead of once per stage. */
   def unigramNllFromTokens(tokArrays: DataFrame, idCol: String,
       refPred: Column): DataFrame =
     nllFromExploded(tokArrays.select(col(idCol), refPred.as("__ref"),

@@ -62,16 +62,6 @@ object LangProfile {
       .select(col("lang"), col("gram"), col("rank"))
   }
 
-  /** (idCol, lang, __grams) trigram-array frame for [[classifyFromArrays]]
-    * — the char split is projected FIRST (the HOF pitfall of
-    * [[charTrigrams]]'s scaladoc). Exposed so a multi-stage pipeline
-    * ([[Curate.curateV2]]) can fold this into ONE shared corpus scan
-    * alongside the word-token arrays the other stages need. */
-  def trigramArrays(df: DataFrame, idCol: String, langCol: String,
-      textCol: String): DataFrame =
-    df.select(col(idCol), col(langCol).as("lang"), split(lower(col(textCol)), "").as("__ch"))
-      .select(col(idCol), col("lang"), charTrigrams(col("__ch")).as("__grams"))
-
   /** Classify every doc with >= 1 trigram: (idCol, lang_pred, dist)
     * by minimal out-of-place distance against [[profiles]] trained on
     * (`langCol`, `textCol`) of the same frame — ties prefer the
@@ -98,10 +88,10 @@ object LangProfile {
 
   /** [[classify]] over a pre-built (idCol, lang, __grams) frame — ONLY
     * sound when the arrays are MATERIALIZED (an eager checkpoint /
-    * stored table, the [[Curate.curateV2]] shared frame): on a lazy
-    * frame the optimizer may substitute the char-split into the
-    * trigram lambda's three element_at references, re-running the
-    * O(len) split per gram (O(len²)/doc — measured 36× on
+    * stored table, the token scan [[Curate]]'s model configurations
+    * share): on a lazy frame the optimizer may substitute the
+    * char-split into the trigram lambda's three element_at references,
+    * re-running the O(len) split per gram (O(len²)/doc — measured 36× on
     * doc_lang_trained at sf0.1, which is why [[classify]] keeps the
     * inline generator form). Result is bit-identical to [[classify]]
     * on the frame the arrays came from. */

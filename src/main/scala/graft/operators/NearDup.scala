@@ -1,7 +1,12 @@
 package graft.operators
 
+import scala.annotation.tailrec
+
+import org.apache.spark.OneToOneDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
 
@@ -25,11 +30,24 @@ import graft.functions.Text
 object NearDup {
 
   /** The persisted RDD behind an eagerly localCheckpoint'd frame (the
-    * LogicalRDD leaf survives projections/filters layered on top). */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    * LogicalRDD leaf survives projections/filters layered on top). A leaf
+    * that is not persisted itself but re-wraps a checkpoint
+    * ([[resetStats]], e.g. [[connectedComponents]]' result) resolves
+    * through its one-to-one lineage to the checkpointed RDD it reads. */
+  private def checkpointRdd(df: DataFrame): Option[RDD[_]] = {
+    @tailrec def checkpointed(rdd: RDD[_]): Option[RDD[_]] =
+      if (rdd.isCheckpointed) Some(rdd)
+      else rdd.dependencies match {
+        case Seq(d: OneToOneDependency[_]) => checkpointed(d.rdd)
+        case _ => None
+      }
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.map { leaf =>
+      if (leaf.getStorageLevel != StorageLevel.NONE) leaf
+      else checkpointed(leaf).getOrElse(leaf)
     }
+  }
 
   /** Release a localCheckpoint's storage blocks NOW instead of waiting
     * for the driver's ContextCleaner to notice the RDD is unreachable —
@@ -259,7 +277,6 @@ object NearDup {
       mkArrays: DataFrame => DataFrame, idCol: String,
       numHashes: Int, bands: Int)
       (verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // spread ONCE at entry: the signature pass and the pruned verify
     // pass both tokenize from this frame, and a one-row-group scan
     // would fuse that CPU-dense derivation into a single task (see
@@ -709,8 +726,8 @@ object NearDup {
     }
     freeCheckpoint(sym)
     // The returned frame stays backed by the final round's (tiny — one
-    // row per vertex) checkpoint blocks; the ContextCleaner reclaims
-    // them when the caller drops the frame.
+    // row per vertex) checkpoint blocks: freeCheckpoint on it (or on a
+    // frame derived from it) frees them.
     labels
   }
 

@@ -22,6 +22,8 @@ class CurationSpec extends SparkSpec {
     dir
   }
 
+  private def persistedIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   private val hourNs = 3600L * 1000 * 1000 * 1000
   private val dayNs = 24 * hourNs
 
@@ -93,7 +95,15 @@ class CurationSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_curate_snap").toString
     val docsPath = "/root/testdata/sf0.001/documents.parquet"
     val total = spark.read.parquet(docsPath).count()
-    val v = Pipeline.curateCorpus(spark, docsPath, root)
+    // neither call leaves a block persisted (the curated checkpoint is
+    // released once it is committed)
+    def leftPersisted(call: => Long): Long = {
+      val before = persistedIds()
+      val v = call
+      assert((persistedIds() -- before).isEmpty, "curateCorpus left blocks persisted")
+      v
+    }
+    val v = leftPersisted(Pipeline.curateCorpus(spark, docsPath, root))
     val kept = Snapshot.read(spark, root, "corpus_curated")
     val dropped = Snapshot.read(spark, root, "corpus_dropped")
     // the two tables partition the corpus, and they publish together
@@ -103,7 +113,7 @@ class CurationSpec extends SparkSpec {
     val gated = DocQueries.docCurate(spark, "/root/testdata/sf0.001").count()
     assert(kept.count() == gated)
     // re-running publishes a new, identical version (deterministic chain)
-    val v2 = Pipeline.curateCorpus(spark, docsPath, root)
+    val v2 = leftPersisted(Pipeline.curateCorpus(spark, docsPath, root))
     assert(v2 == v + 1)
     val again = Snapshot.readAt(spark, root, "corpus_curated", v2)
     assert(again.exceptAll(kept).count() == 0 && kept.exceptAll(again).count() == 0)
@@ -221,6 +231,32 @@ class CurationSpec extends SparkSpec {
       maxAvgNllMicro = Long.MaxValue / 4096, clsFeatures = 256)
     assert(again.collect().map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
     Curate.release(out); Curate.release(again)
+  }
+
+  test("curateV2/V3: a stage failing after the token scan frees every checkpoint") {
+    import graft.operators.Curate
+    import org.apache.spark.sql.functions.col
+    val docs = Seq(
+      (1L, "en", "src0", "the cat and the dog walk to the old park near the river"),
+      (2L, "en", "src1", "some other people often write many long letters about music"),
+      (3L, "en", "src0", "under the old tree by the river gate the dog and the cat rest")
+    ).toDF("doc_id", "lang", "source", "text")
+    def freesAll(call: => DataFrame): Unit = {
+      val before = persistedIds()
+      intercept[IllegalArgumentException](call)
+      assert((persistedIds() -- before).isEmpty, "the failed call left blocks persisted")
+    }
+    // clsIters = 0 fails the classifier's training (require(iters >= 1))
+    // while language-ID runs beside it, after the token scan is
+    // checkpointed: the scan and any finished language-ID result must
+    // be freed on the way out
+    freesAll(Curate.curateV3(docs, "doc_id", "text", "lang",
+      dsirTargetPred = col("source") === "src0", dsirK = 2, clsIters = 0))
+    // dsirK = 0 fails the last stage (DSIR's require(k > 0)), after the
+    // scan, language-ID, the scored frame, the near-dup clusters and the
+    // survivors all exist
+    freesAll(Curate.curateV2(docs, "doc_id", "text", "lang",
+      dsirTargetPred = col("source") === "src0", dsirK = 0))
   }
 
   test("curateDelta: frozen gates + state dedup curate a batch; absorb is idempotent") {

@@ -110,7 +110,7 @@ class SnapshotBranchSpec extends SparkSpec {
       .toDF("doc_id", "text").write.parquet(docsPath)
     // seed main so the WAP round has a fork point to respect
     Snapshot.commit(spark, root, Map("seed" -> Seq((0L, "s")).toDF("id", "v")))
-    val out = Pipeline.curateCorpusWap(spark, docsPath, root)
+    val out = Pipeline.curateCorpusWap(spark, docsPath, root)()
     assert(out.isRight, s"expected publish, got $out")
     val published = Snapshot.read(spark, root, "corpus_curated")
     assert(published.count() > 0)
@@ -127,7 +127,7 @@ class SnapshotBranchSpec extends SparkSpec {
       .toDF("doc_id", "text").write.parquet(docsPath)
     Snapshot.commit(spark, root, Map("seed" -> Seq((0L, "s")).toDF("id", "v")))
     val vBefore = Snapshot.currentVersion(spark, root)
-    val out = Pipeline.curateCorpusWap(spark, docsPath, root,
+    val out = Pipeline.curateCorpusWap(spark, docsPath, root)(
       audit = _ => Some("forced rejection"))
     assert(out == Left("forced rejection"))
     // main never saw the table; no branch lingers

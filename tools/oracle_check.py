@@ -3,11 +3,17 @@
 
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 
-For each <name> dir under verifyOutDir: read Spark's parquet result, run
-the matching oracle_sql.json query in DuckDB over the sfDir tables, sort
-columns by name, sort rows, and compare values cell-by-cell (exact for
-ints/strings/dates, bit-exact for floats — the engine is designed so
-aggregates are order-independent). Reports per-query PASS/FAIL.
+For each query in oracle_sql.json: read Spark's parquet result from
+<verifyOutDir>/<name>, run the query's oracle SQL in DuckDB over the sfDir
+tables, sort columns by name, sort rows, and compare values cell-by-cell
+(exact for ints/strings/dates, bit-exact for floats — the engine is
+designed so aggregates are order-independent). Reports per-query
+PASS/FAIL; a query with no Spark output is MISSING and fails.
+
+With SPARK_GRAFT_ONLY=comma,separated,names (the filter graft.Verify
+takes for a subset run) only those queries are checked, and the summary
+line names the subset. A listed name with no Spark output, or no oracle
+SQL, still fails.
 """
 import json, os, sys, glob
 import duckdb
@@ -22,7 +28,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         # a table may be a single file (driver testdata) or a directory of
@@ -30,10 +36,14 @@ def main(sf_dir, out_dir):
         p = f"{sf_dir}/{t}.parquet"
         src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    with open(f"{out_dir}/oracle_sql.json") as f:
+        oracle = json.load(f)
+    names = sorted(oracle) if only is None else sorted(only)
     fails = 0
     weak = 0
-    for name in sorted(oracle):
+    for name in names:
+        if name not in oracle:
+            print(f"{name:40s} MISSING oracle sql"); fails += 1; continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"{name:40s} MISSING spark output"); fails += 1; continue
@@ -71,8 +81,15 @@ def main(sf_dir, out_dir):
         else:
             print(f"{name:40s} PASS ({len(g)} rows)")
     tail = f" ({weak} weak 0-row)" if weak else ""
+    if only is not None:
+        tail += f" [subset {len(names)}/{len(oracle)}: {','.join(names)}]"
     print(f"\n{'ALL PASS' + tail if fails == 0 else f'{fails} FAILURES{tail}'}")
     return 1 if fails else 0
 
+def only_from_env():
+    """The SPARK_GRAFT_ONLY subset, or None when unset or empty."""
+    names = [n for n in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if n]
+    return set(names) or None
+
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], only_from_env()))

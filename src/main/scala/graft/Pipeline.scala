@@ -19,14 +19,20 @@ import graft.sources.{CsvExtract, Snapshot}
   * reference holds each cleaned pandas frame in memory
   * (etl_sales_analytics.py:171-283). Each cleaned entity and each
   * FK-split output is computed ONCE (`persist`, so a lost block
-  * recomputes with the same file ordinal): the reject CSVs, the reject
-  * counts and the four MERGEs all read that cache instead of re-deriving
-  * the frames from the CSVs per action. The four MERGEs
-  * ([[Upsert.upsertParquet]]'s full-outer-join algorithm, or one
-  * [[Snapshot.mergeCommit]]) then run as concurrent Spark jobs
-  * ([[Par.inParallel]]: a failing table cancels its siblings' jobs), and
-  * nothing is swapped in or published until all four are written. The
-  * cache is released when the load returns, on success and on failure.
+  * recomputes with the same file ordinal): the reject CSVs and the four
+  * MERGEs all read that cache instead of re-deriving the frames from the
+  * CSVs per action. Every output is ONE Spark action that also yields
+  * the numbers the load reports, as the reference's T-SQL MERGEs report
+  * their row counts while they run: each reject write observes its row
+  * count, and each MERGE ([[Upsert.upsertParquet]]'s full-outer-join
+  * algorithm, or one [[Snapshot.mergeCommit]]) observes its
+  * inserted/updated/total counts and checks its stage keys inside its
+  * one write ([[Upsert.writeMerge]]). The four MERGEs run as concurrent
+  * Spark jobs ([[Par.inParallel]]: a failing table cancels its siblings'
+  * jobs), and nothing is swapped in or published until all four are
+  * written. The CSV headers are read without a Spark job
+  * ([[CsvExtract.loadCsvExact]]). The cache is released when the load
+  * returns, on success and on failure.
   * Re-running on the same inputs is a no-op (idempotent, as the
   * reference claims in README.md:5).
   */
@@ -43,13 +49,20 @@ object Pipeline {
     * failing MERGE leaves every table as it was, and a failing swap (a
     * filesystem error) leaves the tables before it swapped and the ones
     * after it untouched: a child table never swaps in without its
-    * parents. See [[runTransactional]] for the all-or-nothing
-    * cross-table load. */
+    * parents. The merged tables written before a MERGE failed are
+    * deleted, so a failed run leaves no `<table>.tmp` behind. See
+    * [[runTransactional]] for the all-or-nothing cross-table load. */
   def run(spark: SparkSession, dataDir: String, outDir: String): Result =
     load(spark, dataDir, outDir) { loads =>
-      val swaps = Par.inParallel(loads.map { case (t, df, keys) => () =>
-        t -> Upsert.writeMerged(spark, s"$outDir/warehouse/$t", df, keys)
-      })
+      def path(t: String) = s"$outDir/warehouse/$t"
+      val swaps =
+        try Par.inParallel(loads.map { case (t, df, keys) => () =>
+          t -> Upsert.writeMerged(spark, path(t), df, keys)
+        })
+        catch { case e: Throwable =>
+          loads.foreach { case (t, _, _) => Upsert.discardMerged(spark, path(t)) }
+          throw e
+        }
       val merges = swaps.map { case (t, swap) => t -> swap() }.toMap
       merges.foreach { case (t, m) =>
         println(s"[MERGE] $t: inserted=${m.inserted} updated=${m.updated} total=${m.total}")
@@ -379,7 +392,7 @@ object Pipeline {
       // -- FK integrity (J5/J6): violations → reject CSVs, like
       // data/rejects/*.csv in the reference. Each split output is cached
       // too: the valid side feeds a MERGE (and, for orders, the detail
-      // split), the reject side is both written and counted.
+      // split), the reject side is written (and counted in that write).
       val (ordValid, ordRej) = Transform.fkSplit(ord0, cust, Seq("CustomerID"), Seq("CustomerID"))
       once(ordValid); once(ordRej)
       val (detV1, detRej1) = Transform.fkSplit(det0, ordValid, Seq("OrderID"), Seq("OrderID"))
@@ -387,9 +400,7 @@ object Pipeline {
       val detRej = once(detRej1.unionByName(detRej2))
       once(detValid)
       val rejectCounts = Par.inParallel(Seq("orders" -> ordRej, "order_details" -> detRej).map {
-        case (t, rej) => () =>
-          CsvExtract.writeRejects(rej, s"$outDir/rejects/$t")
-          t -> rej.count()
+        case (t, rej) => () => t -> CsvExtract.writeRejects(rej, s"$outDir/rejects/$t")
       }).toMap
 
       // -- load set (M1-M5): table, cleaned frame, MERGE keys — telemetry

@@ -3,14 +3,20 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
 
 /** Plan-capture tool (optimization-round deliverable): writes
   * `.explain("formatted")` for the named queries to
-  * `<outDir>/<query>_<tag>.txt`. With SPARK_GRAFT_PLANS_EXEC=1 the query
-  * is executed first (noop count) so AdaptiveSparkPlan prints its FINAL
-  * plan — join strategies and AQE reads as actually chosen, not the
-  * static guess.
+  * `<outDir>/<query>_<tag>.txt`. With SPARK_GRAFT_PLANS_EXEC=1 the
+  * query's own physical plan is executed first (its rows are discarded)
+  * so AdaptiveSparkPlan prints its FINAL plan (`isFinalPlan=true`) —
+  * join strategies and AQE reads as actually chosen, not the static
+  * guess.
+  *
+  * A query that returns an eager checkpoint (every one built on
+  * `graft.operators.Curate`, e.g. `doc_curate`) shows only its outer plan
+  * over `Scan ExistingRDD`: the stages that did the work ran while the
+  * query was built. `graft.Profile` lists those jobs and stages.
   *
   * Usage: Plans <outDir> <tag> <query> [query...]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -31,7 +37,10 @@ object Plans {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
       val df = fn(spark, sfDir)
-      if (exec) df.count()
+      // run df's OWN plan: an action (count, foreach) plans a new query
+      // and leaves this one's AdaptiveSparkPlan un-run
+      if (exec) SQLExecution.withNewExecutionId(df.queryExecution, Some("plans"))(
+        df.queryExecution.toRdd.foreach(_ => ()))
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.write(outDir.resolve(s"${name}_$tag.txt"), plan.getBytes(UTF_8))
       Bench.release(spark, df)

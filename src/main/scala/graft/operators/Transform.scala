@@ -61,11 +61,15 @@ object Transform {
     * non-null key set), so they land in rejects.
     *
     * Returns (valid, rejects). Both sides reuse the same dimension scan;
-    * Catalyst plans broadcast-hash semi/anti when `dim` is small.
+    * Catalyst plans broadcast-hash semi/anti when `dim` is small. The
+    * dimension keys are not de-duplicated: a semi-join emits each left
+    * row at most once and an anti-join drops it on any match, so a
+    * duplicate dimension key changes neither side, and a `distinct`
+    * would only add a shuffle per plan.
     */
   def fkSplit(df: DataFrame, dim: DataFrame, fkCols: Seq[String], dimCols: Seq[String])
       : (DataFrame, DataFrame) = {
-    val dimKeys = dim.select(dimCols.map(col): _*).na.drop("any").distinct()
+    val dimKeys = dim.select(dimCols.map(col): _*).na.drop("any")
     val cond = fkCols.zip(dimCols).map { case (f, d) => df(f) === dimKeys(d) }
       .reduce(_ && _)
     val valid = df.join(dimKeys, cond, "left_semi")

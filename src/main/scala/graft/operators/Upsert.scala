@@ -3,7 +3,8 @@ package graft.operators
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -28,17 +29,70 @@ import org.apache.spark.storage.StorageLevel
 object Upsert {
 
   /** Pure DataFrame→DataFrame upsert. `stage` must be unique on `keys`
-    * (dedupe first — the reference stages already-deduped data). */
-  def upsert(target: DataFrame, stage: DataFrame, keys: Seq[String]): DataFrame = {
-    val dataCols = target.columns.filterNot(keys.contains)
-    val s = stage.select(
-      (keys.map(col) :+ lit(true).as("__in_stage")) ++
-        dataCols.map(c => col(c).as(s"__s_$c")): _*)
-    target.join(s, keys, "full_outer")
-      .select(keys.map(col) ++ dataCols.map { c =>
-        when(col("__in_stage"), col(s"__s_$c")).otherwise(col(c)).as(c)
-      }: _*)
+    * (dedupe first — the reference stages already-deduped data). The
+    * unobserved form of [[mergeFrame]]. */
+  def upsert(target: DataFrame, stage: DataFrame, keys: Seq[String]): DataFrame =
+    mergeFrame(Some(target), stage, keys, lit(true)).drop(InStage, InTarget)
+
+  private val InStage = "__in_stage"
+  private val InTarget = "__in_target"
+
+  /** The one MERGE frame: the merged rows followed by two presence
+    * markers, `__in_stage` (the stage holds the key; `inStage` is its
+    * value) and `__in_target` (the target holds it; NULL otherwise).
+    * With no target (a fresh table) every row is a stage row. */
+  private def mergeFrame(target: Option[DataFrame], stage: DataFrame, keys: Seq[String],
+      inStage: Column): DataFrame = target match {
+    case None =>
+      stage.select(stage.columns.toSeq.map(col) :+ inStage.as(InStage) :+
+        lit(null).cast("boolean").as(InTarget): _*)
+    case Some(t) =>
+      val dataCols = t.columns.filterNot(keys.contains)
+      val s = stage.select(
+        (keys.map(col) :+ inStage.as(InStage)) ++
+          dataCols.map(c => col(c).as(s"__s_$c")): _*)
+      t.withColumn(InTarget, lit(true)).join(s, keys, "full_outer")
+        .select(keys.map(col) ++ dataCols.map { c =>
+          when(col(InStage), col(s"__s_$c")).otherwise(col(c)).as(c)
+        } :+ col(InStage) :+ col(InTarget): _*)
   }
+
+  /** Writes the MERGE of `stage` into `target` (None: a fresh table)
+    * through `write`, as ONE Spark action that also yields the
+    * [[MergeStats]]: an `Observation` collects `total`, `updated` (both
+    * markers set) and `inserted` (stage only) while the rows are written.
+    *
+    * Stage-key uniqueness is checked inside the same plan: each stage
+    * row carries `count(*) over (partition by keys)` and raises when it
+    * is above 1 (the pattern of [[withCheckedOp]]). The window's hash
+    * exchange on the keys is the one the full-outer join needs anyway.
+    * Only on that failure is the exact [[requireUniqueKeys]] aggregate
+    * run, so the caller gets its `IllegalArgumentException` and message.
+    * The stage is scanned once on success, so it needs no cache. */
+  private[graft] def writeMerge[A](target: Option[DataFrame], stage: DataFrame,
+      keys: Seq[String])(write: DataFrame => A): (A, MergeStats) = {
+    val dup = uniquenessMessage(keys)
+    val perKey = count(lit(1)).over(Window.partitionBy(keys.map(col): _*))
+    val checked = when(perKey > 1, raise_error(lit(s"$dup — duplicate stage key")))
+      .otherwise(lit(true))
+    val obs = Observation()
+    val frame = mergeFrame(target, stage, keys, checked).observe(obs,
+      count(lit(1)).as("total"),
+      count(when(col(InStage) && col(InTarget), 1)).as("updated"),
+      count(when(col(InStage) && col(InTarget).isNull, 1)).as("inserted"))
+    val out =
+      try write(frame.drop(InStage, InTarget))
+      catch {
+        case e: Exception if causes(e).exists(c => Option(c.getMessage).exists(_.contains(dup))) =>
+          requireUniqueKeys(stage, keys)
+          throw e
+      }
+    val m = obs.get.view.mapValues(_.asInstanceOf[Long])
+    (out, MergeStats(m("inserted"), m("updated"), m("total")))
+  }
+
+  private def causes(t: Throwable): Iterator[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
 
   /** Apply a CDC change batch to a keyed table: `changes` carries the
     * table's columns plus `opCol` ∈ ("upsert" | "delete"). Matched
@@ -168,46 +222,45 @@ object Upsert {
     * cluster filesystem (HDFS/S3A/local) and can never delete the only
     * surviving copy of the table.
     *
-    * Returns [[MergeStats]]. Because `stage` is unique on `keys` (the
-    * MERGE precondition — VALIDATED here, since a violation would both
-    * multiply rows through the full-outer join and silently skew the
-    * stats), every stage row either inserts or updates, so inserted =
-    * total_after − total_before and updated = |stage| − inserted. The
-    * before/after counts are metadata-only parquet counts. The stage is
-    * read twice (the uniqueness check, then the merge write), so it must
-    * be cached: a stage the caller already persisted is used as is and
-    * stays cached; otherwise it is persisted here and released on
-    * return. Either way the stage's own pipeline (for the ETL: CSV
-    * parse, dedupe, FK joins) runs once per call, not once per action;
-    * it runs once per whole load only because [[graft.Pipeline]] caches
-    * its staging frames. */
+    * Returns [[MergeStats]], observed during the one write (see
+    * [[writeMerge]]): no count runs before or after it. `stage` must be
+    * unique on `keys` (the MERGE precondition — a violation would both
+    * multiply rows through the full-outer join and skew the stats); the
+    * check is fused into the write, and a violation re-runs the exact
+    * [[requireUniqueKeys]] aggregate to throw its
+    * `IllegalArgumentException`. The stage is read once, so it is never
+    * cached here; a stage the caller persisted stays cached. Its pipeline
+    * (for the ETL: CSV parse, dedupe, FK joins) runs once per whole load
+    * only because [[graft.Pipeline]] caches its staging frames, which
+    * the reject writes read too. */
   def upsertParquet(spark: SparkSession, tablePath: String, stage: DataFrame,
       keys: Seq[String]): MergeStats =
     writeMerged(spark, tablePath, stage, keys)()
 
-  /** [[upsertParquet]] in two steps. This call validates `stage`, writes
-    * the merged table next to the live one and counts it; the live table
-    * is not touched. It returns the second step, the swap that installs
-    * the merged table and yields the stats. A caller loading several
-    * tables ([[graft.Pipeline.run]]) writes them all before it swaps any. */
+  /** [[upsertParquet]] in two steps. This call writes the merged table
+    * next to the live one (`<table>.tmp`), checking `stage` and observing
+    * the stats in that one write; the live table is not touched, and a
+    * failing write deletes the `.tmp` it started. It returns the second
+    * step, the swap that installs the merged table and yields the stats.
+    * A caller loading several tables ([[graft.Pipeline.run]]) writes them
+    * all before it swaps any, and [[discardMerged]]s them if one fails. */
   private[graft] def writeMerged(spark: SparkSession, tablePath: String,
       stage: DataFrame, keys: Seq[String]): () => MergeStats = {
     val live = new Path(tablePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existed = fs.exists(live)
-    val before = if (existed) spark.read.parquet(tablePath).count() else 0L
-    cachedWhileIn(stage) {
-      val staged = requireUniqueKeys(stage, keys)
-      val merged =
-        if (existed) upsert(spark.read.parquet(tablePath), stage, keys)
-        else stage
-      val tmp = new Path(tablePath + ".tmp")
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val total = spark.read.parquet(tmp.toString).count()
-      val inserted = total - before
-      val stats = MergeStats(inserted, staged - inserted, total)
-      () => { swapInto(fs, tmp, live); stats }
-    }
+    val target = if (fs.exists(live)) Some(spark.read.parquet(tablePath)) else None
+    val tmp = new Path(tablePath + ".tmp")
+    val (_, stats) =
+      try writeMerge(target, stage, keys)(_.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+      catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    () => { swapInto(fs, tmp, live); stats }
+  }
+
+  /** Deletes the merged table [[writeMerged]] left next to `tablePath`
+    * and that will not be swapped in. */
+  private[graft] def discardMerged(spark: SparkSession, tablePath: String): Unit = {
+    val tmp = new Path(tablePath + ".tmp")
+    tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
   }
 
   /** Runs `body` with `stage` cached. A stage the caller already cached
@@ -291,18 +344,22 @@ object Upsert {
     * full-outer join and misreport inserted/updated as plausible-looking
     * wrong numbers. Fail loudly instead. One aggregate gives both the
     * row count (returned) and the distinct-key count; NULL keys group
-    * together, as in `dropDuplicates`. Callers run it on the persisted
-    * stage, so it costs one pass over cached data. */
+    * together, as in `dropDuplicates` (and as in [[writeMerge]]'s fused
+    * window check, which runs this only once that check has failed). The
+    * bucketed writers run it on their persisted stage, so it costs one
+    * pass over cached data. */
   private[graft] def requireUniqueKeys(stage: DataFrame, keys: Seq[String]): Long = {
     val r = stage.groupBy(keys.map(col): _*).count()
       .agg(coalesce(sum(col("count")), lit(0L)), count(lit(1))).head()
     val (staged, distinct) = (r.getLong(0), r.getLong(1))
     if (distinct != staged)
       throw new IllegalArgumentException(
-        s"upsert: stage must be unique on (${keys.mkString(", ")}) — " +
-          s"$staged rows but $distinct distinct keys")
+        s"${uniquenessMessage(keys)} — $staged rows but $distinct distinct keys")
     staged
   }
+
+  private def uniquenessMessage(keys: Seq[String]): String =
+    s"upsert: stage must be unique on (${keys.mkString(", ")})"
 
   /** Checked two-phase swap: live → live.old, tmp → live. Any failed
     * rename aborts with the previous table restored; the .old backup is

@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,7 +23,11 @@ import org.apache.spark.sql.types._
   * row, which is NOT the reference's per-cell semantics.
   *
   * Scale: the read is a plain distributed CSV scan; coercion expressions
-  * are codegen'd per-row ops. Nothing here collects or repartitions.
+  * are codegen'd per-row ops. Nothing here collects or repartitions. The
+  * header names of a single file are read on the driver from its first
+  * non-blank line and parsed by Spark's own header rules, so the read
+  * carries an explicit all-string schema and starts no schema-inference
+  * job; a directory of parts keeps the inferring read.
   */
 object CsvExtract {
 
@@ -29,15 +37,14 @@ object CsvExtract {
     // Hadoop FileSystem, not java.io.File: the guard must see
     // hdfs://-s3a://-style paths on a real cluster, where a local-disk
     // check would report every input as missing.
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) {
       System.err.println(s"[WARN] missing input file: $path — empty table")
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    val raw = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
+    val reader = spark.read.option("header", "true").option("mode", "PERMISSIVE")
+    val raw = headerSchema(spark, fs, p).fold(reader)(reader.schema)
       .csv(path) // all columns StringType
     val present = raw.columns.toSet
     val cols = schema.fields.map { f =>
@@ -47,6 +54,25 @@ object CsvExtract {
       coerce(base, f.dataType).as(f.name)
     }
     raw.select(cols.toSeq: _*)
+  }
+
+  /** The all-string schema a header read of the FILE `p` would infer,
+    * without the Spark job that inference runs. Spark's own header rules
+    * run on the driver: its header-line reader (the first non-blank line,
+    * decompressed when a codec matches the name), its CSV tokenizer with
+    * the read's parser settings, and its header sanitizer, which names
+    * empty headers `_c<i>` and suffixes duplicate names with their index.
+    * None for a directory or a file with no non-blank line: the caller
+    * then takes the inferring read. */
+  private def headerSchema(spark: SparkSession, fs: FileSystem, p: Path): Option[StructType] = {
+    if (!fs.getFileStatus(p).isFile) return None
+    val opts = new CSVOptions(Map("header" -> "true"), false,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    CSVUtils.readHeaderLine(p, opts, spark.sparkContext.hadoopConfiguration)
+      .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+      .map(tokens => StructType(CSVUtils.makeSafeHeader(tokens, caseSensitive, opts)
+        .map(StructField(_, StringType))))
   }
 
   /** Per-cell lenient coercion: parse-or-NULL for every declared type.
@@ -67,7 +93,12 @@ object CsvExtract {
 
   /** Reject sink (S3): header CSV, overwrite, one directory per entity —
     * the audit trail the reference writes under data/rejects/
-    * (etl_sales_analytics.py:189-205). */
-  def writeRejects(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(dir)
+    * (etl_sales_analytics.py:189-205). Returns the number of rows
+    * written, observed during the write itself (no second count). */
+  def writeRejects(df: DataFrame, dir: String): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").option("header", "true").csv(dir)
+    obs.get("rows").asInstanceOf[Long]
+  }
 }

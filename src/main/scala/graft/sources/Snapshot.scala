@@ -1203,16 +1203,20 @@ object Snapshot {
 
   /** MERGE-style upsert of several staged tables in ONE atomic commit —
     * the reference's single-transaction four-table load. Each stage
-    * merges against its table in the CURRENT snapshot (same semantics
-    * and MergeStats contract as [[Upsert.upsertParquet]], including the
-    * stage-unique-on-keys precondition); all merged tables then publish
-    * under one version, so readers see the whole load or none of it.
-    * The per-table merges and data writes run as CONCURRENT jobs (the
-    * shape of [[commit]]); if one fails, its siblings' jobs are cancelled,
-    * nothing is published, and the written data dirs stay unreferenced.
-    * A stage the caller persisted stays cached (see
-    * [[Upsert.upsertParquet]]). Fails without publishing if another
-    * writer commits concurrently. */
+    * merges against its table in the CURRENT snapshot, resolved through
+    * its tombstones (same semantics and MergeStats contract as
+    * [[Upsert.upsertParquet]], including the stage-unique-on-keys
+    * precondition); all merged tables then publish under one version, so
+    * readers see the whole load or none of it. Each table is ONE Spark
+    * action through [[Upsert.writeMerge]]: the data write also observes
+    * the stats and checks the stage keys, so no count runs before or
+    * after it. The per-table writes run as CONCURRENT jobs (the shape of
+    * [[commit]]); if one fails (a duplicate stage key throws the exact
+    * `IllegalArgumentException` of [[Upsert.requireUniqueKeys]]), its
+    * siblings' jobs are cancelled, nothing is published, and the written
+    * data dirs stay unreferenced. The stage is read once and never cached
+    * here; a stage the caller persisted stays cached. Fails without
+    * publishing if another writer commits concurrently. */
   def mergeCommit(spark: SparkSession, root: String,
       stages: Map[String, (DataFrame, Seq[String])],
       statsCols: Map[String, Seq[String]] = Map.empty): (Long, Map[String, MergeStats]) = {
@@ -1222,20 +1226,15 @@ object Snapshot {
     val base = current(fs, root)
     val baseTables = base.map(_._2).getOrElse(Map.empty)
     val merged = graft.operators.Par.inParallel(stages.toSeq.map {
-      case (t, (stage, keys)) => () => Upsert.cachedWhileIn(stage) {
-        val staged = Upsert.requireUniqueKeys(stage, keys)
+      case (t, (stage, keys)) => () =>
         // merge against the RESOLVED view: tombstoned rows are gone and
         // stay gone (the rewrite below also clears the tombstones)
         val existing =
           if (baseTables.contains(t)) Some(readResolved(spark, root, baseTables, t))
           else None
-        val before = existing.map(_.count()).getOrElse(0L)
-        val out = existing.map(Upsert.upsert(_, stage, keys)).getOrElse(stage)
-        val rel = writeData(spark, root, t, out, statsCols.getOrElse(t, Seq.empty))
-        val total = spark.read.parquet(new Path(root, rel).toString).count()
-        val inserted = total - before
-        (t, rel, MergeStats(inserted, staged - inserted, total))
-      }
+        val (rel, stats) = Upsert.writeMerge(existing, stage, keys)(
+          writeData(spark, root, t, _, statsCols.getOrElse(t, Seq.empty)))
+        (t, rel, stats)
     })
     val v = commitManifest(fs, root,
       merged.map { case (t, rel, _) => t -> rel }.toMap,

@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, trim}
 import org.apache.spark.sql.types._
 
 import graft.sources.CsvExtract
@@ -60,5 +62,73 @@ class CsvExtractSpec extends SparkSpec {
     assert(df.columns.toSeq == Seq("A", "B", "C"))
     val r = df.orderBy("A").collect()
     assert(r(0).getInt(0) == 1 && r(0).getString(1) == "b1" && r(0).isNullAt(2))
+  }
+
+  /** The read `loadCsvExact` replaces: header inference by a Spark job,
+    * then the same allowlist select (all-string schema: no coercion). */
+  private def inferredRead(path: String, schema: StructType): DataFrame = {
+    val raw = spark.read.option("header", "true").option("mode", "PERMISSIVE").csv(path)
+    val present = raw.columns.toSet
+    raw.select(schema.fields.toSeq.map { f =>
+      (if (present(f.name)) trim(col(f.name)) else lit(null).cast(StringType)).as(f.name)
+    }: _*)
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("header read without a job: same columns and rows as the inferring read") {
+    def file(bytes: Array[Byte]): String = {
+      val f = Files.createTempDirectory("graft-hdr").resolve("in.csv")
+      Files.write(f, bytes)
+      f.toString
+    }
+    def text(s: String) = file(s.getBytes("UTF-8"))
+    val parts = {
+      val d = Files.createTempDirectory("graft-hdr-parts")
+      Files.writeString(d.resolve("part-0.csv"), "id,v\n1,a\n2,b\n")
+      Files.writeString(d.resolve("part-1.csv"), "id,v\n3,c\n")
+      d.toString
+    }
+    val cases = Seq(
+      "blank leading lines" -> text("\n   \n\nid,v\n1, a \n\n2,b\n"),
+      "quoted names with commas" -> text("id,\"a,b\",\"c\"\n1,x,y\n2,\"p,q\",z\n"),
+      "duplicate names" -> text("id,v,V,v\n1,a,b,c\n"),
+      "empty names" -> text("id,,v,\n1,a,b,c\n"),
+      "CRLF line endings" -> text("id,v\r\n1,a\r\n2,b\r\n"),
+      "UTF-8 BOM" -> file(Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ "id,v\n1,a\n".getBytes("UTF-8")),
+      "header only" -> text("id,v\n"),
+      "empty file" -> text(""),
+      "directory of parts" -> parts)
+    cases.foreach { case (what, path) =>
+      // every name the inferring read sees, plus one the file lacks
+      val names = spark.read.option("header", "true").csv(path).columns.toSeq :+ "Absent"
+      val schema = StructType(names.map(StructField(_, StringType)))
+      val got = CsvExtract.loadCsvExact(spark, path, schema)
+      val want = inferredRead(path, schema)
+      assert(got.columns.toSeq == want.columns.toSeq, what)
+      assert(rows(got) == rows(want), what)
+    }
+  }
+
+  test("loadCsvExact of a file plans its read without starting a Spark job") {
+    val path = writeCsv("Id,Name", "1,a", "2,b")
+    val schema = StructType(Seq(StructField("Id", IntegerType), StructField("Name", StringType)))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    val df = try {
+      val df = CsvExtract.loadCsvExact(spark, path, schema)
+      org.apache.spark.ListenerDrain.drain(sc)
+      df
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0, s"${jobs.get} jobs started while planning the read")
+    assert(df.orderBy("Id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((1, "a"), (2, "b")))
   }
 }

@@ -200,6 +200,8 @@ class PipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("unique on (OrderID)"), ex.getMessage)
     assert(warehouse == loaded, "run swapped a table in although the orders MERGE failed")
     assert(sc.getPersistentRDDs.size <= cached, "the failed run left staging frames cached")
+    val leftovers = new java.io.File(s"$plainOut/warehouse").list().filter(_.endsWith(".tmp"))
+    assert(leftovers.isEmpty, s"the failed run left merged tables behind: ${leftovers.toSeq}")
 
     val txOut = Files.createTempDirectory("graft-fail-tx").toString
     val root = s"$txOut/snapshots"

@@ -136,6 +136,22 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.currentVersion(spark, root).isEmpty)
   }
 
+  test("mergeCommit with duplicate stage keys throws the exact message; the head stays") {
+    val root = freshRoot()
+    val v1 = Snapshot.commit(spark, root, Map("t" -> Seq((1L, 1), (2L, 2)).toDF("id", "v")))
+    val sc = spark.sparkContext
+    val cached = sc.getPersistentRDDs.keySet
+    val ex = intercept[IllegalArgumentException](
+      Snapshot.mergeCommit(spark, root, Map(
+        "t" -> (Seq((2L, 20), (3L, 3), (3L, 30), (4L, 4)).toDF("id", "v"), Seq("id")))))
+    assert(ex.getMessage == "upsert: stage must be unique on (id) — 4 rows but 3 distinct keys",
+      ex.getMessage)
+    assert(Snapshot.currentVersion(spark, root).contains(v1))
+    assert(Snapshot.read(spark, root, "t").collect().map(r => r.getLong(0) -> r.getInt(1))
+      .toMap == Map(1L -> 1, 2L -> 2))
+    assert((sc.getPersistentRDDs.keySet -- cached).isEmpty, "the failed merge left a cache")
+  }
+
   test("mergeCommit: a failing table cancels its concurrent siblings and publishes nothing") {
     val root = freshRoot()
     val sc = spark.sparkContext

@@ -56,6 +56,18 @@ class TransformSpec extends SparkSpec {
     assert(rejects.select("v").collect().map(_.getString(0)).sorted.toSeq == Seq("bad-fk", "null-fk"))
   }
 
+  test("fkSplit over a dimension with duplicate keys: each row lands once") {
+    val df = Seq((1, "a"), (1, "a2"), (2, "b"), (3, "c"), (4, "d")).toDF("fk", "v")
+    // key 1 three times, key 2 twice, a NULL key, no key 3 or 4
+    val dim = Seq(Some(1), Some(1), Some(2), Some(1), Some(2), None).toDF("id")
+    val (valid, rejects) = Transform.fkSplit(df, dim, Seq("fk"), Seq("id"))
+    val v = valid.select("v").collect().map(_.getString(0)).toSeq
+    val r = rejects.select("v").collect().map(_.getString(0)).toSeq
+    assert(v.sorted == Seq("a", "a2", "b"))
+    assert(r.sorted == Seq("c", "d"))
+    assert((v ++ r).sorted == df.select("v").collect().map(_.getString(0)).toSeq.sorted)
+  }
+
   test("checkSplit routes violations including NULL-pred rows") {
     val df = Seq(Some(5), Some(-1), None).toDF("x")
     val (ok, bad) = Transform.checkSplit(df, col("x").isNull || col("x") >= 0)

@@ -7,14 +7,16 @@ object Bench {
 
   /** Fresh bench session — local[cpus], UTC-pinned (the TIMESTAMP_NTZ
     * normalization in Tables is only 1:1 with the verified oracle runs
-    * under UTC), shuffle partitions = cpus. Shared by main and by the
-    * re-init path in [[runSamples]]. */
+    * under UTC), shuffle partitions = cpus, `file://` mounted through
+    * [[graft.sources.NioLocalFileSystem]] (no forked `chmod` per written
+    * file). Shared by main and by the re-init path in [[runSamples]]. */
   def buildSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.sources.NioLocalFileSystem.SessionConf)
       // AQE's partition coalescing floors partitions at minPartitionSize
       // (default 1m) — right when stage cost tracks BYTES, but it
       // collapses per-row-EXPENSIVE small-byte stages (candidate-pair

@@ -96,9 +96,7 @@ object Pipeline {
   def curateCorpus(spark: SparkSession, docsPath: String, snapshotRoot: String,
       idCol: String = "doc_id", textCol: String = "text"): Long =
     withCurated(spark, docsPath, idCol, textCol) { (tables, statsCols) =>
-      val version = Snapshot.commit(spark, snapshotRoot, tables, statsCols = statsCols)
-      println(s"[CURATE v$version] kept=${tables("corpus_curated").count()}")
-      version
+      Snapshot.commit(spark, snapshotRoot, tables, statsCols = statsCols)
     }
 
   /** WRITE-AUDIT-PUBLISH curation: [[curateCorpus]] with the publish

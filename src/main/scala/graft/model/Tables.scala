@@ -1,18 +1,65 @@
 package graft.model
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the harness testdata tables (see /root/repo/TESTDATA.md).
+/** Loaders for the harness testdata tables (see TESTDATA.md).
   *
   * Each table is a single parquet file under `dir`. Reads are plain
   * `spark.read.parquet` so Catalyst's parquet source handles column
   * pruning and filter pushdown — at 100 TB these scans are the dominant
-  * cost and must stay declarative (no collect, no schema inference pass).
+  * cost and must stay declarative (no collect).
+  *
+  * These inputs are read, never written, by the engine, so they carry no
+  * schema sidecar. The first read of a table runs Spark's schema
+  * inference (one small Spark job over the footers); the inferred schema
+  * is kept in a memo and every later read hands it to Spark, which then
+  * runs no job until an action. The memo key is the data files' identity
+  * (name, length, modification time) plus the session's parquet-reader
+  * confs, so a table rewritten in place, or read under another
+  * `nanosAsLong` setting ([[events]]), is inferred afresh.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class SchemaKey(files: Seq[(String, Long, Long)], confs: Map[String, String])
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+  private val MaxSchemas = 256
+
+  /** Schema inferences run by [[load]] since process start (memo misses). */
+  private[graft] val schemaInferences = new AtomicLong(0L)
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    memoKey(spark, path) match {
+      case None => spark.read.parquet(path) // missing or empty: Spark's own error
+      case Some(key) =>
+        val schema = Option(schemas.get(key)).getOrElse {
+          schemaInferences.incrementAndGet()
+          val inferred = spark.read.parquet(path).schema
+          if (schemas.size >= MaxSchemas) schemas.clear()
+          schemas.put(key, inferred)
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private def memoKey(spark: SparkSession, path: String): Option[SchemaKey] = Try {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    SchemaKey(files, confs)
+  }.toOption.filter(_.files.nonEmpty)
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

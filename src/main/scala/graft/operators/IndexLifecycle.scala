@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
-import graft.sources.{Replica, Snapshot}
+import graft.sources.{Replica, SchemaSidecar, Snapshot}
 
 /** One stored, delta-resolved table of a persisted index: its path
   * suffix (`""` for the main rows) and the column it is Hive-partitioned
@@ -71,8 +73,8 @@ object IndexLifecycle {
   def build[Q](f: IndexFamily[Q], df: DataFrame, path: String,
       trainOn: Option[DataFrame] = None): Unit = {
     val side = f.side.map { s =>
-      s.train(trainOn.getOrElse(df)).write.mode("overwrite").parquet(path + s.suffix)
-      df.sparkSession.read.parquet(path + s.suffix)
+      writeTable(s.train(trainOn.getOrElse(df)), path + s.suffix, "overwrite", None)
+      SchemaSidecar.readParquet(df.sparkSession, path + s.suffix)
     }
     encoded(f, df, side)(write(f, _, None, path, "overwrite"))
   }
@@ -80,14 +82,14 @@ object IndexLifecycle {
   /** Append a NEW batch's rows to the index at `path`, encoded through
     * the stored side table. O(batch). */
   def append[Q](f: IndexFamily[Q], batch: DataFrame, path: String): Unit = {
-    val side = f.side.map(s => batch.sparkSession.read.parquet(path + s.suffix))
+    val side = f.side.map(s => SchemaSidecar.readParquet(batch.sparkSession, path + s.suffix))
     encoded(f, batch, side)(write(f, _, None, path, "append"))
   }
 
   /** The stored frames of the index at `path`. */
   private def read[Q](spark: SparkSession, f: IndexFamily[Q], path: String): IndexFrames =
-    IndexFrames(f.tables.map(t => spark.read.parquet(path + t.suffix)),
-      f.side.map(s => spark.read.parquet(path + s.suffix)))
+    IndexFrames(f.tables.map(t => SchemaSidecar.readParquet(spark, path + t.suffix)),
+      f.side.map(s => SchemaSidecar.readParquet(spark, path + s.suffix)))
 
   /** Serve `q` from the persisted index at `path` alone. */
   def serve[Q](spark: SparkSession, f: IndexFamily[Q], path: String, q: Q): DataFrame =
@@ -102,11 +104,13 @@ object IndexLifecycle {
   /** FOLD base + delta into a fresh frozen base at `newBasePath` and
     * return the handoff cursor. O(base + delta). A never-synced delta
     * throws (no cursor to hand off — a guessed one would break the
-    * exactly-once chain). The cursor is re-read after the write: a sync
-    * landing mid-fold would let the new base absorb changes past the
-    * returned cursor, so it fails loudly — re-run the fold. */
+    * exactly-once chain). A sync landing mid-fold would let the new base
+    * absorb changes past the returned cursor, so it fails loudly — re-run
+    * the fold. Only a commit moves the cursor, so the cursor is re-read
+    * only when the delta root's head version moved during the fold. */
   def fold[Q](spark: SparkSession, f: IndexFamily[Q], basePath: String,
       deltaRoot: String, deltaTable: String, newBasePath: String): Long = {
+    val head = Snapshot.currentVersion(spark, deltaRoot)
     val cur = Replica.cursor(spark, deltaRoot).getOrElse(
       throw new IllegalStateException(
         s"fold: no sync cursor at $deltaRoot — the delta was never synced; " +
@@ -114,7 +118,9 @@ object IndexLifecycle {
     val (resolved, deltas) = resolve(spark, f, basePath, deltaRoot, deltaTable)
     try write(f, resolved.tables, resolved.side, newBasePath, "overwrite")
     finally deltas.foreach(NearDup.freeCheckpoint)
-    val now = Replica.cursor(spark, deltaRoot)
+    val now =
+      if (Snapshot.currentVersion(spark, deltaRoot) == head) Some(cur)
+      else Replica.cursor(spark, deltaRoot)
     if (!now.contains(cur))
       throw new IllegalStateException(
         s"fold: a concurrent sync advanced the delta cursor " +
@@ -148,7 +154,7 @@ object IndexLifecycle {
       basePath: String, deltaRoot: String, deltaTable: String): FollowDeltaStats = {
     val live = Snapshot.read(spark, deltaRoot, deltaTable)
     FollowDeltaStats(
-      baseRows = spark.read.parquet(basePath + f.tables.head.suffix).count(),
+      baseRows = SchemaSidecar.readParquet(spark, basePath + f.tables.head.suffix).count(),
       deltaLiveRows = live.count(),
       deltaTouchedKeys = touchedKeys(spark, f.idCol, live, deltaRoot, deltaTable).count(),
       syncCursor = Replica.cursor(spark, deltaRoot))
@@ -195,12 +201,26 @@ object IndexLifecycle {
   private def write[Q](f: IndexFamily[Q], frames: Seq[DataFrame],
       side: Option[DataFrame], path: String, mode: String): Unit =
     Par.inParallel[Unit](f.tables.zip(frames).map { case (t, df) => () =>
-      t.partCol match {
-        case Some(c) =>
-          df.repartition(col(c)).write.mode(mode).partitionBy(c).parquet(path + t.suffix)
-        case None => df.write.mode(mode).parquet(path + t.suffix)
-      }
+      writeTable(df, path + t.suffix, mode, t.partCol)
     } ++ f.side.zip(side).map { case (s, df) => () =>
-      df.write.mode(mode).parquet(path + s.suffix)
+      writeTable(df, path + s.suffix, mode, None)
     })
+
+  /** Write one stored table and record its data files' schema in its
+    * [[SchemaSidecar]], so reads of it run no schema-inference job. An
+    * append whose schema differs from the recorded one drops the
+    * sidecar: reads then infer, as Spark does for mixed files. */
+  private def writeTable(df: DataFrame, path: String, mode: String,
+      partCol: Option[String]): Unit = {
+    partCol match {
+      case Some(c) => df.repartition(col(c)).write.mode(mode).partitionBy(c).parquet(path)
+      case None => df.write.mode(mode).parquet(path)
+    }
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val schema = StructType(df.schema.filterNot(fl => partCol.contains(fl.name)))
+    if (mode == "overwrite") SchemaSidecar.write(fs, dir, schema)
+    else if (!SchemaSidecar.read(fs, dir).contains(schema))
+      fs.delete(new Path(dir, SchemaSidecar.Name), false)
+  }
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.SchemaSidecar
+
 /** Generic MERGE-style upsert — the reference's signature capability
   * (4 T-SQL MERGE statements, etl_sales_analytics.py:226-283; M1–M5 in
   * SURVEY.md §2.11).
@@ -91,7 +93,7 @@ object Upsert {
     (out, MergeStats(m("inserted"), m("updated"), m("total")))
   }
 
-  private def causes(t: Throwable): Iterator[Throwable] =
+  private[graft] def causes(t: Throwable): Iterator[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
 
   /** Apply a CDC change batch to a keyed table: `changes` carries the
@@ -240,7 +242,9 @@ object Upsert {
   /** [[upsertParquet]] in two steps. This call writes the merged table
     * next to the live one (`<table>.tmp`), checking `stage` and observing
     * the stats in that one write; the live table is not touched, and a
-    * failing write deletes the `.tmp` it started. It returns the second
+    * failing write deletes the `.tmp` it started. The merged table carries
+    * its [[SchemaSidecar]], and the live table is read through it, so
+    * the MERGE runs no schema-inference job. It returns the second
     * step, the swap that installs the merged table and yields the stats.
     * A caller loading several tables ([[graft.Pipeline.run]]) writes them
     * all before it swaps any, and [[discardMerged]]s them if one fails. */
@@ -248,11 +252,13 @@ object Upsert {
       stage: DataFrame, keys: Seq[String]): () => MergeStats = {
     val live = new Path(tablePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = if (fs.exists(live)) Some(spark.read.parquet(tablePath)) else None
+    val target = if (fs.exists(live)) Some(SchemaSidecar.readParquet(spark, tablePath)) else None
     val tmp = new Path(tablePath + ".tmp")
     val (_, stats) =
-      try writeMerge(target, stage, keys)(_.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
-      catch { case e: Throwable => fs.delete(tmp, true); throw e }
+      try writeMerge(target, stage, keys) { df =>
+        df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        SchemaSidecar.write(fs, tmp, df.schema)
+      } catch { case e: Throwable => fs.delete(tmp, true); throw e }
     () => { swapInto(fs, tmp, live); stats }
   }
 

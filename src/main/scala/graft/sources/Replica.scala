@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, max, row_number, when}
+import org.apache.spark.sql.functions.{col, max, row_number, when}
 
 /** EXACTLY-ONCE incremental replication of a snapshot table into a
   * downstream snapshot store — the consumer side of
@@ -55,13 +58,27 @@ object Replica {
     * replaying exactly the changes the fold has not absorbed. */
   def cursor(spark: SparkSession, dstRoot: String,
       appId: String = "default"): Option[Long] =
-    if (!Snapshot.tables(spark, dstRoot).keySet.contains(MarkerTable)) None
-    else Snapshot.read(spark, dstRoot, MarkerTable)
-      .filter(col("app_id") === appId)
-      .agg(max(col("src_version"))).head() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
+    cursors(spark, dstRoot).get(appId)
+
+  /** Every stream's cursor in `dstRoot`'s marker table, read on the
+    * driver: the table holds one row per app id, so reading its parquet
+    * files directly costs a few file reads and no Spark job. */
+  private def cursors(spark: SparkSession, dstRoot: String): Map[String, Long] =
+    Snapshot.tables(spark, dstRoot).get(MarkerTable).fold(Map.empty[String, Long]) { dirs =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val rows = dirs.split(',').toSeq.flatMap { d =>
+        val dir = new Path(d)
+        dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+          .flatMap { file =>
+            val r = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
+            try Iterator.continually(r.read()).takeWhile(_ != null)
+              .map(g => g.getString("app_id", 0) -> g.getLong("src_version", 0)).toList
+            finally r.close()
+          }
       }
+      rows.groupMapReduce(_._1)(_._2)(math.max)
+    }
 
   /** Incrementally apply `srcTable`'s changes since the last sync to
     * `dstTable`. Returns Some(sourceVersion synced to) when a commit
@@ -78,9 +95,10 @@ object Replica {
       appId: String = "default", initialCursor: Long = 0L): Option[Long] = {
     require(keyCols.nonEmpty, "replica sync: no key columns given")
     val srcHead = Snapshot.currentVersion(spark, srcRoot).getOrElse(0L)
-    val dstTables = Snapshot.tables(spark, dstRoot).keySet
+    // the base first: a commit landing after it fails this sync's CAS
     val dstBase = Snapshot.currentVersion(spark, dstRoot)
-    val cur = cursor(spark, dstRoot, appId).getOrElse(initialCursor)
+    val known = cursors(spark, dstRoot)
+    val cur = known.getOrElse(appId, initialCursor)
     if (cur >= srcHead) return None // already current: replay no-ops
     val feed = Snapshot.changesBetween(spark, srcRoot, srcTable, cur, srcHead)
     keyCols.foreach { k =>
@@ -93,10 +111,17 @@ object Replica {
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(Snapshot.CommitVersionCol).desc,
         when(col(Snapshot.ChangeTypeCol) === "insert", 1).otherwise(0).desc)
+    // the checkpoint's own job also answers "any upserts?" and "any
+    // deletes?": an Observation over the netted rows (NULL for an empty
+    // feed), read once the eager checkpoint returned
+    val flags = Observation()
     val last = feed
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
+      .observe(flags,
+        max(when(col(Snapshot.ChangeTypeCol) === "insert", 1L).otherwise(0L)).as("ups"),
+        max(when(col(Snapshot.ChangeTypeCol) === "delete", 1L).otherwise(0L)).as("dels"))
       .localCheckpoint(true)
     try {
       val ups = last.filter(col(Snapshot.ChangeTypeCol) === "insert")
@@ -104,28 +129,15 @@ object Replica {
       val dels = last.filter(col(Snapshot.ChangeTypeCol) === "delete")
         .select(keyCols.map(col): _*)
       // MERGE the marker, never wholesale-replace: other appIds'
-      // cursors survive an interleaved writer
-      val markerNew = {
+      // cursors survive an interleaved writer (cur < srcHead here)
+      val marker = {
         import spark.implicits._
-        Seq((appId, srcHead)).toDF("app_id", "src_version")
+        (known + (appId -> srcHead)).toSeq.toDF("app_id", "src_version")
       }
-      val marker =
-        if (dstTables.contains(MarkerTable))
-          Snapshot.read(spark, dstRoot, MarkerTable).unionByName(markerNew)
-            .groupBy(col("app_id")).agg(max(col("src_version")).as("src_version"))
-        else markerNew
-      // ONE pass over the checkpointed netted feed answers both
-      // "any upserts?" and "any deletes?" (was two limit(1).count()
-      // jobs — each action pays planning + job latency)
-      val flags = last.agg(
-        max(when(col(Snapshot.ChangeTypeCol) === "insert", 1L).otherwise(0L)),
-        max(when(col(Snapshot.ChangeTypeCol) === "delete", 1L).otherwise(0L)))
-        .head()
-      val nUps = if (flags.isNullAt(0)) 0L else flags.getLong(0)
-      val nDels = if (flags.isNullAt(1)) 0L else flags.getLong(1)
+      def has(flag: String): Boolean = flags.get.get(flag).contains(1L)
       Snapshot.applyChanges(spark, dstRoot, dstTable, keyCols,
-        upserts = if (nUps > 0) Some(ups) else None,
-        deleteKeys = if (nDels > 0) Some(dels) else None,
+        upserts = if (has("ups")) Some(ups) else None,
+        deleteKeys = if (has("dels")) Some(dels) else None,
         replaces = Map(MarkerTable -> marker),
         expectBase = Some(dstBase.getOrElse(0L)))
       Some(srcHead)

@@ -369,27 +369,14 @@ object Snapshot {
     spark.read.schema(mergedSchema(spark, root, rel)).parquet(paths: _*)
   }
 
-  /** Sidecar recording the exact schema a segment was written with
-    * (underscore prefix = hidden from data reads, like [[StatsName]]). */
-  private val SchemaName = "_graft_schema"
-
-  /** A segment's written schema: the sidecar when present (O(1) — no
-    * footer sampling), else the segment's own parquet footers (legacy
-    * dirs written before schema tracking). */
+  /** A segment's written schema: its [[SchemaSidecar]] when present
+    * (O(1) — no footer sampling), else the segment's own parquet footers
+    * (legacy dirs written before schema tracking). */
   private def segmentSchema(spark: SparkSession, root: String,
       seg: String): org.apache.spark.sql.types.StructType = {
-    val fs = fsOf(spark, root)
-    val p = new Path(new Path(root, seg), SchemaName)
-    val fromSidecar =
-      if (!fs.exists(p)) None
-      else Try {
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, UTF_8.name()).mkString
-                   finally in.close()
-        org.apache.spark.sql.types.DataType.fromJson(text)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }.toOption
-    fromSidecar.getOrElse(spark.read.parquet(new Path(root, seg).toString).schema)
+    val dir = new Path(root, seg)
+    SchemaSidecar.read(fsOf(spark, root), dir)
+      .getOrElse(spark.read.parquet(dir.toString).schema)
   }
 
   /** SCHEMA EVOLUTION: the union schema of a segment list, in segment
@@ -479,15 +466,22 @@ object Snapshot {
     * tombstone shadow. */
   private def tombstoneKeys(spark: SparkSession, root: String,
       rels: Map[String, String], table: String): Option[DataFrame] =
-    rels.get(delKey(table)).map { rel =>
-      import org.apache.spark.sql.functions.{coalesce, col, lit, max}
-      val raw = readRel(spark, root, rel)
+    tombstoneRows(spark, root, rels, table).map { raw =>
+      import org.apache.spark.sql.functions.{col, max}
       val keys = raw.columns.filterNot(_ == CovCol).toSeq
-      val withCov =
-        if (raw.columns.contains(CovCol))
-          raw.withColumn(CovCol, coalesce(col(CovCol), lit(Long.MaxValue)))
-        else raw.withColumn(CovCol, lit(Long.MaxValue))
-      withCov.groupBy(keys.map(col): _*).agg(max(col(CovCol)).as(CovCol))
+      raw.groupBy(keys.map(col): _*).agg(max(col(CovCol)).as(CovCol))
+    }
+
+  /** `table`'s stored tombstone rows in `rels`, unaggregated, with a
+    * legacy missing or NULL cov read as MaxValue. */
+  private def tombstoneRows(spark: SparkSession, root: String,
+      rels: Map[String, String], table: String): Option[DataFrame] =
+    rels.get(delKey(table)).map { rel =>
+      import org.apache.spark.sql.functions.{coalesce, col, lit}
+      val raw = readRel(spark, root, rel)
+      if (raw.columns.contains(CovCol))
+        raw.withColumn(CovCol, coalesce(col(CovCol), lit(Long.MaxValue)))
+      else raw.withColumn(CovCol, lit(Long.MaxValue))
     }
 
   /** Read `table`'s segment list with merge-on-read tombstones resolved
@@ -920,25 +914,47 @@ object Snapshot {
         }
       }
     }
-    // the batch is read by the checks and by the writes: cached while
-    // this runs, unless the caller already cached it
+    // The MERGE preconditions (batch keys non-NULL and unique) are
+    // checked inside the commit's own writes, not by a separate action:
+    // the write that reads the batch keys — the tombstone fold's
+    // per-key aggregate, or, for a new table, its first segment through
+    // `count(*) over (partition by keys)` — raises on a NULL key or a
+    // key seen twice (the [[Upsert.writeMerge]] pattern). Only when that
+    // fires does the exact aggregate run, for the caller's
+    // `IllegalArgumentException`; every segment dir this call started is
+    // deleted, unpublished.
+    val badKeys =
+      s"snapshot applyChanges: upsert batch fails its key check on (${keyCols.mkString(", ")})"
+    def keyChecked(df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions.{count, raise_error, when}
+      val perKey = "__graft_per_key"
+      df.withColumn(perKey, count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
+        .filter(when(keyCols.map(col(_).isNull).reduce(_ || _) || col(perKey) > 1,
+          raise_error(lit(badKeys))).otherwise(lit(true)))
+        .drop(perKey)
+    }
+    def requireKeys(bp: DataFrame): Unit = {
+      import org.apache.spark.sql.functions.{countDistinct, struct, sum, when}
+      val chk = bp.agg(
+        org.apache.spark.sql.functions.count(lit(1)).as("n"),
+        countDistinct(struct(keyCols.map(col): _*)).as("nk"),
+        sum(when(keyCols.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L)).as("nulls"))
+        .head()
+      val (n, nk, nulls) =
+        (chk.getLong(0), chk.getLong(1), if (chk.isNullAt(2)) 0L else chk.getLong(2))
+      require(nulls == 0L,
+        s"snapshot applyChanges: upsert batch has NULL in key columns ${keyCols.mkString(",")}")
+      require(nk == n,
+        s"snapshot applyChanges: upsert batch must be unique on (${keyCols.mkString(", ")}) — " +
+          s"$n rows but $nk distinct keys")
+    }
+    // the batch is read by two writes (its segment and the tombstone
+    // fold): cached while this runs, unless the caller already cached it
     def checkAndWrite(): Long = {
-      upserts.foreach { bp =>
-        // one pass over the cached batch checks both MERGE preconditions
-        import org.apache.spark.sql.functions.{countDistinct, struct, sum, when}
-        val chk = bp.agg(
-          org.apache.spark.sql.functions.count(lit(1)).as("n"),
-          countDistinct(struct(keyCols.map(col): _*)).as("nk"),
-          sum(when(keyCols.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L)).as("nulls"))
-          .head()
-        val (n, nk, nulls) =
-          (chk.getLong(0), chk.getLong(1), if (chk.isNullAt(2)) 0L else chk.getLong(2))
-        require(nulls == 0L,
-          s"snapshot applyChanges: upsert batch has NULL in key columns ${keyCols.mkString(",")}")
-        require(nk == n,
-          s"snapshot applyChanges: upsert batch must be unique on (${keyCols.mkString(", ")}) — " +
-            s"$n rows but $nk distinct keys")
-      }
+      import scala.jdk.CollectionConverters._
+      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val existing = existingDirs(fs, root, table +: delKey(table) +: replaces.keys.toSeq)
       // ALL data writes of this commit (replaced tables, the batch
       // segment, the tombstone fold) are independent — staged as thunks
       // below and run as ONE pool of concurrent jobs (see [[commit]]).
@@ -946,7 +962,7 @@ object Snapshot {
       // tombstone-shadow keys carry '~' which committable names reject.
       val writeJobs = Seq.newBuilder[() => (String, String)]
       replaces.foreach { case (t, df) =>
-        writeJobs += (() => t -> writeData(spark, root, t, df))
+        writeJobs += (() => t -> writeData(spark, root, t, df, onSegment = started.add))
       }
       baseRels.get(table) match {
         case None =>
@@ -962,51 +978,67 @@ object Snapshot {
           // shadow (later appends widen the schema).
           val dataDf = upserts.orElse(deleteKeys.map(_.limit(0)))
           dataDf.foreach { df =>
+            val data = if (upserts.isDefined) keyChecked(df) else df
             writeJobs += (() => table ->
-              writeData(spark, root, table, df, statsCols, bloomCols, bloomBits))
+              writeData(spark, root, table, data, statsCols, bloomCols, bloomBits, started.add))
             deleteKeys.foreach { d =>
               writeJobs += (() => delKey(table) -> writeData(spark, root,
-                delKey(table), d.distinct().withColumn(CovCol, lit(Long.MaxValue))))
+                delKey(table), d.distinct().withColumn(CovCol, lit(Long.MaxValue)),
+                onSegment = started.add))
             }
           }
-        case Some(rel) =>
+        case Some(rel) if upserts.isDefined || deleteKeys.isDefined =>
+          // ONE aggregate folds the shadow and checks the upsert keys: per
+          // key, the largest cov among this commit's keys (upserts
+          // nSegs, deletes MaxValue — a key in both ends deleted) replaces
+          // the key's prior tombstones; untouched keys keep theirs. A key
+          // with two upsert rows, or a NULL key among them, raises.
           val nSegs = relDirs(rel).length.toLong
-          val touched: Option[DataFrame] = {
-            val up = upserts.map(_.select(keyCols.map(col): _*)
-              .withColumn(CovCol, lit(nSegs)))
-            val del = deleteKeys.map(_.distinct().withColumn(CovCol, lit(Long.MaxValue)))
-            (up, del) match {
-              case (Some(u), Some(d)) =>
-                // a key in both: MaxValue wins the read path's per-key
-                // max — deleted, as documented
-                Some(u.unionByName(d))
-              case (u, d) => u.orElse(d)
-            }
+          val src = "__graft_src"
+          val prior = tombstoneRows(spark, root, baseRels, table).map { p =>
+            val priorKeys = p.columns.filterNot(_ == CovCol).toSeq
+            require(priorKeys.sorted == keyCols.sorted,
+              s"snapshot applyChanges: key columns ${keyCols.mkString(",")} differ " +
+                s"from the table's prior tombstones (${priorKeys.mkString(",")}) — " +
+                "compact the table before changing keys")
+            p.select(keyCols.map(col) :+ col(CovCol): _*).withColumn(src, lit(0))
           }
-          touched.foreach { newTomb =>
-            val folded = tombstoneKeys(spark, root, baseRels, table) match {
-              case None => newTomb
-              case Some(prior) =>
-                val priorKeys = prior.columns.filterNot(_ == CovCol).toSeq
-                require(priorKeys.sorted == keyCols.sorted,
-                  s"snapshot applyChanges: key columns ${keyCols.mkString(",")} differ " +
-                    s"from the table's prior tombstones (${priorKeys.mkString(",")}) — " +
-                    "compact the table before changing keys")
-                prior.join(newTomb.select(keyCols.map(col): _*).distinct(),
-                  keyCols, "left_anti").unionByName(newTomb)
-            }
-            upserts.foreach { bp =>
-              writeJobs += (() => table ->
-                s"$rel,${writeData(spark, root, table, bp, statsCols, bloomCols, bloomBits)}")
-            }
-            writeJobs += (() => delKey(table) ->
-              writeData(spark, root, delKey(table), folded))
+          val up = upserts.map(_.select(keyCols.map(col): _*)
+            .withColumn(CovCol, lit(nSegs)).withColumn(src, lit(1)))
+          val del = deleteKeys.map(_.withColumn(CovCol, lit(Long.MaxValue)).withColumn(src, lit(2)))
+          val folded = {
+            import org.apache.spark.sql.functions.{coalesce, count, max, raise_error, when}
+            Seq(prior, up, del).flatten.reduce(_.unionByName(_))
+              .groupBy(keyCols.map(col): _*)
+              .agg(max(when(col(src) > 0, col(CovCol))).as("__new"),
+                max(when(col(src) === 0, col(CovCol))).as("__old"),
+                count(when(col(src) === 1, 1)).as("__ups"))
+              .select(keyCols.map(col) :+
+                when(col("__ups") > 1 ||
+                    (col("__ups") > 0 && keyCols.map(col(_).isNull).reduce(_ || _)),
+                  raise_error(lit(badKeys)))
+                  .otherwise(coalesce(col("__new"), col("__old"))).as(CovCol): _*)
           }
+          upserts.foreach { bp =>
+            writeJobs += (() => table ->
+              s"$rel,${writeData(spark, root, table, bp, statsCols, bloomCols, bloomBits, started.add)}")
+          }
+          writeJobs += (() => delKey(table) ->
+            writeData(spark, root, delKey(table), folded, onSegment = started.add))
+        case Some(_) => ()
       }
       val jobs = writeJobs.result()
       require(jobs.nonEmpty,
         "snapshot applyChanges: nothing to commit (no upserts, deletes, or replaces)")
-      val entries = graft.operators.Par.inParallel(jobs).toMap
+      val entries =
+        try graft.operators.Par.inParallel(jobs).toMap
+        catch {
+          case e: Throwable =>
+            discardSegments(fs, root, started.asScala.toSeq, existing)
+            if (Upsert.causes(e).exists(c => Option(c.getMessage).exists(_.contains(badKeys))))
+              upserts.foreach(requireKeys)
+            throw e
+        }
       commitManifest(fs, root, entries, Some(pinnedBase))
     }
     upserts.fold(checkAndWrite())(Upsert.cachedWhileIn(_)(checkAndWrite()))
@@ -1510,22 +1542,42 @@ object Snapshot {
     * time — O(batch), never O(table). */
   private def writeData(spark: SparkSession, root: String, table: String,
       df: DataFrame, statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty, bloomBits: Long = 1L << 20): String = {
+      bloomCols: Seq[String] = Seq.empty, bloomBits: Long = 1L << 20,
+      onSegment: String => Unit = _ => ()): String = {
     // ',' joins segment dirs in manifest values, so names can't carry it
     require(table.nonEmpty && !table.exists(c => c == '/' || c == '\t' || c == '\n' || c == ','),
       s"snapshot: invalid table name '$table'")
     val rel = s"$DataDir/$table/${UUID.randomUUID().toString}"
+    onSegment(rel)
     df.write.parquet(new Path(root, rel).toString)
     // record the written schema next to the data (still invisible):
     // segment-list readers union these instead of sampling footers
-    val fs = fsOf(spark, root)
-    val out = fs.create(new Path(new Path(root, rel), SchemaName), false)
-    try out.write(df.schema.json.getBytes(UTF_8)) finally out.close()
+    SchemaSidecar.write(fsOf(spark, root), new Path(root, rel), df.schema)
     if (statsCols.nonEmpty) writeStats(spark, root, rel, statsCols)
     if (bloomCols.nonEmpty)
       // bits/item ≈ 10 → ~1% fpp at capacity; both knobs scale together
       writeBloom(spark, root, rel, bloomCols, (bloomBits / 10L).max(1L), bloomBits)
     rel
+  }
+
+  /** Of `root`, its data dir and the data dirs of `tables`, the ones
+    * that exist now ([[discardSegments]] removes only dirs it created). */
+  private def existingDirs(fs: FileSystem, root: String, tables: Seq[String]): Set[Path] = {
+    val data = new Path(root, DataDir)
+    (new Path(root) +: data +: tables.map(new Path(data, _))).filter(fs.exists).toSet
+  }
+
+  /** Delete the unpublished segment dirs `rels` of a failed commit, then
+    * the parent dirs that did not exist before it (`existing`) and are
+    * empty again, deepest first — the root's listing is as it was. */
+  private def discardSegments(fs: FileSystem, root: String, rels: Seq[String],
+      existing: Set[Path]): Unit = {
+    rels.foreach(r => fs.delete(new Path(root, r), true))
+    val parents = rels.map(r => new Path(root, r).getParent).distinct ++
+      Seq(new Path(root, DataDir), new Path(root))
+    parents.filterNot(existing).foreach { p =>
+      Try(if (fs.listStatus(p).isEmpty) fs.delete(p, false))
+    }
   }
 
   /** Sidecar name: the underscore prefix makes Spark's parquet reader
@@ -1625,7 +1677,7 @@ object Snapshot {
   private def writeStats(spark: SparkSession, root: String, rel: String,
       cols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val d = spark.read.parquet(new Path(root, rel).toString)
+    val d = SchemaSidecar.readParquet(spark, new Path(root, rel).toString)
     cols.foreach { c =>
       val t = d.schema(c).dataType.simpleString
       require(statsSupported(t),
@@ -1699,7 +1751,7 @@ object Snapshot {
       cols: Seq[String], expectedItems: Long, numBits: Long): Unit = {
     import org.apache.spark.sql.functions.{col, xxhash64}
     import org.apache.spark.sql.graft.BloomBridge
-    val d = spark.read.parquet(new Path(root, rel).toString)
+    val d = SchemaSidecar.readParquet(spark, new Path(root, rel).toString)
     val types = cols.map(c => c -> d.schema(c).dataType.simpleString).toMap
     cols.foreach { c =>
       require(bloomSupported(types(c)),

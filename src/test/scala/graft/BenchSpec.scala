@@ -20,6 +20,7 @@ class BenchSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.sources.NioLocalFileSystem.SessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

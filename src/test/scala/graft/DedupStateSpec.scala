@@ -87,6 +87,9 @@ class DedupStateSpec extends SparkSpec {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
+    // the state write above reports to listeners asynchronously: deliver
+    // its event before registering, so only the absorb's plans are seen
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     val kept =
       try {

@@ -2,13 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.Upsert
 import graft.operators.Upsert.MergeStats
@@ -21,26 +17,8 @@ import graft.sources.Snapshot
 class MergeActionsSpec extends SparkSpec {
   import sqlImplicits._
 
-  /** The names of the SQL actions `body` runs (QueryExecutionListener's
-    * `funcName`, successful and failed alike). */
-  private def sqlActions(body: => Any): Seq[String] = {
-    val seen = ArrayBuffer.empty[String]
-    val l = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.synchronized(seen += funcName)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.synchronized(seen += funcName)
-    }
-    ListenerDrain.drain(spark.sparkContext)
-    spark.listenerManager.register(l)
-    try {
-      body
-      ListenerDrain.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
-    seen.synchronized(seen.toList)
-  }
-
-  private val Reads = Set("count", "head", "collect", "collectAsList", "take", "first")
+  private def sqlActions(body: => Any): Seq[String] = Actions.sqlActions(spark)(body)
+  private val Reads = Actions.Reads
 
   test("upsertParquet into an existing table runs one SQL action, the write") {
     val table = Files.createTempDirectory("graft-actions").toString + "/t"
@@ -52,6 +30,19 @@ class MergeActionsSpec extends SparkSpec {
     assert(stats == MergeStats(1, 1, 3))
     assert(actions.size == 1, s"actions: $actions")
     assert(!actions.exists(Reads), s"actions: $actions")
+  }
+
+  test("upsertParquet into an existing table runs no Spark job outside its one SQL execution") {
+    val table = Files.createTempDirectory("graft-jobs").toString + "/t"
+    Upsert.upsertParquet(spark, table, Seq((1, "a"), (2, "b")).toDF("k", "v"), Seq("k"))
+    // the live table is read through the schema its merge recorded, so no
+    // schema-inference job runs before the write
+    val execs = Actions.jobExecutions(spark) {
+      Upsert.upsertParquet(spark, table, Seq((2, "B"), (3, "c")).toDF("k", "v"), Seq("k"))
+    }
+    assert(execs.nonEmpty && !execs.contains(None), s"jobs by execution: $execs")
+    assert(execs.distinct.size == 1, s"jobs by execution: $execs")
+    assert(rows(spark.read.parquet(table)) == Seq("1|a", "2|B", "3|c"))
   }
 
   test("Pipeline.run and runTransactional each run six SQL actions: two reject writes, four MERGEs") {

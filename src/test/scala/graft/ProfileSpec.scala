@@ -57,4 +57,32 @@ class ProfileSpec extends SparkSpec {
     assert(again("id").getAs[Long]("est_distinct") == est)
     intercept[IllegalArgumentException](Profile.profileSketched(df, Seq("id"), k = 1))
   }
+
+  test("graft.Profile: job wall is the union of job intervals, so outside is never negative") {
+    // two overlapping jobs, a nested one, then one after a gap
+    assert(graft.Profile.unionMs(Seq((0L, 100L), (50L, 150L), (60L, 70L), (200L, 250L))) == (200L, 50L))
+    assert(graft.Profile.unionMs(Seq((10L, 20L), (10L, 20L))) == (10L, 0L))
+    assert(graft.Profile.unionMs(Nil) == (0L, 0L))
+  }
+
+  test("graft.Profile attributes every job, AQE stage jobs included, to the graft frame of its SQL execution") {
+    assert(graft.Profile.graftFrame("org.apache.spark.sql.Dataset.count(Dataset.scala:1)\n" +
+      "app//graft.operators.Par$$anon$1.call(Par.scala:2)\ngraft.Bench$.main(Bench.scala:3)")
+      .contains("graft.operators.Par$$anon$1.call(Par.scala:2)"))
+    assert(graft.Profile.graftFrame("java.util.concurrent.CompletableFuture.run(CompletableFuture.java:1768)").isEmpty)
+    val rec = new graft.Profile.Recorder
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      // two shuffles and a join: AQE submits their stages as jobs of its own
+      val a = (1 to 200).map(i => (i % 17, i)).toDF("k", "v").groupBy("k").count()
+      val b = (1 to 200).map(i => (i % 13, i)).toDF("k", "w").groupBy("k").sum("w")
+      a.join(b, "k").collect()
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(rec)
+    import scala.jdk.CollectionConverters._
+    val sites = rec.jobs.asScala.toSeq.map(_.site)
+    assert(sites.size >= 2, s"sites: $sites")
+    assert(sites.forall(_.startsWith("graft.ProfileSpec")), s"sites: $sites")
+  }
 }

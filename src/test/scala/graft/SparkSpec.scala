@@ -26,6 +26,7 @@ object SparkSpec {
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(graft.sources.NioLocalFileSystem.SessionConf)
         .getOrCreate()
       cached.sparkContext.setLogLevel("WARN")
     }

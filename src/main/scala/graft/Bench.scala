@@ -56,12 +56,16 @@ object Bench {
     * persisted in the session. A leaked localCheckpoint from one query
     * otherwise crowds executor memory and taxes every later query — the
     * r9 full bench charged 47 s of such cross-query noise to innocent
-    * pure-map queries. Survives a query that stopped the context. */
-  def release(spark: SparkSession, results: DataFrame*): Unit =
+    * pure-map queries. Then delete the application's query scratch
+    * ([[graft.model.Tables.releaseScratch]]), so none is left in /tmp.
+    * Survives a query that stopped the context. */
+  def release(spark: SparkSession, results: DataFrame*): Unit = {
     try {
       results.foreach(graft.operators.Curate.release)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     } catch { case _: Throwable => () }
+    try graft.model.Tables.releaseScratch(spark) catch { case _: Throwable => () }
+  }
 
   /** Run-major measurement loop, ISOLATED per query: a query that kills
     * the SparkContext (an executor OOM in local mode stops the whole

@@ -98,4 +98,29 @@ object Tables {
   def scratchDir(spark: SparkSession, kind: String, dir: String): String =
     s"/tmp/graft_$kind/${spark.sparkContext.applicationId}/" +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** [[scratchDir]], emptied first: a query that rebuilds its store on
+    * every run (idempotent under Bench's repeated passes) starts from
+    * nothing. */
+  def freshScratch(spark: SparkSession, kind: String, dir: String): String = {
+    val root = scratchDir(spark, kind, dir)
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    root
+  }
+
+  /** Delete this application's scratch — every `/tmp/graft_<kind>/<appId>`
+    * — and each kind dir that leaves empty. */
+  def releaseScratch(spark: SparkSession): Unit = {
+    val appId = spark.sparkContext.applicationId
+    Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
+      .filter(k => k.isDirectory && k.getName.startsWith("graft_"))
+      .foreach { kind =>
+        val own = new java.io.File(kind, appId)
+        if (own.exists()) {
+          org.apache.hadoop.fs.FileUtil.fullyDelete(own)
+          kind.delete() // only succeeds when empty
+        }
+      }
+  }
 }

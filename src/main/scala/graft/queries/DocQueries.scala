@@ -393,10 +393,7 @@ object DocQueries {
   def docCurateIncrementalStored(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Curate, DedupState, LangModel, LangProfile}
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "curincstore", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "curincstore", dir)
     val d = Tables.documents(spark, dir).select("doc_id", "lang", "text")
     val corpus = d.filter(col("doc_id") % 2 === 0)
     val batch = d.filter(col("doc_id") % 2 === 1)
@@ -785,10 +782,7 @@ object DocQueries {
     * nat sums (and CCNet buckets) shift. */
   def docLmBigramStored(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "lmbigramstore", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "lmbigramstore", dir)
     val d = Tables.documents(spark, dir).select("doc_id", "lang", "text")
     Snapshot.commit(spark, root, Map(
       "lm_pairs" -> graft.operators.LangModel.trainBigram(

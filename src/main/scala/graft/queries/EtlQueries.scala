@@ -13,6 +13,15 @@ import graft.operators.{Bloom, Diff, IncrementalAgg, Salt, Transform, Upsert}
   */
 object EtlQueries {
 
+  /** Order count and exact cents total per group of `groups`, in group
+    * order: the aggregate the snapshot gates compare with their oracles
+    * (a lost, duplicated or resurrected row shifts one of the two). */
+  private def orderTotals(groups: String*)(df: DataFrame): DataFrame =
+    df.groupBy(groups.map(col): _*)
+      .agg(count(lit(1)).as("n_orders"),
+        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
+      .orderBy(groups.map(col): _*)
+
   /** A10 — keep-last dedupe by (l_orderkey, l_partkey). The harness data
     * carries duplicate keys (55 groups at sf0.01); "last" is defined by a
     * deterministic ordinal (l_linenumber, then full-row tie-breaks) since
@@ -191,10 +200,7 @@ object EtlQueries {
       .filter(col("rk") === 1)
       .select("status")
     fact.join(broadcast(dim), fact("o_orderstatus") === dim("status"))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus")
+      .transform(orderTotals("o_orderstatus"))
   }
 
   /** etl_schema_evolution — SCHEMA-EVOLVED snapshot read
@@ -211,12 +217,7 @@ object EtlQueries {
     * relationally. */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapevo", dir)
-    // rebuild the two-schema store from scratch each run (idempotent
-    // under Bench's repeated passes)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapevo", dir)
     val o = Tables.orders(spark, dir)
     Snapshot.commit(spark, root, Map("orders_evo" ->
       o.filter(col("o_orderkey") % 3 =!= 0)
@@ -226,10 +227,7 @@ object EtlQueries {
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           year(col("o_orderdate")).cast("long").as("o_year"))))
     Snapshot.read(spark, root, "orders_evo")
-      .groupBy(col("o_orderstatus"), col("o_year"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus", "o_year")
+      .transform(orderTotals("o_orderstatus", "o_year"))
   }
 
   /** etl_delete_merge_read — MERGE-ON-READ DELETE gate
@@ -245,10 +243,7 @@ object EtlQueries {
     * cents_total would shift. */
   def deleteMergeRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapdel", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapdel", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     Snapshot.commit(spark, root, Map("orders_del" -> o))
@@ -260,10 +255,7 @@ object EtlQueries {
       o.filter(col("o_orderkey") % 21 === 3)
         .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))))
     Snapshot.read(spark, root, "orders_del")
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus")
+      .transform(orderTotals("o_orderstatus"))
   }
 
   /** etl_upsert_mor — MERGE-ON-READ UPSERT gate
@@ -278,10 +270,7 @@ object EtlQueries {
     * delete nor the batch touched, union the batch. */
   def upsertMor(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapmor", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapmor", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     Snapshot.commit(spark, root, Map("orders_mor" ->
@@ -296,10 +285,7 @@ object EtlQueries {
         .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0)),
       Seq("o_orderkey"))
     Snapshot.read(spark, root, "orders_mor")
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus")
+      .transform(orderTotals("o_orderstatus"))
   }
 
   /** etl_change_feed — incremental CDC gate
@@ -314,10 +300,7 @@ object EtlQueries {
     * already-erased keys, whose coverage did not increase). */
   def changeFeed(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapcdf", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapcdf", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val v1 = Snapshot.commit(spark, root, Map("orders_cdf" ->
@@ -353,14 +336,8 @@ object EtlQueries {
     * safety), asserted inline. */
   def syncReplica(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{Replica, Snapshot}
-    val src = Tables.scratchDir(spark, "snapsrc", dir)
-    val dst = Tables.scratchDir(spark, "snapdst", dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(src, dst).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val src = Tables.freshScratch(spark, "snapsrc", dir)
+    val dst = Tables.freshScratch(spark, "snapdst", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     Snapshot.commit(spark, src, Map("orders_src" ->
@@ -383,10 +360,7 @@ object EtlQueries {
     require(Replica.sync(spark, src, "orders_src", dst, "orders_rep",
       Seq("o_orderkey")).isEmpty, "replayed sync must no-op")
     Snapshot.read(spark, dst, "orders_rep")
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus")
+      .transform(orderTotals("o_orderstatus"))
   }
 
   /** etl_point_lookup — per-file BLOOM skipping gate
@@ -402,10 +376,7 @@ object EtlQueries {
     * factor. */
   def pointLookup(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapbloom", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapbloom", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     val minKey = o.agg(min(col("o_orderkey"))).head().getLong(0)
@@ -433,10 +404,7 @@ object EtlQueries {
     * n_orders/cents_total. */
   def rollbackRestore(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snaprb", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snaprb", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val good = Snapshot.commit(spark, root, Map("orders_rb" ->
@@ -457,10 +425,7 @@ object EtlQueries {
       o.filter(col("o_orderkey") % 3 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + lit(2000.0))))
     Snapshot.read(spark, root, "orders_rb")
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus")
+      .transform(orderTotals("o_orderstatus"))
   }
 
   /** etl_time_travel — PINNED-VERSION reads next to the moving head
@@ -476,10 +441,7 @@ object EtlQueries {
     * at any scale. The oracle reconstructs both states relationally. */
   def timeTravelGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snaptt", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snaptt", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val v1 = Snapshot.commit(spark, root, Map("orders_tt" ->
@@ -495,10 +457,7 @@ object EtlQueries {
     val head = Snapshot.read(spark, root, "orders_tt")
       .withColumn("snap", lit("head"))
     asof.unionByName(head)
-      .groupBy(col("snap"), col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("snap", "o_orderstatus")
+      .transform(orderTotals("snap", "o_orderstatus"))
   }
 
   /** etl_stats_agg — METADATA-ONLY aggregate gate
@@ -513,10 +472,7 @@ object EtlQueries {
     * oracle computes the same aggregates from the raw rows. */
   def statsAggGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapstats", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapstats", dir)
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_orderdate").cast("date").as("o_date"))
@@ -541,10 +497,7 @@ object EtlQueries {
     * recomputes from the raw rows with the same casts. */
   def statsAggMoney(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapstats_money", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapstats_money", dir)
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"),
         col("o_totalprice").cast("decimal(18,2)").as("o_price"),
@@ -583,10 +536,7 @@ object EtlQueries {
     * deterministic at any scale factor. */
   def zorderBox(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{Cluster, Snapshot}
-    val root = Tables.scratchDir(spark, "snapzorder", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapzorder", dir)
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))
@@ -618,10 +568,7 @@ object EtlQueries {
   def ivmAgg(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.ViewMaintenance
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapivm", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapivm", dir)
     val gk = Seq("o_orderstatus"); val ms = Seq("o_totalprice")
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -662,10 +609,7 @@ object EtlQueries {
   def ivmJoin(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.ViewMaintenance
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapivmj", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapivmj", dir)
     val gk = Seq("o_orderstatus"); val ms = Seq("l_extendedprice")
     val a = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderstatus"))
     val bAll = Tables.lineitem(spark, dir)
@@ -704,10 +648,7 @@ object EtlQueries {
     * optimized table aggregates exactly like the raw rows. */
   def optimizeGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapopt", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapopt", dir)
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     Snapshot.commit(spark, root,
@@ -722,10 +663,7 @@ object EtlQueries {
     val after = Snapshot.read(spark, root, "orders_opt")
     require(after.inputFiles.length < before,
       s"optimize must shrink the file count ($before -> ${after.inputFiles.length})")
-    after.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-      .orderBy("o_orderstatus")
+    after.transform(orderTotals("o_orderstatus"))
   }
 
   /** etl_scd2 — TYPE-2 slowly-changing-dimension gate
@@ -770,10 +708,7 @@ object EtlQueries {
     * segments torn, shadow cross-talk) shifts a side's sums. */
   def cloneGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapclone", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapclone", dir)
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     Snapshot.commit(spark, root, Map("orders_cl" -> o))
@@ -784,15 +719,9 @@ object EtlQueries {
     Snapshot.commitAppend(spark, root, appends = Map("orders_cl2" ->
       o.filter(col("o_orderkey") % 11 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + lit(9999.0))))
-    def side(t: String, label: String) =
-      Snapshot.read(spark, root, t)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("cents_total"))
-        .withColumn("side", lit(label))
+    def side(t: String, label: String) = Snapshot.read(spark, root, t).withColumn("side", lit(label))
     side("orders_cl", "src").unionByName(side("orders_cl2", "clone"))
-      .select(col("side"), col("o_orderstatus"), col("n_orders"), col("cents_total"))
-      .orderBy("side", "o_orderstatus")
+      .transform(orderTotals("side", "o_orderstatus"))
   }
 
   /** etl_expectations — the declarative DATA-QUALITY AUDIT
@@ -838,10 +767,7 @@ object EtlQueries {
     * queries — a resurrected row in any table shifts its sums. */
   def forgetSubject(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snapforget", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snapforget", dir)
     val c = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -884,10 +810,7 @@ object EtlQueries {
     * the gate. */
   def historyGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
-    val root = Tables.scratchDir(spark, "snaphist", dir)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val root = Tables.freshScratch(spark, "snaphist", dir)
     val o = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val c = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")

@@ -64,14 +64,9 @@ object IndexScenario {
     val deltaTable = s"${table}_delta"
     val kind = scratch + (if (compacted) "c" else "f")
     def root(role: String) = Tables.scratchDir(spark, kind + role, dir)
-    val corpus = root("src")
-    val deltas = (if (compacted) Seq("d1", "d2") else Seq("d1")).map(root)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    (corpus +: deltas).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    def freshRoot(role: String) = Tables.freshScratch(spark, kind + role, dir)
+    val corpus = freshRoot("src")
+    val deltas = (if (compacted) Seq("d1", "d2") else Seq("d1")).map(freshRoot)
     def mutate(n: Int, erase: Column, merge: Column): Long = {
       Snapshot.deleteWhere(spark, corpus, table, erase, keys)
       Snapshot.upsertMergeOnRead(spark, corpus, table, wave(rows.filter(merge), n), keys)

@@ -656,13 +656,185 @@ object Snapshot {
     readResolved(spark, root, byName, table)
   }
 
+  /** What a write [[operation]]'s body asks it to publish: entries
+    * layered over the chain head it read, and entries removed from it —
+    * or [[Unchanged]], which publishes nothing. */
+  private sealed trait Outcome
+  private final case class Publish(updates: Map[String, String],
+      removals: Set[String] = Set.empty) extends Outcome
+  private case object Unchanged extends Outcome
+
+  private def requireBase(root: String, expected: Long, found: Long): Unit =
+    if (found != expected) throw new IllegalStateException(
+      s"snapshot commit conflict at $root: expected base version $expected, found $found")
+
+  /** THE commit protocol every write entry point runs:
+    *   1. read the head of `chain` (main, or a branch) — unless `blind`
+    *      ([[commit]] alone: it reads no base and publishes
+    *      last-writer-wins unless given `expectBase`) — and fail on a
+    *      stale `expectBase` before anything is written;
+    *   2. run `body`, whose segment writes go through the [[Op]] it is
+    *      handed, which records every dir they start;
+    *   3. on ANY failure — the body's, or a conflict found at publish —
+    *      delete those dirs and the parent dirs that did not exist
+    *      before, so the root's listing is as it was;
+    *   4. publish the body's [[Publish]] through [[commitManifestOn]],
+    *      pinned to the head read in step 1.
+    * Returns the published version ([[Unchanged]]: the head's). */
+  private def operation(spark: SparkSession, root: String,
+      chain: Option[String] = None, expectBase: Option[Long] = None,
+      blind: Boolean = false)(body: Op => Outcome): Long = {
+    val fs = fsOf(spark, root)
+    val head = if (blind) None else chainHead(fs, root, chain)
+    val op = new Op(spark, root, fs, head)
+    if (!blind) expectBase.foreach(requireBase(root, _, op.version))
+    try body(op) match {
+      case Unchanged => op.version
+      case Publish(updates, removals) =>
+        commitManifestOn(fs, root, chain, updates,
+          if (blind) expectBase else Some(op.version), removals)
+    } catch {
+      case e: Throwable =>
+        Try(op.discard())
+        throw e
+    }
+  }
+
+  /** One [[operation]] in flight: the chain head it read (None for a
+    * blind [[commit]] or an empty chain), and its segment writes. */
+  private final class Op(spark: SparkSession, root: String, fs: FileSystem,
+      val head: Option[(Long, Map[String, String])]) {
+    def version: Long = head.fold(0L)(_._1)
+    def rels: Map[String, String] = head.fold(Map.empty[String, String])(_._2)
+
+    private val rootDir = new Path(root)
+    private val dataDir = new Path(root, DataDir)
+    private val existed = Set(rootDir, dataDir).filter(fs.exists)
+    /** Every segment dir started, with whether its table dir was new. */
+    private val started = new java.util.concurrent.ConcurrentLinkedQueue[(Path, Boolean)]()
+
+    /** Write `df` to a fresh immutable data dir; returns the relative
+      * path (not yet visible to readers — only a manifest makes it so).
+      * With `statsCols` nonempty a per-FILE min/max sidecar is derived
+      * and written into the dir before it becomes visible — the
+      * data-skipping layer next to Hive partitioning and Z-order (which
+      * cluster; this PRUNES). Costs one extra scan of the newly written
+      * data at commit time — O(batch), never O(table). */
+    def writeData(table: String, df: DataFrame, statsCols: Seq[String] = Seq.empty,
+        bloomCols: Seq[String] = Seq.empty, bloomBits: Long = 1L << 20): String = {
+      // ',' joins segment dirs in manifest values, so names can't carry it
+      require(table.nonEmpty && !table.exists(c => c == '/' || c == '\t' || c == '\n' || c == ','),
+        s"snapshot: invalid table name '$table'")
+      val rel = s"$DataDir/$table/${UUID.randomUUID().toString}"
+      val dir = new Path(root, rel)
+      started.add(dir -> !fs.exists(dir.getParent))
+      df.write.parquet(dir.toString)
+      // record the written schema next to the data (still invisible):
+      // segment-list readers union these instead of sampling footers
+      SchemaSidecar.write(fs, dir, df.schema)
+      if (statsCols.nonEmpty) writeStats(spark, root, rel, statsCols)
+      if (bloomCols.nonEmpty)
+        // bits/item ≈ 10 → ~1% fpp at capacity; both knobs scale together
+        writeBloom(spark, root, rel, bloomCols, (bloomBits / 10L).max(1L), bloomBits)
+      rel
+    }
+
+    /** Run independent writes as ONE pool of concurrent jobs: each is a
+      * small single-digit-task job, and serialized they pay per-job
+      * latency and driver gaps once per table (a 4-artifact commit
+      * measured ~4x the single-table commit wall). */
+    def concurrently[A](writes: Seq[() => A]): Seq[A] = graft.operators.Par.inParallel(writes)
+
+    /** Write each (entry → frame) as its own segment, concurrently;
+      * returns entry → relative dir. */
+    def writeTables(tables: Map[String, DataFrame],
+        statsCols: Map[String, Seq[String]] = Map.empty,
+        bloomCols: Map[String, Seq[String]] = Map.empty,
+        bloomBits: Long = 1L << 20): Map[String, String] =
+      concurrently(tables.toSeq.map { case (t, df) => () =>
+        t -> writeData(t, df, statsCols.getOrElse(t, Seq.empty),
+          bloomCols.getOrElse(t, Seq.empty), bloomBits)
+      }).toMap
+
+    /** Delete every segment dir started, then the parent dirs that did
+      * not exist before and are empty again, deepest first. */
+    def discard(): Unit = {
+      import scala.jdk.CollectionConverters._
+      val segs = started.asScala.toSeq
+      segs.foreach { case (dir, _) => fs.delete(dir, true) }
+      val parents = segs.collect { case (dir, true) => dir.getParent }.distinct ++
+        Seq(dataDir, rootDir).filterNot(existed)
+      parents.foreach(p => Try(if (fs.listStatus(p).isEmpty) fs.delete(p, false)))
+    }
+  }
+
+  /** SCHEMA EVOLUTION gate, checked BEFORE any data write: a batch
+    * written into `table` may add columns (older segments read them back
+    * as NULL) and may omit columns (its rows read back NULL there), but a
+    * column it shares with the stored table must keep the stored type —
+    * rejected loudly at commit time, not discovered by some later
+    * reader. */
+  private def requireStoredTypes(spark: SparkSession, root: String,
+      rels: Map[String, String], table: String, batch: DataFrame,
+      caller: String, kind: String): Unit =
+    rels.get(table).foreach { rel =>
+      val stored = mergedSchema(spark, root, rel).fields.map(f => f.name -> f.dataType).toMap
+      batch.schema.fields.foreach { f =>
+        stored.get(f.name).foreach { prev =>
+          require(prev == f.dataType,
+            s"snapshot $caller: table '$table' column '${f.name}' type change " +
+              s"${prev.simpleString} -> ${f.dataType.simpleString} — " +
+              s"type changes require a replace commit (table rewrite), not $kind")
+        }
+      }
+    }
+
+  private def badKeysMessage(keyCols: Seq[String]): String =
+    s"snapshot applyChanges: upsert batch fails its key check on (${keyCols.mkString(", ")})"
+
+  /** `table`'s tombstone shadow folded with one commit's keys, as ONE
+    * per-key aggregate: per key, the largest cov among the commit's keys
+    * (`upserts` at their given cov, `deletes` at MaxValue — a key in both
+    * ends deleted) replaces the key's prior tombstones; untouched keys
+    * keep their largest prior cov (every reader takes the per-key max,
+    * so the smaller ones never mattered). An upsert key seen twice, or a
+    * NULL one, raises [[badKeysMessage]] inside the write. Key columns
+    * that differ from the prior tombstones' are rejected with
+    * `mismatch(priorKeys)`. */
+  private def foldShadow(spark: SparkSession, root: String, rels: Map[String, String],
+      table: String, keyCols: Seq[String], deletes: Option[DataFrame],
+      upserts: Option[(DataFrame, Long)], mismatch: Seq[String] => String): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, raise_error, when}
+    val src = "__graft_src"
+    val prior = tombstoneRows(spark, root, rels, table).map { p =>
+      val priorKeys = p.columns.filterNot(_ == CovCol).toSeq
+      require(priorKeys.sorted == keyCols.sorted, mismatch(priorKeys))
+      p.select(keyCols.map(col) :+ col(CovCol): _*).withColumn(src, lit(0))
+    }
+    val up = upserts.map { case (b, cov) =>
+      b.select(keyCols.map(col): _*).withColumn(CovCol, lit(cov)).withColumn(src, lit(1))
+    }
+    val del = deletes.map(_.withColumn(CovCol, lit(Long.MaxValue)).withColumn(src, lit(2)))
+    Seq(prior, up, del).flatten.reduce(_.unionByName(_))
+      .groupBy(keyCols.map(col): _*)
+      .agg(max(when(col(src) > 0, col(CovCol))).as("__new"),
+        max(when(col(src) === 0, col(CovCol))).as("__old"),
+        count(when(col(src) === 1, 1)).as("__ups"))
+      .select(keyCols.map(col) :+
+        when(col("__ups") > 1 ||
+            (col("__ups") > 0 && keyCols.map(col(_).isNull).reduce(_ || _)),
+          raise_error(lit(badKeysMessage(keyCols))))
+          .otherwise(coalesce(col("__new"), col("__old"))).as(CovCol): _*)
+  }
   /** Atomically publish new contents for `newTables` (other tables keep
     * their current data). Data is written FIRST (invisible), then the
-    * manifest claims the next version; a crash anywhere before the claim
-    * leaves only unreferenced files. With `expectBase = Some(v)` the
-    * commit fails instead of publishing if anyone committed after
-    * version v (optimistic concurrency for read-modify-write callers);
-    * `None` means blind last-writer-wins on the touched tables. */
+    * manifest claims the next version; a commit that fails before the
+    * claim deletes the data dirs it wrote ([[operation]]), and a crash
+    * before the claim leaves only unreferenced files. With
+    * `expectBase = Some(v)` the commit fails instead of publishing if
+    * anyone committed after version v (optimistic concurrency for
+    * read-modify-write callers); `None` means blind last-writer-wins on
+    * the touched tables. */
   def commit(spark: SparkSession, root: String, newTables: Map[String, DataFrame],
       expectBase: Option[Long] = None,
       statsCols: Map[String, Seq[String]] = Map.empty,
@@ -670,20 +842,12 @@ object Snapshot {
       bloomBits: Long = 1L << 20): Long = {
     require(newTables.nonEmpty, "snapshot commit: no tables given")
     newTables.keys.foreach(requireCommittableName)
-    val fs = fsOf(spark, root)
-    // independent table writes run as CONCURRENT jobs (each is a small
-    // single-digit-task job; serialized they pay per-job latency +
-    // driver gaps once per table — a 4-artifact commit measured ~4x the
-    // single-table commit wall). Failure leaves only unreferenced files.
-    val written = graft.operators.Par.inParallel(newTables.toSeq.map {
-      case (t, df) => () =>
-        t -> writeData(spark, root, t, df, statsCols.getOrElse(t, Seq.empty),
-          bloomCols.getOrElse(t, Seq.empty), bloomBits)
-    }).toMap
     // a replace supersedes any accumulated merge-on-read deletes: the
     // new contents are what the caller wants readable, verbatim
-    commitManifest(fs, root, written, expectBase,
-      removals = newTables.keySet.map(delKey))
+    operation(spark, root, expectBase = expectBase, blind = true) { op =>
+      Publish(op.writeTables(newTables, statsCols, bloomCols, bloomBits),
+        newTables.keySet.map(delKey))
+    }
   }
 
   /** LOG-STRUCTURED append commit: each table in `appends` gains ONE new
@@ -717,47 +881,14 @@ object Snapshot {
     require(appends.keySet.intersect(replaces.keySet).isEmpty,
       s"snapshot commitAppend: tables in both appends and replaces: ${
         appends.keySet.intersect(replaces.keySet).mkString(", ")}")
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    expectBase.foreach { e =>
-      val baseV = base.map(_._1).getOrElse(0L)
-      if (baseV != e) throw new IllegalStateException(
-        s"snapshot commit conflict at $root: expected base version $e, found $baseV")
-    }
-    val pinnedBase = expectBase.getOrElse(base.map(_._1).getOrElse(0L))
-    val baseRels = base.map(_._2).getOrElse(Map.empty)
-    // SCHEMA EVOLUTION gate, checked BEFORE any data writes: an appended
-    // batch may add columns (older segments read them back as NULL) and
-    // may omit columns (its rows read back NULL there), but a column it
-    // shares with the stored table must keep the stored type — rejected
-    // loudly here, at commit time, not discovered by some later reader.
-    appends.foreach { case (t, df) =>
-      baseRels.get(t).foreach { rel =>
-        val stored = mergedSchema(spark, root, rel)
-        val storedByName = stored.fields.map(f => f.name -> f).toMap
-        df.schema.fields.foreach { f =>
-          storedByName.get(f.name).foreach { prev =>
-            require(prev.dataType == f.dataType,
-              s"snapshot commitAppend: table '$t' column '${f.name}' type change " +
-                s"${prev.dataType.simpleString} -> ${f.dataType.simpleString} — " +
-                "type changes require a replace commit (table rewrite), not an append")
-          }
-        }
+    operation(spark, root, expectBase = expectBase) { op =>
+      appends.foreach { case (t, df) =>
+        requireStoredTypes(spark, root, op.rels, t, df, "commitAppend", "an append")
       }
+      val segs = op.writeTables(appends ++ replaces, statsCols, bloomCols, bloomBits)
+      val appended = appends.keys.flatMap(t => op.rels.get(t).map(old => t -> s"$old,${segs(t)}"))
+      Publish(segs ++ appended, replaces.keySet.map(delKey))
     }
-    // appended segments and replaced tables are ALL independent writes —
-    // run them as one pool of concurrent jobs (see [[commit]])
-    val segs = graft.operators.Par.inParallel(
-      (appends.toSeq ++ replaces.toSeq).map { case (t, df) => () =>
-        t -> writeData(spark, root, t, df, statsCols.getOrElse(t, Seq.empty),
-          bloomCols.getOrElse(t, Seq.empty), bloomBits)
-      }).toMap
-    val appended = appends.keys.map { t =>
-      t -> baseRels.get(t).map(old => s"$old,${segs(t)}").getOrElse(segs(t))
-    }.toMap
-    val replaced = replaces.keys.map(t => t -> segs(t)).toMap
-    commitManifest(fs, root, appended ++ replaced, Some(pinnedBase),
-      removals = replaces.keySet.map(delKey))
   }
 
   /** MERGE-ON-READ DELETE: remove every row of `table` matching `pred`
@@ -787,38 +918,30 @@ object Snapshot {
       expectBase: Option[Long] = None): Long = {
     require(keyCols.nonEmpty, "snapshot deleteWhere: no key columns given")
     requireCommittableName(table)
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    expectBase.foreach { e =>
-      val baseV = base.map(_._1).getOrElse(0L)
-      if (baseV != e) throw new IllegalStateException(
-        s"snapshot commit conflict at $root: expected base version $e, found $baseV")
-    }
-    val pinnedBase = expectBase.getOrElse(base.map(_._1).getOrElse(0L))
-    val baseRels = base.map(_._2).getOrElse(Map.empty)
-    val rel = baseRels.getOrElse(table,
-      throw new IllegalArgumentException(s"snapshot deleteWhere: no table '$table' at $root"))
     import org.apache.spark.sql.functions.{col, lit}
-    // resolve EXISTING tombstones first so already-deleted rows don't
-    // re-tombstone, then keep only the key tuples of matching rows
-    val deleted = readResolved(spark, root, baseRels, table)
-      .filter(pred)
-      .select(keyCols.map(col): _*)
-      .distinct()
-    baseRels.get(delKey(table)).foreach { drel =>
-      val stored = mergedSchema(spark, root, drel)
-      require(stored.fields.filterNot(_.name == CovCol).map(f => (f.name, f.dataType)).toSeq ==
-          deleted.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-        s"snapshot deleteWhere: key columns ${deleted.schema.fieldNames.mkString(",")} " +
-          s"differ from the table's prior deletes (${stored.fieldNames.filterNot(_ == CovCol).mkString(",")}) — " +
-          "compact the table before changing delete keys")
+    operation(spark, root, expectBase = expectBase) { op =>
+      if (!op.rels.contains(table))
+        throw new IllegalArgumentException(s"snapshot deleteWhere: no table '$table' at $root")
+      // resolve EXISTING tombstones first so already-deleted rows don't
+      // re-tombstone, then keep only the key tuples of matching rows
+      val deleted = readResolved(spark, root, op.rels, table)
+        .filter(pred)
+        .select(keyCols.map(col): _*)
+        .distinct()
+      op.rels.get(delKey(table)).foreach { drel =>
+        val stored = mergedSchema(spark, root, drel)
+        require(stored.fields.filterNot(_.name == CovCol).map(f => (f.name, f.dataType)).toSeq ==
+            deleted.schema.fields.map(f => (f.name, f.dataType)).toSeq,
+          s"snapshot deleteWhere: key columns ${deleted.schema.fieldNames.mkString(",")} " +
+            s"differ from the table's prior deletes (${stored.fieldNames.filterNot(_ == CovCol).mkString(",")}) — " +
+            "compact the table before changing delete keys")
+      }
+      // cov = MaxValue: suppress the key in every current AND future
+      // segment until a compaction folds the tombstones ([[CovCol]])
+      val seg = op.writeData(delKey(table), deleted.withColumn(CovCol, lit(Long.MaxValue)))
+      Publish(Map(delKey(table) ->
+        op.rels.get(delKey(table)).map(old => s"$old,$seg").getOrElse(seg)))
     }
-    // cov = MaxValue: suppress the key in every current AND future
-    // segment until a compaction folds the tombstones ([[CovCol]])
-    val seg = writeData(spark, root, delKey(table),
-      deleted.withColumn(CovCol, lit(Long.MaxValue)))
-    val newRel = baseRels.get(delKey(table)).map(old => s"$old,$seg").getOrElse(seg)
-    commitManifest(fs, root, Map(delKey(table) -> newRel), Some(pinnedBase))
   }
 
   /** MERGE-ON-READ UPSERT: row-level MERGE that never reads or rewrites
@@ -865,10 +988,10 @@ object Snapshot {
     * cov = base-segment-count (prior versions suppressed, the appended
     * batch served), delete keys get cov = MaxValue (erasure outlives
     * future appends, the [[deleteWhere]] contract); both FOLD the
-    * existing shadow — their keys' prior tombstones drop, others carry
-    * over — so a key in BOTH sets ends up deleted (MaxValue wins the
-    * per-key max). Zero stored data read or rewritten; preconditions as
-    * [[upsertMergeOnRead]]. */
+    * existing shadow ([[foldShadow]]) — their keys' prior tombstones
+    * drop, others carry over — so a key in BOTH sets ends up deleted
+    * (MaxValue wins the per-key max). Zero stored data read or
+    * rewritten; preconditions as [[upsertMergeOnRead]]. */
   def applyChanges(spark: SparkSession, root: String, table: String,
       keyCols: Seq[String],
       upserts: Option[DataFrame], deleteKeys: Option[DataFrame],
@@ -893,27 +1016,6 @@ object Snapshot {
           s"must be exactly the key columns ${keyCols.mkString(",")}")
     }
     import org.apache.spark.sql.functions.{col, lit}
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    expectBase.foreach { e =>
-      val baseV = base.map(_._1).getOrElse(0L)
-      if (baseV != e) throw new IllegalStateException(
-        s"snapshot commit conflict at $root: expected base version $e, found $baseV")
-    }
-    val pinnedBase = expectBase.getOrElse(base.map(_._1).getOrElse(0L))
-    val baseRels = base.map(_._2).getOrElse(Map.empty)
-    // schema-evolution gate, same as commitAppend: adds OK, type changes not
-    for (b <- upserts; rel <- baseRels.get(table)) {
-      val storedByName = mergedSchema(spark, root, rel).fields.map(f => f.name -> f).toMap
-      b.schema.fields.foreach { f =>
-        storedByName.get(f.name).foreach { prev =>
-          require(prev.dataType == f.dataType,
-            s"snapshot applyChanges: table '$table' column '${f.name}' type change " +
-              s"${prev.dataType.simpleString} -> ${f.dataType.simpleString} — " +
-              "type changes require a replace commit (table rewrite), not an upsert")
-        }
-      }
-    }
     // The MERGE preconditions (batch keys non-NULL and unique) are
     // checked inside the commit's own writes, not by a separate action:
     // the write that reads the batch keys — the tombstone fold's
@@ -921,10 +1023,8 @@ object Snapshot {
     // `count(*) over (partition by keys)` — raises on a NULL key or a
     // key seen twice (the [[Upsert.writeMerge]] pattern). Only when that
     // fires does the exact aggregate run, for the caller's
-    // `IllegalArgumentException`; every segment dir this call started is
-    // deleted, unpublished.
-    val badKeys =
-      s"snapshot applyChanges: upsert batch fails its key check on (${keyCols.mkString(", ")})"
+    // `IllegalArgumentException`.
+    val badKeys = badKeysMessage(keyCols)
     def keyChecked(df: DataFrame): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions.{count, raise_error, when}
@@ -949,22 +1049,13 @@ object Snapshot {
         s"snapshot applyChanges: upsert batch must be unique on (${keyCols.mkString(", ")}) — " +
           s"$n rows but $nk distinct keys")
     }
-    // the batch is read by two writes (its segment and the tombstone
-    // fold): cached while this runs, unless the caller already cached it
-    def checkAndWrite(): Long = {
-      import scala.jdk.CollectionConverters._
-      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val existing = existingDirs(fs, root, table +: delKey(table) +: replaces.keys.toSeq)
-      // ALL data writes of this commit (replaced tables, the batch
-      // segment, the tombstone fold) are independent — staged as thunks
-      // below and run as ONE pool of concurrent jobs (see [[commit]]).
-      // Entry keys cannot collide: replaces excludes `table`, and
-      // tombstone-shadow keys carry '~' which committable names reject.
-      val writeJobs = Seq.newBuilder[() => (String, String)]
-      replaces.foreach { case (t, df) =>
-        writeJobs += (() => t -> writeData(spark, root, t, df, onSegment = started.add))
-      }
-      baseRels.get(table) match {
+    def run(): Long = operation(spark, root, expectBase = expectBase) { op =>
+      upserts.foreach(requireStoredTypes(spark, root, op.rels, table, _, "applyChanges", "an upsert"))
+      // every write of this commit (replaced tables, the batch segment,
+      // the tombstone fold) is independent. Entry keys cannot collide:
+      // replaces excludes `table`, and tombstone-shadow keys carry '~'
+      // which committable names reject.
+      val changes: Map[String, DataFrame] = op.rels.get(table) match {
         case None =>
           // first ingest: create the table from the batch — no prior
           // segments to suppress, so upsert keys need NO tombstones
@@ -976,72 +1067,37 @@ object Snapshot {
           // ([[shadowedKeys]]); deletes without any batch anchor an
           // empty key-schema segment so the shadow has a table to
           // shadow (later appends widen the schema).
-          val dataDf = upserts.orElse(deleteKeys.map(_.limit(0)))
-          dataDf.foreach { df =>
-            val data = if (upserts.isDefined) keyChecked(df) else df
-            writeJobs += (() => table ->
-              writeData(spark, root, table, data, statsCols, bloomCols, bloomBits, started.add))
-            deleteKeys.foreach { d =>
-              writeJobs += (() => delKey(table) -> writeData(spark, root,
-                delKey(table), d.distinct().withColumn(CovCol, lit(Long.MaxValue)),
-                onSegment = started.add))
-            }
+          upserts.map(keyChecked).orElse(deleteKeys.map(_.limit(0))).fold(Map.empty[String, DataFrame]) {
+            data => Map(table -> data) ++ deleteKeys.map(d =>
+              delKey(table) -> d.distinct().withColumn(CovCol, lit(Long.MaxValue)))
           }
         case Some(rel) if upserts.isDefined || deleteKeys.isDefined =>
-          // ONE aggregate folds the shadow and checks the upsert keys: per
-          // key, the largest cov among this commit's keys (upserts
-          // nSegs, deletes MaxValue — a key in both ends deleted) replaces
-          // the key's prior tombstones; untouched keys keep theirs. A key
-          // with two upsert rows, or a NULL key among them, raises.
-          val nSegs = relDirs(rel).length.toLong
-          val src = "__graft_src"
-          val prior = tombstoneRows(spark, root, baseRels, table).map { p =>
-            val priorKeys = p.columns.filterNot(_ == CovCol).toSeq
-            require(priorKeys.sorted == keyCols.sorted,
-              s"snapshot applyChanges: key columns ${keyCols.mkString(",")} differ " +
-                s"from the table's prior tombstones (${priorKeys.mkString(",")}) — " +
-                "compact the table before changing keys")
-            p.select(keyCols.map(col) :+ col(CovCol): _*).withColumn(src, lit(0))
-          }
-          val up = upserts.map(_.select(keyCols.map(col): _*)
-            .withColumn(CovCol, lit(nSegs)).withColumn(src, lit(1)))
-          val del = deleteKeys.map(_.withColumn(CovCol, lit(Long.MaxValue)).withColumn(src, lit(2)))
-          val folded = {
-            import org.apache.spark.sql.functions.{coalesce, count, max, raise_error, when}
-            Seq(prior, up, del).flatten.reduce(_.unionByName(_))
-              .groupBy(keyCols.map(col): _*)
-              .agg(max(when(col(src) > 0, col(CovCol))).as("__new"),
-                max(when(col(src) === 0, col(CovCol))).as("__old"),
-                count(when(col(src) === 1, 1)).as("__ups"))
-              .select(keyCols.map(col) :+
-                when(col("__ups") > 1 ||
-                    (col("__ups") > 0 && keyCols.map(col(_).isNull).reduce(_ || _)),
-                  raise_error(lit(badKeys)))
-                  .otherwise(coalesce(col("__new"), col("__old"))).as(CovCol): _*)
-          }
-          upserts.foreach { bp =>
-            writeJobs += (() => table ->
-              s"$rel,${writeData(spark, root, table, bp, statsCols, bloomCols, bloomBits, started.add)}")
-          }
-          writeJobs += (() => delKey(table) ->
-            writeData(spark, root, delKey(table), folded, onSegment = started.add))
-        case Some(_) => ()
+          val fold = foldShadow(spark, root, op.rels, table, keyCols, deleteKeys,
+            upserts.map(_ -> relDirs(rel).length.toLong),
+            prior => s"snapshot applyChanges: key columns ${keyCols.mkString(",")} differ " +
+              s"from the table's prior tombstones (${prior.mkString(",")}) — " +
+              "compact the table before changing keys")
+          upserts.map(table -> _).toMap + (delKey(table) -> fold)
+        case Some(_) => Map.empty
       }
-      val jobs = writeJobs.result()
-      require(jobs.nonEmpty,
+      require((replaces ++ changes).nonEmpty,
         "snapshot applyChanges: nothing to commit (no upserts, deletes, or replaces)")
-      val entries =
-        try graft.operators.Par.inParallel(jobs).toMap
+      val written =
+        try op.writeTables(replaces ++ changes, Map(table -> statsCols),
+          Map(table -> bloomCols), bloomBits)
         catch {
-          case e: Throwable =>
-            discardSegments(fs, root, started.asScala.toSeq, existing)
-            if (Upsert.causes(e).exists(c => Option(c.getMessage).exists(_.contains(badKeys))))
-              upserts.foreach(requireKeys)
+          case e: Throwable
+              if Upsert.causes(e).exists(c => Option(c.getMessage).exists(_.contains(badKeys))) =>
+            upserts.foreach(requireKeys)
             throw e
         }
-      commitManifest(fs, root, entries, Some(pinnedBase))
+      val appended = for (rel <- op.rels.get(table); seg <- written.get(table))
+        yield table -> s"$rel,$seg"
+      Publish(written ++ appended)
     }
-    upserts.fold(checkAndWrite())(Upsert.cachedWhileIn(_)(checkAndWrite()))
+    // the batch is read by two writes (its segment and the tombstone
+    // fold): cached while this runs, unless the caller already cached it
+    upserts.fold(run())(Upsert.cachedWhileIn(_)(run()))
   }
 
   /** RIGHT-TO-BE-FORGOTTEN: key-level erasure across SEVERAL tables in
@@ -1052,8 +1108,9 @@ object Snapshot {
     * between versions sees orders without their customer. Here every
     * table's tombstone shadow (cov = MaxValue — erasure outlives future
     * appends, the deleteWhere contract, prior shadows folded the same
-    * way) is staged first and a single manifest CAS publishes them all:
-    * readers see the subject fully present or fully gone, never partial.
+    * way, [[foldShadow]]) is staged first and a single manifest CAS
+    * publishes them all: readers see the subject fully present or fully
+    * gone, never partial.
     *
     * `deletes` maps table → (keyCols, key frame). Key frames are
     * DataFrames, not driver-side lists — the victim key set flows
@@ -1067,38 +1124,21 @@ object Snapshot {
       expectBase: Option[Long] = None): Long = {
     require(deletes.nonEmpty, "snapshot forgetKeys: no tables given")
     deletes.keys.foreach(requireCommittableName)
-    import org.apache.spark.sql.functions.{col, lit}
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    expectBase.foreach { e =>
-      val baseV = base.map(_._1).getOrElse(0L)
-      if (baseV != e) throw new IllegalStateException(
-        s"snapshot commit conflict at $root: expected base version $e, found $baseV")
-    }
-    val pinnedBase = expectBase.getOrElse(base.map(_._1).getOrElse(0L))
-    val baseRels = base.map(_._2).getOrElse(Map.empty)
-    val updates = deletes.map { case (table, (keyCols, keys)) =>
-      require(keyCols.nonEmpty, s"snapshot forgetKeys: no key columns for '$table'")
-      require(baseRels.contains(table),
-        s"snapshot forgetKeys: no table '$table' at $root")
-      require(keys.columns.toSeq == keyCols,
-        s"snapshot forgetKeys: key frame columns ${keys.columns.mkString(",")} " +
-          s"must be exactly the key columns ${keyCols.mkString(",")} for '$table'")
-      val newTomb = keys.distinct().withColumn(CovCol, lit(Long.MaxValue))
-      val folded = tombstoneKeys(spark, root, baseRels, table) match {
-        case None => newTomb
-        case Some(prior) =>
-          val priorKeys = prior.columns.filterNot(_ == CovCol).toSeq
-          require(priorKeys.sorted == keyCols.sorted,
-            s"snapshot forgetKeys: key columns ${keyCols.mkString(",")} differ " +
-              s"from table '$table''s prior tombstones (${priorKeys.mkString(",")}) — " +
-              "compact the table before changing keys")
-          prior.join(newTomb.select(keyCols.map(col): _*), keyCols, "left_anti")
-            .unionByName(newTomb)
+    operation(spark, root, expectBase = expectBase) { op =>
+      val shadows = deletes.map { case (table, (keyCols, keys)) =>
+        require(keyCols.nonEmpty, s"snapshot forgetKeys: no key columns for '$table'")
+        require(op.rels.contains(table),
+          s"snapshot forgetKeys: no table '$table' at $root")
+        require(keys.columns.toSeq == keyCols,
+          s"snapshot forgetKeys: key frame columns ${keys.columns.mkString(",")} " +
+            s"must be exactly the key columns ${keyCols.mkString(",")} for '$table'")
+        delKey(table) -> foldShadow(spark, root, op.rels, table, keyCols, Some(keys), None,
+          prior => s"snapshot forgetKeys: key columns ${keyCols.mkString(",")} differ " +
+            s"from table '$table''s prior tombstones (${prior.mkString(",")}) — " +
+            "compact the table before changing keys")
       }
-      delKey(table) -> writeData(spark, root, delKey(table), folded)
+      Publish(op.writeTables(shadows))
     }
-    commitManifest(fs, root, updates, Some(pinnedBase))
   }
 
   /** Fold an append-table's segments back into one dir (a new version;
@@ -1108,18 +1148,13 @@ object Snapshot {
     * resolved INTO the rewrite and cleared from the manifest — after a
     * compaction the deletes are physical and the keys re-insertable. */
   def compactTable(spark: SparkSession, root: String, table: String,
-      statsCols: Seq[String] = Seq.empty): Long = {
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    val baseRels = base.map(_._2).getOrElse(Map.empty)
-    if (!baseRels.contains(table))
-      throw new IllegalArgumentException(s"snapshot compact: no table '$table' at $root")
-    val resolved = readResolved(spark, root, baseRels, table)
-    val folded = writeData(spark, root, table, resolved, statsCols)
-    commitManifest(fs, root, Map(table -> folded),
-      expectBase = Some(base.map(_._1).getOrElse(0L)),
-      removals = Set(delKey(table)))
-  }
+      statsCols: Seq[String] = Seq.empty): Long =
+    operation(spark, root) { op =>
+      if (!op.rels.contains(table))
+        throw new IllegalArgumentException(s"snapshot compact: no table '$table' at $root")
+      val folded = op.writeData(table, readResolved(spark, root, op.rels, table), statsCols)
+      Publish(Map(table -> folded), Set(delKey(table)))
+    }
 
   /** O(1) SHALLOW CLONE: `dstTable` becomes a new table whose manifest
     * entry references `srcTable`'s IMMUTABLE segments — one manifest
@@ -1138,18 +1173,14 @@ object Snapshot {
       dstTable: String): Long = {
     requireCommittableName(srcTable)
     requireCommittableName(dstTable)
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    val rels = base.map(_._2).getOrElse(Map.empty)
-    val rel = rels.getOrElse(srcTable,
-      throw new IllegalArgumentException(
-        s"snapshot clone: no table '$srcTable' at $root"))
-    require(!rels.contains(dstTable),
-      s"snapshot clone: table '$dstTable' already exists at $root")
-    val updates = Map(dstTable -> rel) ++
-      rels.get(delKey(srcTable)).map(delKey(dstTable) -> _)
-    commitManifest(fs, root, updates,
-      expectBase = Some(base.map(_._1).getOrElse(0L)))
+    operation(spark, root) { op =>
+      val rel = op.rels.getOrElse(srcTable,
+        throw new IllegalArgumentException(
+          s"snapshot clone: no table '$srcTable' at $root"))
+      require(!op.rels.contains(dstTable),
+        s"snapshot clone: table '$dstTable' already exists at $root")
+      Publish(Map(dstTable -> rel) ++ op.rels.get(delKey(srcTable)).map(delKey(dstTable) -> _))
+    }
   }
 
   /** INCREMENTAL small-file OPTIMIZE: bin-pack only the segments whose
@@ -1172,34 +1203,33 @@ object Snapshot {
       targetBytes: Long, statsCols: Seq[String] = Seq.empty): Long = {
     require(targetBytes > 0, "snapshot optimize: targetBytes must be positive")
     val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    val baseRels = base.map(_._2).getOrElse(Map.empty)
-    val rel = baseRels.getOrElse(table,
-      throw new IllegalArgumentException(s"snapshot optimize: no table '$table' at $root"))
-    require(!baseRels.contains(delKey(table)),
-      s"snapshot optimize: table '$table' has live tombstone shadows — " +
-        "fold deletes with compactTable before bin-packing segments")
-    def dataBytes(seg: String): Long =
-      fs.listStatus(new Path(root, seg)).iterator
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(_.getLen).sum
-    val segs = relDirs(rel)
-    val (small, big) = segs.partition(dataBytes(_) < targetBytes)
-    if (small.size < 2) return base.map(_._1).getOrElse(0L)
-    // union the small segments at their sidecar schemas (NULL-backfill
-    // across evolution steps, same contract as the read path), then
-    // bin-pack into ceil(bytes/target) files
-    val smallBytes = small.map(dataBytes).sum
-    val files = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
-    val parts = small.map { seg =>
-      spark.read.schema(mergedSchema(spark, root, seg))
-        .parquet(new Path(root, seg).toString)
+    operation(spark, root) { op =>
+      val rel = op.rels.getOrElse(table,
+        throw new IllegalArgumentException(s"snapshot optimize: no table '$table' at $root"))
+      require(!op.rels.contains(delKey(table)),
+        s"snapshot optimize: table '$table' has live tombstone shadows — " +
+          "fold deletes with compactTable before bin-packing segments")
+      def dataBytes(seg: String): Long =
+        fs.listStatus(new Path(root, seg)).iterator
+          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+            !s.getPath.getName.startsWith("."))
+          .map(_.getLen).sum
+      val (small, big) = relDirs(rel).partition(dataBytes(_) < targetBytes)
+      if (small.size < 2) Unchanged
+      else {
+        // union the small segments at their sidecar schemas (NULL-backfill
+        // across evolution steps, same contract as the read path), then
+        // bin-pack into ceil(bytes/target) files
+        val smallBytes = small.map(dataBytes).sum
+        val files = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
+        val union = small.map { seg =>
+          spark.read.schema(mergedSchema(spark, root, seg))
+            .parquet(new Path(root, seg).toString)
+        }.reduce(_.unionByName(_, allowMissingColumns = true))
+        val packed = op.writeData(table, union.repartition(files), statsCols)
+        Publish(Map(table -> (big :+ packed).mkString(",")))
+      }
     }
-    val union = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    val packed = writeData(spark, root, table, union.repartition(files), statsCols)
-    commitManifest(fs, root, Map(table -> (big :+ packed).mkString(",")),
-      expectBase = Some(base.map(_._1).getOrElse(0L)))
   }
 
   /** ROLLBACK: publish a NEW version whose contents are exactly those of
@@ -1219,19 +1249,18 @@ object Snapshot {
     * replaced-or-compacted error (by design — the feed covers
     * append/delete/upsert history only); change-feed consumers re-seed
     * from the rollback version, exactly as after a [[compactTable]]. */
-  def rollbackTo(spark: SparkSession, root: String, version: Long): Long = {
-    val fs = fsOf(spark, root)
-    val target = relsAt(spark, root, version)
-    require(!target.contains(BranchKey),
-      s"snapshot rollback: version $version at $root is a branch commit — " +
-        "roll back to main-chain versions only (mergeBranch publishes a branch)")
-    val head = current(fs, root).getOrElse(throw new IllegalStateException(
-      s"snapshot rollback: no committed main version at $root"))
-    require(version <= head._1,
-      s"snapshot rollback: version $version is ahead of the head ${head._1} at $root")
-    commitManifest(fs, root, target, expectBase = Some(head._1),
-      removals = head._2.keySet -- target.keySet)
-  }
+  def rollbackTo(spark: SparkSession, root: String, version: Long): Long =
+    operation(spark, root) { op =>
+      val target = relsAt(spark, root, version)
+      require(!target.contains(BranchKey),
+        s"snapshot rollback: version $version at $root is a branch commit — " +
+          "roll back to main-chain versions only (mergeBranch publishes a branch)")
+      val (headV, headRels) = op.head.getOrElse(throw new IllegalStateException(
+        s"snapshot rollback: no committed main version at $root"))
+      require(version <= headV,
+        s"snapshot rollback: version $version is ahead of the head $headV at $root")
+      Publish(target, headRels.keySet -- target.keySet)
+    }
 
   /** MERGE-style upsert of several staged tables in ONE atomic commit —
     * the reference's single-transaction four-table load. Each stage
@@ -1245,35 +1274,32 @@ object Snapshot {
     * after it. The per-table writes run as CONCURRENT jobs (the shape of
     * [[commit]]); if one fails (a duplicate stage key throws the exact
     * `IllegalArgumentException` of [[Upsert.requireUniqueKeys]]), its
-    * siblings' jobs are cancelled, nothing is published, and the written
-    * data dirs stay unreferenced. The stage is read once and never cached
-    * here; a stage the caller persisted stays cached. Fails without
-    * publishing if another writer commits concurrently. */
+    * siblings' jobs are cancelled, nothing is published, and every data
+    * dir the load wrote is deleted — the root's listing is as it was.
+    * The stage is read once and never cached here; a stage the caller
+    * persisted stays cached. Fails without publishing if another writer
+    * commits concurrently. */
   def mergeCommit(spark: SparkSession, root: String,
       stages: Map[String, (DataFrame, Seq[String])],
       statsCols: Map[String, Seq[String]] = Map.empty): (Long, Map[String, MergeStats]) = {
     require(stages.nonEmpty, "snapshot mergeCommit: no tables given")
     stages.keys.foreach(requireCommittableName)
-    val fs = fsOf(spark, root)
-    val base = current(fs, root)
-    val baseTables = base.map(_._2).getOrElse(Map.empty)
-    val merged = graft.operators.Par.inParallel(stages.toSeq.map {
-      case (t, (stage, keys)) => () =>
+    var stats = Map.empty[String, MergeStats]
+    val v = operation(spark, root) { op =>
+      val merged = op.concurrently(stages.toSeq.map { case (t, (stage, keys)) => () =>
         // merge against the RESOLVED view: tombstoned rows are gone and
         // stay gone (the rewrite below also clears the tombstones)
-        val existing =
-          if (baseTables.contains(t)) Some(readResolved(spark, root, baseTables, t))
-          else None
-        val (rel, stats) = Upsert.writeMerge(existing, stage, keys)(
-          writeData(spark, root, t, _, statsCols.getOrElse(t, Seq.empty)))
-        (t, rel, stats)
-    })
-    val v = commitManifest(fs, root,
-      merged.map { case (t, rel, _) => t -> rel }.toMap,
-      expectBase = Some(base.map(_._1).getOrElse(0L)),
-      removals = stages.keySet.map(delKey))
-    (v, merged.map { case (t, _, s) => t -> s }.toMap)
+        val existing = op.rels.get(t).map(_ => readResolved(spark, root, op.rels, t))
+        val (rel, s) = Upsert.writeMerge(existing, stage, keys)(
+          op.writeData(t, _, statsCols.getOrElse(t, Seq.empty)))
+        (t, rel, s)
+      })
+      stats = merged.map { case (t, _, s) => t -> s }.toMap
+      Publish(merged.map { case (t, rel, _) => t -> rel }.toMap, stages.keySet.map(delKey))
+    }
+    (v, stats)
   }
+
 
   /** Drop all but the newest `keepLast` complete versions: older commit
     * files and every data directory no retained version references.
@@ -1383,8 +1409,11 @@ object Snapshot {
   /** Newest complete manifest of a LIVE branch (None once dropped). */
   private def branchHead(fs: FileSystem, root: String,
       branch: String): Option[(Long, Map[String, String])] =
-    chainHead(fs, root, Some(branch))
-      .filterNot(_._2.contains(BranchDroppedKey))
+    chainHead(fs, root, Some(branch)).filterNot(dropped)
+
+  /** Whether a branch chain head carries the dropped marker. */
+  private def dropped(head: (Long, Map[String, String])): Boolean =
+    head._2.contains(BranchDroppedKey)
 
   private def requireBranchName(branch: String): Unit =
     require(branch.nonEmpty && branch != "main" &&
@@ -1420,20 +1449,18 @@ object Snapshot {
   def createBranch(spark: SparkSession, root: String, branch: String): Long = {
     requireBranchName(branch)
     val fs = fsOf(spark, root)
-    require(branchHead(fs, root, branch).isEmpty,
-      s"snapshot: branch '$branch' already exists at $root")
-    val base = current(fs, root)
-    val baseV = base.map(_._1).getOrElse(0L)
-    // the branch chain's base is its own newest manifest — after a drop
-    // that manifest carries the dropped marker and stale fork-state; a
-    // re-created branch must fork CLEANLY from main's head, so the new
-    // manifest replaces every entry and clears the marker
-    val priorKeys = chainHead(fs, root, Some(branch))
-      .map(_._2.keySet).getOrElse(Set.empty)
-    val fork = base.map(_._2).getOrElse(Map.empty) ++
-      Map(BranchKey -> branch, BranchBaseKey -> baseV.toString)
-    commitManifestOn(fs, root, Some(branch), fork,
-      expectBase = None, removals = priorKeys -- fork.keySet)
+    operation(spark, root, chain = Some(branch)) { op =>
+      require(op.head.forall(dropped),
+        s"snapshot: branch '$branch' already exists at $root")
+      val main = current(fs, root)
+      // the branch chain's base is its own newest manifest — after a drop
+      // that manifest carries the dropped marker and stale fork-state; a
+      // re-created branch must fork CLEANLY from main's head, so the new
+      // manifest replaces every entry and clears the marker
+      val fork = main.map(_._2).getOrElse(Map.empty) ++
+        Map(BranchKey -> branch, BranchBaseKey -> main.map(_._1).getOrElse(0L).toString)
+      Publish(fork, op.rels.keySet -- fork.keySet)
+    }
   }
 
   /** Table → absolute data path(s) at `branch`'s head (the [[tables]]
@@ -1477,16 +1504,11 @@ object Snapshot {
     require(newTables.nonEmpty, "snapshot commitBranch: no tables given")
     newTables.keys.foreach(requireCommittableName)
     requireBranchName(branch)
-    val fs = fsOf(spark, root)
-    val head = branchHead(fs, root, branch).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no branch '$branch' at $root — createBranch first"))
-    val written = newTables.map { case (t, df) =>
-      t -> writeData(spark, root, t, df, statsCols.getOrElse(t, Seq.empty))
+    operation(spark, root, chain = Some(branch)) { op =>
+      if (op.head.forall(dropped)) throw new IllegalArgumentException(
+        s"snapshot: no branch '$branch' at $root — createBranch first")
+      Publish(op.writeTables(newTables, statsCols), newTables.keySet.map(delKey))
     }
-    commitManifestOn(fs, root, Some(branch), written,
-      expectBase = Some(head._1),
-      removals = newTables.keySet.map(delKey))
   }
 
   /** FAST-FORWARD publish: make `branch`'s head the new MAIN head — the
@@ -1499,25 +1521,21 @@ object Snapshot {
     * main version. */
   def mergeBranch(spark: SparkSession, root: String, branch: String): Long = {
     requireBranchName(branch)
-    val fs = fsOf(spark, root)
-    val (headV, headM) = branchHead(fs, root, branch).getOrElse(
+    val (headV, headM) = branchHead(fsOf(spark, root), root, branch).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot: no branch '$branch' at $root"))
     val forkBase = headM.get(BranchBaseKey).map(_.toLong).getOrElse(
       throw new IllegalStateException(
         s"snapshot: branch '$branch' head v$headV lacks a fork-base record"))
-    val mainNow = current(fs, root)
-    val mainV = mainNow.map(_._1).getOrElse(0L)
-    if (mainV != forkBase) throw new IllegalStateException(
-      s"snapshot mergeBranch conflict at $root: branch '$branch' forked from " +
-        s"main v$forkBase but main is now v$mainV — re-fork and re-apply")
-    val mainMap = mainNow.map(_._2).getOrElse(Map.empty)
-    val branchMap = headM - BranchKey - BranchBaseKey - BranchDroppedKey
-    // entries main holds that the branch dropped (e.g. tombstone shadows
-    // cleared by a branch replace) must not resurrect through the merge
-    commitManifestOn(fs, root, None, branchMap,
-      expectBase = Some(forkBase),
-      removals = mainMap.keySet -- branchMap.keySet)
+    operation(spark, root) { op =>
+      if (op.version != forkBase) throw new IllegalStateException(
+        s"snapshot mergeBranch conflict at $root: branch '$branch' forked from " +
+          s"main v$forkBase but main is now v${op.version} — re-fork and re-apply")
+      val branchMap = headM - BranchKey - BranchBaseKey - BranchDroppedKey
+      // entries main holds that the branch dropped (e.g. tombstone shadows
+      // cleared by a branch replace) must not resurrect through the merge
+      Publish(branchMap, op.rels.keySet -- branchMap.keySet)
+    }
   }
 
   /** Delete a branch: its head stops resolving, its manifests and any
@@ -1525,60 +1543,13 @@ object Snapshot {
     * abandoned-audit half of write-audit-publish. */
   def dropBranch(spark: SparkSession, root: String, branch: String): Long = {
     requireBranchName(branch)
-    val fs = fsOf(spark, root)
-    val head = branchHead(fs, root, branch).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no branch '$branch' at $root"))
-    commitManifestOn(fs, root, Some(branch),
-      Map(BranchDroppedKey -> ""), expectBase = Some(head._1))
-  }
-
-  /** Write `df` to a fresh immutable data dir; returns the relative path
-    * (not yet visible to readers — only a manifest makes it so). With
-    * `statsCols` nonempty a per-FILE min/max sidecar is derived and
-    * written into the dir before it becomes visible — the data-skipping
-    * layer next to Hive partitioning and Z-order (which cluster; this
-    * PRUNES). Costs one extra scan of the newly written data at commit
-    * time — O(batch), never O(table). */
-  private def writeData(spark: SparkSession, root: String, table: String,
-      df: DataFrame, statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty, bloomBits: Long = 1L << 20,
-      onSegment: String => Unit = _ => ()): String = {
-    // ',' joins segment dirs in manifest values, so names can't carry it
-    require(table.nonEmpty && !table.exists(c => c == '/' || c == '\t' || c == '\n' || c == ','),
-      s"snapshot: invalid table name '$table'")
-    val rel = s"$DataDir/$table/${UUID.randomUUID().toString}"
-    onSegment(rel)
-    df.write.parquet(new Path(root, rel).toString)
-    // record the written schema next to the data (still invisible):
-    // segment-list readers union these instead of sampling footers
-    SchemaSidecar.write(fsOf(spark, root), new Path(root, rel), df.schema)
-    if (statsCols.nonEmpty) writeStats(spark, root, rel, statsCols)
-    if (bloomCols.nonEmpty)
-      // bits/item ≈ 10 → ~1% fpp at capacity; both knobs scale together
-      writeBloom(spark, root, rel, bloomCols, (bloomBits / 10L).max(1L), bloomBits)
-    rel
-  }
-
-  /** Of `root`, its data dir and the data dirs of `tables`, the ones
-    * that exist now ([[discardSegments]] removes only dirs it created). */
-  private def existingDirs(fs: FileSystem, root: String, tables: Seq[String]): Set[Path] = {
-    val data = new Path(root, DataDir)
-    (new Path(root) +: data +: tables.map(new Path(data, _))).filter(fs.exists).toSet
-  }
-
-  /** Delete the unpublished segment dirs `rels` of a failed commit, then
-    * the parent dirs that did not exist before it (`existing`) and are
-    * empty again, deepest first — the root's listing is as it was. */
-  private def discardSegments(fs: FileSystem, root: String, rels: Seq[String],
-      existing: Set[Path]): Unit = {
-    rels.foreach(r => fs.delete(new Path(root, r), true))
-    val parents = rels.map(r => new Path(root, r).getParent).distinct ++
-      Seq(new Path(root, DataDir), new Path(root))
-    parents.filterNot(existing).foreach { p =>
-      Try(if (fs.listStatus(p).isEmpty) fs.delete(p, false))
+    operation(spark, root, chain = Some(branch)) { op =>
+      if (op.head.forall(dropped)) throw new IllegalArgumentException(
+        s"snapshot: no branch '$branch' at $root")
+      Publish(Map(BranchDroppedKey -> ""))
     }
   }
+
 
   /** Sidecar name: the underscore prefix makes Spark's parquet reader
     * treat it as a hidden file, so data reads never see it. */
@@ -2247,32 +2218,6 @@ object Snapshot {
     * slot to complete before giving up (overridable for tests). */
   private[graft] var claimWaitMs: Long = 30000L
 
-  /** Claim the next version slot with `updates` layered over the target
-    * chain's newest complete manifest — NEVER skipping an in-flight
-    * claim. Skipping past a TORN slot is the lost-update race: a slow
-    * writer holding slot N (file created, body still flushing — it
-    * parses as torn) would let us claim N+1 layered over a base that
-    * excludes N, permanently shadowing N's tables the moment it
-    * completes, even though both commits "succeeded". So while the
-    * NEWEST slot is torn we wait for its claimant to complete (our base
-    * then advances — `expectBase` callers abort as stale, blind callers
-    * retry on the new base). A claim that never completes (its writer
-    * crashed) blocks committers until `claimWaitMs`, then this throws —
-    * loud, not silent; [[vacuum]] sweeps the dead claim file and
-    * unblocks the slot.
-    *
-    * Version slots are GLOBAL across main and every branch (one
-    * monotone sequence — what makes any committed version addressable
-    * by [[readAt]]); each chain's base/expectBase arithmetic sees only
-    * its own manifests, so a complete other-chain manifest above our
-    * head is simply claimed past, while a torn one is waited on like
-    * any in-flight claim. On a branchless root every slot is main and
-    * this degenerates to exactly the old claim-baseV+1 protocol. */
-  private def commitManifest(fs: FileSystem, root: String,
-      updates: Map[String, String], expectBase: Option[Long],
-      removals: Set[String] = Set.empty): Long =
-    commitManifestOn(fs, root, None, updates, expectBase, removals)
-
   /** Newest COMPLETE manifest of `branch`'s chain (None = main), with
     * its RESOLVED table map. Unlike [[branchHead]] this sees dropped
     * heads — the raw chain lookup. Branch resolution rides the
@@ -2300,6 +2245,27 @@ object Snapshot {
         raw.map { case (v, m) => v -> resolveManifest(fs, root, m) }
     }
 
+  /** Claim the next version slot with `updates` layered over the target
+    * chain's newest complete manifest — NEVER skipping an in-flight
+    * claim. Skipping past a TORN slot is the lost-update race: a slow
+    * writer holding slot N (file created, body still flushing — it
+    * parses as torn) would let us claim N+1 layered over a base that
+    * excludes N, permanently shadowing N's tables the moment it
+    * completes, even though both commits "succeeded". So while the
+    * NEWEST slot is torn we wait for its claimant to complete (our base
+    * then advances — `expectBase` callers abort as stale, blind callers
+    * retry on the new base). A claim that never completes (its writer
+    * crashed) blocks committers until `claimWaitMs`, then this throws —
+    * loud, not silent; [[vacuum]] sweeps the dead claim file and
+    * unblocks the slot.
+    *
+    * Version slots are GLOBAL across main and every branch (one
+    * monotone sequence — what makes any committed version addressable
+    * by [[readAt]]); each chain's base/expectBase arithmetic sees only
+    * its own manifests, so a complete other-chain manifest above our
+    * head is simply claimed past, while a torn one is waited on like
+    * any in-flight claim. On a branchless root every slot is main and
+    * this degenerates to exactly the old claim-baseV+1 protocol. */
   private def commitManifestOn(fs: FileSystem, root: String,
       branch: Option[String], updates: Map[String, String],
       expectBase: Option[Long],
@@ -2312,11 +2278,7 @@ object Snapshot {
         case None => mainHead
         case _ => chainHead(fs, root, branch)
       }
-      val baseV = base.map(_._1).getOrElse(0L)
-      expectBase.foreach { e =>
-        if (baseV != e) throw new IllegalStateException(
-          s"snapshot commit conflict at $root: expected base version $e, found $baseV")
-      }
+      expectBase.foreach(requireBase(root, _, base.map(_._1).getOrElse(0L)))
       val merged = (base.map(_._2).getOrElse(Map.empty) ++ updates) -- removals
       // Raw manifest body: a DELTA against the chain's last FULL
       // manifest when the cumulative diff fits the budget — so a

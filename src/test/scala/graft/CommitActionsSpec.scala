@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path => JPath}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
-import graft.operators.{IndexFamily, IndexLifecycle, IndexTable, TextIndex}
+import graft.operators.{IndexFamily, IndexLifecycle, IndexTable, TextIndex, Upsert}
 import graft.sources.{Replica, Snapshot}
 
 /** The small lifecycle commits run their writes and nothing around them:
@@ -180,5 +180,74 @@ class CommitActionsSpec extends SparkSpec {
     assert(ex2.getMessage == nullMsg)
     assert(listing(dst) == before)
     assert(Replica.cursor(spark, dst).contains(1L))
+  }
+
+  test("every write kind that fails leaves the root's listing as it was and rethrows its failure") {
+    val root = freshRoot()
+    Snapshot.commit(spark, root, Map("t" -> docs((1L, "a"), (2L, "b"))))
+    Snapshot.deleteWhere(spark, root, "t", col("id") === 1L, Seq("id"))
+    // three small segments for optimizeTable to pack; `flag` has no
+    // stats type, so the stats sidecar of a rewrite fails after its write
+    val flagged = Seq((1L, true)).toDF("id", "flag")
+    Snapshot.commit(spark, root, Map("o" -> flagged))
+    Snapshot.commitAppend(spark, root, Map("o" -> flagged))
+    Snapshot.commitAppend(spark, root, Map("o" -> flagged))
+    Snapshot.createBranch(spark, root, "b")
+    // a frame whose last row raises inside its task
+    def raising(c: String) = spark.range(1L, 4L).select(col("id"),
+      when(col("id") === 3L, raise_error(lit("boom"))).otherwise(lit("v")).as(c))
+    val bad = raising("v")
+    val badKeys = spark.range(1L, 4L)
+      .select(when(col("id") === 3L, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    val stale = Some(0L)
+    val boom = (e: Throwable) => Upsert.causes(e).exists(c => Option(c.getMessage).exists(_.contains("boom")))
+    val conflict = (e: Throwable) => e.getMessage.startsWith(s"snapshot commit conflict at $root")
+    val badStats = (e: Throwable) => e.getMessage.contains("column 'flag' has unsupported type boolean")
+    Seq[(String, () => Any, Throwable => Boolean)](
+      ("commit", () => Snapshot.commit(spark, root, Map("t" -> bad, "n" -> docs((9L, "z")))), boom),
+      // blind, so its conflict is found at publish, after its write
+      ("commit at a stale base", () => Snapshot.commit(spark, root, Map("n" -> docs((9L, "z"))),
+        expectBase = stale), conflict),
+      ("commitAppend", () => Snapshot.commitAppend(spark, root, Map("t" -> bad),
+        replaces = Map("n" -> docs((9L, "z")))), boom),
+      ("forgetKeys", () => Snapshot.forgetKeys(spark, root, Map("t" -> (Seq("id"), badKeys))), boom),
+      ("compactTable", () => Snapshot.compactTable(spark, root, "o", statsCols = Seq("flag")), badStats),
+      ("optimizeTable", () => Snapshot.optimizeTable(spark, root, "o", 1L << 30,
+        statsCols = Seq("flag")), badStats),
+      ("mergeCommit", () => Snapshot.mergeCommit(spark, root,
+        Map("t" -> (bad, Seq("id")), "n" -> (docs((9L, "z")), Seq("id")))), boom),
+      ("commitBranch", () => Snapshot.commitBranch(spark, root, "b",
+        Map("t" -> bad, "n" -> docs((9L, "z")))), boom)
+    ).foreach { case (kind, write, expected) =>
+      val before = listing(root)
+      val head = Snapshot.currentVersion(spark, root)
+      val ex = intercept[Throwable](write())
+      assert(expected(ex), s"$kind: $ex")
+      assert(listing(root) == before, kind)
+      assert(Snapshot.currentVersion(spark, root) == head, kind)
+    }
+    // the compare-and-swap kinds fail on a stale base before any write
+    Seq[(String, () => Any)](
+      ("commitAppend", () => Snapshot.commitAppend(spark, root, Map("t" -> docs((5L, "e"))),
+        expectBase = stale)),
+      ("deleteWhere", () => Snapshot.deleteWhere(spark, root, "t", col("id") === 2L, Seq("id"),
+        expectBase = stale)),
+      ("upsertMergeOnRead", () => Snapshot.upsertMergeOnRead(spark, root, "t", docs((5L, "e")),
+        Seq("id"), expectBase = stale)),
+      ("applyChanges", () => Snapshot.applyChanges(spark, root, "t", Seq("id"), None,
+        Some(Seq(2L).toDF("id")), expectBase = stale)),
+      ("forgetKeys", () => Snapshot.forgetKeys(spark, root,
+        Map("t" -> (Seq("id"), Seq(2L).toDF("id"))), expectBase = stale))
+    ).foreach { case (kind, write) =>
+      val before = listing(root)
+      var ex: IllegalStateException = null
+      val actions = Actions.sqlActions(spark) { ex = intercept[IllegalStateException](write()) }
+      val head = Snapshot.currentVersion(spark, root).get
+      assert(ex.getMessage ==
+        s"snapshot commit conflict at $root: expected base version 0, found $head", kind)
+      assert(actions.isEmpty, s"$kind: $actions")
+      assert(listing(root) == before, kind)
+    }
+    assert(Snapshot.read(spark, root, "t").as[(Long, String)].collect().toSet == Set((2L, "b")))
   }
 }

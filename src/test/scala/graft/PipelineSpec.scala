@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 /** Golden end-to-end run on reference-layout CSVs ([[RefCsvFixture]],
   * shaped like the reference input) asserting the invariants in
   * FIXTURES.md §A. */
@@ -209,7 +211,17 @@ class PipelineSpec extends SparkSpec {
     val head = graft.sources.Snapshot.currentVersion(spark, root)
     def snapshot = tables.map(t => rows(graft.sources.Snapshot.read(spark, root, t)))
     val published = snapshot
+    // every path under the root, dirs included: the failed load's
+    // written data dirs must be gone, not merely unreferenced
+    def listing = {
+      val r = Paths.get(root)
+      val w = Files.walk(r)
+      try w.iterator().asScala.map(p => r.relativize(p).toString).toList.sorted
+      finally w.close()
+    }
+    val files = listing
     intercept[IllegalArgumentException](Pipeline.runTransactional(spark, resent, txOut))
+    assert(listing == files, "runTransactional left files of a failed load in the root")
     assert(graft.sources.Snapshot.currentVersion(spark, root) == head)
     assert(snapshot == published, "runTransactional published part of a failed load")
     assert(sc.getPersistentRDDs.size <= cached,

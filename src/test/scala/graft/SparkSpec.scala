@@ -1,12 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM per `sbt test` fork). */
-trait SparkSpec extends AnyFunSuite {
+/** Shared local SparkSession for all suites (one JVM per `sbt test` fork).
+  * Each suite's teardown deletes the session's query scratch. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlImplicits = spark.implicits
+
+  override def afterAll(): Unit =
+    try SparkSpec.releaseScratch() finally super.afterAll()
 }
 
 object SparkSpec {
@@ -18,6 +23,7 @@ object SparkSpec {
   private var cached: SparkSession = _
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
+      releaseScratch()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       cached = SparkSession.builder()
@@ -31,5 +37,10 @@ object SparkSpec {
       cached.sparkContext.setLogLevel("WARN")
     }
     cached
+  }
+
+  /** Deletes the scratch of the session built last, if any was built. */
+  def releaseScratch(): Unit = synchronized {
+    if (cached != null) graft.model.Tables.releaseScratch(cached)
   }
 }

@@ -106,26 +106,51 @@ object Snapshot {
       .sortBy(-_._1)
   }
 
-  /** Parse a manifest file; None if torn (missing header or footer, or
-    * footer count disagreeing with the entries). */
+  // ---- FRAMED TEXT: the one codec of every commit-log and sidecar file --
+
+  /** A framed file: the `header` line, one line per body entry, then
+    * `END n` with n the number of body lines. Manifests, the checkpoint
+    * and the stats and bloom sidecars all use it; the footer count is
+    * what tells a complete file from a torn write. */
+  private def frame(header: String, lines: Seq[String]): String =
+    (header +: lines :+ s"END ${lines.size}").mkString("\n")
+
+  /** The body lines of framed `text`; None when torn: no `header`, no
+    * `END` footer, a footer count that disagrees with the body, or no
+    * text at all. Empty lines are ignored. */
+  private def unframe(text: String, header: String): Option[Seq[String]] = {
+    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
+    val body = lines.drop(1).dropRight(1)
+    val count = lines.lastOption.filter(_.startsWith("END "))
+      .flatMap(f => Try(f.drop(4).toLong).toOption)
+    if (lines.headOption.contains(header) && count.contains(body.size.toLong)) Some(body)
+    else None
+  }
+
+  /** The whole file as UTF-8 text; None when it cannot be read. */
+  private def readText(fs: FileSystem, p: Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, UTF_8.name()).mkString)
+      finally in.close()
+    } catch { case _: IOException => None }
+
+  /** Write `text` as `p`'s whole content. Without `overwrite` this is an
+    * atomic create that fails when `p` exists (the manifest claim). */
+  private def writeText(fs: FileSystem, p: Path, text: String, overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(UTF_8))
+    finally out.close()
+  }
+
+  /** Parse a manifest file; None if torn (see [[unframe]]), or if a body
+    * line is not a `table<TAB>rel` entry. */
   private def parseManifest(fs: FileSystem, p: Path): Option[Map[String, String]] = {
     manifestFileReads.incrementAndGet()
-    val text =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, UTF_8.name()).mkString
-        finally in.close()
-      } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != Header) return None
-    val footer = lines.last
-    if (!footer.startsWith("END ")) return None
-    val entries = lines.tail.init.map(_.split("\t", -1)).collect {
-      case Array(t, rel) => t -> rel
+    readText(fs, p).flatMap(unframe(_, Header)).flatMap { body =>
+      val entries = body.map(_.split("\t", -1)).collect { case Array(t, rel) => t -> rel }
+      if (entries.size == body.size) Some(entries.toMap) else None
     }
-    if (Try(footer.stripPrefix("END ").toLong).toOption.contains(entries.size.toLong))
-      Some(entries.toMap)
-    else None
   }
 
   /** Meta-entry marking a DELTA manifest; its value is the version of
@@ -159,22 +184,52 @@ object Snapshot {
     * to 1-in-~FullDeltaMax commits on a hot chain. */
   private val FullDeltaMax = 32
 
-  /** Resolve a raw manifest to its FULL table map: full manifests
-    * return as-is; a delta layers its entries over the full base named
-    * by [[DeltaBaseKey]] (one further read, never a chain walk). Throws
-    * if the base is missing/torn — [[vacuum]] always retains the full
-    * base of every retained delta, so this only fires on external
-    * tampering. */
+  /** The manifest reads of one call: each version's file, and each
+    * delta's full base, is read at most once however often the call asks
+    * (a change feed pairs every version with its predecessor, and a run
+    * of deltas shares one base). */
+  private final class Manifests(fs: FileSystem, root: String) {
+    private val parsed = scala.collection.mutable.Map.empty[Long, Option[Map[String, String]]]
+    private val resolved = scala.collection.mutable.Map.empty[Long, Map[String, String]]
+
+    /** Version `v`'s manifest as written; None if missing or torn. */
+    def parse(v: Long): Option[Map[String, String]] =
+      parsed.getOrElseUpdate(v, parseManifest(fs, manifestPath(root, v)))
+
+    /** Resolve a raw manifest to its FULL table map: full manifests
+      * return as-is; a delta layers its entries over the full base named
+      * by [[DeltaBaseKey]] (one further read, never a chain walk). Throws
+      * if the base is missing/torn — [[vacuum]] always retains the full
+      * base of every retained delta, so this only fires on external
+      * tampering. */
+    def resolve(m: Map[String, String]): Map[String, String] =
+      m.get(DeltaBaseKey) match {
+        case None => m
+        case Some(bv) =>
+          resolveDelta(parse(bv.toLong).getOrElse(throw new IllegalStateException(
+            s"snapshot: delta manifest's full base v$bv is missing or torn at $root")), m)
+      }
+
+    /** Committed version `v`'s manifest as written. Throws if the
+      * version never committed completely or was vacuumed. */
+    def raw(v: Long): Map[String, String] = parsed.get(v).flatten.getOrElse {
+      // versioned slots have deterministic names: ONE direct path probe,
+      // not an O(commits) directory listing
+      if (!fs.exists(manifestPath(root, v)))
+        throw new IllegalArgumentException(
+          s"snapshot: no version $v at $root (have: ${
+            versions(fs, root).map(_._1).sorted.mkString(", ")})")
+      parse(v).getOrElse(throw new IllegalStateException(
+        s"snapshot: version $v at $root is torn/incomplete"))
+    }
+
+    /** Committed version `v`'s FULL table map (see [[raw]]). */
+    def at(v: Long): Map[String, String] = resolved.getOrElseUpdate(v, resolve(raw(v)))
+  }
+
   private def resolveManifest(fs: FileSystem, root: String,
       m: Map[String, String]): Map[String, String] =
-    m.get(DeltaBaseKey) match {
-      case None => m
-      case Some(bv) =>
-        val base = parseManifest(fs, manifestPath(root, bv.toLong))
-          .getOrElse(throw new IllegalStateException(
-            s"snapshot: delta manifest's full base v$bv is missing or torn at $root"))
-        resolveDelta(base, m)
-    }
+    new Manifests(fs, root).resolve(m)
 
   /** Layer a delta manifest's update/append/removal entries over its
     * FULL base map. Entry semantics are key-disjoint by construction
@@ -216,22 +271,9 @@ object Snapshot {
     * true at its write instant stays true for every version <= max, and
     * [[scanState]] re-resolves anything committed after it. */
   private def readCheckpoint(fs: FileSystem, root: String): Option[Ckpt] = {
-    val p = checkpointPath(root)
-    val text =
-      try {
-        val in = fs.open(p)
-        manifestFileReads.incrementAndGet()
-        try scala.io.Source.fromInputStream(in, UTF_8.name()).mkString
-        finally in.close()
-      } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != CkptHeader) return None
-    val footer = lines.last
-    if (!footer.startsWith("END ")) return None
-    val body = lines.tail.init
-    if (!Try(footer.stripPrefix("END ").toLong).toOption.contains(body.size.toLong))
-      return None
-    val fields = body.map(_.split("\t", -1))
+    val text = readText(fs, checkpointPath(root)).getOrElse(return None)
+    manifestFileReads.incrementAndGet()
+    val fields = unframe(text, CkptHeader).getOrElse(return None).map(_.split("\t", -1))
     val max = fields.collectFirst { case Array("max", v) => Try(v.toLong).toOption }
       .flatten.getOrElse(return None)
     val mainV = fields.collectFirst { case Array("main", v) => Try(v.toLong).toOption }
@@ -271,10 +313,7 @@ object Snapshot {
         ck.branches.toSeq.flatMap { bs =>
           s"bn\t${bs.size}" +: bs.toSeq.sorted.map { case (b, v) => s"B\t$b\t$v" }
         }
-      val out = fs.create(tmp, true)
-      try out.write((CkptHeader +: body :+ s"END ${body.size}").mkString("\n")
-        .getBytes(UTF_8))
-      finally out.close()
+      writeText(fs, tmp, frame(CkptHeader, body), overwrite = true)
       fs.delete(dest, false)
       if (!fs.rename(tmp, dest)) fs.delete(tmp, false)
     } catch { case _: IOException => () }
@@ -333,8 +372,9 @@ object Snapshot {
           .orElse(ck.main)
         ScanState(newestComplete, head, Some(ck), winBranches)
       case None =>
-        val all = versions(fs, root)
-        val parsed = all.view.flatMap { case (v, p) => parseManifest(fs, p).map(v -> _) }
+        // a LazyList parses each manifest once for both lookups below
+        val parsed = versions(fs, root).to(LazyList)
+          .flatMap { case (v, p) => parseManifest(fs, p).map(v -> _) }
         val newestComplete = parsed.headOption.map(_._1).getOrElse(0L)
         val head = parsed.filterNot(_._2.contains(BranchKey)).headOption
           .map { case (hv, m) => hv -> resolveManifest(fs, root, m) }
@@ -485,8 +525,13 @@ object Snapshot {
     }
 
   /** Read `table`'s segment list with merge-on-read tombstones resolved
-    * — the one read body behind [[read]], [[readAt]], [[readPruned]]
-    * and [[readPrunedEq]]. With no tombstone shadow this is ONE
+    * from the entries `rels` (resolved by [[resolve]]) — the one read
+    * body behind every table read: [[read]], [[readAt]], [[readBranch]],
+    * [[readPruned]]/[[readPrunedMulti]] and [[readPrunedEq]] (pruned file
+    * lists), [[changesBetween]] (appended segments only), the writes
+    * that read the table they rewrite or match against ([[deleteWhere]],
+    * [[compactTable]], [[mergeCommit]]) and [[vacuum]]'s cursor read.
+    * With no tombstone shadow this is ONE
     * multi-path parquet scan (identical plan to a plain read). With
     * tombstones, each segment is tagged with its ordinal and ONE
     * left-join against the aggregated O(deleted keys) coverage frame
@@ -531,15 +576,70 @@ object Snapshot {
     }
   }
 
+  // ---- THE READ PATH: every reader resolves through `resolve` + `relOf` --
+
+  /** Which committed state a reader resolves. */
+  private sealed trait At
+  /** The main chain's newest complete version (no tables before the
+    * first commit). */
+  private case object Head extends At
+  /** A committed `version`, on any chain (time travel). */
+  private final case class Version(v: Long) extends At
+  /** The head of a live `branch`. */
+  private final case class OnBranch(branch: String) extends At
+
+  /** The RESOLVED entries (tables and meta entries) at `at`. Throws, for
+    * a version, if it never committed completely, was vacuumed or is
+    * torn; for a branch, if it does not exist or was dropped. */
+  private def resolve(spark: SparkSession, root: String, at: At): Map[String, String] = {
+    val fs = fsOf(spark, root)
+    at match {
+      case Head => current(fs, root).fold(Map.empty[String, String])(_._2)
+      case Version(v) => new Manifests(fs, root).at(v)
+      case OnBranch(b) =>
+        requireBranchName(b)
+        branchHead(fs, root, b).map(_._2).getOrElse(throw new IllegalArgumentException(
+          s"snapshot: no branch '$b' at $root (have: ${branches(spark, root).mkString(", ")})"))
+    }
+  }
+
+  /** `table`'s rel in `rels`, resolved at `at` under `root`, or the one
+    * "no table" error: `caller` names the API, and the message lists the
+    * user tables there (meta entries hidden). */
+  private def relOf(rels: Map[String, String], table: String, caller: String,
+      root: String, at: At = Head): String =
+    rels.getOrElse(table, {
+      val where = at match {
+        case Head => s"at $root"
+        case Version(v) => s"at $root version $v"
+        case OnBranch(b) => s"on branch '$b' at $root"
+      }
+      throw new IllegalArgumentException(s"$caller: no table '$table' $where (have: ${
+        rels.keys.toSeq.filterNot(isMetaKey).sorted.mkString(", ")})")
+    })
+
+  /** The read preamble: check the name, resolve `at`, look `table` up;
+    * returns the resolved entries the table's read needs. */
+  private def resolveTable(spark: SparkSession, root: String, table: String, at: At,
+      caller: String = "snapshot"): Map[String, String] = {
+    requireCommittableName(table)
+    val rels = resolve(spark, root, at)
+    relOf(rels, table, caller, root, at)
+    rels
+  }
+
+  /** Table → absolute data path(s) of the user tables in `rels`
+    * (comma-joined when a table has appended segments). */
+  private def tablePaths(root: String, rels: Map[String, String]): Map[String, String] =
+    rels.collect { case (t, rel) if !isMetaKey(t) =>
+      t -> relDirs(rel).map(new Path(root, _).toString).mkString(",")
+    }
+
   /** Table → absolute data path(s) of the newest committed snapshot
     * (comma-joined when the table has appended segments). Tombstone
     * shadows are internal state, not tables — hidden here. */
   def tables(spark: SparkSession, root: String): Map[String, String] =
-    current(fsOf(spark, root), root).map(_._2).getOrElse(Map.empty)
-      .filter { case (t, _) => !isMetaKey(t) }
-      .map { case (t, rel) =>
-        t -> relDirs(rel).map(new Path(root, _).toString).mkString(",")
-      }
+    tablePaths(root, resolve(spark, root, Head))
 
   /** DESCRIBE HISTORY for a snapshot root — one row per committed
     * version (main chain AND branch commits, flagged apart), from the
@@ -555,17 +655,16 @@ object Snapshot {
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val fs = fsOf(spark, root)
-    // delta manifests share full bases — memoize base parses so a
-    // 1,000-delta log costs O(versions + distinct bases) reads
-    val baseMemo = scala.collection.mutable.Map.empty[Long, Option[Map[String, String]]]
+    // delta manifests share full bases, and a base is itself a version
+    // of the log: each file is read once, O(versions) reads in all
+    val manifests = new Manifests(fs, root)
     versions(fs, root)
-      .flatMap { case (v, p) => parseManifest(fs, p).map(v -> _) }
+      .flatMap { case (v, _) => manifests.parse(v).map(v -> _) }
       .map { case (v, raw) =>
         val m = raw.get(DeltaBaseKey) match {
           case None => raw
           case Some(bv) =>
-            baseMemo.getOrElseUpdate(bv.toLong,
-                parseManifest(fs, manifestPath(root, bv.toLong)))
+            manifests.parse(bv.toLong)
               .map(base => resolveDelta(base, raw))
               // torn base: best-effort inventory of the delta's own
               // update entries (append/removal markers dropped)
@@ -586,18 +685,8 @@ object Snapshot {
 
   /** Read one table of the newest committed snapshot (tombstoned rows
     * resolved away — see [[deleteWhere]]). */
-  def read(spark: SparkSession, root: String, table: String): DataFrame = {
-    requireCommittableName(table)
-    val byName = currentRels(spark, root)
-    if (!byName.contains(table))
-      throw new IllegalArgumentException(
-        s"snapshot: no table '$table' at $root (have: ${
-          byName.keys.toSeq.filterNot(isMetaKey).sorted.mkString(", ")})")
-    readResolved(spark, root, byName, table)
-  }
-
-  private def currentRels(spark: SparkSession, root: String): Map[String, String] =
-    current(fsOf(spark, root), root).map(_._2).getOrElse(Map.empty)
+  def read(spark: SparkSession, root: String, table: String): DataFrame =
+    readResolved(spark, root, resolveTable(spark, root, table, Head), table)
 
   /** Table → absolute data path AS OF a specific committed `version`
     * (time travel). Committed versions are immutable — data dirs are
@@ -605,56 +694,29 @@ object Snapshot {
     * keeps reading the same bytes while the snapshot advances.
     * Throws if the version never committed completely or was vacuumed. */
   def tablesAt(spark: SparkSession, root: String, version: Long): Map[String, String] =
-    relsAt(spark, root, version)
-      .filter { case (t, _) => !isMetaKey(t) }
-      .map { case (t, rel) =>
-        t -> relDirs(rel).map(new Path(root, _).toString).mkString(",")
-      }
+    tablePaths(root, resolve(spark, root, Version(version)))
 
-  private def relsAt(spark: SparkSession, root: String, version: Long): Map[String, String] = {
-    val fs = fsOf(spark, root)
-    // versioned slots have deterministic names — resolve the manifest
-    // with ONE direct path probe, not an O(commits) directory listing
-    // (mainVersionsBetween calls this per version in a change-feed
-    // range; a listing per step made that O(range x commits))
-    val manifest = manifestPath(root, version)
-    if (!fs.exists(manifest))
-      throw new IllegalArgumentException(
-        s"snapshot: no version $version at $root (have: ${
-          versions(fs, root).map(_._1).sorted.mkString(", ")})")
-    val m = parseManifest(fs, manifest)
-      .getOrElse(throw new IllegalStateException(
-        s"snapshot: version $version at $root is torn/incomplete"))
-    resolveManifest(fs, root, m)
-  }
-
-  /** Read one table as of `version` — how a pipeline pins its input
-    * (reproducible ablations, audits, incremental-delta baselines)
-    * while writers keep committing. */
   /** The MAIN-history versions in (fromVersion, toVersion] — the step
     * endpoints a change-feed consumer iterates one at a time when it
     * needs per-step preimages (branch commits share the version
     * sequence but are not main history and contribute no steps). Cost:
-    * O(versions in range) manifest reads, never data. */
+    * one manifest read per version in range, never data: the branch tag
+    * rides the manifest as written, so no delta base is read. */
   def mainVersionsBetween(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): Seq[Long] = {
     require(fromVersion >= 0L && fromVersion <= toVersion,
       s"snapshot mainVersionsBetween: bad range [$fromVersion, $toVersion]")
-    ((fromVersion + 1L) to toVersion)
-      .filter(v => !relsAt(spark, root, v).contains(BranchKey))
+    val manifests = new Manifests(fsOf(spark, root), root)
+    ((fromVersion + 1L) to toVersion).filter(v => !manifests.raw(v).contains(BranchKey))
   }
 
-  def readAt(spark: SparkSession, root: String, table: String, version: Long): DataFrame = {
-    requireCommittableName(table)
-    val byName = relsAt(spark, root, version)
-    if (!byName.contains(table))
-      throw new IllegalArgumentException(
-        s"snapshot: no table '$table' at $root version $version (have: ${
-          byName.keys.toSeq.filterNot(isMetaKey).sorted.mkString(", ")})")
-    // the version's OWN tombstone state: a version committed before a
-    // delete still reads the deleted rows (time travel)
-    readResolved(spark, root, byName, table)
-  }
+  /** Read one table as of `version` — how a pipeline pins its input
+    * (reproducible ablations, audits, incremental-delta baselines)
+    * while writers keep committing. The version's OWN tombstone state
+    * applies: a version committed before a delete still reads the
+    * deleted rows. */
+  def readAt(spark: SparkSession, root: String, table: String, version: Long): DataFrame =
+    readResolved(spark, root, resolveTable(spark, root, table, Version(version)), table)
 
   /** What a write [[operation]]'s body asks it to publish: entries
     * layered over the chain head it read, and entries removed from it —
@@ -700,6 +762,10 @@ object Snapshot {
     }
   }
 
+  /** How long a failed [[operation]] waits for the tasks of its failed
+    * jobs to end before deleting what they wrote. */
+  private val TaskDrainMs = 30000L
+
   /** One [[operation]] in flight: the chain head it read (None for a
     * blind [[commit]] or an empty chain), and its segment writes. */
   private final class Op(spark: SparkSession, root: String, fs: FileSystem,
@@ -715,11 +781,12 @@ object Snapshot {
 
     /** Write `df` to a fresh immutable data dir; returns the relative
       * path (not yet visible to readers — only a manifest makes it so).
-      * With `statsCols` nonempty a per-FILE min/max sidecar is derived
-      * and written into the dir before it becomes visible — the
-      * data-skipping layer next to Hive partitioning and Z-order (which
-      * cluster; this PRUNES). Costs one extra scan of the newly written
-      * data at commit time — O(batch), never O(table). */
+      * With `statsCols` or `bloomCols` nonempty, per-FILE min/max and
+      * Bloom sidecars are derived and written into the dir before it
+      * becomes visible — the data-skipping layer next to Hive
+      * partitioning and Z-order (which cluster; this PRUNES). Costs one
+      * extra scan of the newly written data at commit time, for both
+      * sidecars together — O(batch), never O(table). */
     def writeData(table: String, df: DataFrame, statsCols: Seq[String] = Seq.empty,
         bloomCols: Seq[String] = Seq.empty, bloomBits: Long = 1L << 20): String = {
       // ',' joins segment dirs in manifest values, so names can't carry it
@@ -732,10 +799,8 @@ object Snapshot {
       // record the written schema next to the data (still invisible):
       // segment-list readers union these instead of sampling footers
       SchemaSidecar.write(fs, dir, df.schema)
-      if (statsCols.nonEmpty) writeStats(spark, root, rel, statsCols)
-      if (bloomCols.nonEmpty)
-        // bits/item ≈ 10 → ~1% fpp at capacity; both knobs scale together
-        writeBloom(spark, root, rel, bloomCols, (bloomBits / 10L).max(1L), bloomBits)
+      if (statsCols.nonEmpty || bloomCols.nonEmpty)
+        writeSidecars(spark, root, rel, statsCols, bloomCols, bloomBits)
       rel
     }
 
@@ -757,9 +822,15 @@ object Snapshot {
       }).toMap
 
     /** Delete every segment dir started, then the parent dirs that did
-      * not exist before and are empty again, deepest first. */
+      * not exist before and are empty again, deepest first. A failed job
+      * returns while its other tasks may still run, and such a task still
+      * creates its attempt dir under the segment when it ends: so first
+      * wait, at most [[TaskDrainMs]], until the scheduler runs no task. */
     def discard(): Unit = {
       import scala.jdk.CollectionConverters._
+      val deadline = System.currentTimeMillis() + TaskDrainMs
+      while (org.apache.spark.sql.graft.TaskBridge.runningTasks(spark.sparkContext) > 0 &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10L)
       val segs = started.asScala.toSeq
       segs.foreach { case (dir, _) => fs.delete(dir, true) }
       val parents = segs.collect { case (dir, true) => dir.getParent }.distinct ++
@@ -920,8 +991,7 @@ object Snapshot {
     requireCommittableName(table)
     import org.apache.spark.sql.functions.{col, lit}
     operation(spark, root, expectBase = expectBase) { op =>
-      if (!op.rels.contains(table))
-        throw new IllegalArgumentException(s"snapshot deleteWhere: no table '$table' at $root")
+      relOf(op.rels, table, "snapshot deleteWhere", root)
       // resolve EXISTING tombstones first so already-deleted rows don't
       // re-tombstone, then keep only the key tuples of matching rows
       val deleted = readResolved(spark, root, op.rels, table)
@@ -1127,8 +1197,7 @@ object Snapshot {
     operation(spark, root, expectBase = expectBase) { op =>
       val shadows = deletes.map { case (table, (keyCols, keys)) =>
         require(keyCols.nonEmpty, s"snapshot forgetKeys: no key columns for '$table'")
-        require(op.rels.contains(table),
-          s"snapshot forgetKeys: no table '$table' at $root")
+        relOf(op.rels, table, "snapshot forgetKeys", root)
         require(keys.columns.toSeq == keyCols,
           s"snapshot forgetKeys: key frame columns ${keys.columns.mkString(",")} " +
             s"must be exactly the key columns ${keyCols.mkString(",")} for '$table'")
@@ -1150,8 +1219,7 @@ object Snapshot {
   def compactTable(spark: SparkSession, root: String, table: String,
       statsCols: Seq[String] = Seq.empty): Long =
     operation(spark, root) { op =>
-      if (!op.rels.contains(table))
-        throw new IllegalArgumentException(s"snapshot compact: no table '$table' at $root")
+      relOf(op.rels, table, "snapshot compact", root)
       val folded = op.writeData(table, readResolved(spark, root, op.rels, table), statsCols)
       Publish(Map(table -> folded), Set(delKey(table)))
     }
@@ -1174,9 +1242,7 @@ object Snapshot {
     requireCommittableName(srcTable)
     requireCommittableName(dstTable)
     operation(spark, root) { op =>
-      val rel = op.rels.getOrElse(srcTable,
-        throw new IllegalArgumentException(
-          s"snapshot clone: no table '$srcTable' at $root"))
+      val rel = relOf(op.rels, srcTable, "snapshot clone", root)
       require(!op.rels.contains(dstTable),
         s"snapshot clone: table '$dstTable' already exists at $root")
       Publish(Map(dstTable -> rel) ++ op.rels.get(delKey(srcTable)).map(delKey(dstTable) -> _))
@@ -1204,8 +1270,7 @@ object Snapshot {
     require(targetBytes > 0, "snapshot optimize: targetBytes must be positive")
     val fs = fsOf(spark, root)
     operation(spark, root) { op =>
-      val rel = op.rels.getOrElse(table,
-        throw new IllegalArgumentException(s"snapshot optimize: no table '$table' at $root"))
+      val rel = relOf(op.rels, table, "snapshot optimize", root)
       require(!op.rels.contains(delKey(table)),
         s"snapshot optimize: table '$table' has live tombstone shadows — " +
           "fold deletes with compactTable before bin-packing segments")
@@ -1251,7 +1316,7 @@ object Snapshot {
     * from the rollback version, exactly as after a [[compactTable]]. */
   def rollbackTo(spark: SparkSession, root: String, version: Long): Long =
     operation(spark, root) { op =>
-      val target = relsAt(spark, root, version)
+      val target = resolve(spark, root, Version(version))
       require(!target.contains(BranchKey),
         s"snapshot rollback: version $version at $root is a branch commit — " +
           "roll back to main-chain versions only (mergeBranch publishes a branch)")
@@ -1324,9 +1389,8 @@ object Snapshot {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val fs = fsOf(spark, root)
     val all = versions(fs, root)
-    val parsed = all.flatMap { case (v, p) =>
-      parseManifest(fs, p).map(m => (v, p, m))
-    }
+    val manifests = new Manifests(fs, root)
+    val parsed = all.flatMap { case (v, p) => manifests.parse(v).map(m => (v, p, m)) }
     // retention is per-CHAIN: the newest keepLast MAIN manifests (branch
     // manifests interleave in the version sequence but are not main
     // history), plus every LIVE branch's head — a branch's data must
@@ -1341,10 +1405,11 @@ object Snapshot {
       // dropped-check on the RESOLVED head (a re-created branch's delta
       // carries the dropped marker only as a removal entry)
       .collect { case (_, t)
-          if !resolveManifest(fs, root, t._3).contains(BranchDroppedKey) => t }
+          if !manifests.resolve(t._3).contains(BranchDroppedKey) => t }
+    val head = if (respectCursors) resolve(spark, root, Head) else Map.empty[String, String]
     val cursorFloor: Option[Long] =
-      if (respectCursors && current(fs, root).exists(_._2.contains("_curate")))
-        read(spark, root, "_curate")
+      if (head.contains("_curate"))
+        readResolved(spark, root, head, "_curate")
           .agg(org.apache.spark.sql.functions.min(
             org.apache.spark.sql.functions.col("src_version"))).head() match {
             case r if r.isNullAt(0) => None
@@ -1374,7 +1439,7 @@ object Snapshot {
       case t @ (v, _, _) if baseVersions.contains(v) => t
     }
     val referenced = (retained ++ keptBaseManifests)
-      .flatMap { case (_, _, m) => resolveManifest(fs, root, m).valuesIterator }
+      .flatMap { case (_, _, m) => manifests.resolve(m).valuesIterator }
       .filterNot(_.isEmpty) // branch meta entries carry non-path values
       .flatMap(relDirs).toSet
     all.collect { case (v, p) if !keptVersions.contains(v) => fs.delete(p, false) }
@@ -1426,13 +1491,13 @@ object Snapshot {
     * can tell apart from a live marker. */
   def branches(spark: SparkSession, root: String): Seq[String] = {
     val fs = fsOf(spark, root)
+    val manifests = new Manifests(fs, root)
     versions(fs, root)
-      .flatMap { case (_, p) => parseManifest(fs, p) }
+      .flatMap { case (v, _) => manifests.parse(v) }
       .flatMap(m => m.get(BranchKey).map(_ -> m))
       .groupBy(_._1).toSeq
       .collect {
-        case (b, heads)
-            if !resolveManifest(fs, root, heads.head._2).contains(BranchDroppedKey) => b
+        case (b, heads) if !manifests.resolve(heads.head._2).contains(BranchDroppedKey) => b
       }
       .sorted
   }
@@ -1466,33 +1531,13 @@ object Snapshot {
   /** Table → absolute data path(s) at `branch`'s head (the [[tables]]
     * shape). Throws if the branch does not exist or was dropped. */
   def branchTables(spark: SparkSession, root: String, branch: String): Map[String, String] =
-    branchRels(spark, root, branch)
-      .filter { case (t, _) => !isMetaKey(t) }
-      .map { case (t, rel) =>
-        t -> relDirs(rel).map(new Path(root, _).toString).mkString(",")
-      }
-
-  private def branchRels(spark: SparkSession, root: String,
-      branch: String): Map[String, String] = {
-    requireBranchName(branch)
-    branchHead(fsOf(spark, root), root, branch).map(_._2)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot: no branch '$branch' at $root (have: ${
-          branches(spark, root).mkString(", ")})"))
-  }
+    tablePaths(root, resolve(spark, root, OnBranch(branch)))
 
   /** Read one table at `branch`'s head (tombstones resolved — the
     * [[read]] semantics on the branch chain). */
   def readBranch(spark: SparkSession, root: String, branch: String,
-      table: String): DataFrame = {
-    requireCommittableName(table)
-    val byName = branchRels(spark, root, branch)
-    if (!byName.contains(table))
-      throw new IllegalArgumentException(
-        s"snapshot: no table '$table' on branch '$branch' at $root (have: ${
-          byName.keys.toSeq.filterNot(isMetaKey).sorted.mkString(", ")})")
-    readResolved(spark, root, byName, table)
-  }
+      table: String): DataFrame =
+    readResolved(spark, root, resolveTable(spark, root, table, OnBranch(branch)), table)
 
   /** Atomically publish new contents for `newTables` ON the branch
     * (the [[commit]] semantics — replace, tombstones cleared); main and
@@ -1567,7 +1612,7 @@ object Snapshot {
     "float", "double", "string", "date", "timestamp", "timestamp_ntz")
 
   /** Canonical ZONE-INDEPENDENT serialization of a stat bound of declared
-    * type `t`, shared by the sidecar writer ([[writeStats]]) and the
+    * type `t`, shared by the sidecar writer ([[writeSidecars]]) and the
     * probe side ([[readPrunedMulti]]). TIMESTAMP bounds serialize as
     * epoch micros: the previous `java.sql.Timestamp.toString` wall-time
     * form depended on the writer JVM's default zone (and was ambiguous
@@ -1623,8 +1668,9 @@ object Snapshot {
     case _ => a.compareTo(b) // string, date (ISO): lexicographic
   }
 
-  private def statsPath(root: String, rel: String): Path =
-    new Path(new Path(root, rel), StatsName)
+  /** Where segment `rel`'s sidecar `name` lives. */
+  private def sidecarPath(root: String, rel: String, name: String): Path =
+    new Path(new Path(root, rel), name)
 
   /** Pseudo-column name of the per-file / per-segment ROW-COUNT stat
     * lines ('~' can't be a real committed column's first char for any
@@ -1640,55 +1686,7 @@ object Snapshot {
   private val TotalKey = "~total"
   private val ColsStat = "~cols"
 
-  /** Derive per-file min/max for `cols` (plus per-file and segment-total
-    * row counts, and the tracked-column manifest) from the
-    * (just-written, still invisible) data dir and persist them next to
-    * the data. One aggregate over `_metadata.file_name` — map-side
-    * combined, collects O(files × cols) rows. */
-  private def writeStats(spark: SparkSession, root: String, rel: String,
-      cols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val d = SchemaSidecar.readParquet(spark, new Path(root, rel).toString)
-    cols.foreach { c =>
-      val t = d.schema(c).dataType.simpleString
-      require(statsSupported(t),
-        s"snapshot stats: column '$c' has unsupported type $t (supported: ${
-          StatsTypes.toSeq.sorted.mkString(", ")}, decimal(p,s))")
-    }
-    val aggs = count(lit(1)).as("__cnt") +:
-      cols.flatMap(c => Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
-    val rows = d.groupBy(col("_metadata.file_name").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val types = cols.map(c => c -> d.schema(c).dataType.simpleString).toMap
-    def enc(v: Any): String =
-      java.net.URLEncoder.encode(String.valueOf(v), UTF_8.name())
-    val lines = rows.flatMap { r =>
-      val f = r.getAs[String]("__f")
-      val cnt = r.getAs[Long]("__cnt")
-      s"${enc(f)}\t${enc(CountStat)}\tbigint\t$cnt\t$cnt" +: cols.flatMap { c =>
-        val lo = r.getAs[Any](s"__min_$c")
-        val hi = r.getAs[Any](s"__max_$c")
-        // an all-NULL file has no usable bounds: no line → never pruned
-        if (lo == null || hi == null) None
-        else Some(s"${enc(f)}\t${enc(c)}\t${types(c)}\t${
-          enc(statSer(types(c), lo))}\t${enc(statSer(types(c), hi))}")
-      }
-    }
-    // segment totals: row count (files with rows sum to it — empty part
-    // files hold 0 rows by definition) and the tracked-column manifest
-    val total = rows.map(_.getAs[Long]("__cnt")).sum
-    val meta = Seq(
-      s"${enc(TotalKey)}\t${enc(CountStat)}\tbigint\t$total\t$total",
-      s"${enc(TotalKey)}\t${enc(ColsStat)}\tstring\t${enc(cols.mkString(","))}\t-")
-    val all = meta ++ lines
-    val fs = fsOf(spark, root)
-    val out = fs.create(statsPath(root, rel), false)
-    try out.write((Header +: all :+ s"END ${all.length}").mkString("\n").getBytes(UTF_8))
-    finally out.close()
-  }
-
-  /** Sidecar of per-file BLOOM filters ([[writeBloom]]). */
+  /** Sidecar of per-file BLOOM filters ([[writeSidecars]]). */
   private val BloomName = "_graft_bloom"
 
   /** Column types the bloom sidecar supports. Integral columns insert
@@ -1702,85 +1700,123 @@ object Snapshot {
   private def bloomSupported(t: String): Boolean =
     BloomTypes.contains(t) || t.startsWith("decimal(")
 
-  private def bloomPath(root: String, rel: String): Path =
-    new Path(new Path(root, rel), BloomName)
-
-  /** Derive a per-file Bloom filter for each of `cols` from the
-    * just-written (still invisible) dir and persist them next to the
-    * data — the POINT-LOOKUP skipping layer beside [[writeStats]]'
-    * min/max ranges: a hash-distributed layout gives every file the
-    * full [min, max] span (ranges prune nothing), but an equality probe
-    * answers "might this file hold key k?" per file and skips the rest.
-    * One aggregate over `_metadata.file_name` (Spark's own
-    * BloomFilterAggregate, the engine that powers AQE runtime filters),
-    * collecting O(files × cols × numBits/8) bytes — size the filter to
-    * the driver: `numBits` defaults to 2^20 (128 KiB/file/column,
-    * ~1% fpp at 100k distinct keys per file); production tables with
-    * very many files budget bits accordingly (the sidecar is read
-    * whole at probe time). */
-  private def writeBloom(spark: SparkSession, root: String, rel: String,
-      cols: Seq[String], expectedItems: Long, numBits: Long): Unit = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
+  /** Derive the skipping sidecars of the (just-written, still
+    * invisible) data dir `rel` and persist them next to the data, both
+    * from ONE aggregate over `_metadata.file_name` — one re-read of the
+    * segment, map-side combined, one collect:
+    *   - `statsCols`: per-file min/max, plus per-file and segment-total
+    *     row counts and the tracked-column manifest — the RANGE skipping
+    *     layer ([[readPruned]], [[statsAgg]]);
+    *   - `bloomCols`: one per-file Bloom filter per column (Spark's own
+    *     BloomFilterAggregate, the engine that powers AQE runtime
+    *     filters) — the POINT-LOOKUP layer ([[readPrunedEq]]): a
+    *     hash-distributed layout gives every file the full [min, max]
+    *     span (ranges prune nothing), but an equality probe answers
+    *     "might this file hold key k?" per file and skips the rest.
+    *     Collects O(files × cols × bloomBits/8) bytes — size the filter
+    *     to the driver: 2^20 bits (the default) is 128 KiB/file/column,
+    *     ~1% fpp at 100k distinct keys per file; tables with very many
+    *     files budget bits accordingly (the sidecar is read whole at
+    *     probe time).
+    * Both column lists are type-checked before the aggregate runs. */
+  private def writeSidecars(spark: SparkSession, root: String, rel: String,
+      statsCols: Seq[String], bloomCols: Seq[String], bloomBits: Long): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, xxhash64}
     import org.apache.spark.sql.graft.BloomBridge
     val d = SchemaSidecar.readParquet(spark, new Path(root, rel).toString)
-    val types = cols.map(c => c -> d.schema(c).dataType.simpleString).toMap
-    cols.foreach { c =>
-      require(bloomSupported(types(c)),
-        s"snapshot bloom: column '$c' has unsupported type ${types(c)} " +
+    def typeOf(c: String): String = d.schema(c).dataType.simpleString
+    statsCols.foreach { c =>
+      val t = typeOf(c)
+      require(statsSupported(t),
+        s"snapshot stats: column '$c' has unsupported type $t (supported: ${
+          StatsTypes.toSeq.sorted.mkString(", ")}, decimal(p,s))")
+    }
+    bloomCols.foreach { c =>
+      val t = typeOf(c)
+      require(bloomSupported(t),
+        s"snapshot bloom: column '$c' has unsupported type $t " +
           s"(supported: ${BloomTypes.toSeq.sorted.mkString(", ")}, decimal(p,s))")
     }
-    def input(c: String) = types(c) match {
+    def bloomInput(c: String) = typeOf(c) match {
       case "string" | "timestamp" | "timestamp_ntz" => xxhash64(col(c))
-      case d if d.startsWith("decimal") => xxhash64(col(c))
+      case t if t.startsWith("decimal") => xxhash64(col(c))
       case _ => col(c).cast("long")
     }
-    val aggs = cols.map(c =>
-      BloomBridge.bloomAgg(input(c), expectedItems, numBits).as(s"__bf_$c"))
+    // bits/item ≈ 10 → ~1% fpp at capacity; both knobs scale together
+    val expectedItems = (bloomBits / 10L).max(1L)
+    val statAggs =
+      if (statsCols.isEmpty) Seq.empty
+      else count(lit(1)).as("__cnt") +: statsCols.flatMap(c =>
+        Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
+    val aggs = statAggs ++ bloomCols.map(c =>
+      BloomBridge.bloomAgg(bloomInput(c), expectedItems, bloomBits).as(s"__bf_$c"))
     val rows = d.groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    def enc(s: String): String = java.net.URLEncoder.encode(s, UTF_8.name())
-    val b64 = java.util.Base64.getEncoder
-    val lines = rows.flatMap { r =>
-      val f = r.getAs[String]("__f")
-      cols.flatMap { c =>
-        Option(r.getAs[Array[Byte]](s"__bf_$c")).map(bytes =>
-          s"${enc(f)}\t${enc(c)}\t${types(c)}\t${b64.encodeToString(bytes)}")
-      }
-    }
+      .collect().toSeq
+    def enc(v: Any): String =
+      java.net.URLEncoder.encode(String.valueOf(v), UTF_8.name())
     val fs = fsOf(spark, root)
-    val out = fs.create(bloomPath(root, rel), false)
-    try out.write((Header +: lines.toSeq :+ s"END ${lines.length}").mkString("\n").getBytes(UTF_8))
-    finally out.close()
+    if (statsCols.nonEmpty) {
+      val lines = rows.flatMap { r =>
+        val f = r.getAs[String]("__f")
+        val cnt = r.getAs[Long]("__cnt")
+        s"${enc(f)}\t${enc(CountStat)}\tbigint\t$cnt\t$cnt" +: statsCols.flatMap { c =>
+          val lo = r.getAs[Any](s"__min_$c")
+          val hi = r.getAs[Any](s"__max_$c")
+          // an all-NULL file has no usable bounds: no line → never pruned
+          if (lo == null || hi == null) None
+          else Some(s"${enc(f)}\t${enc(c)}\t${typeOf(c)}\t${
+            enc(statSer(typeOf(c), lo))}\t${enc(statSer(typeOf(c), hi))}")
+        }
+      }
+      // segment totals: row count (files with rows sum to it — empty part
+      // files hold 0 rows by definition) and the tracked-column manifest
+      val total = rows.map(_.getAs[Long]("__cnt")).sum
+      val meta = Seq(
+        s"${enc(TotalKey)}\t${enc(CountStat)}\tbigint\t$total\t$total",
+        s"${enc(TotalKey)}\t${enc(ColsStat)}\tstring\t${enc(statsCols.mkString(","))}\t-")
+      writeText(fs, sidecarPath(root, rel, StatsName), frame(Header, meta ++ lines), overwrite = false)
+    }
+    if (bloomCols.nonEmpty) {
+      val b64 = java.util.Base64.getEncoder
+      val lines = rows.flatMap { r =>
+        val f = r.getAs[String]("__f")
+        bloomCols.flatMap { c =>
+          Option(r.getAs[Array[Byte]](s"__bf_$c")).map(bytes =>
+            s"${enc(f)}\t${enc(c)}\t${typeOf(c)}\t${b64.encodeToString(bytes)}")
+        }
+      }
+      writeText(fs, sidecarPath(root, rel, BloomName), frame(Header, lines), overwrite = false)
+    }
   }
 
-  /** (file name → (type, bloom bytes)) for `column`; None when the
-    * sidecar is absent/torn or has nothing for the column — callers
+  /** The tab-separated fields of every line of `rel`'s sidecar `name`;
+    * None when the sidecar is absent or torn ([[unframe]]) — callers
     * MUST then read everything (skipping is an optimization). */
-  private def fileBlooms(fs: FileSystem, root: String, rel: String,
-      column: String): Option[Map[String, (String, Array[Byte])]] = {
-    val p = bloomPath(root, rel)
-    if (!fs.exists(p)) return None
-    val text =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, UTF_8.name()).mkString
-        finally in.close()
-      } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != Header) return None
-    if (!lines.last.startsWith("END ")) return None
-    def dec(s: String): String = java.net.URLDecoder.decode(s, UTF_8.name())
-    val b64 = java.util.Base64.getDecoder
-    val entries = lines.tail.init.map(_.split("\t", -1)).collect {
-      case Array(f, c, t, blob) if dec(c) == column =>
-        dec(f) -> ((t, b64.decode(blob)))
+  private def sidecarFields(fs: FileSystem, root: String, rel: String,
+      name: String): Option[Seq[Array[String]]] =
+    readText(fs, sidecarPath(root, rel, name))
+      .flatMap(unframe(_, Header))
+      .map(_.map(_.split("\t", -1)))
+
+  private def dec(s: String): String = java.net.URLDecoder.decode(s, UTF_8.name())
+
+  /** The skipping read body: per segment of `table` (at `version`, or
+    * the head), `survivors` names the files to read — None reads the
+    * whole segment, as for a segment without a usable sidecar.
+    * Merge-on-read deletes apply as on every read path. */
+  private def readSkipping(spark: SparkSession, root: String, table: String,
+      version: Option[Long])(survivors: String => Option[Set[String]]): DataFrame = {
+    val rels = resolveTable(spark, root, table, version.fold[At](Head)(Version))
+    val filesPerSeg = relDirs(rels(table)).map { seg =>
+      val segPath = new Path(root, seg).toString
+      survivors(seg).fold(Seq(segPath))(_.toSeq.sorted.map(f => s"$segPath/$f"))
     }
-    if (entries.isEmpty) None else Some(entries.toMap)
+    readResolved(spark, root, rels, table, Some(filesPerSeg))
   }
 
   /** The long a probe value inserts/probes under — MUST mirror
-    * [[writeBloom]]'s input expression exactly (same xxhash64 seed). */
+    * [[writeSidecars]]' input expression exactly (same xxhash64 seed). */
   private def bloomProbeHash(t: String, value: Any): Long = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, XxHash64}
     def xx(lit: CLit): Long = XxHash64(Seq(lit), 42L).eval(null).asInstanceOf[Long]
@@ -1826,52 +1862,21 @@ object Snapshot {
     * for `column`; tombstoned rows are resolved like every read path. */
   def readPrunedEq(spark: SparkSession, root: String, table: String,
       column: String, value: Any, version: Option[Long] = None): DataFrame = {
-    requireCommittableName(table)
-    val byName = version.map(v => relsAt(spark, root, v))
-      .getOrElse(currentRels(spark, root))
-    val rel = byName.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"snapshot: no table '$table' at $root (have: ${
-          byName.keys.toSeq.filterNot(isMetaKey).sorted.mkString(", ")})"))
     val fs = fsOf(spark, root)
-    val filesPerSeg = relDirs(rel).map { seg =>
-      val segPath = new Path(root, seg).toString
-      fileBlooms(fs, root, seg, column) match {
-        case None => Seq(segPath)
-        case Some(blooms) =>
-          blooms.collect {
-            case (f, (t, bytes))
-                if org.apache.spark.util.sketch.BloomFilter
-                  .readFrom(new java.io.ByteArrayInputStream(bytes))
-                  .mightContainLong(bloomProbeHash(t, value)) =>
-              s"$segPath/$f"
-          }.toSeq.sorted
+    val b64 = java.util.Base64.getDecoder
+    readSkipping(spark, root, table, version) { seg =>
+      // (file, type, filter) per file with a filter for `column`
+      val blooms = sidecarFields(fs, root, seg, BloomName).getOrElse(Nil).collect {
+        case Array(f, c, t, blob) if dec(c) == column => (dec(f), t, blob)
       }
+      if (blooms.isEmpty) None
+      else Some(blooms.collect {
+        case (f, t, blob)
+            if org.apache.spark.util.sketch.BloomFilter
+              .readFrom(new java.io.ByteArrayInputStream(b64.decode(blob)))
+              .mightContainLong(bloomProbeHash(t, value)) => f
+      }.toSet)
     }
-    readResolved(spark, root, byName, table, Some(filesPerSeg))
-  }
-
-  /** (file name → (min, max)) for `column`, parsed from the sidecar; None
-    * when the sidecar is absent/torn or carries nothing for the column —
-    * callers MUST then fall back to reading everything. */
-  private def fileStats(fs: FileSystem, root: String, rel: String,
-      column: String): Option[Map[String, (String, String, String)]] = {
-    val p = statsPath(root, rel)
-    if (!fs.exists(p)) return None
-    val text =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, UTF_8.name()).mkString
-        finally in.close()
-      } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != Header) return None
-    if (!lines.last.startsWith("END ")) return None
-    def dec(s: String): String = java.net.URLDecoder.decode(s, UTF_8.name())
-    val entries = lines.tail.init.map(_.split("\t", -1)).collect {
-      case Array(f, c, t, lo, hi) if dec(c) == column => dec(f) -> ((t, dec(lo), dec(hi)))
-    }
-    if (entries.isEmpty) None else Some(entries.toMap)
   }
 
   /** Read `table` (at `version`, or the newest commit) keeping only the
@@ -1902,67 +1907,39 @@ object Snapshot {
   def readPrunedMulti(spark: SparkSession, root: String, table: String,
       preds: Seq[(String, Any, Any)], version: Option[Long] = None): DataFrame = {
     require(preds.nonEmpty, "readPrunedMulti: need at least one predicate")
-    requireCommittableName(table)
-    val byName = version.map(v => relsAt(spark, root, v))
-      .getOrElse(currentRels(spark, root))
-    val rel = byName.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"snapshot: no table '$table' at $root (have: ${byName.keys.toSeq.sorted.mkString(", ")})"))
     val fs = fsOf(spark, root)
-    def cmp(t: String, a: String, b: String): Int = statCmp(t, a, b)
     // per SEGMENT: a stats sidecar prunes that segment's files; a
     // segment without stats reads whole (soundness over savings).
     // None = "whole segment survives" (distinct from Some(all files):
     // a later predicate can still prune a Some set file-by-file, but a
     // statless segment must stay whole regardless of other predicates).
-    val filesPerSeg = relDirs(rel).map { seg =>
-      val segPath = new Path(root, seg).toString
-      val survivors = preds.foldLeft(Option.empty[Set[String]]) {
-        case (acc, (column, lo, hi)) =>
-          fileStats(fs, root, seg, column) match {
-            case None => acc // no stats for this column → cannot prune here
-            case Some(stats) =>
-              // probe bounds canonicalize PER LINE under the line's
-              // declared type ([[statSer]]): a Timestamp probe compares
-              // as zone-free micros, never as wall-time text
-              val keep = stats.collect {
-                case (f, (t, mn, mx))
-                    if cmp(t, mx, statSer(t, lo)) >= 0 &&
-                      cmp(t, mn, statSer(t, hi)) <= 0 => f
-              }.toSet
-              Some(acc.fold(keep)(_ intersect keep))
-          }
-      }
-      survivors match {
-        case None => Seq(segPath)
-        case Some(keep) => keep.map(f => s"$segPath/$f").toSeq.sorted
+    readSkipping(spark, root, table, version) { seg =>
+      val lines = statLines(fs, root, seg).getOrElse(Nil) // parsed once for all predicates
+      preds.foldLeft(Option.empty[Set[String]]) { case (acc, (column, lo, hi)) =>
+        val stats = lines.filter(_._2 == column)
+        if (stats.isEmpty) acc // no stats for this column → cannot prune here
+        else {
+          // probe bounds canonicalize PER LINE under the line's declared
+          // type ([[statSer]]): a Timestamp probe compares as zone-free
+          // micros, never as wall-time text
+          val keep = stats.collect {
+            case (f, _, t, mn, mx)
+                if statCmp(t, mx, statSer(t, lo)) >= 0 && statCmp(t, mn, statSer(t, hi)) <= 0 => f
+          }.toSet
+          Some(acc.fold(keep)(_ intersect keep))
+        }
       }
     }
-    // merge-on-read deletes apply to every read path, pruned or not
-    readResolved(spark, root, byName, table, Some(filesPerSeg))
   }
 
-  /** ALL parsed stat lines of a segment's sidecar as (file, col, type,
-    * lo, hi) — the raw form [[statsAgg]] folds; None when the segment
-    * has no (or a torn) sidecar. */
-  private def statsAllLines(fs: FileSystem, root: String,
-      rel: String): Option[Seq[(String, String, String, String, String)]] = {
-    val p = statsPath(root, rel)
-    if (!fs.exists(p)) return None
-    val text =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, UTF_8.name()).mkString
-        finally in.close()
-      } catch { case _: IOException => return None }
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != Header) return None
-    if (!lines.last.startsWith("END ")) return None
-    def dec(s: String): String = java.net.URLDecoder.decode(s, UTF_8.name())
-    Some(lines.tail.init.map(_.split("\t", -1)).collect {
+  /** ALL decoded stat lines of a segment's sidecar as (file, col, type,
+    * lo, hi) — the raw form [[readPrunedMulti]] and [[statsAgg]] fold;
+    * None when the segment has no (or a torn) sidecar. */
+  private def statLines(fs: FileSystem, root: String,
+      rel: String): Option[Seq[(String, String, String, String, String)]] =
+    sidecarFields(fs, root, rel, StatsName).map(_.collect {
       case Array(f, c, t, lo, hi) => (dec(f), dec(c), t, dec(lo), dec(hi))
     })
-  }
 
   /** METADATA-ONLY aggregate: `COUNT(*)` plus `MIN`/`MAX` of `cols` for
     * `table` (at `version`, or the head) answered entirely from the
@@ -1987,25 +1964,19 @@ object Snapshot {
   def statsAgg(spark: SparkSession, root: String, table: String,
       cols: Seq[String] = Seq.empty, version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    requireCommittableName(table)
     cols.foreach(c => require(!c.startsWith("~"),
       s"snapshot statsAgg: bad column name '$c'"))
-    val byName = version.map(v => relsAt(spark, root, v))
-      .getOrElse(currentRels(spark, root))
-    val rel = byName.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"snapshot statsAgg: no table '$table' at $root (have: ${
-          byName.keys.toSeq.filterNot(isMetaKey).sorted.mkString(", ")})"))
+    val byName = resolveTable(spark, root, table, version.fold[At](Head)(Version),
+      "snapshot statsAgg")
     require(!byName.contains(delKey(table)),
       s"snapshot statsAgg: table '$table' carries merge-on-read tombstones — " +
         "metadata stats would count suppressed rows; compactTable first")
     val fs = fsOf(spark, root)
-    def cmp(t: String, a: String, b: String): Int = statCmp(t, a, b)
     var totalRows = 0L
     // col -> (type, lo, hi); None bounds = tracked but all-NULL so far
     val folded = scala.collection.mutable.LinkedHashMap[String, (String, Option[(String, String)])]()
-    relDirs(rel).foreach { seg =>
-      val lines = statsAllLines(fs, root, seg).getOrElse(throw new IllegalStateException(
+    relDirs(byName(table)).foreach { seg =>
+      val lines = statLines(fs, root, seg).getOrElse(throw new IllegalStateException(
         s"snapshot statsAgg: segment '$seg' of '$table' has no stats sidecar — " +
           "commit with statsCols (or compactTable with them) to enable metadata aggregates"))
       val segTotal = lines.collectFirst {
@@ -2031,8 +2002,8 @@ object Snapshot {
               case Some((t0, Some((lo0, hi0)))) =>
                 require(t0 == t, s"snapshot statsAgg: column '$c' type drifts ($t0 vs $t)")
                 folded(c) = (t,
-                  Some((if (cmp(t, lo, lo0) < 0) lo else lo0,
-                        if (cmp(t, hi, hi0) > 0) hi else hi0)))
+                  Some((if (statCmp(t, lo, lo0) < 0) lo else lo0,
+                        if (statCmp(t, hi, hi0) > 0) hi else hi0)))
             }
           case (_, `c`, t, _, _) => // segment-meta line for c: pin the type
             if (!folded.contains(c)) folded(c) = (t, None)
@@ -2079,7 +2050,7 @@ object Snapshot {
     * deliberately not shadowed (see [[applyChanges]]). */
   def shadowedKeys(spark: SparkSession, root: String, table: String): Option[DataFrame] = {
     requireCommittableName(table)
-    tombstoneKeys(spark, root, currentRels(spark, root), table)
+    tombstoneKeys(spark, root, resolve(spark, root, Head), table)
       .map(_.drop(CovCol))
   }
 
@@ -2131,20 +2102,17 @@ object Snapshot {
     // history: they contribute no main-chain change and are skipped;
     // consecutive MAIN versions pair up across them. Endpoints must be
     // main versions (cursors recorded by main-chain consumers are).
-    def relsOfMain(v: Long): Option[Map[String, String]] =
-      if (v == 0L) Some(Map.empty)
-      else {
-        val m = relsAt(spark, root, v)
-        if (m.contains(BranchKey)) None else Some(m)
-      }
+    // Each version's manifest, and each delta base, is read once.
+    val manifests = new Manifests(fsOf(spark, root), root)
+    def isMain(v: Long): Boolean = v == 0L || !manifests.raw(v).contains(BranchKey)
     def relsOf(v: Long): Map[String, String] =
-      relsOfMain(v).getOrElse(throw new IllegalArgumentException(
+      if (!isMain(v)) throw new IllegalArgumentException(
         s"snapshot changesBetween: version $v at $root is a branch " +
-          "commit, not main history"))
+          "commit, not main history")
+      else if (v == 0L) Map.empty
+      else manifests.at(v)
     val toRels = relsOf(toVersion)
-    val toRel = toRels.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"snapshot changesBetween: no table '$table' at $root version $toVersion"))
+    val toRel = relOf(toRels, table, "snapshot changesBetween", root, Version(toVersion))
     val schema = mergedSchema(spark, root, toRel)
     Seq(ChangeTypeCol, CommitVersionCol).foreach { c =>
       require(!schema.fieldNames.contains(c),
@@ -2167,8 +2135,7 @@ object Snapshot {
         .withColumn(CommitVersionCol, lit(v))
     }
     relsOf(fromVersion) // endpoint validation (throws on a branch version)
-    val mainVs = fromVersion +: ((fromVersion + 1L) to toVersion)
-      .filter(v => relsOfMain(v).isDefined)
+    val mainVs = fromVersion +: ((fromVersion + 1L) to toVersion).filter(isMain)
     val parts = mainVs.sliding(2).toSeq.collect { case Seq(p, v) => (p, v) }
       .flatMap { case (prevV, v) =>
       val prev = relsOf(prevV)
@@ -2349,14 +2316,9 @@ object Snapshot {
       } else {
         val claimed =
           try {
-            val out = fs.create(target, false)
-            try {
-              val body = (Header +:
-                rawBody.toSeq.sorted.map { case (t, rel) => s"$t\t$rel" } :+
-                s"END ${rawBody.size}").mkString("\n")
-              out.write(body.getBytes(UTF_8))
-              manifestBytesWritten.addAndGet(body.length.toLong)
-            } finally out.close()
+            val text = frame(Header, rawBody.toSeq.sorted.map { case (t, rel) => s"$t\t$rel" })
+            writeText(fs, target, text, overwrite = false)
+            manifestBytesWritten.addAndGet(text.length.toLong)
             true
           } catch {
             case _: org.apache.hadoop.fs.FileAlreadyExistsException => false

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Cluster, Snapshot}
@@ -9,8 +7,7 @@ import graft.sources.{Cluster, Snapshot}
 class ClusterSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def freshRoot(): String =
-    Files.createTempDirectory("cluster-spec").toString
+  private def freshRoot(): String = tempDir("cluster-spec")
 
   test("zValue interleaves bits with known patterns") {
     // 2 dims x 4 bits, identity scaling (domain = [0, 15])

@@ -18,7 +18,7 @@ import graft.sources.{Replica, Snapshot}
 class CommitActionsSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def freshRoot(): String = Files.createTempDirectory("graft-commit-actions").toString
+  private def freshRoot(): String = tempDir("commit-actions")
 
   /** Every path under `root`, relative and sorted (dirs included). */
   private def listing(root: String): Seq[String] = {
@@ -249,5 +249,21 @@ class CommitActionsSpec extends SparkSpec {
       assert(listing(root) == before, kind)
     }
     assert(Snapshot.read(spark, root, "t").as[(Long, String)].collect().toSet == Set((2L, "b")))
+  }
+
+  test("a commit with stats and bloom columns derives both sidecars from one collect") {
+    val root = freshRoot()
+    val actions = Actions.sqlActions(spark)(
+      Snapshot.commit(spark, root, Map("t" -> docs((1L, "a"), (2L, "b"), (3L, "c"))),
+        statsCols = Map("t" -> Seq("id")), bloomCols = Map("t" -> Seq("v"))))
+    // the segment write, then one aggregate for the stats and the blooms
+    assert(actions == Seq("command", "collect"), s"commit: $actions")
+    // each sidecar serves its reader
+    assert(Snapshot.statsAgg(spark, root, "t", Seq("id")).as[(Long, Long, Long)].collect()
+      .toSeq == Seq((3L, 1L, 3L)))
+    assert(Snapshot.readPruned(spark, root, "t", "id", 2L, 2L).filter(col("id") === 2L)
+      .as[(Long, String)].collect().toSeq == Seq((2L, "b")))
+    assert(Snapshot.readPrunedEq(spark, root, "t", "v", "c").filter(col("v") === "c")
+      .as[(Long, String)].collect().toSeq == Seq((3L, "c")))
   }
 }

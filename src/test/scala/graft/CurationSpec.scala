@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 import graft.queries.{DocQueries, EventQueries}
@@ -15,7 +13,7 @@ class CurationSpec extends SparkSpec {
   import sqlImplicits._
 
   private def fixtureDir(tables: (String, DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft_fix").toString
+    val dir = tempDir("fix")
     tables.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }
@@ -92,7 +90,7 @@ class CurationSpec extends SparkSpec {
 
   test("curateCorpus commits the curated corpus and drop audit atomically") {
     import graft.sources.Snapshot
-    val root = Files.createTempDirectory("graft_curate_snap").toString
+    val root = tempDir("curate_snap")
     val docsPath = "/root/testdata/sf0.001/documents.parquet"
     val total = spark.read.parquet(docsPath).count()
     // neither call leaves a block persisted (the curated checkpoint is
@@ -308,7 +306,7 @@ class CurationSpec extends SparkSpec {
     import graft.Pipeline
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft_cfollow").toString
+    val root = tempDir("cfollow")
     val base = "the cat and the dog walk to the old park near the river " +
       "and the cat sees the dog by the park gate under the old tree"
     val other = "under the old tree by the river gate the dog and the cat " +
@@ -375,7 +373,7 @@ class CurationSpec extends SparkSpec {
     def docs(rows: (Long, String)*) =
       rows.map { case (id, t) => (id, "en", t) }.toDF("doc_id", "lang", "text")
     def build(): String = {
-      val root = Files.createTempDirectory("graft_cfvac").toString
+      val root = tempDir("cfvac")
       Snapshot.commit(spark, root, Map("documents" -> docs(2L -> base))) // v1
       Pipeline.curateFollow(spark, root, maxAvgNllMicro = 3500000L)      // v2, cursor=2
       Snapshot.commitAppend(spark, root, Map("documents" -> docs(15L -> fresh))) // v3

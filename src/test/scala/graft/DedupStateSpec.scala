@@ -70,7 +70,7 @@ class DedupStateSpec extends SparkSpec {
   }
 
   test("batch absorb reads the signature table, never corpus text") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dedupstate").toString
+    val tmp = tempDir("dedupstate")
     val corpusDir = s"$tmp/corpus_data"
     val stateDir = s"$tmp/corpus_sig"
     corpus.write.parquet(corpusDir)

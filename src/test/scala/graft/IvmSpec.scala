@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IncrementalAgg, ViewMaintenance => VM}
@@ -10,8 +8,7 @@ import graft.sources.Snapshot
 class IvmSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def freshRoot(): String =
-    Files.createTempDirectory("ivm-spec").toString
+  private def freshRoot(): String = tempDir("ivm-spec")
 
   test("signedStep: upsert yields +new and -old rows; unseen-key deletes are no-ops") {
     val root = freshRoot()

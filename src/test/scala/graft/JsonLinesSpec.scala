@@ -16,7 +16,7 @@ class JsonLinesSpec extends SparkSpec {
     StructField("lang", StringType)))
 
   private def writeJsonl(lines: Seq[String]): String = {
-    val f = Files.createTempFile("graft_jsonl", ".jsonl")
+    val f = Paths.get(tempDir("jsonl"), "in.jsonl")
     Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
     f.toString
   }
@@ -59,7 +59,7 @@ class JsonLinesSpec extends SparkSpec {
   test("round-trips the documents table through JSONL losslessly") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text", "lang")
-    val dir = Files.createTempDirectory("graft_jsonl_rt").toString
+    val dir = tempDir("jsonl_rt")
     docs.coalesce(1).write.mode("overwrite").json(dir)
     val back = Files.list(Paths.get(dir)).toArray.map(_.toString)
       .filter(_.endsWith(".json")).head

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 
 import graft.sources.{Replica, Snapshot}
@@ -9,8 +7,7 @@ import graft.sources.{Replica, Snapshot}
 class ReplicaSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def freshRoot(): String =
-    Files.createTempDirectory("replica-spec").toString
+  private def freshRoot(): String = tempDir("replica-spec")
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -68,7 +65,7 @@ class ReplicaSpec extends SparkSpec {
     import graft.operators.AnnIndex.Probe
     val corpus = freshRoot()
     val delta = freshRoot()
-    val baseIdx = Files.createTempDirectory("replica-annbase").toString
+    val baseIdx = tempDir("replica-annbase")
     val planes = Ann.hashPlanes(nPlanes = 4, dim = 8)
     def vec(i: Long) = Array.tabulate(8)(j => ((i * 7 + j * 13) % 23).toFloat / 23f)
     val all = (0L until 64L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
@@ -90,7 +87,7 @@ class ReplicaSpec extends SparkSpec {
         Probe(col("vec_id") < 3L, k = 2))
       .orderBy("probe_id", "rank").collect().map(_.toSeq).toSeq
     // ground truth: a full rebuild over the corpus's CURRENT state
-    val rebuilt = Files.createTempDirectory("replica-annfull").toString
+    val rebuilt = tempDir("replica-annfull")
     IndexLifecycle.build(lsh, Snapshot.read(spark, corpus, "emb"), rebuilt)
     val full = AnnIndex.knnLshServe(spark.read.parquet(rebuilt), "vec_id",
         col("vec_id") < 3L, k = 2)
@@ -111,7 +108,7 @@ class ReplicaSpec extends SparkSpec {
     import graft.operators.AnnIndex.Probe
     val corpus = freshRoot()
     val delta = freshRoot()
-    val baseIdx = Files.createTempDirectory("replica-probebase").toString
+    val baseIdx = tempDir("replica-probebase")
     val planes = Ann.hashPlanes(nPlanes = 4, dim = 8)
     def vec(i: Long) = Array.tabulate(8)(j => ((i * 7 + j * 13) % 23).toFloat / 23f)
     val all = (0L until 64L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
@@ -146,7 +143,7 @@ class ReplicaSpec extends SparkSpec {
     import graft.operators.AnnIndex.Probe
     val corpus = freshRoot()
     val delta = freshRoot()
-    val baseIdx = Files.createTempDirectory("replica-ivfbase").toString
+    val baseIdx = tempDir("replica-ivfbase")
     def vec(i: Long) = Array.tabulate(8)(j => ((i * 7 + j * 13) % 23).toFloat / 23f)
     val all = (0L until 64L).map(i => (i, i % 3, vec(i))).toDF("vec_id", "label", "embedding")
     val buildV = Snapshot.commit(spark, corpus,
@@ -170,7 +167,7 @@ class ReplicaSpec extends SparkSpec {
     // ground truth: rebuild over the current state with the SAME frozen
     // codebook — re-derived from the build-time state via time travel
     // (ivfCodebook is deterministic, so this IS the stored codebook)
-    val rebuilt = Files.createTempDirectory("replica-ivffull").toString
+    val rebuilt = tempDir("replica-ivffull")
     IndexLifecycle.build(ivf, Snapshot.read(spark, corpus, "emb"), rebuilt,
       trainOn = Some(Snapshot.readAt(spark, corpus, "emb", buildV)))
     val full = served(AnnIndex.knnIvfServe(spark.read.parquet(rebuilt),

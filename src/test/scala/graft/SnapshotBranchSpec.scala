@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Snapshot
 
 /** BRANCHES — write-audit-publish over the snapshot store: fork, write
@@ -11,8 +9,7 @@ import graft.sources.Snapshot
 class SnapshotBranchSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def freshRoot(): String =
-    Files.createTempDirectory("snapshot-branch-spec").toString
+  private def freshRoot(): String = tempDir("snapshot-branch-spec")
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.collect().map(_.getLong(0)).toSeq.sorted
@@ -103,7 +100,7 @@ class SnapshotBranchSpec extends SparkSpec {
 
   test("curateCorpusWap publishes a passing corpus via fast-forward") {
     val root = freshRoot()
-    val docsPath = Files.createTempDirectory("wap-docs").toString + "/docs"
+    val docsPath = tempDir("wap-docs") + "/docs"
     // a corpus with survivors: english-looking text passes lang+quality
     (1L to 20L).map(i => (i,
       s"the quick brown fox number $i jumps over the lazy dog and runs far away today"))
@@ -121,7 +118,7 @@ class SnapshotBranchSpec extends SparkSpec {
 
   test("curateCorpusWap drops the branch and leaves main untouched on audit failure") {
     val root = freshRoot()
-    val docsPath = Files.createTempDirectory("wap-docs-fail").toString + "/docs"
+    val docsPath = tempDir("wap-docs-fail") + "/docs"
     (1L to 5L).map(i => (i,
       s"the quick brown fox number $i jumps over the lazy dog and runs far away today"))
       .toDF("doc_id", "text").write.parquet(docsPath)

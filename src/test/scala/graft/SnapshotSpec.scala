@@ -8,8 +8,7 @@ import graft.sources.Snapshot
 class SnapshotSpec extends SparkSpec {
   import sqlImplicits._
 
-  private def freshRoot(): String =
-    Files.createTempDirectory("snapshot-spec").toString
+  private def freshRoot(): String = tempDir("snapshot-spec")
 
   test("commit/read roundtrip across multiple tables, versions increment") {
     val root = freshRoot()
@@ -1203,9 +1202,15 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.commit(spark, root, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
     Snapshot.commit(spark, root, Map("t" -> Seq((3L, "c")).toDF("id", "v")))
     // STALE (a crashed committer published v2/v3's manifests but not the
-    // checkpoint): the forward probe finds the newer slots
+    // checkpoint): the forward probe finds the newer slots. The old bytes
+    // go in without their checksum file, which the checksummed local
+    // file system would otherwise fail the read on
+    Files.delete(Paths.get(root, "_commits", "._checkpoint.crc"))
     Files.write(ckpt, staleBytes)
+    val staleReads = Snapshot.manifestFileReads.get()
     assert(Snapshot.currentVersion(spark, root).contains(3L))
+    // the stale checkpoint was read, then v3 and v2 above it
+    assert(Snapshot.manifestFileReads.get() - staleReads == 3L)
     assert(Snapshot.read(spark, root, "t").collect().map(_.getLong(0)).toSeq == Seq(3L))
     // TORN: half-written checkpoint is skipped for the listing walk
     Files.write(ckpt, "GRAFT-CHECKPOINT v1\nmax\t9".getBytes(UTF_8))
@@ -1410,5 +1415,122 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshot.read(spark, root, "t").collect().map(_.getLong(0)).toSeq == Seq(1L))
     assert(Snapshot.readBranch(spark, root, "audit", "t").collect()
       .map(_.getLong(0)).toSeq == Seq(8L))
+  }
+
+  test("every reader's missing-table error lists user tables only") {
+    import org.apache.spark.sql.functions.col
+    val root = freshRoot()
+    val v1 = Snapshot.commit(spark, root, Map("t" -> Seq((1L, "a"), (2L, "b")).toDF("id", "v")),
+      statsCols = Map("t" -> Seq("id")))
+    // a tombstone shadow (t~del) and, on the branch, its bookkeeping
+    Snapshot.deleteWhere(spark, root, "t", col("id") === 1L, Seq("id"))
+    Snapshot.createBranch(spark, root, "audit")
+    Seq[(String, () => Any)](
+      ("read", () => Snapshot.read(spark, root, "nope")),
+      ("readAt", () => Snapshot.readAt(spark, root, "nope", v1 + 1L)),
+      ("readBranch", () => Snapshot.readBranch(spark, root, "audit", "nope")),
+      ("readPruned", () => Snapshot.readPruned(spark, root, "nope", "id", 1L, 2L)),
+      ("readPruned at a version", () =>
+        Snapshot.readPruned(spark, root, "nope", "id", 1L, 2L, Some(v1 + 1L))),
+      ("readPrunedEq", () => Snapshot.readPrunedEq(spark, root, "nope", "id", 1L)),
+      ("statsAgg", () => Snapshot.statsAgg(spark, root, "nope")),
+      ("changesBetween", () => Snapshot.changesBetween(spark, root, "nope", 0L, v1 + 1L))
+    ).foreach { case (reader, call) =>
+      val msg = intercept[IllegalArgumentException](call()).getMessage
+      assert(msg.contains("no table 'nope'") && msg.endsWith("(have: t)"), s"$reader: $msg")
+    }
+  }
+
+  test("framed files: a tampered manifest, checkpoint or sidecar reads as torn") {
+    import java.nio.file.Path
+    import org.apache.spark.sql.functions.col
+    val root = freshRoot()
+    val v1 = Snapshot.commit(spark, root,
+      Map("t" -> (1L to 20L).map(i => (i, s"k$i")).toDF("id", "v").repartition(2)),
+      statsCols = Map("t" -> Seq("id")), bloomCols = Map("t" -> Seq("v")))
+    val seg = Paths.get(Snapshot.tables(spark, root)("t"))
+    val all = rows(Snapshot.read(spark, root, "t"))
+    assert(all.size == 20)
+    // the body lines of a framed file, and a framed file of body lines
+    def body(p: Path): Seq[String] =
+      Files.readString(p).split("\n").toSeq.drop(1).dropRight(1)
+    def framed(header: String, lines: Seq[String]): String =
+      (header +: lines :+ s"END ${lines.size}").mkString("\n")
+    // rewrite a file behind the file system's back: without its checksum
+    // file, the checksummed local file system reads the bytes unverified
+    def put(p: Path, text: String): Unit = {
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+      Files.write(p, text.getBytes(UTF_8))
+    }
+    val header = "GRAFT-SNAPSHOT v1"
+    val noBloom = {
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.spark.util.sketch.BloomFilter.create(1000L).writeTo(out)
+      java.util.Base64.getEncoder.encodeToString(out.toByteArray)
+    }
+    // per file: where it is, a complete file that would give a WRONG answer
+    // if believed, and what a reader returns (the right answer when the
+    // file is skipped as torn)
+    val head = () => (Snapshot.currentVersion(spark, root),
+      scala.util.Try(rows(Snapshot.read(spark, root, "t"))).toOption)
+    val cases = Seq[(String, Path, String, () => Any, Any)](
+      ("manifest", Paths.get(root, "_commits", "v0000000002.manifest"),
+        framed(header, Seq("t\tdata/t/never-written")), head, (Some(v1), Some(all))),
+      ("checkpoint", Paths.get(root, "_commits", "_checkpoint"),
+        framed("GRAFT-CHECKPOINT v1", Seq("max\t9", "main\t9", "T\tt\tdata/t/never-written")),
+        head, (Some(v1), Some(all))),
+      ("stats sidecar", seg.resolve("_graft_stats"),
+        framed(header, body(seg.resolve("_graft_stats")).map(_.split("\t", -1)).map {
+          case Array(f, "id", t, _, _) => s"$f\tid\t$t\t1000\t1000"
+          case fields => fields.mkString("\t")
+        }),
+        () => rows(Snapshot.readPruned(spark, root, "t", "id", 1L, 20L)), all),
+      ("bloom sidecar", seg.resolve("_graft_bloom"),
+        framed(header, body(seg.resolve("_graft_bloom")).map(_.split("\t", -1)).map {
+          case Array(f, c, t, _) => s"$f\t$c\t$t\t$noBloom"
+        }),
+        () => rows(Snapshot.readPrunedEq(spark, root, "t", "v", "k5")), all))
+    cases.foreach { case (kind, path, lie, reader, right) =>
+      val original = if (Files.exists(path)) Some(Files.readAllBytes(path)) else None
+      def restore(): Unit = original match {
+        case Some(bytes) => put(path, new String(bytes, UTF_8))
+        case None => Files.delete(path)
+      }
+      // the lie is believed when complete: each case can tell the two apart
+      put(path, lie)
+      assert(reader() != right, s"$kind: a complete lie was not read")
+      val lines = lie.split("\n").toSeq
+      Seq(
+        "no header" -> lines.tail.mkString("\n"),
+        "no END" -> lines.init.mkString("\n"),
+        "END count disagrees" -> (lines.init :+ s"END ${lines.size - 1}").mkString("\n"),
+        "empty" -> ""
+      ).foreach { case (tamper, text) =>
+        put(path, text)
+        assert(reader() == right, s"$kind, $tamper")
+      }
+      restore()
+    }
+    // restored, every file reads as written again: the head, and a bloom
+    // probe that skips the file without the key
+    assert(head() == ((Some(v1), Some(all))))
+    val probe = Snapshot.readPrunedEq(spark, root, "t", "v", "k5")
+    assert(probe.filter(col("v") === "k5").count() == 1L)
+    assert(probe.inputFiles.length < Snapshot.read(spark, root, "t").inputFiles.length)
+  }
+
+  test("changesBetween reads each version's manifest once") {
+    val root = freshRoot()
+    // untouched tables keep the appends' manifests deltas over a full base
+    val v1 = Snapshot.commit(spark, root, Map("t" -> Seq((0L, "a")).toDF("id", "v")) ++
+      (1 to 4).map(i => s"w$i" -> Seq((i.toLong, "w")).toDF("id", "v")))
+    (1L to 10L).foreach(i =>
+      Snapshot.commitAppend(spark, root, Map("t" -> Seq((i, s"x$i")).toDF("id", "v"))))
+    val before = Snapshot.manifestFileReads.get()
+    val feed = Snapshot.changesBetween(spark, root, "t", v1, v1 + 10L)
+    val reads = Snapshot.manifestFileReads.get() - before
+    assert(reads <= 11L, s"changesBetween over 10 versions read $reads manifest files")
+    assert(feed.count() == 10L)
+    assert(Snapshot.mainVersionsBetween(spark, root, v1, v1 + 10L) == (v1 + 1L to v1 + 10L))
   }
 }

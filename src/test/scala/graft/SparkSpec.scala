@@ -1,17 +1,40 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM per `sbt test` fork).
-  * Each suite's teardown deletes the session's query scratch. */
+  * Each suite's teardown deletes the session's query scratch and the
+  * suite's temp dirs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlImplicits = spark.implicits
 
+  private var tempRoot: Option[Path] = None
+  private var tempDirs = 0
+
+  /** A fresh empty dir `prefix<n>` inside one `/tmp/spec-<digits>` dir
+    * per suite, which the suite's teardown deletes. Names stay short:
+    * plan strings abbreviate long file-index paths, and specs find a
+    * scan in a plan by its path. */
+  def tempDir(prefix: String): String = synchronized {
+    val parent = tempRoot.getOrElse {
+      val p = Files.createTempDirectory("spec-")
+      tempRoot = Some(p)
+      p
+    }
+    tempDirs += 1
+    Files.createDirectory(parent.resolve(s"$prefix$tempDirs")).toString
+  }
+
   override def afterAll(): Unit =
-    try SparkSpec.releaseScratch() finally super.afterAll()
+    try SparkSpec.releaseScratch()
+    finally try tempRoot.foreach(p => FileUtil.fullyDelete(p.toFile))
+    finally super.afterAll()
 }
 
 object SparkSpec {

@@ -2,6 +2,10 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** The local core count of a main's session ([[buildSession]]):
+    * `SPARK_GRAFT_CPUS`, else 4. */
+  def sessionCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** One timed measurement of one query on one pass. */
   final case class Sample(name: String, pass: Int, sec: Double, err: Option[String])
 
@@ -197,7 +201,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sessionCpus
     // Single-shot timings proved noisy enough to mislead (r7 verdict #3:
     // 4-8x phantom "regressions"). Default to 3 runs per query and report
     // the per-query MEDIAN, with min/max spread recorded alongside.

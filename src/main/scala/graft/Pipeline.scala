@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Schemas
 import graft.operators.{Curate, Par, Transform, Upsert}
 import graft.operators.Upsert.MergeStats
-import graft.sources.{CsvExtract, Snapshot}
+import graft.sources.{CsvExtract, Replica, Snapshot}
 
 /** End-to-end ETL pipeline — the Spark-native equivalent of the
   * reference's `main` (etl_sales_analytics.py:302-333):
@@ -226,23 +226,14 @@ object Pipeline {
       minJaccard: Double = 0.5, profileK: Int = 64,
       appId: String = "curate"): Option[Long] = {
     import graft.operators.{DedupState, LangModel, LangProfile, NearDup}
-    import org.apache.spark.sql.expressions.Window
-    val MarkerTable = "_curate"
     val profTable = dstTable + "_profiles"
     val vocabTable = dstTable + "_vocab"
     val sigTable = DedupState.stateTable(dstTable)
-    val head = Snapshot.currentVersion(spark, root).getOrElse(return None)
+    val (head, marks) = Replica.CurateMark.pinned(spark, root)
+    if (head == 0L) return None // nothing committed yet
     val tables = Snapshot.tables(spark, root).keySet
     require(tables.contains(srcTable), s"curateFollow: no table '$srcTable' at $root")
-    val cursor =
-      if (tables.contains(MarkerTable))
-        Snapshot.read(spark, root, MarkerTable)
-          .filter(col("app_id") === appId)
-          .agg(max(col("src_version"))).head() match {
-            case r if r.isNullAt(0) => None
-            case r => Some(r.getLong(0))
-          }
-      else None
+    val cursor = marks.get(appId)
     if (cursor.exists(_ >= head)) return None // already current
     val bootstrap = cursor.isEmpty
     // ---- the delta: netted inserts + deletes over (cursor, head] ----
@@ -253,13 +244,8 @@ object Pipeline {
       if (bootstrap) (Snapshot.readAt(spark, root, srcTable, head),
         Snapshot.read(spark, root, srcTable).limit(0).select(col(idCol)))
       else {
-        val feed = Snapshot.changesBetween(spark, root, srcTable, cursor.get, head)
-        val w = Window.partitionBy(col(idCol))
-          .orderBy(col(Snapshot.CommitVersionCol).desc,
-            when(col(Snapshot.ChangeTypeCol) === "insert", 1).otherwise(0).desc)
-        val last = feed.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .localCheckpoint(true)
+        val last = Replica.net(Snapshot.changesBetween(spark, root, srcTable, cursor.get, head),
+          Seq(idCol)).localCheckpoint(true)
         netted = Some(last)
         (last.filter(col(Snapshot.ChangeTypeCol) === "insert")
           .drop(Snapshot.ChangeTypeCol, Snapshot.CommitVersionCol),
@@ -306,17 +292,10 @@ object Pipeline {
             else touched.join(survRows.select(col(idCol)), Seq(idCol), "left_anti")
               .join(Snapshot.read(spark, root, dstTable).select(col(idCol)),
                 Seq(idCol), "left_semi")
-          val markerNew = {
-            import spark.implicits._
-            // base+1 = this very commit (it never touches srcTable)
-            Seq((appId, head + 1L)).toDF("app_id", "src_version")
-          }
-          val marker =
-            if (tables.contains(MarkerTable))
-              Snapshot.read(spark, root, MarkerTable).unionByName(markerNew)
-                .groupBy(col("app_id")).agg(max(col("src_version")).as("src_version"))
-            else markerNew
-          val replaces = Map(sigTable -> newState, MarkerTable -> marker) ++
+          // the cursor records base+1: this very commit, which never
+          // touches srcTable
+          val replaces = Map(sigTable -> newState,
+            Replica.CurateMark.advanced(spark, marks, appId, head + 1L)) ++
             (if (bootstrap) Map(profTable -> profiles, vocabTable -> vocab)
              else Map.empty)
           val nUps = survRows.limit(1).count()

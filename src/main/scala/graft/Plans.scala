@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
   *
   * Usage: Plans <outDir> <tag> <query> [query...]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PLANS_EXEC. */
+  *      SPARK_GRAFT_CPUS (default 4, [[Bench.sessionCpus]]), SPARK_GRAFT_PLANS_EXEC. */
 object Plans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Plans <outDir> <tag> <query> [query...]")
@@ -28,10 +28,9 @@ object Plans {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val exec = sys.env.get("SPARK_GRAFT_PLANS_EXEC").contains("1")
     Files.createDirectories(outDir)
-    val spark = Bench.buildSession(cpus)
+    val spark = Bench.buildSession(Bench.sessionCpus)
     Bench.warm(spark, sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

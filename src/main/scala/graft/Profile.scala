@@ -20,6 +20,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=4 \
   *   sbt "runMain graft.Profile txt_bm25_compacted doc_curate_v3"
+  * (SPARK_GRAFT_CPUS defaults to 4, [[Bench.sessionCpus]]).
   */
 object Profile {
   private[graft] final case class JobRec(id: Int, start: Long, var end: Long,
@@ -89,8 +90,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Bench.buildSession(cpus)
+    val spark = Bench.buildSession(Bench.sessionCpus)
     // same family warmup as Bench so one-time costs don't pollute jobs
     Bench.warm(spark, sfDir)
     val rec = new Recorder

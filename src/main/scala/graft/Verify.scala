@@ -6,10 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // one session recipe for the correctness and perf surfaces — what
     // the oracle verifies is the configuration the bench measures
-    val spark = Bench.buildSession(cpus)
+    val spark = Bench.buildSession(Bench.sessionCpus)
     Bench.warm(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY=comma,separated,names runs a

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, max, row_number, when}
 
@@ -15,17 +15,15 @@ import org.apache.spark.sql.functions.{col, max, row_number, when}
   * ([[graft.queries.EtlQueries]] etl_table_diff) answers at O(table).
   *
   * Each [[sync]] call:
-  *   1. reads the destination's durable cursor (a one-row-per-app
-  *      `_sync` marker table, the Delta txnAppId pattern shared with
-  *      [[graft.streaming.StreamOps]] ingestBatchExactlyOnce) — absent
-  *      marker means version 0, i.e. the first sync bootstraps the full
-  *      table THROUGH the same feed path (a creation commit's segments
-  *      are just the first appends);
+  *   1. reads the destination's durable cursor (the one-row-per-app
+  *      `_sync` marker, a [[Watermark]] like every exactly-once
+  *      consumer's) — absent marker means version 0, i.e. the first
+  *      sync bootstraps the full table THROUGH the same feed path (a
+  *      creation commit's segments are just the first appends);
   *   2. pulls the source feed over (cursor, srcHead] — O(changes):
   *      only appended segments and tombstone shadows are read;
-  *   3. NETS the feed per key (last event wins; within a version a
-  *      delete precedes the paired upsert-insert, so the insert wins) —
-  *      a key touched ten times lands once;
+  *   3. NETS the feed per key ([[net]]) — a key touched ten times
+  *      lands once;
   *   4. publishes upserts + deletes + the advanced marker as ONE atomic
   *      [[Snapshot.applyChanges]] commit on the destination.
   *
@@ -44,10 +42,71 @@ import org.apache.spark.sql.functions.{col, max, row_number, when}
   * after replicas have caught up. Likewise VACUUM the source only past
   * every replica's cursor: the feed reads the manifests and segments of
   * the versions in (cursor, head], and a swept version fails the sync
-  * loudly (relsAt refuses), never silently skips. */
+  * loudly, never silently skips. */
 object Replica {
 
-  private val MarkerTable = "_sync"
+  /** A per-app EXACTLY-ONCE watermark: the marker table `table`, one
+    * (`app_id`, `valueCol`) row per app, that a consumer publishes in
+    * the same manifest as its data (Delta Lake's `txn(appId, version)`
+    * action). Every follower and sink reads and advances its marker
+    * through one of these:
+    *   - [[SyncMark]] in a replica's destination root: the source
+    *     version [[sync]] is current to;
+    *   - [[CurateMark]]: the root version [[graft.Pipeline.curateFollow]]
+    *     is current to ([[Snapshot.vacuum]] keeps every version past the
+    *     lagging-most one);
+    *   - [[IngestMark]]: the last micro-batch each exactly-once sink of
+    *     [[graft.streaming.StreamOps]] published.
+    *
+    * Read after the base: a commit reads the values it advances at or
+    * after the version it pins with `expectBase` ([[pinned]]). A writer
+    * that lands in between moves the head past that base, so the commit
+    * fails its compare-and-swap instead of dropping the writer's row. */
+  private[graft] final case class Watermark(table: String, valueCol: String) {
+
+    /** Every app's value at `root`'s head, read on the driver: the
+      * table holds one row per app id, so reading its parquet files
+      * directly costs a few file reads and no Spark job. */
+    def values(spark: SparkSession, root: String): Map[String, Long] =
+      Snapshot.tables(spark, root).get(table).fold(Map.empty[String, Long]) { dirs =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        val rows = dirs.split(',').toSeq.flatMap { d =>
+          val dir = new Path(d)
+          dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+            .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+            .flatMap { file =>
+              val r = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
+              try Iterator.continually(r.read()).takeWhile(_ != null)
+                .map(g => g.getString("app_id", 0) -> g.getLong(valueCol, 0)).toList
+              finally r.close()
+            }
+        }
+        rows.groupMapReduce(_._1)(_._2)(math.max)
+      }
+
+    /** `root`'s head version (0 before the first commit), the base a
+      * commit pins with `expectBase`, then every app's value read after
+      * it. */
+    def pinned(spark: SparkSession, root: String): (Long, Map[String, Long]) = {
+      val base = Snapshot.currentVersion(spark, root).getOrElse(0L)
+      (base, values(spark, root))
+    }
+
+    /** The marker entry of a commit that advances `appId` to `value`: a
+      * small local frame, one row per app in app-id order, where each app
+      * keeps the max of its old and new value. Merged, never replaced
+      * wholesale, so writers under other app ids keep their rows. */
+    def advanced(spark: SparkSession, known: Map[String, Long], appId: String,
+        value: Long): (String, DataFrame) = {
+      import spark.implicits._
+      val next = known.updated(appId, known.get(appId).fold(value)(math.max(_, value)))
+      table -> next.toSeq.sortBy(_._1).toDF("app_id", valueCol)
+    }
+  }
+
+  private[graft] val SyncMark = Watermark("_sync", "src_version")
+  private[graft] val CurateMark = Watermark("_curate", "src_version")
+  private[graft] val IngestMark = Watermark("_ingest", "batch_id")
 
   /** The SOURCE version `dstRoot`'s `appId` replication stream is
     * current to — None before the first published sync. This is the
@@ -58,27 +117,20 @@ object Replica {
     * replaying exactly the changes the fold has not absorbed. */
   def cursor(spark: SparkSession, dstRoot: String,
       appId: String = "default"): Option[Long] =
-    cursors(spark, dstRoot).get(appId)
+    SyncMark.values(spark, dstRoot).get(appId)
 
-  /** Every stream's cursor in `dstRoot`'s marker table, read on the
-    * driver: the table holds one row per app id, so reading its parquet
-    * files directly costs a few file reads and no Spark job. */
-  private def cursors(spark: SparkSession, dstRoot: String): Map[String, Long] =
-    Snapshot.tables(spark, dstRoot).get(MarkerTable).fold(Map.empty[String, Long]) { dirs =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val rows = dirs.split(',').toSeq.flatMap { d =>
-        val dir = new Path(d)
-        dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
-          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-          .flatMap { file =>
-            val r = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
-            try Iterator.continually(r.read()).takeWhile(_ != null)
-              .map(g => g.getString("app_id", 0) -> g.getLong("src_version", 0)).toList
-            finally r.close()
-          }
-      }
-      rows.groupMapReduce(_._1)(_._2)(math.max)
-    }
+  /** A change feed ([[Snapshot.changesBetween]]) NETTED per key: the
+    * LAST event decides the key's fate. An upsert's delete and insert
+    * share a version, and the insert ranks higher, matching apply order.
+    * O(changes) window, never O(table). */
+  private[graft] def net(feed: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(Snapshot.CommitVersionCol).desc,
+        when(col(Snapshot.ChangeTypeCol) === "insert", 1).otherwise(0).desc)
+    feed.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+  }
 
   /** Incrementally apply `srcTable`'s changes since the last sync to
     * `dstTable`. Returns Some(sourceVersion synced to) when a commit
@@ -95,9 +147,7 @@ object Replica {
       appId: String = "default", initialCursor: Long = 0L): Option[Long] = {
     require(keyCols.nonEmpty, "replica sync: no key columns given")
     val srcHead = Snapshot.currentVersion(spark, srcRoot).getOrElse(0L)
-    // the base first: a commit landing after it fails this sync's CAS
-    val dstBase = Snapshot.currentVersion(spark, dstRoot)
-    val known = cursors(spark, dstRoot)
+    val (dstBase, known) = SyncMark.pinned(spark, dstRoot)
     val cur = known.getOrElse(appId, initialCursor)
     if (cur >= srcHead) return None // already current: replay no-ops
     val feed = Snapshot.changesBetween(spark, srcRoot, srcTable, cur, srcHead)
@@ -105,20 +155,11 @@ object Replica {
       require(feed.columns.contains(k),
         s"replica sync: source table '$srcTable' lacks key column '$k'")
     }
-    // NET the feed per key: the LAST event decides the key's fate (an
-    // upsert's delete and insert share a version — the insert ranks
-    // higher, matching apply order). O(changes) window, never O(table).
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(Snapshot.CommitVersionCol).desc,
-        when(col(Snapshot.ChangeTypeCol) === "insert", 1).otherwise(0).desc)
     // the checkpoint's own job also answers "any upserts?" and "any
     // deletes?": an Observation over the netted rows (NULL for an empty
     // feed), read once the eager checkpoint returned
     val flags = Observation()
-    val last = feed
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+    val last = net(feed, keyCols)
       .observe(flags,
         max(when(col(Snapshot.ChangeTypeCol) === "insert", 1L).otherwise(0L)).as("ups"),
         max(when(col(Snapshot.ChangeTypeCol) === "delete", 1L).otherwise(0L)).as("dels"))
@@ -128,18 +169,12 @@ object Replica {
         .drop(Snapshot.ChangeTypeCol, Snapshot.CommitVersionCol)
       val dels = last.filter(col(Snapshot.ChangeTypeCol) === "delete")
         .select(keyCols.map(col): _*)
-      // MERGE the marker, never wholesale-replace: other appIds'
-      // cursors survive an interleaved writer (cur < srcHead here)
-      val marker = {
-        import spark.implicits._
-        (known + (appId -> srcHead)).toSeq.toDF("app_id", "src_version")
-      }
       def has(flag: String): Boolean = flags.get.get(flag).contains(1L)
       Snapshot.applyChanges(spark, dstRoot, dstTable, keyCols,
         upserts = if (has("ups")) Some(ups) else None,
         deleteKeys = if (has("dels")) Some(dels) else None,
-        replaces = Map(MarkerTable -> marker),
-        expectBase = Some(dstBase.getOrElse(0L)))
+        replaces = Map(SyncMark.advanced(spark, known, appId, srcHead)),
+        expectBase = Some(dstBase))
       Some(srcHead)
     } finally graft.operators.NearDup.freeCheckpoint(last)
   }

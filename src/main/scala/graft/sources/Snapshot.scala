@@ -1406,15 +1406,8 @@ object Snapshot {
       // carries the dropped marker only as a removal entry)
       .collect { case (_, t)
           if !manifests.resolve(t._3).contains(BranchDroppedKey) => t }
-    val head = if (respectCursors) resolve(spark, root, Head) else Map.empty[String, String]
     val cursorFloor: Option[Long] =
-      if (head.contains("_curate"))
-        readResolved(spark, root, head, "_curate")
-          .agg(org.apache.spark.sql.functions.min(
-            org.apache.spark.sql.functions.col("src_version"))).head() match {
-            case r if r.isNullAt(0) => None
-            case r => Some(r.getLong(0))
-          }
+      if (respectCursors) Replica.CurateMark.values(spark, root).values.minOption
       else None
     val retained = mains.filter { case (v, _, _) =>
       cursorFloor.exists(v >= _)
@@ -1750,9 +1743,11 @@ object Snapshot {
         Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
     val aggs = statAggs ++ bloomCols.map(c =>
       BloomBridge.bloomAgg(bloomInput(c), expectedItems, bloomBits).as(s"__bf_$c"))
+    // in file-name order, so a sidecar's bytes do not depend on the
+    // order the aggregate's partitions arrive in
     val rows = d.groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq
+      .collect().toSeq.sortBy(_.getAs[String]("__f"))
     def enc(v: Any): String =
       java.net.URLEncoder.encode(String.valueOf(v), UTF_8.name())
     val fs = fsOf(spark, root)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.{IndexFamily, IndexLifecycle}
+import graft.sources.Replica.IngestMark
 
 /** Streaming-first event operators. Each transform is written against an
   * unbounded DataFrame and runs identically in batch — the batch-gated
@@ -131,14 +132,13 @@ object StreamOps {
       appId: String = "default"): Boolean = {
     import graft.sources.Snapshot
     val spark = batch.sparkSession
-    val baseVersion = Snapshot.currentVersion(spark, root)
-    val tablesNow = Snapshot.tables(spark, root).keySet
-    if (appliedBatch(spark, root, tablesNow, appId) >= batchId) return false
+    val (base, marks) = IngestMark.pinned(spark, root)
+    if (marks.get(appId).exists(_ >= batchId)) return false
     val stage = graft.operators.Transform.dedupeKeepLast(batch, keys, ord)
     Snapshot.applyChanges(spark, root, table, keys,
       upserts = Some(stage), deleteKeys = None,
-      replaces = Map(MarkerTable -> mergedMarker(spark, root, tablesNow, appId, batchId)),
-      expectBase = Some(baseVersion.getOrElse(0L)))
+      replaces = Map(IngestMark.advanced(spark, marks, appId, batchId)),
+      expectBase = Some(base))
     true
   }
 
@@ -388,8 +388,7 @@ object StreamOps {
     val spark = batch.sparkSession
     val quarTable = table + "_quarantine"
     val auditTable = table + "_audit"
-    val tablesNow = Snapshot.tables(spark, root).keySet
-    if (appliedBatch(spark, root, tablesNow, appId) >= batchId) return false
+    if (IngestMark.values(spark, root).get(appId).exists(_ >= batchId)) return false
     val staged = graft.operators.Transform.dedupeKeepLast(batch, keys, ord)
       .localCheckpoint(true)
     try {
@@ -404,19 +403,19 @@ object StreamOps {
       val report = graft.operators.Expectations
         .rowChecks(staged, table, checks)
         .withColumn("batch_id", lit(batchId))
-      val tablesMid = Snapshot.tables(spark, root).keySet
+      // the base after commit 1, then the marker and audit this commit
+      // rewrites: a commit landing in between fails the CAS
+      val (base, marks) = IngestMark.pinned(spark, root)
       val auditAll =
-        if (tablesMid.contains(auditTable))
+        if (Snapshot.tables(spark, root).contains(auditTable))
           Snapshot.read(spark, root, auditTable)
             .filter(col("batch_id") =!= batchId).unionByName(report)
         else report
-      val baseVersion = Snapshot.currentVersion(spark, root)
       Snapshot.applyChanges(spark, root, table, keys,
         upserts = Some(staged.filter(!viol)), deleteKeys = None,
-        replaces = Map(
-          auditTable -> auditAll,
-          MarkerTable -> mergedMarker(spark, root, tablesMid, appId, batchId)),
-        expectBase = Some(baseVersion.getOrElse(0L)))
+        replaces = Map(auditTable -> auditAll,
+          IngestMark.advanced(spark, marks, appId, batchId)),
+        expectBase = Some(base))
       true
     } finally graft.operators.NearDup.freeCheckpoint(staged)
   }
@@ -497,33 +496,6 @@ object StreamOps {
       srcTable, dstTable, idCol, textCol, langCol,
       maxAvgNllMicro = maxAvgNllMicro)
     (ingested, curled)
-  }
-
-  /** The highest batch id `appId` has published at `root`, -1 when none
-    * — the replay check shared by the exactly-once sinks. */
-  private def appliedBatch(spark: org.apache.spark.sql.SparkSession, root: String,
-      tablesNow: Set[String], appId: String): Long =
-    if (tablesNow.contains(MarkerTable))
-      graft.sources.Snapshot.read(spark, root, MarkerTable)
-        .filter(col("app_id") === appId)
-        .agg(max(col("batch_id"))).head() match {
-          case r if r.isNullAt(0) => -1L
-          case r => r.getLong(0)
-        }
-    else -1L
-
-  /** The marker table's next contents: one row per appId, this app's
-    * watermark advanced — MERGED, never wholesale-replaced, so
-    * interleaved writers under distinct appIds keep each other's
-    * replay guarantee. */
-  private def mergedMarker(spark: org.apache.spark.sql.SparkSession, root: String,
-      tablesNow: Set[String], appId: String, batchId: Long): DataFrame = {
-    import spark.implicits._
-    val markerNew = Seq((appId, batchId)).toDF("app_id", "batch_id")
-    if (tablesNow.contains(MarkerTable))
-      graft.sources.Snapshot.read(spark, root, MarkerTable).unionByName(markerNew)
-        .groupBy(col("app_id")).agg(max(col("batch_id")).as("batch_id"))
-    else markerNew
   }
 
   /** STREAMING corpus ingestion with cross-corpus dedup: each micro-batch
@@ -643,10 +615,9 @@ object StreamOps {
     import graft.operators.DedupState
     import graft.sources.Snapshot
     val spark = batch.sparkSession
-    val baseVersion = Snapshot.currentVersion(spark, root)
+    val (base, marks) = IngestMark.pinned(spark, root)
+    if (marks.get(appId).exists(_ >= batchId)) return false
     val tablesNow = Snapshot.tables(spark, root).keySet
-    if (appliedBatch(spark, root, tablesNow, appId) >= batchId)
-      return false // replayed batch: already published
     // in-batch exact dedup: keep the min id per fingerprint
     val fp = graft.functions.Text.fingerprint(col(textCol))
     val keyed = batch.withColumn("__fp", fp)
@@ -668,9 +639,6 @@ object StreamOps {
         DedupState.dedupeAgainstState(state, unique, idCol, textCol, minJaccard)
       } else DedupState.withState(unique, idCol, textCol).localCheckpoint(true)
     try {
-      // one row per app, max batch_id — the ≤apps-row canonical form
-      // the replay check reads ([[mergedMarker]])
-      val marker = mergedMarker(spark, root, tablesNow, appId, batchId)
       val freshState = fresh.select(col(idCol), col(DedupState.FpCol),
         col(DedupState.ShCol), col(DedupState.SigCol))
       // corpus append + state append + marker are ONE manifest: no
@@ -687,16 +655,14 @@ object StreamOps {
         case None => appends
       }
       // all-dup batches still advance the marker — replays skip cheaply
-      Snapshot.commitAppend(spark, root, appendsWithBoot, Map(MarkerTable -> marker),
-        expectBase = Some(baseVersion.getOrElse(0L)))
+      Snapshot.commitAppend(spark, root, appendsWithBoot,
+        Map(IngestMark.advanced(spark, marks, appId, batchId)), expectBase = Some(base))
       true
     } finally {
       graft.operators.Curate.release(fresh)
       bootstrapState.foreach(graft.operators.NearDup.freeCheckpoint)
     }
   }
-
-  private val MarkerTable = "_ingest"
 
   /** Watermarked STREAM-STREAM interval join: attribute each purchase to
     * the same user's click(s) within the trailing `horizon`

@@ -76,14 +76,20 @@ class DedupStateSpec extends SparkSpec {
     corpus.write.parquet(corpusDir)
     DedupState.stateOf(spark.read.parquet(corpusDir), "doc_id", "text")
       .write.parquet(stateDir)
-    // capture every plan executed while absorbing a batch against the
-    // PERSISTED state: the corpus parquet must never be scanned (its
-    // text column included) — only the state dir and the batch source
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // capture the root path of every file scan executed while absorbing
+    // a batch against the PERSISTED state: the corpus parquet must never
+    // be scanned (its text column included) — only the state dir and the
+    // batch source. Paths come from the scan's relation, not the plan
+    // string, which abbreviates long path lists.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(scans.collectWithSubqueries(qe.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.relation.location.rootPaths.map(_.getName)
+        }.flatten)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -105,10 +111,8 @@ class DedupStateSpec extends SparkSpec {
       } finally spark.listenerManager.unregister(listener)
     assert(kept.collect().map(_.getAs[Long]("doc_id")).toSeq == Seq(5L))
     import scala.jdk.CollectionConverters._
-    val all = plans.asScala.toSeq
-    assert(all.exists(_.contains("corpus_sig")), "no state-table scan captured")
-    assert(!all.exists(_.contains("corpus_data")),
-      "corpus parquet was scanned on the absorb path:\n" +
-        all.filter(_.contains("corpus_data")).mkString("\n"))
+    val all = plans.asScala.toSeq.flatten
+    assert(all.contains("corpus_sig"), s"no state-table scan captured: $all")
+    assert(!all.contains("corpus_data"), s"corpus parquet was scanned on the absorb path: $all")
   }
 }

@@ -1519,6 +1519,22 @@ class SnapshotSpec extends SparkSpec {
     assert(probe.inputFiles.length < Snapshot.read(spark, root, "t").inputFiles.length)
   }
 
+  test("sidecars list a multi-file segment's files in file-name order") {
+    val root = freshRoot()
+    Snapshot.commit(spark, root,
+      Map("t" -> (1L to 60L).map(i => (i, s"k$i")).toDF("id", "v").repartition(6)),
+      statsCols = Map("t" -> Seq("id", "v")), bloomCols = Map("t" -> Seq("id", "v")))
+    val seg = Paths.get(Snapshot.tables(spark, root)("t"))
+    Seq("_graft_stats", "_graft_bloom").foreach { name =>
+      // the body's per-file lines (the stats' segment totals come first)
+      val files = Files.readString(seg.resolve(name)).split("\n").toSeq.drop(1).dropRight(1)
+        .map(l => java.net.URLDecoder.decode(l.split("\t")(0), UTF_8))
+        .filterNot(_ == "~total")
+      assert(files.distinct.size == 6, s"$name: $files")
+      assert(files == files.sorted, s"$name: $files")
+    }
+  }
+
   test("changesBetween reads each version's manifest once") {
     val root = freshRoot()
     // untouched tables keep the appends' manifests deltas over a full base

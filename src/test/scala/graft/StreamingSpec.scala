@@ -108,7 +108,7 @@ class StreamingSpec extends SparkSpec {
   test("file-source stream over the events parquet matches the batch rollup") {
     // a parquet directory as a real streaming source; same ns→µs
     // conversion the batch loader applies
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src")
+    val dir = java.nio.file.Paths.get(tempDir("stream-src"))
     java.nio.file.Files.copy(
       java.nio.file.Path.of("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streamingUpsert merges micro-batches into the parquet warehouse") {
     implicit val ctx = spark.sqlContext
-    val table = java.nio.file.Files.createTempDirectory("graft-supsert").toString + "/t"
+    val table = tempDir("supsert") + "/t"
     val ms = MemoryStream[Event]
     val q = StreamOps.streamingUpsert(ms.toDF(), table,
         keys = Seq("event_id"), ord = Seq(org.apache.spark.sql.functions.col("ts")))
@@ -176,7 +176,7 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-sivm").toString
+    val root = tempDir("sivm")
     val ms = MemoryStream[Event]
     val q = StreamOps.streamingIvm(ms.toDF(), root, "events",
         keys = Seq("event_id"), ord = Seq(col("ts")),
@@ -218,7 +218,7 @@ class StreamingSpec extends SparkSpec {
   test("streamingCurate: exactly-once ingest + incremental curation per micro-batch") {
     implicit val ctx = spark.sqlContext
     import graft.sources.Snapshot
-    val root = java.nio.file.Files.createTempDirectory("graft-scurate").toString
+    val root = tempDir("scurate")
     val base = "the cat and the dog walk to the old park near the river " +
       "and the cat sees the dog by the park gate under the old tree"
     val other = "under the old tree by the river gate the dog and the cat " +
@@ -263,7 +263,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streamingCorpusIngest appends only novel documents per micro-batch") {
     implicit val ctx = spark.sqlContext
-    val corpus = java.nio.file.Files.createTempDirectory("graft-singest").toString + "/c"
+    val corpus = tempDir("singest") + "/c"
     val ms = MemoryStream[(Long, String)]
     val q = StreamOps.streamingCorpusIngest(
         ms.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text")
@@ -291,7 +291,7 @@ class StreamingSpec extends SparkSpec {
   test("streamingCorpusIngestExactlyOnce publishes batches atomically through the snapshot log") {
     import graft.sources.Snapshot
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-eosingest").toString + "/snap"
+    val root = tempDir("eosingest") + "/snap"
     val ms = MemoryStream[(Long, String)]
     val q = StreamOps.streamingCorpusIngestExactlyOnce(
         ms.toDF().toDF("doc_id", "text"), root, "corpus", "doc_id", "text")
@@ -427,7 +427,7 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-saudit").toString
+    val root = tempDir("saudit")
     val checks = Seq(
       "value_non_negative" -> (col("value") < 0),
       "type_known" -> !col("event_type").isin("click", "view", "purchase"))
@@ -477,9 +477,9 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.AnnIndex.Probe
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-sann").toString
-    val base = java.nio.file.Files.createTempDirectory("graft-sann-base").toString + "/idx"
-    val delta = java.nio.file.Files.createTempDirectory("graft-sann-delta").toString
+    val root = tempDir("sann")
+    val base = tempDir("sann-base") + "/idx"
+    val delta = tempDir("sann-delta")
     val planes = Ann.hashPlanes(3, 4)
     def vec(id: Long, xs: Float*) = (id, xs.toArray)
     val corpus0 = Seq(
@@ -529,8 +529,8 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.AnnIndex.Probe
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-fann").toString
-    val work = java.nio.file.Files.createTempDirectory("graft-fann-work").toString
+    val root = tempDir("fann")
+    val work = tempDir("fann-work")
     val planes = Ann.hashPlanes(3, 4)
     def vec(id: Long, xs: Float*) = (id, xs.toArray)
     // base corpus: 5 vectors → with a 0.5 overhead budget, ~3 delta rows
@@ -636,8 +636,8 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.AnnIndex.Probe
     import graft.sources.Snapshot
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-fivf").toString
-    val work = java.nio.file.Files.createTempDirectory("graft-fivf-work").toString
+    val root = tempDir("fivf")
+    val work = tempDir("fivf-work")
     def vec(i: Long) = Array.tabulate(8)(j => ((i * 7 + j * 13) % 23).toFloat / 23f)
     def rows(ids: Long*) = ids.map(i => (i, i % 3, vec(i)))
     // base corpus: 6 vectors → with a 0.5 budget, ~3 delta rows trip the fold
@@ -661,7 +661,7 @@ class StreamingSpec extends SparkSpec {
     // frozen codebook (deterministically re-derived from the build-time
     // state — ivfCodebook is exact integer arithmetic)
     def rebuild() = {
-      val idx = java.nio.file.Files.createTempDirectory("graft-fivf-rb").toString
+      val idx = tempDir("fivf-rb")
       IndexLifecycle.build(ivf, Snapshot.read(spark, root, "emb"), idx,
         trainOn = Some(Snapshot.readAt(spark, root, "emb", buildV)))
       AnnIndex.knnIvfServe(spark.read.parquet(idx),
